@@ -61,6 +61,10 @@ def main() -> None:
     ap.add_argument("--cores", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     args = ap.parse_args()
+    if args.checkpoint and (args.stage != "extract" or args.no_tables):
+        # checkpointed_extract always runs the full extract with tables
+        ap.error("--checkpoint supports only the full extract "
+                 "(--stage extract without --no-tables)")
 
     spark = get_spark(app="surya_spark_extract", cores=args.cores)
     if args.synthetic:
@@ -83,9 +87,8 @@ def main() -> None:
             out = pipeline.extract(docs, blobs, with_tables=with_tables)
         unit = "docs"
     else:
-        from surya_spark.operators import (detection, layout,
-                                           reading_order, recognition,
-                                           tables)
+        from surya_spark.operators import (detection, fused, layout,
+                                           recognition, tables)
 
         pages = pipeline.pages_for(docs, blobs)
         if args.stage == "detect":
@@ -98,22 +101,19 @@ def main() -> None:
             out = recognition.recognize_blocks(pages)
             unit = "blocks"
         else:  # table
-            pages = pages.persist()
-            ordered = reading_order.order_lines(
-                detection.detection_stage(pages))
-            ocr = recognition.recognize(recognition.slice_crops(
-                ordered.select("media_ref", "line_idx", "position",
-                               "x1", "y1", "x2", "y2", "polygon"),
-                pages))
+            # the combined page pass feeds recognize AND the table
+            # stage — persist its crop union (rule 2), as extract does
+            allc = fused.fused_all_crops(pages).persist()
+            ocr = recognition.recognize(fused.line_crops(allc))
             if args.render_html:
                 # the render flag consumes the same ocr frame — persist
                 # BEFORE the table write materializes it so the render
-                # pass reads the cache instead of re-running
-                # detect+slice+recognize (rule 2)
+                # pass reads the cache instead of re-running the page
+                # pass + recognize (rule 2)
                 ocr = ocr.persist()
                 reuse_ocr = ocr
-            out = tables.table_stage(
-                layout.layout_stage_tiled(pages), pages, ocr)
+            out = tables.table_stage_from_crops(fused.table_crops(allc),
+                                                ocr)
             unit = "cells"
     out.write.mode("overwrite").parquet(args.out)
     n = spark.read.parquet(args.out).count()

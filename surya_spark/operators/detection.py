@@ -457,23 +457,18 @@ def expand_and_normalize(lines: DataFrame, y_pct: float = 0.05) -> DataFrame:
 def detection_stage(pages: DataFrame,
                     slot: Callable = slots.surrogate_detect,
                     chunked: bool = False,
-                    chunk_px: int = 1400,
-                    fused: bool = True) -> DataFrame:
+                    chunk_px: int = 1400) -> DataFrame:
     """Full detection stage: infer → clean → expand/normalize.
     chunked=True routes through the vertical split/stitch path (bounded
     activation memory for tall pages).
 
-    fused=True (default) runs the per-page post-processing inside the
-    detect UDF — zero extra shuffles; fused=False keeps the relational
-    anti-join + window form (same output, pytest-pinned equivalent),
-    useful when lines come from a source other than the detect slot."""
-    if fused:
-        return (
-            split_detect_lines(pages, slot, chunk_px, postprocess=True)
-            if chunked else detect_lines(pages, slot, postprocess=True)
-        )
-    detect = (
-        split_detect_lines(pages, slot, chunk_px) if chunked
-        else detect_lines(pages, slot)
+    The per-page post-processing runs inside the detect UDF — zero extra
+    shuffles. The relational anti-join + window form
+    (expand_and_normalize(clean_contained_boxes(...)) over the raw
+    detect_lines / split_detect_lines output) stays for lines that come
+    from a source other than the detect slot, and is the test oracle
+    this stage is pinned equal to."""
+    return (
+        split_detect_lines(pages, slot, chunk_px, postprocess=True)
+        if chunked else detect_lines(pages, slot, postprocess=True)
     )
-    return expand_and_normalize(clean_contained_boxes(detect))

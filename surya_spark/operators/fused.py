@@ -1,29 +1,26 @@
 """Combined page pass: detect→order→slice AND layout→table-crop in ONE
-mapInPandas over pages, sharing a single zlib page decode.
+mapInPandas over pages, sharing a single zlib page decode — the one
+extraction plan every production path runs (pipeline.extract with or
+without tables, its dual-DPI variant, checkpointed_extract and the CLI
+extract/ocr/table stages).
 
-Why a third fusion level: the flagship ran two page-grain passes
-(recognition.fused_page_crops and tables.fused_table_crops) over the
-same persisted pages — each pass re-read the cached blob bytes and
-zlib-decoded the page independently (the decode is the measured
-dominant per-page cost; BENCH.md round-5 polygon-payload A/B). Emitting
-both crop families from one pass
+Emitting both crop families from one pass
 
-  * decodes each page at most once (the kernels thread the decoded
-    page through `desc`),
+  * decodes each page at most once in the kernels (they thread the
+    decoded page through `desc`),
   * scans the blob bytes once, and
-  * removes the pages persist entirely — pages drops to a single
-    consumer, so the full corpus's raw page blobs are never cached.
-    At the 100-TB design point that persist is the pipeline's largest
-    cache footprint (raw bytes of every page); the much smaller crop
-    union is persisted instead (it feeds recognize AND the table
-    stage).
+  * needs no pages persist — pages has a single consumer, so the full
+    corpus's raw page blobs are never cached. At the 100-TB design
+    point that persist would be the pipeline's largest cache footprint
+    (raw bytes of every page); the much smaller crop union is persisted
+    instead when it feeds recognize AND the table stage.
 
-Parity: the per-page kernels are the SAME functions the single-purpose
-passes call (recognition.page_crop_rows / tables.table_crop_rows — the
-repo's fusion-parity convention), and test_fused_all.py pins the tagged
-union byte-identical to fused_page_crops ∪ fused_table_crops. The
-single-purpose passes remain the library surface for callers that need
-only one family (with_tables=False, layout-only queries, highres).
+Parity: the per-page kernels are recognition.page_crop_rows and
+tables.table_crop_rows, and the tests pin the tagged union
+byte-identical to the relational chain (detection_stage → order_lines
+→ slice_crops, and table_crops(layout_stage_tiled(pages), pages)),
+which remains the library surface for callers that need an
+intermediate table.
 """
 
 from __future__ import annotations
@@ -59,17 +56,17 @@ def fused_all_crops(pages: DataFrame,
                     band: float | None = None,
                     highres: bool = False) -> DataFrame:
     """pages → tagged union of recognition crops (crop_kind='line', the
-    rows fused_page_crops emits) and table crops (crop_kind='table', the
-    rows fused_table_crops emits), one decode per page.
+    rows page_crop_rows emits) and table crops (crop_kind='table', the
+    rows table_crop_rows emits), one decode per page. layout_slot=None
+    skips the table family.
 
-    highres=True (r7, VERDICT r06 #3): `pages` must additionally carry
-    (hr_bytes, hr_width, hr_height) — the 2× render equi-joined on
-    media_ref BEFORE this pass. Line crops are then encoded from the
+    highres=True: `pages` must additionally carry (hr_bytes, hr_width,
+    hr_height) — the 2× render equi-joined on media_ref BEFORE this pass
+    (pipeline.paired_pages). Line crops are then encoded from the
     highres blob with reference int-truncation rescaling
     (page_crop_rows' dual-DPI path); detection, layout and table crops
-    stay on the lowres blob exactly like the relational highres branch.
-    This is what lets pipeline.extract's dual-DPI path run the fused
-    single-pass plan with NO page-blob persist."""
+    stay on the lowres blob exactly like the relational
+    slice_crops(highres_pages=) chain."""
     from ..datagen import BAND as _BAND
 
     if detect_slot is None:
@@ -131,7 +128,7 @@ def fused_all_crops(pages: DataFrame,
 
 def line_crops(all_crops: DataFrame) -> DataFrame:
     """The recognition-crop view of the union — same columns
-    fused_page_crops emits."""
+    recognition.slice_crops emits."""
     return all_crops.filter(F.col("crop_kind") == "line").select(
         "media_ref",
         F.col("line_idx").cast("int").alias("line_idx"),
@@ -141,7 +138,7 @@ def line_crops(all_crops: DataFrame) -> DataFrame:
 
 
 def table_crops(all_crops: DataFrame) -> DataFrame:
-    """The table-crop view of the union — same columns fused_table_crops
+    """The table-crop view of the union — same columns tables.table_crops
     emits."""
     return all_crops.filter(F.col("crop_kind") == "table").select(
         "media_ref",

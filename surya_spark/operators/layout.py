@@ -77,7 +77,7 @@ def relabel_headers_footers(regions: DataFrame) -> DataFrame:
 def relabel_header_footer_record(label: str, y1: float, y2: float,
                                  page_height: float, top_k: dict) -> str:
     """Per-record replica of relabel_headers_footers for the fused page
-    pass (tables.fused_table_crops): PageHeader/PageFooter centered in
+    pass (tables.table_crop_rows): PageHeader/PageFooter centered in
     the middle 60% of the page takes its second-best top_k label. The
     relational form sorts map entries by value desc with a STABLE sort
     and takes entry 0 — equivalent to a first-strict-max scan in map
@@ -142,7 +142,7 @@ def page_tile_plan(w: int, h: int, slice_min: int = 1500,
                    slice_size: int = 1200,
                    max_slices: int = 4) -> tuple[bool, int, int]:
     """Tile geometry shared by the relational splitter and the fused
-    page pass (tables.fused_table_crops): split along the longer axis
+    page pass (tables.table_crop_rows): split along the longer axis
     when either dimension exceeds slice_min, step sized so at most
     max_slices tiles result (ref surya/layout/slicer.py:19-38,
     settings.py:101-105). Returns (along_h, step, n_tiles)."""
@@ -260,7 +260,7 @@ def try_merge_tile_region(box1: dict, rec: dict, along_h: bool,
     cross-axis overlap, matching labels (Picture/Figure interchangeable).
     On success box1 grows to the bbox union IN PLACE and True returns.
     Shared by the relational merge_tile_regions and the fused page-grain
-    pass (tables.fused_table_crops) so the two paths cannot drift."""
+    pass (tables.table_crop_rows) so the two paths cannot drift."""
     w1, h1 = box1["x2"] - box1["x1"], box1["y2"] - box1["y1"]
     w2, h2 = rec["x2"] - rec["x1"], rec["y2"] - rec["y1"]
     if along_h:
@@ -303,7 +303,7 @@ def accumulate_tile_merges(recs: list, along_h: bool,
     stitched order (tile_idx, then within-tile position): tile 0's boxes
     are accumulated verbatim, later tiles' boxes merge into the first
     kept box that satisfies try_merge_tile_region or are appended.
-    Shared by merge_tile_regions and tables.fused_table_crops — the
+    Shared by merge_tile_regions and tables.table_crop_rows — the
     accumulation rule itself, like the pairwise merge rule, must be a
     single implementation so the two paths cannot drift."""
     kept: list = []

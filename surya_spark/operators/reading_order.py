@@ -76,10 +76,10 @@ def order_lines(lines: DataFrame, band: float = float(BAND)) -> DataFrame:
         .withColumn("y_band", G.y_band(F.col("y1"), band))
         .drop("_crossing")
     )
-    # line_idx as final tie-break: matches fused_page_crops' sort key, so
-    # exact (col_id, y_band, x1, y1) ties order identically across paths
-    # AND across shuffles (row_number on a non-total order is
-    # partition-order-dependent)
+    # line_idx as final tie-break: matches recognition.page_crop_rows'
+    # sort key, so exact (col_id, y_band, x1, y1) ties order identically
+    # across paths AND across shuffles (row_number on a non-total order
+    # is partition-order-dependent)
     tie = ["line_idx"] if "line_idx" in lines.columns else []
     w_order = Window.partitionBy("media_ref").orderBy(
         "col_id", "y_band", "x1", "y1", *tie

@@ -45,8 +45,7 @@ _CROPS = T.StructType([
 
 
 def slice_crops(lines: DataFrame, pages: DataFrame,
-                highres_pages: DataFrame | None = None,
-                null_axis_rects: bool = True) -> DataFrame:
+                highres_pages: DataFrame | None = None) -> DataFrame:
     """lines(media_ref, line_idx, position, bbox) ⋈ page blobs → crop blobs.
 
     The aggregate-then-join keeps the shuffle payload to bbox lists; page
@@ -56,10 +55,9 @@ def slice_crops(lines: DataFrame, pages: DataFrame,
     struct and each crop is polygon-MASKED (encode_crop's fillPoly
     analog; ref surya/input/processing.py:57-101): skewed quads from
     rotated text stop leaking neighbor-line ink into recognition.
-    Axis-aligned polygons are bit-identical to the bbox-only path —
-    and with null_axis_rects=True (default) they are NULLed out before
-    the aggregate as a pure payload optimization (pytest-pinned
-    bit-equal; the flag exists only for A/B measurement).
+    Axis-aligned polygons are bit-identical to the bbox-only path, so
+    they are NULLed out before the aggregate as a pure payload
+    optimization (pytest-pinned bit-equal).
 
     With highres_pages (a second blob table of the SAME pages at higher
     resolution — the reference's 192-DPI render), crops are taken from the
@@ -80,17 +78,17 @@ def slice_crops(lines: DataFrame, pages: DataFrame,
         # rides the box struct to the crop row so recognize() can seed
         # the decode with it
         box_cols.append("input_text")
-    if has_poly and null_axis_rects:
+    if has_poly:
         # Axis-aligned quads carry zero information beyond the bbox —
         # encode_crop takes the identical bbox path for them (pytest-
         # pinned bit-equal), so NULL them before the per-page aggregate:
         # 8 doubles + two levels of Arrow list offsets per line stay out
         # of collect_list, the shuffle, and the Python loop; only
         # genuinely skewed quads (rotated text) keep their corners.
-        # Measured ~free at bench scale (tools/poly_payload_ab.py: 2.47
-        # vs 2.47 s min over 4k docs — the zlib page decode dominates);
-        # kept as shuffle-payload hygiene for the 100× regime, where the
-        # boxes list is the one corpus-∝ aggregate this join ships.
+        # Measured ~free at bench scale (2.47 vs 2.47 s min over 4k
+        # docs, round 5); kept as shuffle-payload hygiene for the 100×
+        # regime, where the boxes list is the one corpus-∝ aggregate
+        # this join ships.
         # Exact == is safe: the quad corners and the bbox are derived
         # from the same doubles in _postprocess_page (bbox = corner
         # min/max), and a false negative merely keeps the polygon.
@@ -180,25 +178,21 @@ def slice_crops(lines: DataFrame, pages: DataFrame,
     return joined.mapInPandas(run, schema=out_schema)
 
 
-def fused_page_crops(pages: DataFrame,
-                     detect_slot: Callable = None,
-                     band: float | None = None) -> DataFrame:
-    """One page-grain pass for the flagship's detect→order→slice chain:
+def page_crop_rows(ref: str, w: int, h: int, blob: bytes,
+                   detect_slot: Callable, band_v: float,
+                   desc=None, hr_blob: bytes | None = None,
+                   hr_scale: tuple[float, float] | None = None
+                   ) -> tuple[list[dict], object]:
+    """Per-page kernel of the combined page pass
+    (operators/fused.fused_all_crops) for the detect→order→slice chain:
     detect slot → fused post-process (detection._postprocess_page) →
-    column-aware reading order (reading_order.order_lines semantics,
-    replicated per page) → crop slicing (slots.encode_crop), emitting
-    the same crop rows slice_crops produces — without ever
-    materializing the line table.
-
-    Why: mapInPandas erases partitioning info, so the relational chain
-    re-shuffles the line rows TWICE even though every computation is
-    page-local — once for the reading-order window, once for the slice
-    groupBy aggregate (+ its join back onto the pre-partitioned pages).
-    This pass deletes both exchanges (round-3 lesson: per-page work
-    belongs inside the page-grain UDF). The relational operators remain
-    the library surface for callers that need the intermediate line
-    table (given-boxes mode, checkpointed stage grain, highres); crops
-    are pytest-pinned byte-identical against that path.
+    column-aware reading order → crop encode (slots.encode_crop),
+    emitting the crop rows the relational chain
+    slice_crops(order_lines(detection_stage(pages)), pages) produces —
+    without ever materializing the line table. Every step is page-local,
+    so the relational chain's two line-table exchanges (order window +
+    slice aggregate) are pure overhead here; crops are pytest-pinned
+    byte-identical against it.
 
     Ordering contract matches order_lines exactly: two-column iff no
     line crosses the central strip (x1 < 0.48w AND x2 > 0.52w), col_id
@@ -206,41 +200,6 @@ def fused_page_crops(pages: DataFrame,
     (col_id, y_band, x1, y1) — line_idx appended as the final tie-break
     (the relational row_number is partition-order-dependent on exact
     ties; fixtures keep keys unique).
-
-    No highres variant: the 2x-render path needs the second blob table
-    and stays on relational slice_crops."""
-    from ..datagen import BAND as _BAND
-
-    if detect_slot is None:
-        detect_slot = slots.surrogate_detect
-    band_v = float(_BAND) if band is None else float(band)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, w, h, blob in zip(
-                pdf["media_ref"], pdf["width"], pdf["height"],
-                pdf["img_bytes"],
-            ):
-                page_rows, _ = page_crop_rows(
-                    ref, int(w), int(h), bytes(blob), detect_slot, band_v)
-                rows.extend(page_rows)
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {f.name: pd.Series([], dtype=object) for f in _CROPS})
-
-    return pages.mapInPandas(run, schema=_CROPS)
-
-
-def page_crop_rows(ref: str, w: int, h: int, blob: bytes,
-                   detect_slot: Callable, band_v: float,
-                   desc=None, hr_blob: bytes | None = None,
-                   hr_scale: tuple[float, float] | None = None
-                   ) -> tuple[list[dict], object]:
-    """Per-page kernel of fused_page_crops (detect slot → fused
-    post-process → column-aware order → crop encode). ONE implementation
-    shared by fused_page_crops and the combined single-decode pass
-    (operators/fused.fused_all_crops) so the paths cannot drift — the
-    repo's fusion-parity convention.
 
     Returns (crop row dicts, decoded page or the desc passed in): a
     caller running several page-grain kernels hands the returned desc to

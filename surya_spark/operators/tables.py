@@ -26,7 +26,6 @@ from pyspark.sql import types as T
 from .. import schemas
 from ..datagen import decode_page
 from ..functions import geometry as G
-from ..plans import caching
 from . import slots
 
 _TABLE_CROPS = T.StructType([
@@ -48,7 +47,7 @@ def table_crops(regions: DataFrame, pages: DataFrame,
     blobs. table_idx = row_number over y (top-to-bottom), matching the
     reference's per-page table ordering. The window tie-breaks on
     emit_idx (model emit order) so two tables at identical (y1, x1)
-    origins get the SAME table_idx here and in fused_table_crops, which
+    origins get the SAME table_idx here and in table_crop_rows, which
     sorts by the same key — row_number without the full key is
     partition-order-dependent on exact ties."""
     tie = ["emit_idx"] if "emit_idx" in regions.columns else ["x2", "y2"]
@@ -93,54 +92,6 @@ def table_crops(regions: DataFrame, pages: DataFrame,
     return joined.mapInPandas(run, schema=_TABLE_CROPS)
 
 
-def fused_table_crops(pages: DataFrame,
-                      layout_slot: Callable = slots.surrogate_layout,
-                      slice_min: int = 1500,
-                      slice_size: int = 1200,
-                      max_slices: int = 4,
-                      expand_pct: float = 0.01,
-                      merge_tolerance: float = 0.05,
-                      merge_margin: float = 0.05) -> DataFrame:
-    """One page-grain pass for the flagship's layout→table-crop chain:
-    layout slot (tiled per layout.page_tile_plan for oversize pages) →
-    cross-tile merge → header/footer relabel → Table filter → ordered
-    table_idx → inline crop encode, emitting the same rows
-    table_crops(layout_stage_tiled(pages), pages) produces — without
-    materializing the region table.
-
-    Why: mapInPandas erases partitioning info, so the relational chain
-    pays a stitch join, a merge applyInPandas shuffle, a position
-    window, a table_idx window, and a collect_list+join back onto pages
-    — all page-local computations (round-3 lesson: per-page work
-    belongs inside the page-grain UDF). Every rule is a shared helper
-    (layout.page_tile_plan / tile_sub_blob / try_merge_tile_region /
-    relabel_header_footer_record) so the two paths cannot drift; crops
-    are pytest-pinned byte-identical against the relational path.
-
-    The relational operators remain the library surface for callers
-    that need the intermediate region table (layout-only queries,
-    checkpointed stage grain, debug overlays).
-
-    Scale: one pass over the pre-partitioned pages, zero exchanges;
-    per-page work is bounded (≤4 tiles × ≤100 regions)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, w, h, blob in zip(
-                pdf["media_ref"], pdf["width"], pdf["height"],
-                pdf["img_bytes"],
-            ):
-                t_rows, _ = table_crop_rows(
-                    ref, int(w), int(h), bytes(blob), layout_slot,
-                    slice_min, slice_size, max_slices, expand_pct,
-                    merge_tolerance, merge_margin)
-                rows.extend(t_rows)
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {f.name: pd.Series([], dtype=object) for f in _TABLE_CROPS})
-
-    return pages.mapInPandas(run, schema=_TABLE_CROPS)
-
-
 def table_crop_rows(ref: str, w: int, h: int, blob: bytes,
                     layout_slot: Callable,
                     slice_min: int = 1500, slice_size: int = 1200,
@@ -148,10 +99,19 @@ def table_crop_rows(ref: str, w: int, h: int, blob: bytes,
                     merge_tolerance: float = 0.05,
                     merge_margin: float = 0.05,
                     desc=None) -> tuple[list[dict], object]:
-    """Per-page kernel of fused_table_crops (layout slot [tiled] →
-    cross-tile merge → relabel → ordered table crops). ONE implementation
-    shared by fused_table_crops and the combined single-decode pass
-    (operators/fused.fused_all_crops) so the paths cannot drift.
+    """Per-page kernel of the combined page pass
+    (operators/fused.fused_all_crops) for the layout→table-crop chain:
+    layout slot (tiled per layout.page_tile_plan for oversize pages) →
+    cross-tile merge → header/footer relabel → Table filter → ordered
+    table_idx → inline crop encode, emitting the rows
+    table_crops(layout_stage_tiled(pages), pages) produces — without
+    materializing the region table. The relational chain's stitch join,
+    merge shuffle, position and table_idx windows and collect_list join
+    are all page-local work; every rule here is a shared helper
+    (layout.page_tile_plan / tile_sub_blob / try_merge_tile_region /
+    relabel_header_footer_record) so the two paths cannot drift, and
+    crops are pytest-pinned byte-identical against the relational path.
+    Per-page work is bounded (≤4 tiles × ≤100 regions).
 
     Returns (crop row dicts, decoded page or the desc passed in) —
     callers chaining several page-grain kernels reuse desc and the blob
@@ -366,7 +326,7 @@ def fused_table_cells(crops: DataFrame,
     chain's rows×cols shuffle-hash join, the coverage theta join, and
     the anchor window (plus the items persist that double consumption
     forces) are pure overhead (round-3 lesson; same shape as
-    fused_page_crops / fused_table_crops). The rule lives in
+    page_crop_rows / table_crop_rows). The rule lives in
     cells_for_table, pinned equal to the relational path by pytest.
 
     The relational operators (table_items / cell_grid /
@@ -515,30 +475,13 @@ def assign_cell_text(cells: DataFrame, ocr_lines: DataFrame) -> DataFrame:
     )
 
 
-def table_stage(regions: DataFrame, pages: DataFrame,
-                ocr_lines: DataFrame,
-                slot: Callable = slots.surrogate_table) -> DataFrame:
-    return table_stage_from_crops(table_crops(regions, pages),
-                                  ocr_lines, slot)
-
-
 def table_stage_from_crops(crops: DataFrame, ocr_lines: DataFrame,
-                           slot: Callable = slots.surrogate_table,
-                           fused: bool = True) -> DataFrame:
-    """fused=True (the shipped pipeline) runs slot→grid→spanning in one
+                           slot: Callable = slots.surrogate_table
+                           ) -> DataFrame:
+    """Table crops → cells with text: slot→grid→spanning in one
     table-grain pass (fused_table_cells); only the cell-text assignment
-    join remains relational — it genuinely joins a second table
-    (ocr_lines). fused=False keeps the relational chain, where items
-    feeds TWO consumers (cell_grid and the spanning-cell pass) and its
-    lineage contains the whole layout stage — unpersisted, Spark
-    re-executes layout per branch (measured 31 s → 14 s at 4000 docs
-    when pinned). caching.scope: inside pipeline.extract the handle
-    bubbles to extract's scope; standalone, the returned cells release
-    it on their first action."""
-    if fused:
-        return assign_cell_text(fused_table_cells(crops, slot), ocr_lines)
-    with caching.scope() as (handles, is_owner):
-        items = caching.managed(table_items(crops, slot))
-        cells = apply_spanning_cells(cell_grid(items), items)
-        return caching.owned(
-            assign_cell_text(cells, ocr_lines), handles, is_owner)
+    join stays relational — it genuinely joins a second table
+    (ocr_lines). The relational chain (table_items → cell_grid →
+    apply_spanning_cells) remains the library surface and the test
+    oracle this pass is pinned equal to."""
+    return assign_cell_text(fused_table_cells(crops, slot), ocr_lines)

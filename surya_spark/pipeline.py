@@ -12,10 +12,13 @@ The flagship dataflow (SURVEY.md §7.2), all DataFrame ops:
              spanning override) ⋈ ocr_lines ─► cells
     ocr_lines ∪ cells ∪ passthrough spans ─► assemble ─► out_spans
 
-(The per-step relational operators — detect/clean/order/slice, layout
-regions/stitch/merge, table_crops — remain the library surface, and the
-single-purpose fused passes remain for single-family callers; each
-level is pytest-pinned byte-identical to the next.)
+Every production path — extract with or without tables, the dual-DPI
+extract, checkpointed_extract and the CLI extract/ocr/table stages —
+runs this one combined pass. The per-step relational operators
+(detect/clean/order/slice, layout regions/stitch/merge, table_crops)
+remain for callers that need an intermediate table (given-boxes mode,
+the detect/layout CLI stages, debug/render sinks, driver queries) and
+as the test oracle the combined pass is pytest-pinned byte-identical to.
 
 Skew note: all heavy stages are keyed by media_ref (page grain), so an
 image-heavy document's pages spread across executors automatically — the
@@ -30,8 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .operators import assemble, detection, fused, layout, reading_order
-from .operators import recognition, slots, tables
+from .operators import assemble, fused, recognition, slots, tables
 from .plans import caching, partitioning
 
 
@@ -75,6 +77,26 @@ def pages_for(documents: DataFrame, page_blobs: DataFrame,
     return pages
 
 
+def paired_pages(documents: DataFrame, pages: DataFrame,
+                 highres_blobs: DataFrame,
+                 partitions: int | None = None) -> DataFrame:
+    """pages equi-joined on media_ref to the 2× render of the same pages
+    as (hr_bytes, hr_width, hr_height) — the input
+    fused.fused_all_crops(highres=True) reads. Both sides are keyed by
+    media_ref, so the join adds no fan-out and the pair feeds ONE page
+    pass: raw page blobs are never persisted on the dual-DPI path."""
+    hp = pages_for(documents, highres_blobs, partitions=partitions)
+    return pages.join(
+        hp.select(
+            "media_ref",
+            F.col("img_bytes").alias("hr_bytes"),
+            F.col("width").alias("hr_width"),
+            F.col("height").alias("hr_height"),
+        ).hint("shuffle_hash"),
+        "media_ref",
+    )
+
+
 def extract(
     documents: DataFrame,
     page_blobs: DataFrame,
@@ -101,8 +123,8 @@ def extract(
         fused_all_crops pass decodes once and emits both crop families)
         and is deliberately NOT persisted — at corpus scale the raw page
         blobs are the pipeline's largest cache footprint, and the crop
-        union persisted instead is strictly smaller. Only the highres
-        relational path (2–3 consumers of pages) still pins pages.
+        union persisted instead is strictly smaller. The dual-DPI path
+        pairs pages with the 2× render before the same single pass.
 
     checkpointed_extract gets the same reuse from stage materialization."""
     spark = documents.sparkSession
@@ -121,7 +143,7 @@ def extract(
     except (TypeError, ValueError):
         par = spark.sparkContext.defaultParallelism
 
-    # caching.scope: persisted stages (pages, ocr_lines, table items) are
+    # caching.scope: persisted stages (crop union, ocr_lines) are
     # released by the first action on the returned spans — no
     # InMemoryRelation leaks across queries in a long-lived session
     with caching.scope() as (handles, is_owner):
@@ -131,67 +153,30 @@ def extract(
         pages = pages_for(documents, page_blobs, pack_partitions,
                           partitions=par if persist else None)
 
-        crops_t = None
-        if highres_blobs is None:
-            if with_tables:
-                # detect→order→slice AND layout→table-crop in ONE
-                # page-grain pass sharing a single zlib page decode
-                # (operators/fused.py) — pages drops to a single
-                # consumer, so the raw blob bytes are never cached; the
-                # (smaller) crop union is the persisted fan-out instead.
-                # Both crop families pytest-pinned byte-identical to the
-                # single-purpose fused passes, which are themselves
-                # pinned to the relational library chain.
-                allc = fused.fused_all_crops(pages, detect_slot,
-                                             layout_slot)
-                if persist:
-                    allc = caching.managed(allc)
-                crops = fused.line_crops(allc)
-                crops_t = fused.table_crops(allc)
-            else:
-                # detect→order→slice fused into ONE page-grain pass:
-                # every step is page-local, so the relational chain's
-                # two line-table exchanges (order window + slice
-                # aggregate) are pure overhead — mapInPandas erases
-                # partitioning info and forced both (round-3 lesson).
-                # Single consumer of pages: no persist needed.
-                crops = recognition.fused_page_crops(pages, detect_slot)
-        else:
-            # highres path (r7, VERDICT r06 #3): both blob tables are
-            # equi-joined on media_ref BEFORE the combined pass —
-            # detection/layout/table crops read the lowres blob,
-            # recognition crops come from the 2x render with polygons
-            # int-rescaled (ref recognition/__init__.py:158-170,
-            # scripts/config.py:36-42). The dual-DPI deployment path now
-            # runs the same fused single-decode plan as the default: one
-            # consumer of pages, so raw page blobs are NEVER persisted
-            # (pre-r7 this branch pinned full pages — the pipeline's
-            # largest cache footprint). Byte-equality with the relational
-            # highres chain is pytest-pinned (test_fused_all).
-            hp = pages_for(documents, highres_blobs,
-                           partitions=par if persist else None)
-            paired = pages.join(
-                hp.select(
-                    "media_ref",
-                    F.col("img_bytes").alias("hr_bytes"),
-                    F.col("width").alias("hr_width"),
-                    F.col("height").alias("hr_height"),
-                ).hint("shuffle_hash"),
-                "media_ref",
-            )
-            allc = fused.fused_all_crops(
-                paired, detect_slot,
-                layout_slot if with_tables else None,
-                highres=True)
-            if persist:
-                allc = caching.managed(allc)
-            crops = fused.line_crops(allc)
-            if with_tables:
-                crops_t = fused.table_crops(allc)
+        highres = highres_blobs is not None
+        if highres:
+            pages = paired_pages(documents, pages, highres_blobs,
+                                 partitions=par if persist else None)
+        # detect→order→slice AND layout→table-crop in ONE page-grain
+        # pass sharing a single zlib page decode (operators/fused.py) —
+        # pages has a single consumer, so the raw blob bytes are never
+        # cached. With tables the (smaller) crop union feeds recognize
+        # AND the table stage, so it is the persisted fan-out instead;
+        # without tables recognize is its only reader — no pin. On the
+        # dual-DPI path line crops come from the 2x render with
+        # polygons int-rescaled (ref recognition/__init__.py:158-170,
+        # scripts/config.py:36-42); detection, layout and table crops
+        # read the lowres blob.
+        allc = fused.fused_all_crops(pages, detect_slot,
+                                     layout_slot if with_tables else None,
+                                     highres=highres)
+        if persist and with_tables:
+            allc = caching.managed(allc)
         # chars pruned inside the UDF unless requested: span assembly never
         # reads them and they are the pipeline's single largest Python/Arrow
         # cost (see recognition.recognize docstring)
-        ocr_lines = recognition.recognize(crops, recognize_slot,
+        ocr_lines = recognition.recognize(fused.line_crops(allc),
+                                          recognize_slot,
                                           emit_chars=emit_chars)
         if persist and with_tables:
             # two consumers (cell-text assignment + free-line assembly);
@@ -200,8 +185,8 @@ def extract(
 
         cells = None
         if with_tables:
-            cells = tables.table_stage_from_crops(crops_t, ocr_lines,
-                                                  table_slot)
+            cells = tables.table_stage_from_crops(fused.table_crops(allc),
+                                                  ocr_lines, table_slot)
 
         return caching.owned(
             assemble.assemble_spans(documents, ocr_lines, cells),
@@ -224,15 +209,13 @@ def checkpointed_extract(
     matches SURVEY.md §7.0 #4: checkpoint after every inference stage,
     relational glue stays lazy.
 
-    r7 (VERDICT r06 #2): the default path now checkpoints the SAME plan
-    the flagship runs — pages → fused_all_crops (the tagged crop union,
-    one decode per page) → recognize / table stage → assemble — instead
-    of the pre-fusion relational chain, so resume-mode no longer re-pays
-    the two line-table exchanges and the multi-consumer page decode the
-    round-5/6 fusions deleted. Bucket grain (media_ref) is unchanged.
-    The dual-DPI path (highres_blobs) keeps the relational slice join it
-    needs to read crops from the 2× render."""
-    from .operators import fused
+    It checkpoints the SAME plan the flagship runs — pages →
+    fused_all_crops (the tagged crop union, one decode per page) →
+    recognize / table stage → assemble — as the stages pages, all_crops,
+    ocr_lines and cells, bucketed on media_ref. The dual-DPI run
+    (highres_blobs) checkpoints the same four stages: its all_crops
+    stage reads the checkpointed lowres pages paired with the 2× render
+    (paired_pages), exactly like extract's dual-DPI path."""
     from .plans.checkpoint import CheckpointRunner
 
     runner = CheckpointRunner(spark, base_dir, n_buckets, n_groups)
@@ -241,48 +224,25 @@ def checkpointed_extract(
         "pages", lambda: pages_for(documents, page_blobs),
         bucket_key="media_ref", max_groups=max_groups,
     )
-    if highres_blobs is None:
-        allc = runner.stage(
-            "all_crops", lambda: fused.fused_all_crops(pages),
-            bucket_key="media_ref", max_groups=max_groups,
-        )
-        ocr_lines = runner.stage(
-            "ocr_lines",
-            lambda: recognition.recognize(fused.line_crops(allc),
-                                          emit_chars=False),
-            bucket_key="media_ref", max_groups=max_groups,
-        )
-        cells = runner.stage(
-            "cells",
-            lambda: tables.table_stage_from_crops(fused.table_crops(allc),
-                                                  ocr_lines),
-            bucket_key="media_ref", max_groups=max_groups,
-        )
-        return assemble.assemble_spans(documents, ocr_lines, cells)
-    ordered = runner.stage(
-        "lines",
-        lambda: reading_order.order_lines(detection.detection_stage(pages)),
+    highres = highres_blobs is not None
+    allc = runner.stage(
+        "all_crops",
+        lambda: fused.fused_all_crops(
+            paired_pages(documents, pages, highres_blobs) if highres
+            else pages,
+            highres=highres),
         bucket_key="media_ref", max_groups=max_groups,
     )
-    hp = pages_for(documents, highres_blobs)
     ocr_lines = runner.stage(
         "ocr_lines",
-        lambda: recognition.recognize(
-            recognition.slice_crops(
-                ordered.select("media_ref", "line_idx", "position",
-                               "x1", "y1", "x2", "y2", "polygon"),
-                pages,
-                highres_pages=hp,
-            ),
-            emit_chars=False,
-        ),
+        lambda: recognition.recognize(fused.line_crops(allc),
+                                      emit_chars=False),
         bucket_key="media_ref", max_groups=max_groups,
     )
     cells = runner.stage(
         "cells",
-        lambda: tables.table_stage(
-            layout.layout_stage_tiled(pages), pages, ocr_lines
-        ),
+        lambda: tables.table_stage_from_crops(fused.table_crops(allc),
+                                              ocr_lines),
         bucket_key="media_ref", max_groups=max_groups,
     )
     return assemble.assemble_spans(documents, ocr_lines, cells)

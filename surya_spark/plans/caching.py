@@ -12,7 +12,7 @@ ownership is deferred to that action:
   and (b) a process-global registry.
 * ``scope()`` — context manager used by every top-level library operator;
   nested calls share the OUTERMOST scope so an operator composed of other
-  operators (extract → table_stage) releases everything at once.
+  scoped operators releases everything at once.
 * ``owned(df, handles, is_owner)`` — when this call owns the scope, wrap
   the result so its FIRST terminal action (collect / toPandas / count /
   take / show / …) unpersists every handle; otherwise return df unchanged

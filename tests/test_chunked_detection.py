@@ -27,6 +27,15 @@ def _ocr_texts(spark, pages, chunked):
     return {k: [t for _, t in sorted(v)] for k, v in out.items()}
 
 
+def _relational_stage(pages, chunked, slot=detection.slots.surrogate_detect):
+    """detection_stage's relational oracle: raw detect output → the
+    containment anti-join → windowed expand/normalize."""
+    detect = (detection.split_detect_lines(pages, slot) if chunked
+              else detection.detect_lines(pages, slot))
+    return detection.expand_and_normalize(
+        detection.clean_contained_boxes(detect))
+
+
 def test_chunked_equals_whole_page(spark):
     docs = datagen.gen_documents(spark, N, partitions=4)
     blobs = datagen.gen_page_blobs(spark, N, partitions=4)
@@ -54,12 +63,9 @@ def test_tall_page_produces_multiple_chunks(spark):
 
 
 def test_fused_postprocess_equals_relational(spark):
-    """detection_stage(fused=True) — clean/expand/normalize inside the
-    detect UDF — must be row-identical to the relational anti-join +
-    window form, on both the plain and the chunked path."""
-    from surya_spark import datagen, pipeline
-    from surya_spark.operators import detection
-
+    """detection_stage — clean/expand/normalize inside the detect UDF —
+    must be row-identical to the relational anti-join + window form, on
+    both the plain and the chunked path."""
     docs = datagen.gen_documents(spark, 10, partitions=2)
     blobs = datagen.gen_page_blobs(spark, 10, partitions=2)
     pages = pipeline.pages_for(docs, blobs)
@@ -72,10 +78,8 @@ def test_fused_postprocess_equals_relational(spark):
              for r in df.collect()))
 
     for chunked in (False, True):
-        fused = rows(detection.detection_stage(pages, chunked=chunked,
-                                               fused=True))
-        relational = rows(detection.detection_stage(pages, chunked=chunked,
-                                                    fused=False))
+        fused = rows(detection.detection_stage(pages, chunked=chunked))
+        relational = rows(_relational_stage(pages, chunked))
         assert fused == relational, f"chunked={chunked}"
         assert len(fused) > 0
 
@@ -85,9 +89,6 @@ def test_postprocess_preserves_skewed_quads(spark):
     surya/detection/heatmap.py:83-103) must keep its corners through BOTH
     post-process paths: expansion is cornerwise, not a bbox snap, and the
     two paths stay bit-identical on the polygon column."""
-    from surya_spark import datagen, pipeline
-    from surya_spark.operators import detection
-
     docs = datagen.gen_documents(spark, 6, partitions=2)
     blobs = datagen.gen_page_blobs(spark, 6, partitions=2)
     pages = pipeline.pages_for(docs, blobs)
@@ -113,10 +114,8 @@ def test_postprocess_preserves_skewed_quads(spark):
               round(r["confidence"], 12))
              for r in df.collect()))
 
-    fused = rows(detection.detection_stage(pages, slot=skew_slot,
-                                           fused=True))
-    relational = rows(detection.detection_stage(pages, slot=skew_slot,
-                                                fused=False))
+    fused = rows(detection.detection_stage(pages, slot=skew_slot))
+    relational = rows(_relational_stage(pages, False, skew_slot))
     assert fused == relational
     assert len(fused) > 0
     skewed = 0

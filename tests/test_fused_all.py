@@ -1,13 +1,14 @@
-"""fused_all_crops parity: the flagship's combined single-decode page
-pass must emit exactly the union of what the two single-purpose fused
-passes emit — recognition crops byte-identical to fused_page_crops,
-table crops byte-identical to fused_table_crops — and pipeline.extract
-on the combined path must produce the same spans as before."""
+"""End-to-end parity of the one extraction plan: pipeline.extract (with
+and without tables) equals the relational library chain span for span,
+the dual-DPI combined pass is byte-identical to the relational highres
+chain, and the dual-DPI extract never caches raw page blobs. (The
+lowres crop pins live in test_recognition_modes and test_fused_tables.)"""
 
 from __future__ import annotations
 
 from surya_spark import datagen, pipeline
-from surya_spark.operators import fused, recognition, slots, tables
+from surya_spark.operators import (assemble, detection, fused, layout,
+                                   reading_order, recognition, tables)
 
 
 def _line_rows(df):
@@ -27,49 +28,52 @@ def _table_rows(df):
     )
 
 
-def test_fused_all_crops_byte_identical_to_single_passes(spark):
-    n = 24  # includes tall (tiled-layout) pages at this count
-    docs = datagen.gen_documents(spark, n, partitions=2)
-    blobs = datagen.gen_page_blobs(spark, n, partitions=2)
-    pages = pipeline.pages_for(docs, blobs).persist()
+def _spans(df):
+    return {
+        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"])
+                      for s in r["spans"]]
+        for r in df.collect()
+    }
 
-    for detect_slot in (slots.surrogate_detect,
-                        slots.surrogate_detect_heatmap):
-        allc = fused.fused_all_crops(pages, detect_slot).persist()
-        lines = _line_rows(fused.line_crops(allc))
-        tcrops = _table_rows(fused.table_crops(allc))
-        assert lines == _line_rows(
-            recognition.fused_page_crops(pages, detect_slot))
-        assert tcrops == _table_rows(tables.fused_table_crops(pages))
-        assert len(lines) > 0 and len(tcrops) > 0, detect_slot.__name__
-        allc.unpersist()
-    pages.unpersist()
+
+def _relational_extract(docs, blobs, with_tables):
+    """The relational formulation of extract: detection_stage →
+    order_lines → slice_crops → recognize, and layout_stage_tiled →
+    table_crops → table_items → cell_grid/apply_spanning_cells →
+    assign_cell_text."""
+    pages = pipeline.pages_for(docs, blobs)
+    ocr = recognition.recognize(
+        recognition.slice_crops(
+            reading_order.order_lines(detection.detection_stage(pages)),
+            pages),
+        emit_chars=False)
+    cells = None
+    if with_tables:
+        items = tables.table_items(tables.table_crops(
+            layout.layout_stage_tiled(pages), pages))
+        cells = tables.assign_cell_text(
+            tables.apply_spanning_cells(tables.cell_grid(items), items),
+            ocr)
+    return assemble.assemble_spans(docs, ocr, cells)
 
 
 def test_extract_spans_match_across_paths(spark):
-    """End-to-end: the combined-pass extract equals the checkpoint-grain
-    relational formulation span for span (the invariant tuple is
-    (kind, text, media_ref, order))."""
-    import tempfile
-
-    n = 12
+    """End-to-end: the combined-pass extract equals the relational
+    formulation span for span (the invariant tuple is
+    (kind, text, media_ref, offset)), with and without tables."""
+    n = 16
     docs = datagen.gen_documents(spark, n, partitions=2)
     blobs = datagen.gen_page_blobs(spark, n, partitions=2)
 
-    combined = {
-        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                      for s in r["spans"]]
-        for r in pipeline.extract(docs, blobs, with_tables=True).collect()
-    }
-    with tempfile.TemporaryDirectory() as td:
-        relational = {
-            r["doc_id"]: [(s["kind"], s["text"], s["media_ref"],
-                           s["offset"]) for s in r["spans"]]
-            for r in pipeline.checkpointed_extract(
-                spark, docs, blobs, td, n_buckets=4, n_groups=2
-            ).collect()
-        }
-    assert combined == relational and len(combined) == n
+    got = {}
+    for with_tables in (True, False):
+        got[with_tables] = _spans(
+            pipeline.extract(docs, blobs, with_tables=with_tables))
+        relational = _spans(_relational_extract(docs, blobs, with_tables))
+        assert got[with_tables] == relational, with_tables
+        assert len(relational) == n
+    # the corpus has tables, so the two modes really differ
+    assert got[True] != got[False]
 
 
 def test_fused_highres_byte_identical_to_relational(spark):
@@ -78,11 +82,7 @@ def test_fused_highres_byte_identical_to_relational(spark):
     reference int-truncation rescaling — must emit line crops
     BYTE-identical to the relational highres chain (detection_stage →
     order_lines → slice_crops(highres_pages=…)) and table crops
-    byte-identical to the lowres fused table pass."""
-    from pyspark.sql import functions as F
-
-    from surya_spark.operators import detection, reading_order
-
+    byte-identical to the lowres relational table chain."""
     n = 24
     docs = datagen.gen_documents(spark, n, partitions=2)
     blobs = datagen.gen_page_blobs(spark, n, partitions=2)
@@ -90,13 +90,8 @@ def test_fused_highres_byte_identical_to_relational(spark):
     pages = pipeline.pages_for(docs, blobs).persist()
     hp = pipeline.pages_for(docs, hi).persist()
 
-    paired = pages.join(
-        hp.select("media_ref",
-                  F.col("img_bytes").alias("hr_bytes"),
-                  F.col("width").alias("hr_width"),
-                  F.col("height").alias("hr_height")),
-        "media_ref")
-    allc = fused.fused_all_crops(paired, highres=True).persist()
+    allc = fused.fused_all_crops(
+        pipeline.paired_pages(docs, pages, hi), highres=True).persist()
 
     ordered = reading_order.order_lines(detection.detection_stage(pages))
     rel = recognition.slice_crops(
@@ -109,7 +104,7 @@ def test_fused_highres_byte_identical_to_relational(spark):
     assert len(fused_lines) > 0
     assert all(t[-2] == 2.0 and t[-1] == 2.0 for t in fused_lines)
     assert _table_rows(fused.table_crops(allc)) == _table_rows(
-        tables.fused_table_crops(pages))
+        tables.table_crops(layout.layout_stage_tiled(pages), pages))
     allc.unpersist(); pages.unpersist(); hp.unpersist()
 
 

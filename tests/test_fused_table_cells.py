@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from surya_spark import datagen, pipeline
-from surya_spark.operators import tables
+from surya_spark.operators import fused, tables
 
 
 def _page(ref, w, h, regions, table=None):
@@ -66,15 +66,15 @@ def test_fused_table_cells_identical_to_relational(spark):
         ],
         "media_ref string, width int, height int, img_bytes binary",
     )
-    crops = tables.fused_table_crops(pages)
+    crops = fused.table_crops(fused.fused_all_crops(pages))
 
-    fused = _rows(tables.fused_table_cells(crops))
+    got = _rows(tables.fused_table_cells(crops))
     relational = _rows(_relational(crops))
-    assert fused == relational
-    assert len(fused) > 0
+    assert got == relational
+    assert len(got) > 0
 
     # the overlap page really exercised the one-cell-two-spans case
-    twice = [r for r in fused
+    twice = [r for r in got
              if r[0] == "blob://c/overlap" and (r[2], r[3]) == (1, 1)]
     assert len(twice) == 2
 
@@ -106,8 +106,10 @@ def test_normalize_table_item_rejects_non_finite():
 
 
 def test_table_stage_fused_vs_relational_end_to_end(spark):
-    """The stage wrapper (fused=True default vs fused=False) produces the
-    same cell-text table on the generated corpus, merges included."""
+    """The stage wrapper (table_stage_from_crops) produces the same
+    cell-text table as the relational chain (table_items → cell_grid →
+    apply_spanning_cells → assign_cell_text) on the generated corpus,
+    merges included."""
     n = 60
     docs = datagen.gen_documents(spark, n, partitions=4)
     blobs = datagen.gen_page_blobs(spark, n, partitions=4)
@@ -119,18 +121,17 @@ def test_table_stage_fused_vs_relational_end_to_end(spark):
                 "x1", "y1", "x2", "y2"),
         pages,
     )).persist()
-    crops = tables.fused_table_crops(pages).persist()
+    crops = fused.table_crops(fused.fused_all_crops(pages)).persist()
 
     def key_rows(df):
         return sorted(map(tuple, df.collect()))
 
-    fused = key_rows(tables.table_stage_from_crops(crops, ocr))
-    relational = key_rows(
-        tables.table_stage_from_crops(crops, ocr, fused=False))
-    assert fused == relational
-    assert len(fused) > 0
+    got = key_rows(tables.table_stage_from_crops(crops, ocr))
+    relational = key_rows(tables.assign_cell_text(_relational(crops), ocr))
+    assert got == relational
+    assert len(got) > 0
     # merges present in the fixture → spanning rows survive the fusion
-    assert any(r for r in fused if (r[9] or 1) > 1 or (r[10] or 1) > 1)
+    assert any(r for r in got if (r[9] or 1) > 1 or (r[10] or 1) > 1)
     pages.unpersist()
     ocr.unpersist()
     crops.unpersist()

@@ -1,13 +1,14 @@
-"""fused_table_crops parity: the flagship's one-pass layout→table-crop
-fusion must emit exactly what the relational chain
-table_crops(layout_stage_tiled(pages), pages) emits — crop bytes
-included — across the tiled (tall/wide), small-page, relabel→Table,
-and no-table paths."""
+"""Table-crop parity of the combined page pass: the table family of
+fused.fused_all_crops (layout→table-crop inside the one page-grain
+pass, kernel tables.table_crop_rows) must emit exactly what the
+relational chain table_crops(layout_stage_tiled(pages), pages) emits —
+crop bytes included — across the tiled (tall/wide), small-page,
+relabel→Table, and no-table paths."""
 
 from __future__ import annotations
 
 from surya_spark import datagen
-from surya_spark.operators import layout, slots, tables
+from surya_spark.operators import fused, layout, slots, tables
 
 
 def _page(ref, w, h, regions, table=None):
@@ -86,16 +87,25 @@ def test_fused_table_crops_byte_identical_to_relational(spark):
             })
         return out
 
+    def fused_rows(slot):
+        return _rows(fused.table_crops(
+            fused.fused_all_crops(pages, layout_slot=slot)))
+
     for slot in (slots.surrogate_layout, fixed_slot):
         relational = _rows(tables.table_crops(
             layout.layout_stage_tiled(pages, slot), pages))
-        fused = _rows(tables.fused_table_crops(pages, slot))
-        assert fused == relational, getattr(slot, "__name__", slot)
-        assert len(fused) > 0
+        got = fused_rows(slot)
+        assert got == relational, getattr(slot, "__name__", slot)
+        assert len(got) > 0
 
     # the relabel page really did contribute a table via its second-best
     # label (only under the fixed slot, whose top_k pins Table second)
-    fused_fixed = _rows(tables.fused_table_crops(pages, fixed_slot))
+    fused_fixed = fused_rows(fixed_slot)
     assert any(m == "blob://f/relabel" for m, *_ in fused_fixed)
+    # the two-table page is ordered top-to-bottom: table_idx 0 is the
+    # upper table (y1 < the lower table's y1)
+    two = sorted((t, y1) for m, t, _, y1, *_ in fused_fixed
+                 if m == "blob://f/two")
+    assert [t for t, _ in two] == [0, 1] and two[0][1] < two[1][1]
     # and the no-table page contributed nothing
     assert all(m != "blob://f/none" for m, *_ in fused_fixed)

@@ -300,11 +300,15 @@ def test_given_boxes_polygon_passthrough(spark):
 
 
 def test_fused_page_crops_byte_identical_to_relational(spark):
-    """The flagship's fused detect→order→slice pass must emit exactly
-    the rows the relational chain produces — same keys, same positions,
-    byte-identical crop blobs — including tall pages and rotated-quad
-    detection (the CRAFT heatmap slot)."""
-    from surya_spark.operators import detection, reading_order, slots
+    """The combined page pass (fused.fused_all_crops) must emit exactly
+    the rows the relational chains produce — line crops with the same
+    keys, positions and byte-identical crop blobs as
+    detection_stage → order_lines → slice_crops, and table crops
+    byte-identical to table_crops(layout_stage_tiled(pages), pages) —
+    including tall pages and rotated-quad detection (the CRAFT heatmap
+    slot), whose decoded page the table kernel reuses."""
+    from surya_spark.operators import (detection, fused, layout,
+                                       reading_order, slots, tables)
 
     n = 24  # includes ~5% tall pages at this count
     docs = datagen.gen_documents(spark, n, partitions=2)
@@ -315,9 +319,18 @@ def test_fused_page_crops_byte_identical_to_relational(spark):
         return sorted(
             (r["media_ref"], r["line_idx"], r["position"],
              r["x1"], r["y1"], r["x2"], r["y2"],
-             bytes(r["crop_bytes"]))
+             bytes(r["crop_bytes"]), r["res_x"], r["res_y"])
             for r in df.collect())
 
+    def table_rows(df):
+        return sorted(
+            (r["media_ref"], r["table_idx"], r["x1"], r["y1"], r["x2"],
+             r["y2"], bytes(r["crop_bytes"]))
+            for r in df.collect())
+
+    relational_tables = table_rows(tables.table_crops(
+        layout.layout_stage_tiled(pages), pages))
+    assert relational_tables
     for slot in (slots.surrogate_detect, slots.surrogate_detect_heatmap):
         relational = rows(recognition.slice_crops(
             reading_order.order_lines(
@@ -325,8 +338,12 @@ def test_fused_page_crops_byte_identical_to_relational(spark):
             ).select("media_ref", "line_idx", "position",
                      "x1", "y1", "x2", "y2", "polygon"),
             pages))
-        fused = rows(recognition.fused_page_crops(pages, slot))
-        assert fused == relational and len(fused) > 0, slot.__name__
+        allc = fused.fused_all_crops(pages, slot).persist()
+        got = rows(fused.line_crops(allc))
+        assert got == relational and len(got) > 0, slot.__name__
+        assert table_rows(fused.table_crops(allc)) == relational_tables, (
+            slot.__name__)
+        allc.unpersist()
     pages.unpersist()
 
 
@@ -337,8 +354,12 @@ def test_langs_passthrough_and_names(spark):
     names (ref surya/recognition/languages.py:1-98)."""
     from surya_spark.functions import languages as L
 
+    from surya_spark.operators import fused
+
     pages = _pages(spark, n=4)
-    crops = recognition.fused_page_crops(pages).withColumn(
+    line_crops = fused.line_crops(
+        fused.fused_all_crops(pages, layout_slot=None))
+    crops = line_crops.withColumn(
         "langs", F.array(F.lit("en"), F.lit("zh")))
     out = recognition.recognize(crops, emit_chars=False)
     assert "langs" in out.columns
@@ -361,6 +382,5 @@ def test_langs_passthrough_and_names(spark):
     dim = L.language_dim(spark)
     assert dim.count() == len(L.CODE_TO_LANGUAGE)
     # absent langs column: schema unchanged (tail-first optional rule)
-    out2 = recognition.recognize(
-        recognition.fused_page_crops(pages), emit_chars=False)
+    out2 = recognition.recognize(line_crops, emit_chars=False)
     assert "langs" not in out2.columns

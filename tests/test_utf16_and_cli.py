@@ -43,6 +43,22 @@ def test_extract_cli(tmp_path):
     assert (tmp_path / "json").exists()
 
 
+def test_checkpoint_rejects_partial_extract(tmp_path):
+    """--checkpoint always runs the full extract with tables, so
+    combining it with --stage ocr or --no-tables must fail instead of
+    silently writing table cells."""
+    for extra in (["--stage", "ocr"], ["--no-tables"]):
+        r = subprocess.run(
+            [sys.executable, "scripts/extract.py", "--synthetic", "4",
+             "--out", str(tmp_path / "out"), "--cores", "1",
+             "--checkpoint", str(tmp_path / "ckpt"), *extra],
+            capture_output=True, text=True, cwd=".",
+        )
+        assert r.returncode != 0, extra
+        assert "--checkpoint" in r.stderr, r.stderr[-2000:]
+        assert not (tmp_path / "out").exists()
+
+
 def test_stage_cli(tmp_path):
     """The per-stage CLI modes mirroring the reference's surya_detect /
     surya_table entry points: detect emits line rows, table emits cell
