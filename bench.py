@@ -135,7 +135,7 @@ def extract_stage_times(spark, docs, blobs, par: int) -> dict[str, float]:
     each number as a sample with BENCH.md's documented host-disk
     variance, and the min-of-reps end-to-end figure as the headline."""
     from surya_spark import pipeline as P
-    from surya_spark.operators import assemble, fused, recognition, tables
+    from surya_spark.operators import assemble, fused
 
     st: dict[str, float] = {}
     cached = []
@@ -148,18 +148,13 @@ def extract_stage_times(spark, docs, blobs, par: int) -> dict[str, float]:
         st[name] = round(time.time() - t0, 3)
         return df
 
+    # mirrors pipeline.extract: pages → the one page pass (detect →
+    # order → slice → recognize ∥ layout → table crops → cells → span
+    # items) → doc assembly
     pages = step("pages", P.pages_for(docs, blobs, partitions=par))
-    # mirrors pipeline.extract: the combined single-decode page pass
-    # (detect→order→slice ∥ layout→table-crop), then recognize + the
-    # table slot/cell stage over the two crop families
-    allc = step("detect_layout_crops", fused.fused_all_crops(pages))
-    ocr = step("recognize",
-               recognition.recognize(fused.line_crops(allc),
-                                     emit_chars=False))
-    cells = step("table", tables.table_stage_from_crops(
-        fused.table_crops(allc), ocr))
+    items = step("page_items", fused.fused_page_items(pages))
     t0 = time.time()
-    materialize(assemble.assemble_spans(docs, ocr, cells))
+    materialize(assemble.assemble_items(docs, items))
     st["assemble"] = round(time.time() - t0, 3)
     for df in cached:
         df.unpersist()

@@ -1,5 +1,10 @@
-"""Span re-assembly: stage tables → out_spans(doc_id, spans) satisfying the
+"""Span re-assembly: span items → out_spans(doc_id, spans) satisfying the
 per-row invariant (kind, text, media_ref, order).
+
+A span item is (media_ref, sub_order, kind, text). The page pass emits
+them per page (page_items, run inside fused.fused_page_items); the
+relational stage tables give the same items through stage_items; both
+end in assemble_items.
 
 Replaces the reference's slice_map / table_counts offset bookkeeping
 (/root/reference/surya/recognition/__init__.py:176,880-885,
@@ -21,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def explode_spans(documents: DataFrame) -> DataFrame:
@@ -57,9 +63,105 @@ def free_lines(ocr_lines: DataFrame, cells: DataFrame | None) -> DataFrame:
     return ln.join(cl.hint("shuffle_hash"), on=pred, how="left_anti")
 
 
-def assemble_spans(documents: DataFrame, ocr_lines: DataFrame,
-                   cells: DataFrame | None = None) -> DataFrame:
-    """→ out_spans(doc_id, spans array<struct<kind,text,media_ref,offset>>)."""
+# span packing: line sub_orders live in [0, 1e6), cell sub_orders in
+# [1e6, ...) with 1000 columns per row — guarded at runtime on both paths
+# (stage_items, page_items) because silent violation would mis-order
+# spans, not fail
+LINE_BOUND_ERROR = "assemble_spans: line position >= 1e6 breaks span packing"
+CELL_BOUND_ERROR = (
+    "assemble_spans: table exceeds 1000 cols / 1e9 rows packing bound")
+
+ITEMS = T.StructType([
+    T.StructField("media_ref", T.StringType(), False),
+    T.StructField("sub_order", T.LongType(), False),
+    T.StructField("kind", T.StringType(), False),
+    T.StructField("text", T.StringType(), False),
+])
+
+
+def stage_items(ocr_lines: DataFrame,
+                cells: DataFrame | None = None) -> DataFrame:
+    """ocr_lines + cells with text (tables.assign_cell_text) → span items
+    (media_ref, sub_order, kind, text): free lines (center-containment
+    anti-join) as 'text' items at sub_order = position, cells as 'cell'
+    items at 1e6 + row_id·1000 + col_id. The relational formulation the
+    page pass (fused.fused_page_items, kernel page_items) is pinned
+    equal to."""
+    line_order = F.when(
+        F.col("position") < 1_000_000, F.col("position").cast("long")
+    ).otherwise(F.raise_error(LINE_BOUND_ERROR).cast("long"))
+    lines = free_lines(ocr_lines, cells).select(
+        "media_ref",
+        line_order.alias("sub_order"),
+        F.lit("text").alias("kind"), "text",
+    )
+    if cells is None:
+        return lines
+    cell_order = F.when(
+        (F.col("col_id") < 1000) & (F.col("row_id") < 1_000_000_000),
+        F.lit(1_000_000) + F.col("row_id").cast("long") * 1000
+        + F.col("col_id"),
+    ).otherwise(F.raise_error(CELL_BOUND_ERROR).cast("long"))
+    # union here so assemble_items joins the media spans ONCE (half the
+    # join stages of a per-stream formulation); the sub_order ranges are
+    # disjoint by the packing invariant, so the union is conflict-free
+    return lines.unionByName(cells.select(
+        "media_ref",
+        cell_order.alias("sub_order"),
+        F.lit("cell").alias("kind"), "text",
+    ))
+
+
+def page_items(ref: str, lines: list[dict], cells: list[dict]) -> list:
+    """Per-page twin of tables.assign_cell_text + stage_items, as a plain
+    kernel: `lines` are one page's recognized lines (position, x1, y1,
+    x2, y2, text), `cells` its table cells as tables.cells_for_table
+    emits them plus table_idx, without text. Returns the page's
+    (media_ref, sub_order, kind, text) items.
+
+    Same semantics as the relational pair, edge cases included:
+    containment tests the line center against [x1, x2) × [y1, y2); a
+    cell's text is its lines ordered by (position, text) joined with
+    one space ("" when it holds none); identical cell rows collapse to
+    one item, and — like the groupBy over the left join — their lines
+    repeat once per duplicate; a line inside any cell of the page is
+    not a free line; sub_orders pack across all tables of the page and
+    the same packing bounds raise."""
+    centers = [((ln["x1"] + ln["x2"]) / 2, (ln["y1"] + ln["y2"]) / 2)
+               for ln in lines]
+    claimed = [False] * len(lines)
+    copies: dict = {}
+    for c in cells:
+        key = tuple(sorted(c.items()))
+        copies[key] = copies.get(key, 0) + 1
+    items = []
+    for key, k in copies.items():
+        c = dict(key)
+        inside = []
+        for i, (cx, cy) in enumerate(centers):
+            if c["x1"] <= cx < c["x2"] and c["y1"] <= cy < c["y2"]:
+                claimed[i] = True
+                inside.append((lines[i]["position"], lines[i]["text"]))
+        if not (c["col_id"] < 1000 and c["row_id"] < 1_000_000_000):
+            raise ValueError(CELL_BOUND_ERROR)
+        items.append((
+            ref, 1_000_000 + c["row_id"] * 1000 + c["col_id"], "cell",
+            " ".join(t for _, t in sorted(inside * k)),
+        ))
+    for ln, taken in zip(lines, claimed):
+        if taken:
+            continue
+        if not ln["position"] < 1_000_000:
+            raise ValueError(LINE_BOUND_ERROR)
+        items.append((ref, int(ln["position"]), "text", ln["text"]))
+    return items
+
+
+def assemble_items(documents: DataFrame, items: DataFrame) -> DataFrame:
+    """documents + span items (media_ref, sub_order, kind, text) →
+    out_spans(doc_id, spans array<struct<kind,text,media_ref,offset>>):
+    text/image spans pass through, items take the (doc_id, offset) of
+    their media span, and one doc_id groupBy orders everything."""
     span_rows = explode_spans(documents)
 
     passthrough = span_rows.filter(F.col("kind").isin("text", "image")).select(
@@ -73,45 +175,8 @@ def assemble_spans(documents: DataFrame, ocr_lines: DataFrame,
     media = media_spans(span_rows).select(
         "doc_id", "offset", "media_ref").hint("shuffle_hash")
 
-    # packing invariant: line sub_orders live in [0, 1e6), cell sub_orders
-    # in [1e6, ...) with 1000 columns per row — guarded at runtime because
-    # silent violation would mis-order spans, not fail
-    line_order = F.when(
-        F.col("position") < 1_000_000, F.col("position").cast("long")
-    ).otherwise(F.raise_error(
-        "assemble_spans: line position >= 1e6 breaks span packing"
-    ).cast("long"))
-    lines = (
-        free_lines(ocr_lines, cells)
-        .select(
-            "media_ref",
-            line_order.alias("sub_order"),
-            F.lit("text").alias("kind"), "text",
-        )
-    )
-
-    # lines and cells both resolve to (media_ref, sub_order, kind, text):
-    # union FIRST, then ONE media join — half the join stages of the
-    # per-stream formulation, and the sub_order ranges are disjoint by
-    # the packing invariant so the union is conflict-free
-    staged = lines
-    if cells is not None:
-        cell_order = F.when(
-            (F.col("col_id") < 1000) & (F.col("row_id") < 1_000_000_000),
-            (F.lit(1_000_000) + F.col("row_id") * 1000 + F.col("col_id"))
-            .cast("long"),
-        ).otherwise(F.raise_error(
-            "assemble_spans: table exceeds 1000 cols / 1e9 rows packing bound"
-        ).cast("long"))
-        cell_items = cells.select(
-            "media_ref",
-            cell_order.alias("sub_order"),
-            F.lit("cell").alias("kind"), "text",
-        )
-        staged = staged.unionByName(cell_items)
-
-    items = passthrough.unionByName(
-        staged.join(media, "media_ref").select(
+    rows = passthrough.unionByName(
+        items.join(media, "media_ref").select(
             "doc_id", "offset", "sub_order", "kind", "text", "media_ref",
         )
     )
@@ -123,7 +188,7 @@ def assemble_spans(documents: DataFrame, ocr_lines: DataFrame,
     # sub_order) is unique per doc, so array_sort's struct ordering is a
     # total order).
     return (
-        items.groupBy("doc_id")
+        rows.groupBy("doc_id")
         .agg(
             F.array_sort(
                 F.collect_list(
@@ -145,3 +210,10 @@ def assemble_spans(documents: DataFrame, ocr_lines: DataFrame,
             ).alias("spans"),
         )
     )
+
+
+def assemble_spans(documents: DataFrame, ocr_lines: DataFrame,
+                   cells: DataFrame | None = None) -> DataFrame:
+    """→ out_spans from the relational stage tables: ocr_lines and cells
+    with text (tables.assign_cell_text)."""
+    return assemble_items(documents, stage_items(ocr_lines, cells))

@@ -1,26 +1,29 @@
-"""Combined page pass: detect→order→slice AND layout→table-crop in ONE
-mapInPandas over pages, sharing a single zlib page decode — the one
-extraction plan every production path runs (pipeline.extract with or
-without tables, its dual-DPI variant, checkpointed_extract and the CLI
-extract/ocr/table stages).
+"""The page pass: one mapInPandas over pages that does all the work
+keyed by a single page, sharing one zlib page decode.
 
-Emitting both crop families from one pass
+fused_page_items is the pass every production path runs (pipeline.extract
+with or without tables, its dual-DPI variant, checkpointed_extract, and
+through extract the streaming ingest and the CLI extract/ocr stages).
+Per page it detects, orders and slices the text lines
+(recognition.page_crop_rows) and recognizes each crop; runs layout and
+cuts the table crops (tables.table_crop_rows) and turns each into cells
+(tables.crop_cells); then assigns line text to cells and packs the span
+items (assemble.page_items). Only those small (media_ref, sub_order,
+kind, text) rows leave the pass — no crop is persisted or shuffled, and
+the relational chain's crop union, recognize pass, cell pass, cell-text
+theta join and free-line anti-join (all page-local work) are gone from
+the plan.
 
-  * decodes each page at most once in the kernels (they thread the
-    decoded page through `desc`),
-  * scans the blob bytes once, and
-  * needs no pages persist — pages has a single consumer, so the full
-    corpus's raw page blobs are never cached. At the 100-TB design
-    point that persist would be the pipeline's largest cache footprint
-    (raw bytes of every page); the much smaller crop union is persisted
-    instead when it feeds recognize AND the table stage.
+fused_all_crops is the crop-level library surface of the same pass (the
+CLI `--stage table`, the crop-parity tests): the tagged union of line
+and table crops. Both passes take their crops from one per-page helper,
+_page_crops, so they cannot drift.
 
-Parity: the per-page kernels are recognition.page_crop_rows and
-tables.table_crop_rows, and the tests pin the tagged union
-byte-identical to the relational chain (detection_stage → order_lines
-→ slice_crops, and table_crops(layout_stage_tiled(pages), pages)),
-which remains the library surface for callers that need an
-intermediate table.
+Parity: the tests pin fused_all_crops' crops byte-identical to the
+relational chain (detection_stage → order_lines → slice_crops, and
+table_crops(layout_stage_tiled(pages), pages)) and fused_page_items'
+items equal to that chain's recognize ∥ table_items → cell_grid /
+apply_spanning_cells → assign_cell_text → assemble.stage_items.
 """
 
 from __future__ import annotations
@@ -32,7 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import recognition, slots, tables
+from ..datagen import BAND
+from . import assemble, recognition, slots, tables
 
 _ALL_CROPS = T.StructType([
     T.StructField("media_ref", T.StringType(), False),
@@ -48,6 +52,46 @@ _ALL_CROPS = T.StructType([
     T.StructField("res_x", T.DoubleType(), True),
     T.StructField("res_y", T.DoubleType(), True),
 ])
+
+
+def _empty(schema: T.StructType) -> pd.DataFrame:
+    return pd.DataFrame(
+        {f.name: pd.Series([], dtype=object) for f in schema})
+
+
+def _page_crops(pdf: pd.DataFrame, detect_slot: Callable,
+                layout_slot: Callable | None, band_v: float,
+                highres: bool) -> Iterator[tuple]:
+    """Yield (media_ref, line_rows, table_rows) for each page of one
+    Arrow batch: page_crop_rows then, unless layout_slot is None,
+    table_crop_rows on the desc it returned, so each page is decoded at
+    most once. With highres, line crops come from the paired 2× render
+    (hr_bytes), rescaled by the same expression as slice_crops' SQL:
+    double(hr)/double(lo)."""
+    n = len(pdf)
+    hb = pdf["hr_bytes"] if highres else [None] * n
+    hw = pdf["hr_width"] if highres else [0] * n
+    hh = pdf["hr_height"] if highres else [0] * n
+    for ref, w, h, blob, hrb, hrw, hrh in zip(
+        pdf["media_ref"], pdf["width"], pdf["height"],
+        pdf["img_bytes"], hb, hw, hh,
+    ):
+        w, h = int(w), int(h)
+        blob = bytes(blob)
+        if highres:
+            scale = (float(hrw) / float(w), float(hrh) / float(h))
+            line_rows, desc = recognition.page_crop_rows(
+                ref, w, h, blob, detect_slot, band_v,
+                hr_blob=bytes(hrb), hr_scale=scale)
+        else:
+            line_rows, desc = recognition.page_crop_rows(
+                ref, w, h, blob, detect_slot, band_v)
+        if layout_slot is None:  # caller skips the table family
+            t_rows = []
+        else:
+            t_rows, desc = tables.table_crop_rows(
+                ref, w, h, blob, layout_slot, desc=desc)
+        yield ref, line_rows, t_rows
 
 
 def fused_all_crops(pages: DataFrame,
@@ -67,39 +111,15 @@ def fused_all_crops(pages: DataFrame,
     (page_crop_rows' dual-DPI path); detection, layout and table crops
     stay on the lowres blob exactly like the relational
     slice_crops(highres_pages=) chain."""
-    from ..datagen import BAND as _BAND
-
     if detect_slot is None:
         detect_slot = slots.surrogate_detect
-    band_v = float(_BAND) if band is None else float(band)
+    band_v = float(BAND if band is None else band)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            hb = pdf["hr_bytes"] if highres else [None] * len(pdf)
-            hw = pdf["hr_width"] if highres else [0] * len(pdf)
-            hh = pdf["hr_height"] if highres else [0] * len(pdf)
-            for ref, w, h, blob, hrb, hrw, hrh in zip(
-                pdf["media_ref"], pdf["width"], pdf["height"],
-                pdf["img_bytes"], hb, hw, hh,
-            ):
-                w, h = int(w), int(h)
-                blob = bytes(blob)
-                if highres:
-                    # same scale expression as slice_crops' SQL:
-                    # double(hr)/double(lo)
-                    scale = (float(hrw) / float(w), float(hrh) / float(h))
-                    line_rows, desc = recognition.page_crop_rows(
-                        ref, w, h, blob, detect_slot, band_v,
-                        hr_blob=bytes(hrb), hr_scale=scale)
-                else:
-                    line_rows, desc = recognition.page_crop_rows(
-                        ref, w, h, blob, detect_slot, band_v)
-                if layout_slot is None:  # caller skips the table family
-                    t_rows = []
-                else:
-                    t_rows, desc = tables.table_crop_rows(
-                        ref, w, h, blob, layout_slot, desc=desc)
+            for _, line_rows, t_rows in _page_crops(
+                    pdf, detect_slot, layout_slot, band_v, highres):
                 for r in line_rows:
                     rows.append({
                         "media_ref": r["media_ref"], "crop_kind": "line",
@@ -120,10 +140,49 @@ def fused_all_crops(pages: DataFrame,
                         "crop_bytes": r["crop_bytes"],
                         "res_x": None, "res_y": None,
                     })
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {f.name: pd.Series([], dtype=object) for f in _ALL_CROPS})
+            yield pd.DataFrame(rows) if rows else _empty(_ALL_CROPS)
 
     return pages.mapInPandas(run, schema=_ALL_CROPS)
+
+
+def fused_page_items(pages: DataFrame,
+                     detect_slot: Callable = slots.surrogate_detect,
+                     recognize_slot: Callable = slots.surrogate_recognize,
+                     layout_slot: Callable | None = slots.surrogate_layout,
+                     table_slot: Callable = slots.surrogate_table,
+                     highres: bool = False) -> DataFrame:
+    """pages → span items (media_ref, sub_order, kind, text): the crops
+    of _page_crops, each line crop through recognize_slot (task
+    'ocr_with_boxes', recognize's default; chars are never built — span
+    assembly does not read them), each table crop through
+    tables.crop_cells, then assemble.page_items.
+    layout_slot=None skips tables (every line is a free line); highres
+    reads pages as fused_all_crops(highres=True) does.
+
+    Scale: one pass over pages, zero exchanges; per-page work is bounded
+    by the page's lines and tables (cell-text assignment is
+    O(cells × lines) per page)."""
+    def page_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            items = []
+            for ref, line_rows, t_rows in _page_crops(
+                    pdf, detect_slot, layout_slot, float(BAND), highres):
+                lines = [
+                    {**r, "text": recognition.line_text(
+                        recognize_slot(r["crop_bytes"], "ocr_with_boxes"))}
+                    for r in line_rows
+                ]
+                cells = [
+                    {"table_idx": t["table_idx"], **cell}
+                    for t in t_rows
+                    for cell in tables.crop_cells(
+                        t["crop_bytes"], t["x1"], t["y1"], table_slot)
+                ]
+                items.extend(assemble.page_items(ref, lines, cells))
+            yield (pd.DataFrame(items, columns=assemble.ITEMS.fieldNames())
+                   if items else _empty(assemble.ITEMS))
+
+    return pages.mapInPandas(page_pass, schema=assemble.ITEMS)
 
 
 def line_crops(all_crops: DataFrame) -> DataFrame:

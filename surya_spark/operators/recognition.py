@@ -183,8 +183,8 @@ def page_crop_rows(ref: str, w: int, h: int, blob: bytes,
                    desc=None, hr_blob: bytes | None = None,
                    hr_scale: tuple[float, float] | None = None
                    ) -> tuple[list[dict], object]:
-    """Per-page kernel of the combined page pass
-    (operators/fused.fused_all_crops) for the detect→order→slice chain:
+    """Per-page kernel of the page pass (operators/fused: fused_page_items
+    and fused_all_crops) for the detect→order→slice chain:
     detect slot → fused post-process (detection._postprocess_page) →
     column-aware reading order → crop encode (slots.encode_crop),
     emitting the crop rows the relational chain
@@ -348,6 +348,17 @@ def _continuous_schedule(blobs: list, tasks: list, step_slot,
     return results
 
 
+def line_text(result: dict, given: str | None = None) -> str:
+    """A recognize-slot result's line text. Verified-good given text
+    (original_text_good=True) resolves to the caller's original — the
+    reference returns "" + the flag and callers keep their text; the
+    relational contract resolves it in place. Shared by recognize and
+    the page pass (fused.fused_page_items)."""
+    if result.get("original_text_good", False):
+        return (given or "").strip()
+    return result["text"]
+
+
 def recognize(crops: DataFrame,
               slot: Callable = slots.surrogate_recognize,
               task: str = "ocr_with_boxes",
@@ -487,11 +498,7 @@ def recognize(crops: DataFrame,
                 row = {
                     "media_ref": ref, "line_idx": int(li), "position": int(pos),
                     "x1": x1, "y1": y1, "x2": x2, "y2": y2,
-                    # verified-good given text resolves to the caller's
-                    # original (the reference returns "" + the flag and
-                    # callers keep their text; the relational contract
-                    # resolves it in place)
-                    "text": (texts[i] or "").strip() if otg else r["text"],
+                    "text": line_text(r, texts[i]),
                     "chars": chars,
                     "confidence": 1.0 if otg else r["confidence"],
                 }

@@ -99,8 +99,8 @@ def table_crop_rows(ref: str, w: int, h: int, blob: bytes,
                     merge_tolerance: float = 0.05,
                     merge_margin: float = 0.05,
                     desc=None) -> tuple[list[dict], object]:
-    """Per-page kernel of the combined page pass
-    (operators/fused.fused_all_crops) for the layout→table-crop chain:
+    """Per-page kernel of the page pass (operators/fused: fused_page_items
+    and fused_all_crops) for the layout→table-crop chain:
     layout slot (tiled per layout.page_tile_plan for oversize pages) →
     cross-tile merge → header/footer relabel → Table filter → ordered
     table_idx → inline crop encode, emitting the rows
@@ -313,10 +313,21 @@ def cells_for_table(items: list, min_cover: float = 0.9) -> list:
     return out
 
 
+def crop_cells(blob: bytes, x1: float, y1: float,
+               slot: Callable = slots.surrogate_table,
+               min_cover: float = 0.9) -> list:
+    """One table crop → its cells: table slot → normalize_table_item
+    (shift by the crop origin (x1, y1)) → cells_for_table. The per-table
+    step of fused_table_cells and of the page pass
+    (fused.fused_page_items)."""
+    return cells_for_table(
+        [normalize_table_item(it, x1, y1) for it in slot(blob)], min_cover)
+
+
 def fused_table_cells(crops: DataFrame,
                       slot: Callable = slots.surrogate_table,
                       min_cover: float = 0.9) -> DataFrame:
-    """One table-grain pass for the flagship's slot→grid→spanning chain:
+    """One table-grain pass for the slot→grid→spanning chain:
     table slot → page-coordinate shift → cell grid → spanning-cell
     override, emitting the same rows as
     apply_spanning_cells(cell_grid(table_items(crops)), table_items(crops)).
@@ -343,9 +354,7 @@ def fused_table_cells(crops: DataFrame,
                 pdf["media_ref"], pdf["table_idx"], pdf["x1"], pdf["y1"],
                 pdf["crop_bytes"],
             ):
-                items = [normalize_table_item(it, x1, y1)
-                         for it in slot(bytes(blob))]
-                for cell in cells_for_table(items, min_cover):
+                for cell in crop_cells(bytes(blob), x1, y1, slot, min_cover):
                     rows.append({"media_ref": ref, "table_idx": int(ti),
                                  **cell})
             yield pd.DataFrame(rows) if rows else pd.DataFrame(
@@ -445,20 +454,22 @@ def apply_spanning_cells(cells: DataFrame, items: DataFrame,
 def assign_cell_text(cells: DataFrame, ocr_lines: DataFrame) -> DataFrame:
     """OCR lines whose center falls inside a cell bbox become the cell's
     text (reading-order concat). Theta join refined from the media_ref
-    equi key; each line lands in ≤1 cell because cells tile the table."""
+    equi key; each line lands in ≤1 cell because cells tile the table.
+    Both sides are aliased, so cells and ocr_lines may derive from the
+    same frame (a self-join) without an ambiguous media_ref."""
     ln = ocr_lines.select(
         "media_ref", "position", F.col("text").alias("line_text"),
         ((F.col("x1") + F.col("x2")) / 2).alias("lcx"),
         ((F.col("y1") + F.col("y2")) / 2).alias("lcy"),
-    )
+    ).alias("l")
     group_cols = [c for c in cells.columns if c != "media_ref"]
-    joined = cells.hint("shuffle_hash").join(
+    joined = cells.alias("c").hint("shuffle_hash").join(
         ln,
-        (cells["media_ref"] == ln["media_ref"])
-        & (ln["lcx"] >= cells["x1"]) & (ln["lcx"] < cells["x2"])
-        & (ln["lcy"] >= cells["y1"]) & (ln["lcy"] < cells["y2"]),
+        (F.col("c.media_ref") == F.col("l.media_ref"))
+        & (F.col("l.lcx") >= F.col("c.x1")) & (F.col("l.lcx") < F.col("c.x2"))
+        & (F.col("l.lcy") >= F.col("c.y1")) & (F.col("l.lcy") < F.col("c.y2")),
         "left",
-    ).drop(ln["media_ref"])
+    ).select("c.*", "l.position", "l.line_text")
     return (
         joined.groupBy("media_ref", *group_cols)
         .agg(

@@ -3,22 +3,25 @@
 The flagship dataflow (SURVEY.md §7.2), all DataFrame ops:
 
     explode spans ─► media spans ⋈ page_blobs ─► pages
-    pages ─► combined page pass, ONE zlib decode per page
-             (detect slot → clean/expand → order → slice crops ∥
-              layout slot [tiled] → merge → relabel → table crops)
-             ─► tagged crop union (persisted — the DAG's one fan-out)
-    crop union [lines]  ─► recognize slot ─► ocr_lines
-    crop union [tables] ─► fused cell pass (table slot → grid →
-             spanning override) ⋈ ocr_lines ─► cells
-    ocr_lines ∪ cells ∪ passthrough spans ─► assemble ─► out_spans
+    pages ─► ONE page pass (fused.fused_page_items), one zlib decode
+             per page:
+               detect slot → clean/expand → order → slice → recognize slot
+               layout slot [tiled] → merge → relabel → table crops
+                 → table slot → grid → spanning override
+               cell-text assignment + free lines + sub_order packing
+             ─► span items (media_ref, sub_order, kind, text)
+    span items ⋈ media spans ∪ passthrough spans ─► doc_id groupBy
+             ─► out_spans
 
 Every production path — extract with or without tables, the dual-DPI
-extract, checkpointed_extract and the CLI extract/ocr/table stages —
-runs this one combined pass. The per-step relational operators
-(detect/clean/order/slice, layout regions/stitch/merge, table_crops)
-remain for callers that need an intermediate table (given-boxes mode,
-the detect/layout CLI stages, debug/render sinks, driver queries) and
-as the test oracle the combined pass is pytest-pinned byte-identical to.
+extract, checkpointed_extract, and through extract the streaming ingest
+and the CLI extract/ocr stages — runs this one pass; nothing in the plan
+is persisted. The per-step relational operators (detect/clean/order/
+slice, recognize, layout regions/stitch/merge, table_crops, the cell
+grid, assign_cell_text, assemble.stage_items) remain for callers that
+need an intermediate table (given-boxes mode, the detect/layout/table
+CLI stages, debug/render sinks, driver queries) and as the test oracle
+the page pass is pytest-pinned equal to.
 
 Skew note: all heavy stages are keyed by media_ref (page grain), so an
 image-heavy document's pages spread across executors automatically — the
@@ -33,8 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .operators import assemble, fused, recognition, slots, tables
-from .plans import caching, partitioning
+from .operators import assemble, fused, slots
+from .plans import partitioning
 
 
 def pages_for(documents: DataFrame, page_blobs: DataFrame,
@@ -82,7 +85,7 @@ def paired_pages(documents: DataFrame, pages: DataFrame,
                  partitions: int | None = None) -> DataFrame:
     """pages equi-joined on media_ref to the 2× render of the same pages
     as (hr_bytes, hr_width, hr_height) — the input
-    fused.fused_all_crops(highres=True) reads. Both sides are keyed by
+    fused.fused_page_items(highres=True) reads. Both sides are keyed by
     media_ref, so the join adds no fan-out and the pair feeds ONE page
     pass: raw page blobs are never persisted on the dual-DPI path."""
     hp = pages_for(documents, highres_blobs, partitions=partitions)
@@ -107,34 +110,29 @@ def extract(
     table_slot=slots.surrogate_table,
     pack_partitions: int | None = None,
     persist: bool = True,
-    emit_chars: bool = False,
     highres_blobs: DataFrame | None = None,
 ) -> DataFrame:
-    """persist=True pins the fan-out points of the DAG:
+    """pages → the page pass (fused.fused_page_items) → span assembly.
 
-      * the combined crop pass output feeds TWO consumers (recognize and
-        the table stage) — unpersisted, Spark re-executes the
-        scan+join+blob shuffle+decode per branch (measured on 2000
-        docs/32 cores: the unpersisted plan re-ran the full chain twice,
-        46 s end-to-end; persisted ≈ half);
-      * ocr_lines feeds TWO when with_tables (cell-text assignment and
-        free-line assembly);
-      * pages itself has ONE consumer on the default path (the combined
-        fused_all_crops pass decodes once and emits both crop families)
-        and is deliberately NOT persisted — at corpus scale the raw page
-        blobs are the pipeline's largest cache footprint, and the crop
-        union persisted instead is strictly smaller. The dual-DPI path
-        pairs pages with the 2× render before the same single pass.
+    The plan has no fan-out, so nothing is persisted: pages have one
+    consumer, the page pass, and its span items have one, the doc_id
+    assembly. with_tables=False runs the same pass without layout (every
+    recognized line is a free text span). highres_blobs pairs each page
+    with its 2× render (paired_pages) before the pass: line crops come
+    from the 2× render with polygons int-rescaled (ref
+    recognition/__init__.py:158-170, scripts/config.py:36-42);
+    detection, layout and table crops read the lowres blob.
 
-    checkpointed_extract gets the same reuse from stage materialization."""
+    persist=True (the name predates this plan) controls only the
+    partition alignment of pages_for — and of the 2× render on the
+    dual-DPI path: both semi-join inputs are explicitly hash-partitioned
+    on media_ref at spark.sql.shuffle.partitions (or pack_partitions),
+    so each blob table crosses exactly one exchange and the paired-pages
+    join needs none. persist=False leaves that exchange to the planner
+    (at shuffle.partitions it places the same exchanges).
+
+    checkpointed_extract checkpoints the same pass."""
     spark = documents.sparkSession
-    # align the pages partition count with spark.sql.shuffle.partitions:
-    # downstream media_ref shuffles (the recognize crop join; in the
-    # relational library path also the order window / slice join /
-    # layout stitch) run at that count, so a matching count lets
-    # EnsureRequirements reuse the pages placement instead of
-    # re-shuffling the blob bytes to reconcile partitioning (measured:
-    # mismatched counts re-shuffled the big side at the slice join)
     # shuffle.partitions may be non-numeric on AQE-coalesce platforms
     # (e.g. "auto") — fall back to the cluster default parallelism
     try:
@@ -142,55 +140,18 @@ def extract(
             spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         par = spark.sparkContext.defaultParallelism
+    part = par if persist else None
 
-    # caching.scope: persisted stages (crop union, ocr_lines) are
-    # released by the first action on the returned spans — no
-    # InMemoryRelation leaks across queries in a long-lived session
-    with caching.scope() as (handles, is_owner):
-        # partitions=par pushes the media_ref hash partitioning INTO the
-        # semi-join inputs: one blob shuffle total, output pre-placed for
-        # every downstream media_ref join (no separate repartition)
-        pages = pages_for(documents, page_blobs, pack_partitions,
-                          partitions=par if persist else None)
-
-        highres = highres_blobs is not None
-        if highres:
-            pages = paired_pages(documents, pages, highres_blobs,
-                                 partitions=par if persist else None)
-        # detect→order→slice AND layout→table-crop in ONE page-grain
-        # pass sharing a single zlib page decode (operators/fused.py) —
-        # pages has a single consumer, so the raw blob bytes are never
-        # cached. With tables the (smaller) crop union feeds recognize
-        # AND the table stage, so it is the persisted fan-out instead;
-        # without tables recognize is its only reader — no pin. On the
-        # dual-DPI path line crops come from the 2x render with
-        # polygons int-rescaled (ref recognition/__init__.py:158-170,
-        # scripts/config.py:36-42); detection, layout and table crops
-        # read the lowres blob.
-        allc = fused.fused_all_crops(pages, detect_slot,
-                                     layout_slot if with_tables else None,
-                                     highres=highres)
-        if persist and with_tables:
-            allc = caching.managed(allc)
-        # chars pruned inside the UDF unless requested: span assembly never
-        # reads them and they are the pipeline's single largest Python/Arrow
-        # cost (see recognition.recognize docstring)
-        ocr_lines = recognition.recognize(fused.line_crops(allc),
-                                          recognize_slot,
-                                          emit_chars=emit_chars)
-        if persist and with_tables:
-            # two consumers (cell-text assignment + free-line assembly);
-            # without tables, assembly is the only reader — no pin
-            ocr_lines = caching.managed(ocr_lines)
-
-        cells = None
-        if with_tables:
-            cells = tables.table_stage_from_crops(fused.table_crops(allc),
-                                                  ocr_lines, table_slot)
-
-        return caching.owned(
-            assemble.assemble_spans(documents, ocr_lines, cells),
-            handles, is_owner)
+    pages = pages_for(documents, page_blobs, pack_partitions,
+                      partitions=part)
+    highres = highres_blobs is not None
+    if highres:
+        pages = paired_pages(documents, pages, highres_blobs,
+                             partitions=part)
+    items = fused.fused_page_items(
+        pages, detect_slot, recognize_slot,
+        layout_slot if with_tables else None, table_slot, highres=highres)
+    return assemble.assemble_items(documents, items)
 
 
 def checkpointed_extract(
@@ -209,13 +170,13 @@ def checkpointed_extract(
     matches SURVEY.md §7.0 #4: checkpoint after every inference stage,
     relational glue stays lazy.
 
-    It checkpoints the SAME plan the flagship runs — pages →
-    fused_all_crops (the tagged crop union, one decode per page) →
-    recognize / table stage → assemble — as the stages pages, all_crops,
-    ocr_lines and cells, bucketed on media_ref. The dual-DPI run
-    (highres_blobs) checkpoints the same four stages: its all_crops
-    stage reads the checkpointed lowres pages paired with the 2× render
-    (paired_pages), exactly like extract's dual-DPI path."""
+    It checkpoints the SAME plan the flagship runs as two stages,
+    bucketed on media_ref: `pages` (pages_for) and `items` (the page
+    pass, fused.fused_page_items, over the checkpointed pages); span
+    assembly reads the committed items. The dual-DPI run
+    (highres_blobs) pairs the checkpointed lowres pages with the 2×
+    render (paired_pages) inside the items stage, exactly like
+    extract's dual-DPI path."""
     from .plans.checkpoint import CheckpointRunner
 
     runner = CheckpointRunner(spark, base_dir, n_buckets, n_groups)
@@ -225,24 +186,12 @@ def checkpointed_extract(
         bucket_key="media_ref", max_groups=max_groups,
     )
     highres = highres_blobs is not None
-    allc = runner.stage(
-        "all_crops",
-        lambda: fused.fused_all_crops(
+    items = runner.stage(
+        "items",
+        lambda: fused.fused_page_items(
             paired_pages(documents, pages, highres_blobs) if highres
             else pages,
             highres=highres),
         bucket_key="media_ref", max_groups=max_groups,
     )
-    ocr_lines = runner.stage(
-        "ocr_lines",
-        lambda: recognition.recognize(fused.line_crops(allc),
-                                      emit_chars=False),
-        bucket_key="media_ref", max_groups=max_groups,
-    )
-    cells = runner.stage(
-        "cells",
-        lambda: tables.table_stage_from_crops(fused.table_crops(allc),
-                                              ocr_lines),
-        bucket_key="media_ref", max_groups=max_groups,
-    )
-    return assemble.assemble_spans(documents, ocr_lines, cells)
+    return assemble.assemble_items(documents, items)

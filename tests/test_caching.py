@@ -112,8 +112,9 @@ def test_tolocaliterator_releases_on_exhaustion(spark):
 
 
 def test_extract_caches_released_but_used(spark):
-    """extract(persist=True) must actually persist during execution (the
-    2x-lineage fix) and release afterwards."""
+    """extract(persist=True) has no fan-out left to pin — its page pass
+    emits span items straight to assembly — so it must leave no
+    persisted RDD behind after its terminal action."""
     from surya_spark import datagen, pipeline
 
     spark.catalog.clearCache()

@@ -62,26 +62,28 @@ def test_checkpointed_extract_matches_direct(spark, tmp_path):
     blobs = datagen.gen_page_blobs(spark, N_DOCS, partitions=2)
 
     direct = _spans_dict(pipeline.extract(docs, blobs, with_tables=True))
-    ckpt = _spans_dict(
-        pipeline.checkpointed_extract(spark, docs, blobs, base,
-                                      n_buckets=8, n_groups=2)
-    )
-    assert ckpt == direct
+    out = pipeline.checkpointed_extract(spark, docs, blobs, base,
+                                        n_buckets=8, n_groups=2)
+    assert _spans_dict(out) == direct
+    # assembly reads the committed items: no page pass, no cache
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas page_pass(" not in plan
+    assert "InMemoryRelation" not in plan
 
     runner = CheckpointRunner(spark, base, n_buckets=8, n_groups=2)
     m = runner.metrics().collect()
     stages = {r["stage"] for r in m}
-    # r7: the default resumable path checkpoints the FUSED plan — the
-    # tagged crop union replaces the pre-fusion line-table stage
-    assert stages == {"pages", "all_crops", "ocr_lines", "cells"}
+    # the resumable path checkpoints the flagship plan: pages, then the
+    # page pass's span items — no crop, line or cell stage
+    assert stages == {"pages", "items"}
     assert all(r["errors"] == 0 for r in m)
 
 
 def test_checkpointed_resume_on_fused_stages(spark, tmp_path):
-    """Kill-and-resume ACROSS the r7 fused stage set: a run that commits
-    only the first bucket group of every stage must, on re-invocation,
-    complete the rest without recomputing committed groups and still
-    equal the direct fused pipeline byte-for-byte."""
+    """Kill-and-resume ACROSS the pages/items stage set: a run that
+    commits only the first bucket group of every stage must, on
+    re-invocation, complete the rest without recomputing committed
+    groups and still equal the direct pipeline byte-for-byte."""
     base = str(tmp_path / "ckpt_resume_fused")
     docs = datagen.gen_documents(spark, N_DOCS, partitions=2)
     blobs = datagen.gen_page_blobs(spark, N_DOCS, partitions=2)
@@ -91,7 +93,7 @@ def test_checkpointed_resume_on_fused_stages(spark, tmp_path):
                                   n_buckets=4, n_groups=2, max_groups=1)
     runner = CheckpointRunner(spark, base, n_buckets=4, n_groups=2)
     lin1 = runner.lineage()
-    assert lin1.filter(F.col("stage") == "all_crops").count() == 2
+    assert lin1.filter(F.col("stage") == "items").count() == 2
 
     # resume to completion
     out = pipeline.checkpointed_extract(spark, docs, blobs, base,
@@ -99,7 +101,7 @@ def test_checkpointed_resume_on_fused_stages(spark, tmp_path):
     lin2 = CheckpointRunner(spark, base, n_buckets=4, n_groups=2).lineage()
     per_stage = {r["stage"]: r["cnt"] for r in
                  lin2.groupBy("stage").agg(F.count("*").alias("cnt")).collect()}
-    assert per_stage["all_crops"] == 4
+    assert per_stage == {"pages": 4, "items": 4}
     # committed groups were NOT recomputed (still exactly one lineage row
     # per committed bucket)
     assert lin2.groupBy("stage", "bucket").count().filter(
@@ -110,14 +112,26 @@ def test_checkpointed_resume_on_fused_stages(spark, tmp_path):
 
 
 def test_checkpointed_highres_matches_extract_and_resumes(spark, tmp_path):
-    """The dual-DPI resumable run checkpoints the same four fused stages
-    as the default run, resumes after a partial (max_groups) run without
-    recomputing committed groups, and equals the dual-DPI extract span
-    for span."""
+    """The dual-DPI resumable run checkpoints the same pages/items
+    stages as the default run, resumes after a partial (max_groups) run
+    without recomputing committed groups, and equals the dual-DPI
+    extract span for span."""
     base = str(tmp_path / "ckpt_highres")
     docs = datagen.gen_documents(spark, N_DOCS, partitions=2)
     blobs = datagen.gen_page_blobs(spark, N_DOCS, partitions=2)
-    hi = datagen.gen_page_blobs(spark, N_DOCS, partitions=2, scale=2.0)
+
+    # the surrogate recognizer reads the same text at either resolution,
+    # so the 2× render gets upper-cased line text: spans then show
+    # which render the line crops came from
+    @F.udf("binary")
+    def shout(blob):
+        desc = datagen.decode_page(bytes(blob))
+        for ln in desc["lines"]:
+            ln["text"] = ln["text"].upper()
+        return datagen.encode_page(desc)
+
+    hi = datagen.gen_page_blobs(spark, N_DOCS, partitions=2, scale=2.0) \
+        .withColumn("img_bytes", shout("img_bytes"))
 
     # "killed" run: 1 of 2 groups per stage
     pipeline.checkpointed_extract(spark, docs, blobs, base, n_buckets=4,
@@ -129,16 +143,12 @@ def test_checkpointed_highres_matches_extract_and_resumes(spark, tmp_path):
     lin = CheckpointRunner(spark, base, n_buckets=4, n_groups=2).lineage()
     per_stage = {r["stage"]: r["cnt"] for r in
                  lin.groupBy("stage").agg(F.count("*").alias("cnt")).collect()}
-    assert per_stage == {"pages": 4, "all_crops": 4, "ocr_lines": 4,
-                         "cells": 4}
+    assert per_stage == {"pages": 4, "items": 4}
     assert lin.groupBy("stage", "bucket").count().filter(
         F.col("count") > 1).count() == 0
-    # the surrogate recognizer reads the same text at either resolution,
-    # so check the checkpointed line crops really came from the 2× render
-    res = spark.read.parquet(f"{base}/all_crops").filter(
-        F.col("crop_kind") == "line").select("res_x", "res_y").distinct()
-    assert [tuple(r) for r in res.collect()] == [(2.0, 2.0)]
 
     direct = _spans_dict(pipeline.extract(docs, blobs, with_tables=True,
                                           highres_blobs=hi))
     assert _spans_dict(out) == direct and len(direct) == N_DOCS
+    lowres = _spans_dict(pipeline.extract(docs, blobs, with_tables=True))
+    assert direct != lowres

@@ -1,14 +1,19 @@
 """End-to-end parity of the one extraction plan: pipeline.extract (with
 and without tables) equals the relational library chain span for span,
-the dual-DPI combined pass is byte-identical to the relational highres
-chain, and the dual-DPI extract never caches raw page blobs. (The
+the page pass's span items equal the relational chain's stage_items
+(both detect slots, with and without tables, dual-DPI), the dual-DPI
+crop pass is byte-identical to the relational highres chain, and every
+extract variant runs the page pass once with nothing persisted. (The
 lowres crop pins live in test_recognition_modes and test_fused_tables.)"""
 
 from __future__ import annotations
 
+import pytest
+
 from surya_spark import datagen, pipeline
 from surya_spark.operators import (assemble, detection, fused, layout,
-                                   reading_order, recognition, tables)
+                                   reading_order, recognition, slots,
+                                   tables)
 
 
 def _line_rows(df):
@@ -36,16 +41,24 @@ def _spans(df):
     }
 
 
-def _relational_extract(docs, blobs, with_tables):
-    """The relational formulation of extract: detection_stage →
+def _items(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _relational_items(pages, detect_slot=slots.surrogate_detect,
+                      with_tables=True, highres_pages=None):
+    """The relational formulation of the page pass: detection_stage →
     order_lines → slice_crops → recognize, and layout_stage_tiled →
-    table_crops → table_items → cell_grid/apply_spanning_cells →
-    assign_cell_text."""
-    pages = pipeline.pages_for(docs, blobs)
+    table_crops → table_items → cell_grid/apply_spanning_cells (the
+    chain fused_table_cells is pinned to) → assign_cell_text, then
+    stage_items."""
     ocr = recognition.recognize(
         recognition.slice_crops(
-            reading_order.order_lines(detection.detection_stage(pages)),
-            pages),
+            reading_order.order_lines(
+                detection.detection_stage(pages, detect_slot)
+            ).select("media_ref", "line_idx", "position",
+                     "x1", "y1", "x2", "y2", "polygon"),
+            pages, highres_pages=highres_pages),
         emit_chars=False)
     cells = None
     if with_tables:
@@ -54,7 +67,12 @@ def _relational_extract(docs, blobs, with_tables):
         cells = tables.assign_cell_text(
             tables.apply_spanning_cells(tables.cell_grid(items), items),
             ocr)
-    return assemble.assemble_spans(docs, ocr, cells)
+    return assemble.stage_items(ocr, cells)
+
+
+def _relational_extract(docs, blobs, with_tables):
+    return assemble.assemble_items(docs, _relational_items(
+        pipeline.pages_for(docs, blobs), with_tables=with_tables))
 
 
 def test_extract_spans_match_across_paths(spark):
@@ -74,6 +92,42 @@ def test_extract_spans_match_across_paths(spark):
         assert len(relational) == n
     # the corpus has tables, so the two modes really differ
     assert got[True] != got[False]
+
+
+@pytest.mark.parametrize("detect_slot", [
+    slots.surrogate_detect, slots.surrogate_detect_heatmap])
+def test_page_items_equal_relational_chain(spark, detect_slot):
+    """Item-level parity of the page pass: fused_page_items emits exactly
+    the (media_ref, sub_order, kind, text) multiset of the relational
+    chain, with and without tables, including tall pages."""
+    n = 24  # includes ~5% tall pages at this count
+    docs = datagen.gen_documents(spark, n, partitions=2)
+    blobs = datagen.gen_page_blobs(spark, n, partitions=2)
+    pages = pipeline.pages_for(docs, blobs).persist()
+    for with_tables in (True, False):
+        got = _items(fused.fused_page_items(
+            pages, detect_slot,
+            layout_slot=slots.surrogate_layout if with_tables else None))
+        assert got == _items(_relational_items(
+            pages, detect_slot, with_tables)), with_tables
+        assert any(kind == "cell" for _, _, kind, _ in got) == with_tables
+    pages.unpersist()
+
+
+def test_highres_page_items_equal_relational_chain(spark):
+    """The dual-DPI page pass (line crops from the 2× render) emits the
+    relational highres chain's items."""
+    n = 16
+    docs = datagen.gen_documents(spark, n, partitions=2)
+    blobs = datagen.gen_page_blobs(spark, n, partitions=2)
+    hi = datagen.gen_page_blobs(spark, n, partitions=2, scale=2.0)
+    pages = pipeline.pages_for(docs, blobs).persist()
+    hp = pipeline.pages_for(docs, hi).persist()
+    got = _items(fused.fused_page_items(
+        pipeline.paired_pages(docs, pages, hi), highres=True))
+    assert got and got == _items(_relational_items(
+        pages, highres_pages=hp))
+    pages.unpersist(); hp.unpersist()
 
 
 def test_fused_highres_byte_identical_to_relational(spark):
@@ -109,18 +163,19 @@ def test_fused_highres_byte_identical_to_relational(spark):
 
 
 def test_extract_highres_no_page_blob_persist(spark):
-    """r7: the dual-DPI extract runs the fused plan — NO InMemoryRelation
-    may hold raw page blobs (img_bytes/hr_bytes); only the tagged crop
-    union persists. (The pre-r7 highres branch pinned full pages — the
-    pipeline's largest cache footprint.)"""
+    """Every extract variant — default, with_tables=False and dual-DPI —
+    runs the page pass exactly once, with no InMemoryRelation (raw page
+    blobs or otherwise) and no separate crop, recognize or table-cell
+    mapInPandas in its plan."""
     n = 12
     docs = datagen.gen_documents(spark, n, partitions=2)
     blobs = datagen.gen_page_blobs(spark, n, partitions=2)
     hi = datagen.gen_page_blobs(spark, n, partitions=2, scale=2.0)
-    out = pipeline.extract(docs, blobs, with_tables=True, highres_blobs=hi)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    chunks = plan.split("InMemoryRelation")
-    assert len(chunks) > 1, "expected the crop-union persist"
-    for chunk in chunks[1:]:
-        cols = chunk.split("\n", 1)[0]
-        assert "img_bytes" not in cols and "hr_bytes" not in cols, cols
+    for kw in ({}, {"with_tables": False}, {"highres_blobs": hi}):
+        out = pipeline.extract(docs, blobs, **kw)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryRelation" not in plan, kw
+        assert plan.count("MapInPandas page_pass(") == 1, kw
+        # every other operator UDF is named run (crop, recognize and
+        # table-cell passes); the inputs' generators are named build
+        assert "MapInPandas run(" not in plan, kw

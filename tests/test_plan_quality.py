@@ -193,20 +193,14 @@ def test_debug_and_render_sinks_no_driver_broadcasts(spark):
 
 
 def test_extract_no_page_blob_persist(spark):
-    """Round-6 fourth-fusion property, gated (r7; VERDICT r06 #4): the
-    default extract plan persists ONLY the tagged crop union — no
-    InMemoryRelation may hold raw page blobs (img_bytes). Re-persisting
-    pages would reinstate the pipeline's largest cache footprint."""
+    """The default extract plan persists nothing: pages feed only the
+    page pass and its span items feed only assembly, so no
+    InMemoryRelation may appear at all — in particular none holding raw
+    page blobs (img_bytes), the pipeline's largest cache footprint."""
     from surya_spark import datagen, pipeline
 
     docs = datagen.gen_documents(spark, 12, partitions=2)
     blobs = datagen.gen_page_blobs(spark, 12, partitions=2)
     out = pipeline.extract(docs, blobs, with_tables=True)
     plan = _plan(out)
-    im_chunks = plan.split("InMemoryRelation")
-    assert len(im_chunks) > 1, "expected the crop-union persist"
-    # every InMemoryRelation's column list must be blob-free pages-wise:
-    # crop_bytes (the fused crop union) is the one allowed payload
-    for chunk in im_chunks[1:]:
-        cols = chunk.split("\n", 1)[0]
-        assert "img_bytes" not in cols, cols
+    assert "InMemoryRelation" not in plan, plan
