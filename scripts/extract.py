@@ -127,26 +127,19 @@ def main() -> None:
         print(f"json export -> {args.json_export}")
 
     if args.debug_images or args.render_html:
-        # shared intermediates for the debug/render flags, computed ONCE:
         # reuse the stage result already written to --out when it IS the
         # needed frame (detect → lines; table → the persisted ocr above),
-        # recompute otherwise — before this the flags re-ran detection
-        # (and recognition) from scratch, roughly doubling pipeline cost
-        # when combined with ocr/extract stages, and running detection
-        # TWICE when both flags were set
-        from surya_spark.operators import (detection as det_op,
-                                           reading_order, recognition)
-
-        # pages feeds detection AND the overlay/render joins (rule 2)
+        # recompute otherwise: the overlays draw detection_stage's lines,
+        # the render recognizes the line crops of the page pass.
+        # pages feeds both sinks' inputs AND joins (rule 2)
         pages = pipeline.pages_for(docs, blobs).persist()
-        lines = (spark.read.parquet(args.out) if args.stage == "detect"
-                 else det_op.detection_stage(pages))
-        if args.debug_images and args.render_html:
-            lines = lines.persist()  # two flag consumers (rule 2)
 
         if args.debug_images:
+            from surya_spark.operators import detection as det_op
             from surya_spark.sources import debug_draw
 
+            lines = (spark.read.parquet(args.out) if args.stage == "detect"
+                     else det_op.detection_stage(pages))
             # two actions (file write + count) — persist (rule 2) so the
             # draw+encode lineage runs once
             overlays = debug_draw.debug_overlays(lines, pages).persist()
@@ -156,19 +149,17 @@ def main() -> None:
             overlays.unpersist()
 
         if args.render_html:
+            from surya_spark.operators import fused, recognition
             from surya_spark.sources import render_html as rh
 
             ocr = reuse_ocr
             if ocr is None:
-                ordered = reading_order.order_lines(lines)
                 ocr = recognition.recognize(
-                    recognition.slice_crops(
-                        ordered.select("media_ref", "line_idx", "position",
-                                       "x1", "y1", "x2", "y2", "polygon"),
-                        pages),
+                    fused.line_crops(
+                        fused.fused_all_crops(pages, layout_slot=None)),
                     emit_chars=False)
             # two actions (file write + count) — persist (rule 2) so the
-            # slice+recognize+render lineage runs once
+            # page pass+recognize+render lineage runs once
             rendered = rh.html_render_pages(ocr, pages).persist()
             rh.write_html(rendered, args.render_html)
             print(f"html render: {rendered.count()} pages "

@@ -163,6 +163,23 @@ def _postprocess_page(rows: list[dict], page_w: int, page_h: int,
     return out
 
 
+def slot_line(ref: str, line_idx: int, d: dict, y0: int = 0) -> dict:
+    """One detect-slot output → a line row: the polygon (shifted down by
+    y0, a chunk's page offset), its bbox (corner min/max) and the slot
+    confidence. The one slot → line rule of detect_lines,
+    split_detect_lines and the page pass (recognition.page_crop_rows)."""
+    poly = (d["polygon"] if not y0
+            else [[p[0], p[1] + y0] for p in d["polygon"]])
+    xs = [p[0] for p in poly]
+    ys = [p[1] for p in poly]
+    return {
+        "media_ref": ref, "line_idx": line_idx, "polygon": poly,
+        "x1": min(xs), "y1": min(ys),
+        "x2": max(xs), "y2": max(ys),
+        "confidence": d["confidence"],
+    }
+
+
 def detect_lines(pages: DataFrame,
                  slot: Callable = slots.surrogate_detect,
                  postprocess: bool = False) -> DataFrame:
@@ -177,18 +194,12 @@ def detect_lines(pages: DataFrame,
             for ref, w, h, blob in zip(
                 pdf["media_ref"], pdf["width"], pdf["height"], pdf["img_bytes"]
             ):
-                page_rows = []
-                for i, d in enumerate(slot(ref, int(w), int(h), bytes(blob))):
-                    poly = d["polygon"]
-                    xs = [p[0] for p in poly]
-                    ys = [p[1] for p in poly]
-                    page_rows.append({
-                        "media_ref": ref, "line_idx": i, "polygon": poly,
-                        "x1": min(xs), "y1": min(ys),
-                        "x2": max(xs), "y2": max(ys),
-                        "confidence": d["confidence"],
-                        "page_width": int(w), "page_height": int(h),
-                    })
+                page_rows = [
+                    {**slot_line(ref, i, d),
+                     "page_width": int(w), "page_height": int(h)}
+                    for i, d in enumerate(
+                        slot(ref, int(w), int(h), bytes(blob)))
+                ]
                 if postprocess:
                     page_rows = _postprocess_page(page_rows, int(w), int(h))
                 rows.extend(page_rows)
@@ -246,16 +257,8 @@ def split_detect_lines(pages: DataFrame,
                     for i, d in enumerate(
                         slot(f"{ref}#c{ci}", int(w), ch, sub_blob)
                     ):
-                        poly = [[p[0], p[1] + y0] for p in d["polygon"]]
-                        xs = [p[0] for p in poly]
-                        ys = [p[1] for p in poly]
                         page_rows.append({
-                            "media_ref": ref,
-                            "line_idx": ci * 100_000 + i,
-                            "polygon": poly,
-                            "x1": min(xs), "y1": min(ys),
-                            "x2": max(xs), "y2": max(ys),
-                            "confidence": d["confidence"],
+                            **slot_line(ref, ci * 100_000 + i, d, y0),
                             "page_width": int(w), "page_height": int(h),
                         })
                 if postprocess:

@@ -15,9 +15,9 @@ theta join and free-line anti-join (all page-local work) are gone from
 the plan.
 
 fused_all_crops is the crop-level library surface of the same pass (the
-CLI `--stage table`, the crop-parity tests): the tagged union of line
-and table crops. Both passes take their crops from one per-page helper,
-_page_crops, so they cannot drift.
+CLI `--stage table` and `--render-html`, the crop-parity tests): the
+tagged union of line and table crops. Both passes take their crops from
+one per-page helper, _page_crops, so they cannot drift.
 
 Parity: the tests pin fused_all_crops' crops byte-identical to the
 relational chain (detection_stage → order_lines → slice_crops, and
@@ -60,14 +60,15 @@ def _empty(schema: T.StructType) -> pd.DataFrame:
 
 
 def _page_crops(pdf: pd.DataFrame, detect_slot: Callable,
-                layout_slot: Callable | None, band_v: float,
-                highres: bool) -> Iterator[tuple]:
+                layout_slot: Callable | None) -> Iterator[tuple]:
     """Yield (media_ref, line_rows, table_rows) for each page of one
     Arrow batch: page_crop_rows then, unless layout_slot is None,
     table_crop_rows on the desc it returned, so each page is decoded at
-    most once. With highres, line crops come from the paired 2× render
-    (hr_bytes), rescaled by the same expression as slice_crops' SQL:
+    most once. A batch that carries the paired 2× render (hr_bytes,
+    hr_width, hr_height; pipeline.paired_pages) takes its line crops
+    from it, rescaled by the same expression as slice_crops' SQL:
     double(hr)/double(lo)."""
+    highres = "hr_bytes" in pdf.columns
     n = len(pdf)
     hb = pdf["hr_bytes"] if highres else [None] * n
     hw = pdf["hr_width"] if highres else [0] * n
@@ -78,14 +79,11 @@ def _page_crops(pdf: pd.DataFrame, detect_slot: Callable,
     ):
         w, h = int(w), int(h)
         blob = bytes(blob)
-        if highres:
-            scale = (float(hrw) / float(w), float(hrh) / float(h))
-            line_rows, desc = recognition.page_crop_rows(
-                ref, w, h, blob, detect_slot, band_v,
-                hr_blob=bytes(hrb), hr_scale=scale)
-        else:
-            line_rows, desc = recognition.page_crop_rows(
-                ref, w, h, blob, detect_slot, band_v)
+        line_rows, desc = recognition.page_crop_rows(
+            ref, w, h, blob, detect_slot, float(BAND),
+            hr_blob=bytes(hrb) if highres else None,
+            hr_scale=((float(hrw) / float(w), float(hrh) / float(h))
+                      if highres else None))
         if layout_slot is None:  # caller skips the table family
             t_rows = []
         else:
@@ -95,31 +93,25 @@ def _page_crops(pdf: pd.DataFrame, detect_slot: Callable,
 
 
 def fused_all_crops(pages: DataFrame,
-                    detect_slot: Callable = None,
-                    layout_slot: Callable = slots.surrogate_layout,
-                    band: float | None = None,
-                    highres: bool = False) -> DataFrame:
+                    detect_slot: Callable = slots.surrogate_detect,
+                    layout_slot: Callable | None = slots.surrogate_layout
+                    ) -> DataFrame:
     """pages → tagged union of recognition crops (crop_kind='line', the
     rows page_crop_rows emits) and table crops (crop_kind='table', the
     rows table_crop_rows emits), one decode per page. layout_slot=None
     skips the table family.
 
-    highres=True: `pages` must additionally carry (hr_bytes, hr_width,
-    hr_height) — the 2× render equi-joined on media_ref BEFORE this pass
-    (pipeline.paired_pages). Line crops are then encoded from the
-    highres blob with reference int-truncation rescaling
-    (page_crop_rows' dual-DPI path); detection, layout and table crops
-    stay on the lowres blob exactly like the relational
-    slice_crops(highres_pages=) chain."""
-    if detect_slot is None:
-        detect_slot = slots.surrogate_detect
-    band_v = float(BAND if band is None else band)
-
+    When `pages` carries the 2× render (hr_bytes, hr_width, hr_height —
+    equi-joined on media_ref BEFORE this pass by pipeline.paired_pages),
+    line crops are encoded from the highres blob with reference
+    int-truncation rescaling (page_crop_rows' dual-DPI path); detection,
+    layout and table crops stay on the lowres blob exactly like the
+    relational slice_crops(highres_pages=) chain."""
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for _, line_rows, t_rows in _page_crops(
-                    pdf, detect_slot, layout_slot, band_v, highres):
+                    pdf, detect_slot, layout_slot):
                 for r in line_rows:
                     rows.append({
                         "media_ref": r["media_ref"], "crop_kind": "line",
@@ -149,15 +141,15 @@ def fused_page_items(pages: DataFrame,
                      detect_slot: Callable = slots.surrogate_detect,
                      recognize_slot: Callable = slots.surrogate_recognize,
                      layout_slot: Callable | None = slots.surrogate_layout,
-                     table_slot: Callable = slots.surrogate_table,
-                     highres: bool = False) -> DataFrame:
+                     table_slot: Callable = slots.surrogate_table
+                     ) -> DataFrame:
     """pages → span items (media_ref, sub_order, kind, text): the crops
     of _page_crops, each line crop through recognize_slot (task
     'ocr_with_boxes', recognize's default; chars are never built — span
     assembly does not read them), each table crop through
     tables.crop_cells, then assemble.page_items.
-    layout_slot=None skips tables (every line is a free line); highres
-    reads pages as fused_all_crops(highres=True) does.
+    layout_slot=None skips tables (every line is a free line); pages
+    carrying the 2× render are read as fused_all_crops reads them.
 
     Scale: one pass over pages, zero exchanges; per-page work is bounded
     by the page's lines and tables (cell-text assignment is
@@ -166,7 +158,7 @@ def fused_page_items(pages: DataFrame,
         for pdf in batches:
             items = []
             for ref, line_rows, t_rows in _page_crops(
-                    pdf, detect_slot, layout_slot, float(BAND), highres):
+                    pdf, detect_slot, layout_slot):
                 lines = [
                     {**r, "text": recognition.line_text(
                         recognize_slot(r["crop_bytes"], "ocr_with_boxes"))}

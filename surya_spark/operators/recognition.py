@@ -44,6 +44,20 @@ _CROPS = T.StructType([
 ])
 
 
+def _highres_box(b, poly, ws: float, hs: float) -> tuple[list, list | None]:
+    """A lowres line box (b's x1..y2) and polygon scaled into the 2×
+    render by (ws, hs) with int() truncation per coordinate — the
+    reference contract (/root/reference/surya/recognition/__init__.py:
+    158-170; PolygonBox.rescale truncates per corner). The one rescale
+    rule of slice_crops' highres kernel and page_crop_rows."""
+    bbox = [float(int(b["x1"] * ws)), float(int(b["y1"] * hs)),
+            float(int(b["x2"] * ws)), float(int(b["y2"] * hs))]
+    if poly is not None:
+        poly = [[float(int(p[0] * ws)), float(int(p[1] * hs))]
+                for p in poly]
+    return bbox, poly
+
+
 def slice_crops(lines: DataFrame, pages: DataFrame,
                 highres_pages: DataFrame | None = None) -> DataFrame:
     """lines(media_ref, line_idx, position, bbox) ⋈ page blobs → crop blobs.
@@ -148,15 +162,7 @@ def slice_crops(lines: DataFrame, pages: DataFrame,
                     if ws == 1.0 and hs == 1.0:
                         bbox = [b["x1"], b["y1"], b["x2"], b["y2"]]
                     else:
-                        # int() truncation is the reference contract
-                        bbox = [float(int(b["x1"] * ws)),
-                                float(int(b["y1"] * hs)),
-                                float(int(b["x2"] * ws)),
-                                float(int(b["y2"] * hs))]
-                        if poly is not None:
-                            # PolygonBox.rescale truncates per corner
-                            poly = [[float(int(p[0] * ws)),
-                                     float(int(p[1] * hs))] for p in poly]
+                        bbox, poly = _highres_box(b, poly, ws, hs)
                     row = {
                         "media_ref": ref,
                         "line_idx": int(b["line_idx"]),
@@ -221,18 +227,10 @@ def page_crop_rows(ref: str, w: int, h: int, blob: bytes,
     from . import detection as _det
 
     wd = float(w)
-    page_rows = []
-    for i, d in enumerate(detect_slot(ref, int(w), int(h), blob)):
-        poly = d["polygon"]
-        xs = [p[0] for p in poly]
-        ys = [p[1] for p in poly]
-        page_rows.append({
-            "media_ref": ref, "line_idx": i, "polygon": poly,
-            "x1": min(xs), "y1": min(ys),
-            "x2": max(xs), "y2": max(ys),
-            "confidence": d["confidence"],
-        })
-    page_rows = _det._postprocess_page(page_rows, int(w), int(h))
+    page_rows = _det._postprocess_page(
+        [_det.slot_line(ref, i, d)
+         for i, d in enumerate(detect_slot(ref, int(w), int(h), blob))],
+        int(w), int(h))
     if not page_rows:
         return [], desc
     crossing = any(
@@ -259,13 +257,7 @@ def page_crop_rows(ref: str, w: int, h: int, blob: bytes,
             bbox = [r["x1"], r["y1"], r["x2"], r["y2"]]
             poly = r["polygon"]
         else:
-            # int() truncation is the reference contract (slice_crops'
-            # highres kernel does the identical rescale)
-            bbox = [float(int(r["x1"] * ws)), float(int(r["y1"] * hs)),
-                    float(int(r["x2"] * ws)), float(int(r["y2"] * hs))]
-            poly = ([[float(int(p[0] * ws)), float(int(p[1] * hs))]
-                     for p in r["polygon"]]
-                    if r["polygon"] is not None else None)
+            bbox, poly = _highres_box(r, r["polygon"], ws, hs)
         rows.append({
             "media_ref": ref,
             "line_idx": int(r["line_idx"]),

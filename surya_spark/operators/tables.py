@@ -41,6 +41,22 @@ _TABLE_CROPS = T.StructType([
 TABLE_LABELS = ("Table", "TableOfContents")
 
 
+def table_crop_row(ref: str, table_idx: int, b, desc,
+                   expand_pct: float) -> dict:
+    """One table box (b's x1..y2) → its crop row: the box expanded by
+    expand_pct of its size on every side, then encoded from the decoded
+    page desc. The one crop rule of table_crops and table_crop_rows."""
+    dx = (b["x2"] - b["x1"]) * expand_pct
+    dy = (b["y2"] - b["y1"]) * expand_pct
+    bbox = [b["x1"] - dx, b["y1"] - dy, b["x2"] + dx, b["y2"] + dy]
+    return {
+        "media_ref": ref, "table_idx": table_idx,
+        "x1": bbox[0], "y1": bbox[1],
+        "x2": bbox[2], "y2": bbox[3],
+        "crop_bytes": slots.encode_table_crop(desc, bbox),
+    }
+
+
 def table_crops(regions: DataFrame, pages: DataFrame,
                 expand_pct: float = 0.01) -> DataFrame:
     """Layout regions labeled Table → ordered table_idx per page → crop
@@ -66,7 +82,6 @@ def table_crops(regions: DataFrame, pages: DataFrame,
                         "inner").select(
         "media_ref", "img_bytes", "tboxes"
     )
-    ex = expand_pct
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -75,17 +90,10 @@ def table_crops(regions: DataFrame, pages: DataFrame,
                 pdf["media_ref"], pdf["img_bytes"], pdf["tboxes"]
             ):
                 desc = decode_page(bytes(blob))
-                for b in tboxes:
-                    dx = (b["x2"] - b["x1"]) * ex
-                    dy = (b["y2"] - b["y1"]) * ex
-                    bbox = [b["x1"] - dx, b["y1"] - dy,
-                            b["x2"] + dx, b["y2"] + dy]
-                    rows.append({
-                        "media_ref": ref, "table_idx": int(b["table_idx"]),
-                        "x1": bbox[0], "y1": bbox[1],
-                        "x2": bbox[2], "y2": bbox[3],
-                        "crop_bytes": slots.encode_table_crop(desc, bbox),
-                    })
+                rows.extend(
+                    table_crop_row(ref, int(b["table_idx"]), b, desc,
+                                   expand_pct)
+                    for b in tboxes)
             yield pd.DataFrame(rows) if rows else pd.DataFrame(
                 {f.name: pd.Series([], dtype=object) for f in _TABLE_CROPS})
 
@@ -169,19 +177,8 @@ def table_crop_rows(ref: str, w: int, h: int, blob: bytes,
         tboxes.sort(key=lambda r: (r["y1"], r["x1"], r["x2"], r["y2"]))
     if desc_out is None:
         desc_out = decode_page(blob)
-    rows = []
-    for t_idx, b in enumerate(tboxes):
-        dx = (b["x2"] - b["x1"]) * expand_pct
-        dy = (b["y2"] - b["y1"]) * expand_pct
-        bbox = [b["x1"] - dx, b["y1"] - dy,
-                b["x2"] + dx, b["y2"] + dy]
-        rows.append({
-            "media_ref": ref, "table_idx": t_idx,
-            "x1": bbox[0], "y1": bbox[1],
-            "x2": bbox[2], "y2": bbox[3],
-            "crop_bytes": slots.encode_table_crop(desc_out, bbox),
-        })
-    return rows, desc_out
+    return [table_crop_row(ref, t_idx, b, desc_out, expand_pct)
+            for t_idx, b in enumerate(tboxes)], desc_out
 
 
 def normalize_table_item(item: dict, dx, dy) -> dict:

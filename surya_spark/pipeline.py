@@ -13,15 +13,15 @@ The flagship dataflow (SURVEY.md §7.2), all DataFrame ops:
     span items ⋈ media spans ∪ passthrough spans ─► doc_id groupBy
              ─► out_spans
 
-Every production path — extract with or without tables, the dual-DPI
-extract, checkpointed_extract, and through extract the streaming ingest
-and the CLI extract/ocr stages — runs this one pass; nothing in the plan
-is persisted. The per-step relational operators (detect/clean/order/
-slice, recognize, layout regions/stitch/merge, table_crops, the cell
-grid, assign_cell_text, assemble.stage_items) remain for callers that
-need an intermediate table (given-boxes mode, the detect/layout/table
-CLI stages, debug/render sinks, driver queries) and as the test oracle
-the page pass is pytest-pinned equal to.
+One private builder, _page_items, makes the plan up to the span items:
+extract assembles them and checkpointed_extract checkpoints them, so
+every production path (extract with or without tables, dual-DPI,
+checkpointed, and through extract the streaming ingest and the CLI
+extract/ocr stages) runs this one pass and persists nothing. The
+per-step relational operators remain for callers that need an
+intermediate table (given-boxes mode, the detect/layout/table CLI
+stages, debug sinks, driver queries) and as the test oracle the page
+pass is pytest-pinned equal to.
 
 Skew note: all heavy stages are keyed by media_ref (page grain), so an
 image-heavy document's pages spread across executors automatically — the
@@ -37,11 +37,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .operators import assemble, fused, slots
-from .plans import partitioning
 
 
 def pages_for(documents: DataFrame, page_blobs: DataFrame,
-              pack_partitions: int | None = None,
               partitions: int | None = None) -> DataFrame:
     """Media spans joined to their blobs. media_ref is unique per page, so
     this is a plain equi-join; blobs are the big side.
@@ -55,11 +53,7 @@ def pages_for(documents: DataFrame, page_blobs: DataFrame,
     media_ref join — the blob payload (the big bytes) crosses the wire
     exactly once. (Round-3 measurement: the naive shuffle_hash fix
     shuffled blobs twice — once for the join, once for the downstream
-    repartition — costing 28% at 8 cores on 64k docs.)
-
-    With pack_partitions set, pages are range-packed by split cost
-    (ceil(height/1400)) so inference tasks see uniform weight — the Spark
-    analog of the reference's cost-based GPU batch packing."""
+    repartition — costing 28% at 8 cores on 64k docs.)"""
     refs = (
         assemble.explode_spans(documents)
         .filter(F.col("kind").isin("page", "table"))
@@ -68,26 +62,19 @@ def pages_for(documents: DataFrame, page_blobs: DataFrame,
     if partitions:
         page_blobs = page_blobs.repartition(partitions, F.col("media_ref"))
         refs = refs.repartition(partitions, F.col("media_ref"))
-    pages = page_blobs.join(refs.hint("shuffle_hash"), "media_ref",
-                            "left_semi")
-    if pack_partitions:
-        pages = partitioning.pack_by_cost(
-            pages.withColumn(
-                "_cost", partitioning.page_cost(F.col("height"))
-            ),
-            "_cost", pack_partitions, tiebreak="media_ref",
-        ).drop("_cost")
-    return pages
+    return page_blobs.join(refs.hint("shuffle_hash"), "media_ref",
+                           "left_semi")
 
 
 def paired_pages(documents: DataFrame, pages: DataFrame,
                  highres_blobs: DataFrame,
                  partitions: int | None = None) -> DataFrame:
     """pages equi-joined on media_ref to the 2× render of the same pages
-    as (hr_bytes, hr_width, hr_height) — the input
-    fused.fused_page_items(highres=True) reads. Both sides are keyed by
-    media_ref, so the join adds no fan-out and the pair feeds ONE page
-    pass: raw page blobs are never persisted on the dual-DPI path."""
+    as (hr_bytes, hr_width, hr_height) — the columns from which the page
+    pass (fused.fused_page_items) takes its line crops. Both sides are
+    keyed by media_ref, so the join adds no fan-out and the pair feeds
+    ONE page pass: raw page blobs are never persisted on the dual-DPI
+    path."""
     hp = pages_for(documents, highres_blobs, partitions=partitions)
     return pages.join(
         hp.select(
@@ -100,6 +87,28 @@ def paired_pages(documents: DataFrame, pages: DataFrame,
     )
 
 
+def _page_items(documents: DataFrame, page_blobs: DataFrame,
+                highres_blobs: DataFrame | None = None,
+                **slot_kw) -> DataFrame:
+    """documents + page blobs → span items: pages_for, then paired_pages
+    when highres_blobs is given, then the page pass with slot_kw.
+
+    Both semi-join inputs (and the 2× render's) are hash-partitioned on
+    media_ref at spark.sql.shuffle.partitions, so each blob table
+    crosses exactly one exchange and the paired-pages join needs none."""
+    spark = documents.sparkSession
+    # shuffle.partitions may be non-numeric on AQE-coalesce platforms
+    # (e.g. "auto") — fall back to the cluster default parallelism
+    try:
+        par = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        par = spark.sparkContext.defaultParallelism
+    pages = pages_for(documents, page_blobs, partitions=par)
+    if highres_blobs is not None:
+        pages = paired_pages(documents, pages, highres_blobs, partitions=par)
+    return fused.fused_page_items(pages, **slot_kw)
+
+
 def extract(
     documents: DataFrame,
     page_blobs: DataFrame,
@@ -108,8 +117,6 @@ def extract(
     recognize_slot=slots.surrogate_recognize,
     layout_slot=slots.surrogate_layout,
     table_slot=slots.surrogate_table,
-    pack_partitions: int | None = None,
-    persist: bool = True,
     highres_blobs: DataFrame | None = None,
 ) -> DataFrame:
     """pages → the page pass (fused.fused_page_items) → span assembly.
@@ -121,36 +128,12 @@ def extract(
     with its 2× render (paired_pages) before the pass: line crops come
     from the 2× render with polygons int-rescaled (ref
     recognition/__init__.py:158-170, scripts/config.py:36-42);
-    detection, layout and table crops read the lowres blob.
-
-    persist=True (the name predates this plan) controls only the
-    partition alignment of pages_for — and of the 2× render on the
-    dual-DPI path: both semi-join inputs are explicitly hash-partitioned
-    on media_ref at spark.sql.shuffle.partitions (or pack_partitions),
-    so each blob table crosses exactly one exchange and the paired-pages
-    join needs none. persist=False leaves that exchange to the planner
-    (at shuffle.partitions it places the same exchanges).
-
-    checkpointed_extract checkpoints the same pass."""
-    spark = documents.sparkSession
-    # shuffle.partitions may be non-numeric on AQE-coalesce platforms
-    # (e.g. "auto") — fall back to the cluster default parallelism
-    try:
-        par = pack_partitions or int(
-            spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        par = spark.sparkContext.defaultParallelism
-    part = par if persist else None
-
-    pages = pages_for(documents, page_blobs, pack_partitions,
-                      partitions=part)
-    highres = highres_blobs is not None
-    if highres:
-        pages = paired_pages(documents, pages, highres_blobs,
-                             partitions=part)
-    items = fused.fused_page_items(
-        pages, detect_slot, recognize_slot,
-        layout_slot if with_tables else None, table_slot, highres=highres)
+    detection, layout and table crops read the lowres blob."""
+    items = _page_items(
+        documents, page_blobs, highres_blobs,
+        detect_slot=detect_slot, recognize_slot=recognize_slot,
+        layout_slot=layout_slot if with_tables else None,
+        table_slot=table_slot)
     return assemble.assemble_items(documents, items)
 
 
@@ -170,28 +153,16 @@ def checkpointed_extract(
     matches SURVEY.md §7.0 #4: checkpoint after every inference stage,
     relational glue stays lazy.
 
-    It checkpoints the SAME plan the flagship runs as two stages,
-    bucketed on media_ref: `pages` (pages_for) and `items` (the page
-    pass, fused.fused_page_items, over the checkpointed pages); span
-    assembly reads the committed items. The dual-DPI run
-    (highres_blobs) pairs the checkpointed lowres pages with the 2×
-    render (paired_pages) inside the items stage, exactly like
-    extract's dual-DPI path."""
+    The plan has one inference stage, the page pass, so it checkpoints
+    ONE stage, `items`, bucketed on media_ref: the span items of the
+    same builder extract runs (the pages_for semi-join, and on the
+    dual-DPI run the paired 2× render, stay lazy inside it). Span
+    assembly reads the committed items."""
     from .plans.checkpoint import CheckpointRunner
 
     runner = CheckpointRunner(spark, base_dir, n_buckets, n_groups)
-
-    pages = runner.stage(
-        "pages", lambda: pages_for(documents, page_blobs),
-        bucket_key="media_ref", max_groups=max_groups,
-    )
-    highres = highres_blobs is not None
     items = runner.stage(
-        "items",
-        lambda: fused.fused_page_items(
-            paired_pages(documents, pages, highres_blobs) if highres
-            else pages,
-            highres=highres),
+        "items", lambda: _page_items(documents, page_blobs, highres_blobs),
         bucket_key="media_ref", max_groups=max_groups,
     )
     return assemble.assemble_items(documents, items)

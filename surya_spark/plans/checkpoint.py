@@ -32,12 +32,16 @@ from pyspark.sql import functions as F
 class CheckpointRunner:
     def __init__(self, spark: SparkSession, base_dir: str,
                  n_buckets: int = 16, n_groups: int = 4):
-        assert n_buckets % n_groups == 0
+        if n_buckets % n_groups:
+            # groups are equal runs of buckets: a remainder would leave
+            # the last buckets in no group, never written
+            raise ValueError(
+                f"n_buckets={n_buckets} is not a multiple of "
+                f"n_groups={n_groups}")
         self.spark = spark
         self.base = base_dir.rstrip("/")
         self.n_buckets = n_buckets
         self.n_groups = n_groups
-        self._old_overwrite_mode = None
 
     # ---------------------------------------------------------------- lineage
     def _lineage_path(self) -> str:

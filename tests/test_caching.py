@@ -112,7 +112,7 @@ def test_tolocaliterator_releases_on_exhaustion(spark):
 
 
 def test_extract_caches_released_but_used(spark):
-    """extract(persist=True) has no fan-out left to pin — its page pass
+    """extract has no fan-out left to pin — its page pass
     emits span items straight to assembly — so it must leave no
     persisted RDD behind after its terminal action."""
     from surya_spark import datagen, pipeline
@@ -120,7 +120,7 @@ def test_extract_caches_released_but_used(spark):
     spark.catalog.clearCache()
     docs = datagen.gen_documents(spark, 8, partitions=2)
     blobs = datagen.gen_page_blobs(spark, 8, partitions=2)
-    out = pipeline.extract(docs, blobs, with_tables=True, persist=True)
+    out = pipeline.extract(docs, blobs, with_tables=True)
     rows = out.collect()
     assert len(rows) == 8
     assert _n_persisted(spark) == 0

@@ -56,6 +56,15 @@ def test_stage_resume_skips_committed(spark, tmp_path):
     assert runner.lineage().filter(F.col("stage") == "pages").count() == 8
 
 
+def test_runner_rejects_uneven_groups(spark, tmp_path):
+    """Groups are equal runs of buckets: n_buckets=10 in 4 groups would
+    leave buckets 8 and 9 in no group, so their rows would never be
+    written. The check must survive python -O, so it is no assert."""
+    with pytest.raises(ValueError):
+        CheckpointRunner(spark, str(tmp_path / "ckpt"), n_buckets=10,
+                         n_groups=4)
+
+
 def test_checkpointed_extract_matches_direct(spark, tmp_path):
     base = str(tmp_path / "ckpt_e2e")
     docs = datagen.gen_documents(spark, N_DOCS, partitions=2)
@@ -73,22 +82,22 @@ def test_checkpointed_extract_matches_direct(spark, tmp_path):
     runner = CheckpointRunner(spark, base, n_buckets=8, n_groups=2)
     m = runner.metrics().collect()
     stages = {r["stage"] for r in m}
-    # the resumable path checkpoints the flagship plan: pages, then the
-    # page pass's span items — no crop, line or cell stage
-    assert stages == {"pages", "items"}
+    # the resumable path checkpoints the flagship plan's one inference
+    # stage, the page pass's span items — the pages semi-join stays lazy
+    assert stages == {"items"}
     assert all(r["errors"] == 0 for r in m)
 
 
 def test_checkpointed_resume_on_fused_stages(spark, tmp_path):
-    """Kill-and-resume ACROSS the pages/items stage set: a run that
-    commits only the first bucket group of every stage must, on
-    re-invocation, complete the rest without recomputing committed
-    groups and still equal the direct pipeline byte-for-byte."""
+    """Kill-and-resume of the items stage: a run that commits only the
+    first bucket group must, on re-invocation, complete the rest without
+    recomputing committed groups and still equal the direct pipeline
+    byte-for-byte."""
     base = str(tmp_path / "ckpt_resume_fused")
     docs = datagen.gen_documents(spark, N_DOCS, partitions=2)
     blobs = datagen.gen_page_blobs(spark, N_DOCS, partitions=2)
 
-    # "killed" run: 1 of 2 groups per stage
+    # "killed" run: 1 of 2 groups
     pipeline.checkpointed_extract(spark, docs, blobs, base,
                                   n_buckets=4, n_groups=2, max_groups=1)
     runner = CheckpointRunner(spark, base, n_buckets=4, n_groups=2)
@@ -101,7 +110,7 @@ def test_checkpointed_resume_on_fused_stages(spark, tmp_path):
     lin2 = CheckpointRunner(spark, base, n_buckets=4, n_groups=2).lineage()
     per_stage = {r["stage"]: r["cnt"] for r in
                  lin2.groupBy("stage").agg(F.count("*").alias("cnt")).collect()}
-    assert per_stage == {"pages": 4, "items": 4}
+    assert per_stage == {"items": 4}
     # committed groups were NOT recomputed (still exactly one lineage row
     # per committed bucket)
     assert lin2.groupBy("stage", "bucket").count().filter(
@@ -112,8 +121,8 @@ def test_checkpointed_resume_on_fused_stages(spark, tmp_path):
 
 
 def test_checkpointed_highres_matches_extract_and_resumes(spark, tmp_path):
-    """The dual-DPI resumable run checkpoints the same pages/items
-    stages as the default run, resumes after a partial (max_groups) run
+    """The dual-DPI resumable run checkpoints the same items stage as
+    the default run, resumes after a partial (max_groups) run
     without recomputing committed groups, and equals the dual-DPI
     extract span for span."""
     base = str(tmp_path / "ckpt_highres")
@@ -133,7 +142,7 @@ def test_checkpointed_highres_matches_extract_and_resumes(spark, tmp_path):
     hi = datagen.gen_page_blobs(spark, N_DOCS, partitions=2, scale=2.0) \
         .withColumn("img_bytes", shout("img_bytes"))
 
-    # "killed" run: 1 of 2 groups per stage
+    # "killed" run: 1 of 2 groups
     pipeline.checkpointed_extract(spark, docs, blobs, base, n_buckets=4,
                                   n_groups=2, max_groups=1,
                                   highres_blobs=hi)
@@ -143,7 +152,7 @@ def test_checkpointed_highres_matches_extract_and_resumes(spark, tmp_path):
     lin = CheckpointRunner(spark, base, n_buckets=4, n_groups=2).lineage()
     per_stage = {r["stage"]: r["cnt"] for r in
                  lin.groupBy("stage").agg(F.count("*").alias("cnt")).collect()}
-    assert per_stage == {"pages": 4, "items": 4}
+    assert per_stage == {"items": 4}
     assert lin.groupBy("stage", "bucket").count().filter(
         F.col("count") > 1).count() == 0
 

@@ -50,10 +50,9 @@ def test_model_provider_slot_through_extract(spark):
 
     docs = datagen.gen_documents(spark, 6, partitions=2)
     blobs = datagen.gen_page_blobs(spark, 6, partitions=2)
-    base = pipeline.extract(docs, blobs, with_tables=True,
-                            persist=False).collect()
+    base = pipeline.extract(docs, blobs, with_tables=True).collect()
     via_provider = pipeline.extract(
-        docs, blobs, with_tables=True, persist=False,
+        docs, blobs, with_tables=True,
         detect_slot=provided_detect).collect()
     key = lambda r: r["doc_id"]  # noqa: E731
     assert sorted(via_provider, key=key) == sorted(base, key=key)
@@ -100,7 +99,7 @@ def test_torch_backed_slot_end_to_end(spark):
 
     docs = datagen.gen_documents(spark, 2, partitions=1)
     blobs = datagen.gen_page_blobs(spark, 2, partitions=1)
-    out = pipeline.extract(docs, blobs, with_tables=False, persist=False,
+    out = pipeline.extract(docs, blobs, with_tables=False,
                            detect_slot=torch_detect)
     rows = out.collect()
     assert len(rows) == 2

@@ -124,7 +124,7 @@ def test_highres_page_items_equal_relational_chain(spark):
     pages = pipeline.pages_for(docs, blobs).persist()
     hp = pipeline.pages_for(docs, hi).persist()
     got = _items(fused.fused_page_items(
-        pipeline.paired_pages(docs, pages, hi), highres=True))
+        pipeline.paired_pages(docs, pages, hi)))
     assert got and got == _items(_relational_items(
         pages, highres_pages=hp))
     pages.unpersist(); hp.unpersist()
@@ -145,7 +145,7 @@ def test_fused_highres_byte_identical_to_relational(spark):
     hp = pipeline.pages_for(docs, hi).persist()
 
     allc = fused.fused_all_crops(
-        pipeline.paired_pages(docs, pages, hi), highres=True).persist()
+        pipeline.paired_pages(docs, pages, hi)).persist()
 
     ordered = reading_order.order_lines(detection.detection_stage(pages))
     rel = recognition.slice_crops(

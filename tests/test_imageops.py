@@ -207,7 +207,7 @@ def test_heatmap_detect_slot_span_parity(spark):
 
     def spans(detect_slot):
         out = pipeline.extract(docs, blobs, with_tables=True,
-                               persist=False, detect_slot=detect_slot)
+                               detect_slot=detect_slot)
         return {
             r["doc_id"]: [(s["kind"], s["text"]) for s in r["spans"]]
             for r in out.collect()
@@ -270,7 +270,7 @@ def test_heatmap_skewed_lines_span_parity(spark):
 
     def spans(detect_slot):
         out = pipeline.extract(docs, blobs, with_tables=True,
-                               persist=False, detect_slot=detect_slot)
+                               detect_slot=detect_slot)
         return {
             r["doc_id"]: [(s["kind"], s["text"]) for s in r["spans"]]
             for r in out.collect()

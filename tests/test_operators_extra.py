@@ -83,6 +83,30 @@ def test_assemble_words(spark):
     assert words[1]["x1"] == 12.0
 
 
+
+def test_line_confidence_is_char_mean(spark):
+    """Line confidence is the mean of its chars' confidences; a line
+    without chars keeps the confidence it came in with."""
+    from pyspark.sql import types as T
+
+    from surya_spark import schemas
+
+    def ch(conf):
+        return {"text": "a", "x1": 0.0, "y1": 0.0, "x2": 1.0, "y2": 1.0,
+                "confidence": conf, "bbox_valid": True}
+
+    schema = T.StructType([
+        T.StructField("line_idx", T.IntegerType(), False),
+        T.StructField("chars", T.ArrayType(schemas.TEXT_CHAR), False),
+        T.StructField("confidence", T.DoubleType(), False),
+    ])
+    ocr = spark.createDataFrame(
+        [(0, [ch(0.2), ch(0.6)], 0.9), (1, [], 0.7)], schema)
+    got = {r["line_idx"]: r["confidence"]
+           for r in recognition.line_confidence(ocr).collect()}
+    assert abs(got[0] - 0.4) < 1e-12
+    assert got[1] == 0.7
+
 def test_ocr_error_stage(spark):
     df = spark.createDataFrame(pd.DataFrame({
         "doc_id": ["a", "a", "b"],

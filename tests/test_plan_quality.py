@@ -124,7 +124,7 @@ def test_extract_no_driver_broadcasts(spark):
 
     docs = datagen.gen_documents(spark, 12, partitions=2)
     blobs = datagen.gen_page_blobs(spark, 12, partitions=2)
-    out = pipeline.extract(docs, blobs, with_tables=True, persist=False)
+    out = pipeline.extract(docs, blobs, with_tables=True)
     plan = _plan(out)
     assert "BroadcastExchange" not in plan
     assert "BroadcastHashJoin" not in plan
@@ -140,7 +140,7 @@ def test_extract_blob_bytes_shuffle_once(spark):
 
     docs = datagen.gen_documents(spark, 12, partitions=2)
     blobs = datagen.gen_page_blobs(spark, 12, partitions=2)
-    out = pipeline.extract(docs, blobs, with_tables=True, persist=True)
+    out = pipeline.extract(docs, blobs, with_tables=True)
     inputs = _exchange_inputs(out)
     assert inputs, "expected Exchange nodes in the extract plan"
     # page blob bytes cross EXACTLY ONE exchange: the media_ref

@@ -93,7 +93,7 @@ def test_highres_double_resolution_path(spark):
             # int-truncated 2x scaling: crop width within 2px of 2*bbox
             assert abs(cw - 2.0 * (c["x2"] - c["x1"])) <= 2.0
 
-    # 2) end-to-end span parity with highres=True
+    # 2) end-to-end span parity of the dual-DPI extract
     out = pipeline.extract(docs, blobs, with_tables=True, highres_blobs=hi)
     for r in out.collect():
         idx = int(r["doc_id"].split("-")[1])
