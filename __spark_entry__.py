@@ -1262,8 +1262,7 @@ def _parity_frame(out: DataFrame, variant: str) -> DataFrame:
                     "variant": variant, "doc_id": doc_id,
                     "n_spans": len(got), "matches": got == expected,
                 })
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {f.name: pd.Series([], dtype=object) for f in schema})
+            yield pd.DataFrame(rows)
 
     return out.mapInPandas(check, schema=schema)
 

@@ -275,11 +275,7 @@ def gen_page_blobs(spark: SparkSession, n_docs: int,
                         "width": desc["w"], "height": desc["h"],
                         "img_bytes": encode_page(desc),
                     })
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {"media_ref": pd.Series([], dtype=object),
-                 "width": pd.Series([], dtype="int32"),
-                 "height": pd.Series([], dtype="int32"),
-                 "img_bytes": pd.Series([], dtype=object)})
+            yield pd.DataFrame(rows)
 
     return (
         spark.range(0, n_docs, numPartitions=parts)

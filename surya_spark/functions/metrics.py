@@ -361,8 +361,7 @@ def render_overlap_score(pairs: DataFrame,
                     render_ink_iou(p, r)
                     for p, r in zip(pdf[pred_col], pdf[ref_col])
                 ],
-            }) if len(pdf) else pd.DataFrame(
-                {f.name: pd.Series([], dtype=object) for f in out_schema})
+            })
 
     return pairs.select("key", pred_col, ref_col).mapInPandas(
         run, schema=out_schema)

@@ -203,8 +203,7 @@ def detect_lines(pages: DataFrame,
                 if postprocess:
                     page_rows = _postprocess_page(page_rows, int(w), int(h))
                 rows.extend(page_rows)
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {f.name: pd.Series([], dtype=object) for f in _DETECT_OUT})
+            yield pd.DataFrame(rows)
 
     return pages.mapInPandas(run, schema=_DETECT_OUT)
 
@@ -224,11 +223,9 @@ def split_detect_lines(pages: DataFrame,
 
     Truth lines are assigned to the slice containing their y-center, so
     stitching is a union + window re-key, not a merge heuristic."""
-    import json
     import math
-    import zlib
 
-    from ..datagen import MAGIC, decode_page
+    from ..datagen import decode_page, encode_page
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -251,9 +248,8 @@ def split_detect_lines(pages: DataFrame,
                                 "bbox": [b[0], b[1] - y0, b[2], b[3] - y0],
                                 "text": ln["text"],
                             })
-                    sub = {**desc, "h": ch, "lines": sub_lines}
-                    sub_blob = MAGIC + zlib.compress(
-                        json.dumps(sub, sort_keys=True).encode())
+                    sub_blob = encode_page(
+                        {**desc, "h": ch, "lines": sub_lines})
                     for i, d in enumerate(
                         slot(f"{ref}#c{ci}", int(w), ch, sub_blob)
                     ):
@@ -273,8 +269,7 @@ def split_detect_lines(pages: DataFrame,
                         r["line_idx"] = j
                     page_rows = _postprocess_page(page_rows, int(w), int(h))
                 rows.extend(page_rows)
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {f.name: pd.Series([], dtype=object) for f in _DETECT_OUT})
+            yield pd.DataFrame(rows)
 
     raw = pages.mapInPandas(run, schema=_DETECT_OUT)
     if postprocess:

@@ -54,11 +54,6 @@ _ALL_CROPS = T.StructType([
 ])
 
 
-def _empty(schema: T.StructType) -> pd.DataFrame:
-    return pd.DataFrame(
-        {f.name: pd.Series([], dtype=object) for f in schema})
-
-
 def _page_crops(pdf: pd.DataFrame, detect_slot: Callable,
                 layout_slot: Callable | None) -> Iterator[tuple]:
     """Yield (media_ref, line_rows, table_rows) for each page of one
@@ -132,7 +127,7 @@ def fused_all_crops(pages: DataFrame,
                         "crop_bytes": r["crop_bytes"],
                         "res_x": None, "res_y": None,
                     })
-            yield pd.DataFrame(rows) if rows else _empty(_ALL_CROPS)
+            yield pd.DataFrame(rows)
 
     return pages.mapInPandas(run, schema=_ALL_CROPS)
 
@@ -171,8 +166,7 @@ def fused_page_items(pages: DataFrame,
                         t["crop_bytes"], t["x1"], t["y1"], table_slot)
                 ]
                 items.extend(assemble.page_items(ref, lines, cells))
-            yield (pd.DataFrame(items, columns=assemble.ITEMS.fieldNames())
-                   if items else _empty(assemble.ITEMS))
+            yield pd.DataFrame(items, columns=assemble.ITEMS.fieldNames())
 
     return pages.mapInPandas(page_pass, schema=assemble.ITEMS)
 

@@ -42,8 +42,7 @@ def layout_regions(pages: DataFrame,
                         "media_ref": ref, **d,
                         "page_width": int(w), "page_height": int(h),
                     })
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {f.name: pd.Series([], dtype=object) for f in _LAYOUT_OUT})
+            yield pd.DataFrame(rows)
 
     return pages.mapInPandas(run, schema=_LAYOUT_OUT)
 
@@ -163,10 +162,7 @@ def tile_sub_blob(desc: dict, w: int, h: int, along_h: bool,
     split axis and shifted into tile coordinates — what a per-tile model
     would see (ref surya/layout/slicer.py:39-66). Returns
     (tile_w, tile_h, blob)."""
-    import json
-    import zlib
-
-    from ..datagen import MAGIC
+    from ..datagen import encode_page
 
     tw = w if along_h else (t_end - o)
     th = (t_end - o) if along_h else h
@@ -184,8 +180,32 @@ def tile_sub_blob(desc: dict, w: int, h: int, along_h: bool,
         sub_regions.append({**r, "bbox": bb})
     sub = {"w": tw, "h": th, "regions": sub_regions,
            "lines": [], "table": None}
-    return tw, th, MAGIC + zlib.compress(
-        json.dumps(sub, sort_keys=True).encode())
+    return tw, th, encode_page(sub)
+
+
+def tile_slot_records(ref: str, w: int, h: int, desc: dict,
+                      slot: Callable, along_h: bool, step: int,
+                      n_tiles: int) -> list[dict]:
+    """The layout slot run per tile of a page (page_tile_plan geometry):
+    each tile's sub-blob goes to the slot as media ref "<ref>#t<i>", and
+    the regions come back shifted into page coordinates and tagged with
+    tile_idx, in tile order. Shared by the relational splitter and the
+    page pass (tables.table_crop_rows); takes the decoded page so the
+    caller owns the decode."""
+    dim = h if along_h else w
+    recs = []
+    for ti in range(n_tiles):
+        o = ti * step
+        tw, th, sub_blob = tile_sub_blob(
+            desc, w, h, along_h, o, min(o + step, dim))
+        dx, dy = (0, o) if along_h else (o, 0)
+        recs.extend(
+            {**d,
+             "x1": d["x1"] + dx, "y1": d["y1"] + dy,
+             "x2": d["x2"] + dx, "y2": d["y2"] + dy,
+             "tile_idx": ti}
+            for d in slot(f"{ref}#t{ti}", tw, th, sub_blob))
+    return recs
 
 
 def split_layout_regions(pages: DataFrame,
@@ -215,7 +235,6 @@ def split_layout_regions(pages: DataFrame,
                 w, h = int(w), int(h)
                 along_h, step, n_tiles = page_tile_plan(
                     w, h, slice_min, slice_size, max_slices)
-                dim = h if along_h else w
                 if n_tiles == 1:
                     # fast path: no re-encode — the slot sees the original
                     # blob, so small pages cost exactly what layout_regions
@@ -230,23 +249,13 @@ def split_layout_regions(pages: DataFrame,
                         })
                     continue
                 desc = decode_page(bytes(blob))
-                for ti in range(n_tiles):
-                    o = ti * step
-                    t_end = min(o + step, dim)
-                    tw, th, sub_blob = tile_sub_blob(
-                        desc, w, h, along_h, o, t_end)
-                    dx, dy = (0, o) if along_h else (o, 0)
-                    for d in slot(f"{ref}#t{ti}", tw, th, sub_blob):
-                        rows.append({
-                            "media_ref": ref, **d,
-                            "x1": d["x1"] + dx, "y1": d["y1"] + dy,
-                            "x2": d["x2"] + dx, "y2": d["y2"] + dy,
-                            "page_width": w, "page_height": h,
-                            "tile_idx": ti,
-                            "merge_dir": "height" if along_h else "width",
-                        })
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {f.name: pd.Series([], dtype=object) for f in _TILED_OUT})
+                rows.extend(
+                    {"media_ref": ref, **r,
+                     "page_width": w, "page_height": h,
+                     "merge_dir": "height" if along_h else "width"}
+                    for r in tile_slot_records(ref, w, h, desc, slot,
+                                               along_h, step, n_tiles))
+            yield pd.DataFrame(rows)
 
     return pages.mapInPandas(run, schema=_TILED_OUT)
 

@@ -175,8 +175,7 @@ def slice_crops(lines: DataFrame, pages: DataFrame,
                     if has_text:
                         row["input_text"] = b["input_text"]
                     rows.append(row)
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {f.name: pd.Series([], dtype=object) for f in out_schema})
+            yield pd.DataFrame(rows)
 
     out_schema = (T.StructType(
         list(_CROPS) + [T.StructField("input_text", T.StringType(), True)])
@@ -501,8 +500,7 @@ def recognize(crops: DataFrame,
                     row["langs"] = None if lv is None else [
                         str(c) for c in lv]
                 rows.append(row)
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {f.name: pd.Series([], dtype=object) for f in out_schema})
+            yield pd.DataFrame(rows)
 
     return sorted_crops.mapInPandas(run, schema=out_schema)
 

@@ -94,8 +94,7 @@ def table_crops(regions: DataFrame, pages: DataFrame,
                     table_crop_row(ref, int(b["table_idx"]), b, desc,
                                    expand_pct)
                     for b in tboxes)
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {f.name: pd.Series([], dtype=object) for f in _TABLE_CROPS})
+            yield pd.DataFrame(rows)
 
     return joined.mapInPandas(run, schema=_TABLE_CROPS)
 
@@ -133,29 +132,14 @@ def table_crop_rows(ref: str, w: int, h: int, blob: bytes,
     else:
         along_h, step, n_tiles = L.page_tile_plan(
             w, h, slice_min, slice_size, max_slices)
-        dim = h if along_h else w
         if desc_out is None:
             desc_out = decode_page(blob)
-        recs = []
-        for ti in range(n_tiles):
-            o = ti * step
-            t_end = min(o + step, dim)
-            tw, th, sub_blob = L.tile_sub_blob(
-                desc_out, w, h, along_h, o, t_end)
-            dx, dy = (0, o) if along_h else (o, 0)
-            tile_recs = [
-                {**d,
-                 "x1": d["x1"] + dx, "y1": d["y1"] + dy,
-                 "x2": d["x2"] + dx, "y2": d["y2"] + dy,
-                 "tile_idx": ti}
-                for d in layout_slot(f"{ref}#t{ti}", tw, th,
-                                     sub_blob)
-            ]
-            # within a tile the merge order is the stitched
-            # position = emit order (stable on ties, like the
-            # relational mergesort)
-            tile_recs.sort(key=lambda r: r["emit_idx"])
-            recs.extend(tile_recs)
+        recs = L.tile_slot_records(ref, w, h, desc_out, layout_slot,
+                                   along_h, step, n_tiles)
+        # within a tile the merge order is the stitched position = emit
+        # order (stable on ties, like the relational mergesort); records
+        # arrive grouped by tile in tile order
+        recs.sort(key=lambda r: (r["tile_idx"], r["emit_idx"]))
         kept = L.accumulate_tile_merges(
             recs, along_h, merge_tolerance, merge_margin)
     tboxes = [
@@ -225,8 +209,7 @@ def table_items(crops: DataFrame,
                         "media_ref": ref, "table_idx": int(ti),
                         **normalize_table_item(item, x1, y1),
                     })
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {f.name: pd.Series([], dtype=object) for f in schemas.TABLE_ITEMS})
+            yield pd.DataFrame(rows)
 
     return crops.mapInPandas(run, schema=schemas.TABLE_ITEMS)
 
@@ -354,8 +337,7 @@ def fused_table_cells(crops: DataFrame,
                 for cell in crop_cells(bytes(blob), x1, y1, slot, min_cover):
                     rows.append({"media_ref": ref, "table_idx": int(ti),
                                  **cell})
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {f.name: pd.Series([], dtype=object) for f in _TABLE_CELLS})
+            yield pd.DataFrame(rows)
 
     return crops.mapInPandas(run, schema=_TABLE_CELLS)
 

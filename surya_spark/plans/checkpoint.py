@@ -105,7 +105,6 @@ class CheckpointRunner:
         out = f"{self.base}/{name}"
         done = self._committed_buckets(name)
         per_group = self.n_buckets // self.n_groups
-        processed = 0
 
         df = build().withColumn(
             "_bucket",
@@ -126,9 +125,7 @@ class CheckpointRunner:
         remaining = [
             g for g in range(self.n_groups)
             if not all(b in done
-                       for b in range(g * (self.n_buckets // self.n_groups),
-                                      (g + 1) * (self.n_buckets
-                                                 // self.n_groups)))
+                       for b in range(g * per_group, (g + 1) * per_group))
         ]
         if max_groups is not None:
             remaining = remaining[:max_groups]
@@ -141,13 +138,8 @@ class CheckpointRunner:
         old = self.spark.conf.get(conf_key, "static")
         self.spark.conf.set(conf_key, "dynamic")
         try:
-            for g in range(self.n_groups):
+            for g in remaining:
                 buckets = list(range(g * per_group, (g + 1) * per_group))
-                if all(b in done for b in buckets):
-                    continue  # resume: group already committed
-                if max_groups is not None and processed >= max_groups:
-                    break
-                processed += 1
                 t0 = time.time()
                 part = df.filter(F.col("_bucket").isin(buckets))
                 part.write.mode("overwrite").partitionBy("_bucket").parquet(out)

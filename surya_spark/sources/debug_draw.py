@@ -226,8 +226,7 @@ def debug_overlays(items: DataFrame, pages: DataFrame,
                     "media_ref": ref, "width": w, "height": h,
                     "n_items": len(polys), "png": encode_png(arr),
                 })
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {f.name: pd.Series([], dtype=object) for f in _OVERLAY})
+            yield pd.DataFrame(rows)
 
     return joined.mapInPandas(run, schema=_OVERLAY)
 

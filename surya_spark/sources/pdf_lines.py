@@ -107,8 +107,7 @@ def pdf_text_lines(pdfs: DataFrame,
                             "x2": float(int(b[2] * ws)),
                             "y2": float(int(b[3] * hs)),
                         })
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {f.name: pd.Series([], dtype=object) for f in PDF_LINES})
+            yield pd.DataFrame(rows)
 
     return pdfs.select(ref_col, bytes_col, img_width, img_height) \
         .mapInPandas(run, schema=PDF_LINES)

@@ -116,8 +116,7 @@ def html_render_pages(ocr_lines: DataFrame, pages: DataFrame,
                     "html": page_html(texts, bboxes, int(w), int(h),
                                       base_font_size, scaler),
                 })
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {f.name: pd.Series([], dtype=object) for f in _RENDERED})
+            yield pd.DataFrame(rows)
 
     return joined.mapInPandas(run, schema=_RENDERED)
 

@@ -87,6 +87,7 @@ def stream_incremental_dedup(
     job, run inside the batch if needed. Long-running crawls should
     compact the index dir periodically (one small file lands per batch;
     at Delta/Iceberg deployments the table format's OPTIMIZE does it)."""
+    from ..plans import caching
     from ..training import dedup
 
     if docs_schema is None:
@@ -169,6 +170,9 @@ def stream_incremental_dedup(
         dedup.minhash_index(novel, hash_mode=hash_mode) \
             .write.mode("append").parquet(index_dir)
         flagged.unpersist()
+        # the batch transformed minhash_novelty's owned result, so no
+        # owned action ran: the micro-batch releases its caches itself
+        caching.release_all()
 
     writer = src.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint_dir

@@ -147,15 +147,6 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
     exact Jaccard over the capped shingle universe (a well-defined,
     oracle-replicable semantic, not an approximation of the uncapped one).
     Worst-case join fan-out per (block, shingle) key is then df_cap²."""
-    with caching.scope() as (handles, is_owner):
-        return caching.owned(
-            _ngram_jaccard_body(docs, text_col, id_col, block_col, k,
-                                threshold, df_cap),
-            handles, is_owner)
-
-
-def _ngram_jaccard_body(docs, text_col, id_col, block_col, k, threshold,
-                        df_cap):
     rows = shingle_id_rows(docs, text_col, id_col, k,
                            extra_cols=(block_col,))
     if df_cap is not None:
@@ -200,9 +191,9 @@ def _ngram_jaccard_body(docs, text_col, id_col, block_col, k, threshold,
     )
     union = F.col("n_a") + F.col("n_b") - F.col("n_inter")
     jac = F.when(union > 0, F.col("n_inter") / union).otherwise(F.lit(0.0))
-    return withn.select(
+    return caching.own_session(withn.select(
         "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
-    ).filter(F.col("jaccard") >= threshold)
+    ).filter(F.col("jaccard") >= threshold))
 
 
 def _minhash_wide(rows: DataFrame, n_hashes: int,
@@ -305,42 +296,41 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
     'xxhash64' is the fastest JVM path."""
     rows_per_band = n_hashes // bands
     sh_hash = "md5" if hash_mode == "md5lin" else "xxhash64"
-    with caching.scope() as (handles, is_owner):
-        # the flat shingle index feeds BOTH the signature agg and the
-        # verify joins — persist or Spark re-executes the lineage per
-        # branch; released by the first action on the returned pairs
-        rows = caching.managed(
-            shingle_id_rows(docs, text_col, id_col, k, hashed=sh_hash))
-        wide = _minhash_wide(rows, n_hashes, hash_mode)
-        band_cols = [
-            F.concat_ws(",", *[
-                F.col(f"h{b * rows_per_band + j}").cast("string")
-                for j in range(rows_per_band)
-            ])
-            for b in range(bands)
-        ]
-        banded = wide.select(
-            "doc_id",
-            F.posexplode(F.array(*band_cols)).alias("band", "bucket")
+    # the flat shingle index feeds BOTH the signature agg and the
+    # verify joins — persist or Spark re-executes the lineage per
+    # branch; released by the first action on the returned pairs
+    rows = caching.managed(
+        shingle_id_rows(docs, text_col, id_col, k, hashed=sh_hash))
+    wide = _minhash_wide(rows, n_hashes, hash_mode)
+    band_cols = [
+        F.concat_ws(",", *[
+            F.col(f"h{b * rows_per_band + j}").cast("string")
+            for j in range(rows_per_band)
+        ])
+        for b in range(bands)
+    ]
+    banded = wide.select(
+        "doc_id",
+        F.posexplode(F.array(*band_cols)).alias("band", "bucket")
+    )
+    a, b = banded.alias("a"), banded.alias("b")
+    cand = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        a, b = banded.alias("a"), banded.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .distinct()
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
         )
-        out = _jaccard_over_candidates(cand, rows).filter(
-            F.col("jaccard") >= threshold
-        )
-        return caching.owned(out, handles, is_owner)
+        .distinct()
+    )
+    out = _jaccard_over_candidates(cand, rows).filter(
+        F.col("jaccard") >= threshold
+    )
+    return caching.own_session(out)
 
 
 _SIMHASH_OUT = T.StructType([
@@ -585,49 +575,48 @@ def minhash_novelty(new_docs: DataFrame,
     est ≥ t."""
     if (corpus_docs is None) == (corpus_index is None):
         raise ValueError("pass exactly one of corpus_docs / corpus_index")
-    with caching.scope() as (handles, is_owner):
-        new_wide = caching.managed(minhash_index(
-            new_docs, text_col, id_col, k, n_hashes, hash_mode))
-        corp_wide = caching.managed(
-            corpus_index if corpus_index is not None
-            else minhash_index(corpus_docs, text_col, id_col, k,
-                               n_hashes, hash_mode))
-        cand = (
-            _banded(new_wide, n_hashes, bands).alias("n")
-            .join(_banded(corp_wide, n_hashes, bands).alias("c")
-                  .hint("shuffle_hash"),
-                  (F.col("n.band") == F.col("c.band"))
-                  & (F.col("n.bucket") == F.col("c.bucket")))
-            .select(F.col("n.doc_id").alias("new_id"),
-                    F.col("c.doc_id").alias("corp_id"))
-            .distinct()
+    new_wide = caching.managed(minhash_index(
+        new_docs, text_col, id_col, k, n_hashes, hash_mode))
+    corp_wide = caching.managed(
+        corpus_index if corpus_index is not None
+        else minhash_index(corpus_docs, text_col, id_col, k,
+                           n_hashes, hash_mode))
+    cand = (
+        _banded(new_wide, n_hashes, bands).alias("n")
+        .join(_banded(corp_wide, n_hashes, bands).alias("c")
+              .hint("shuffle_hash"),
+              (F.col("n.band") == F.col("c.band"))
+              & (F.col("n.bucket") == F.col("c.bucket")))
+        .select(F.col("n.doc_id").alias("new_id"),
+                F.col("c.doc_id").alias("corp_id"))
+        .distinct()
+    )
+    agree = sum(
+        (F.col(f"a.h{i}") == F.col(f"b.h{i}")).cast("int")
+        for i in range(n_hashes)
+    )
+    est = (
+        cand
+        .join(new_wide.alias("a"),
+              F.col("new_id") == F.col("a.doc_id"))
+        .join(corp_wide.alias("b").hint("shuffle_hash"),
+              F.col("corp_id") == F.col("b.doc_id"))
+        .select("new_id",
+                (agree.cast("double") / F.lit(float(n_hashes)))
+                .alias("est"))
+        .groupBy("new_id")
+        .agg(F.max("est").alias("max_est"))
+    )
+    out = (
+        new_docs.select(F.col(id_col).alias("doc_id"))
+        .join(est.withColumnRenamed("new_id", "doc_id")
+              .hint("shuffle_hash"), "doc_id", "left")
+        .select(
+            "doc_id",
+            F.round(F.coalesce(F.col("max_est"), F.lit(0.0)), 6)
+            .alias("max_est"),
+            (F.coalesce(F.col("max_est"), F.lit(0.0))
+             < F.lit(threshold)).alias("is_novel"),
         )
-        agree = sum(
-            (F.col(f"a.h{i}") == F.col(f"b.h{i}")).cast("int")
-            for i in range(n_hashes)
-        )
-        est = (
-            cand
-            .join(new_wide.alias("a"),
-                  F.col("new_id") == F.col("a.doc_id"))
-            .join(corp_wide.alias("b").hint("shuffle_hash"),
-                  F.col("corp_id") == F.col("b.doc_id"))
-            .select("new_id",
-                    (agree.cast("double") / F.lit(float(n_hashes)))
-                    .alias("est"))
-            .groupBy("new_id")
-            .agg(F.max("est").alias("max_est"))
-        )
-        out = (
-            new_docs.select(F.col(id_col).alias("doc_id"))
-            .join(est.withColumnRenamed("new_id", "doc_id")
-                  .hint("shuffle_hash"), "doc_id", "left")
-            .select(
-                "doc_id",
-                F.round(F.coalesce(F.col("max_est"), F.lit(0.0)), 6)
-                .alias("max_est"),
-                (F.coalesce(F.col("max_est"), F.lit(0.0))
-                 < F.lit(threshold)).alias("is_novel"),
-            )
-        )
-        return caching.owned(out, handles, is_owner)
+    )
+    return caching.own_session(out)

@@ -102,8 +102,7 @@ def media_metadata(media: DataFrame, ref_col: str = "media_ref",
                     "width": meta["width"], "height": meta["height"],
                     "n_bytes": len(blob), "format": meta["format"],
                 })
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {f.name: pd.Series([], dtype=object) for f in MEDIA_META})
+            yield pd.DataFrame(rows)
 
     return media.select(ref_col, bytes_col).mapInPandas(run, schema=MEDIA_META)
 
@@ -132,8 +131,7 @@ def media_features(media: DataFrame, dim: int = 16,
                 {"media_ref": ref, "feature": extractor(bytes(blob), dim)}
                 for ref, blob in zip(pdf[ref_col], pdf[bytes_col])
             ]
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {f.name: pd.Series([], dtype=object) for f in FEATURES})
+            yield pd.DataFrame(rows)
 
     return media.select(ref_col, bytes_col).mapInPandas(run, schema=FEATURES)
 

@@ -181,17 +181,8 @@ def knn_ivf(vectors: DataFrame, centroids: DataFrame, k: int = 3,
     # one scored pass serves both sides (index = probe_rank 1, queries =
     # all probes); without persist Spark re-executes the assignment per
     # branch (different projections → no exchange reuse) — measured 2×.
-    # caching.scope: the cache is released by the first action on the
-    # returned top-k (persist-lifecycle ownership, plans/caching.py).
-    with caching.scope() as (handles, is_owner):
-        return caching.owned(
-            _knn_ivf_body(vectors, centroids, k, id_col, vec_col, dim,
-                          nprobe, cluster_cap),
-            handles, is_owner)
-
-
-def _knn_ivf_body(vectors, centroids, k, id_col, vec_col, dim, nprobe,
-                  cluster_cap):
+    # The cache is released by the first action on the returned top-k
+    # (persist-lifecycle ownership, plans/caching.py).
     probes = caching.managed(
         assign_clusters(vectors, centroids, id_col, vec_col,
                         dim=dim, nprobe=nprobe))
@@ -203,15 +194,11 @@ def _knn_ivf_body(vectors, centroids, k, id_col, vec_col, dim, nprobe,
             index.withColumn("_cr", F.row_number().over(w_cap))
             .filter(F.col("_cr") <= cluster_cap).drop("_cr")
         )
-    if dim is not None:
-        scored = _cluster_topk_kernel(probes, index, k, id_col, vec_col,
-                                      dim)
-    else:
-        scored = _cluster_score_sql(probes, index, id_col, vec_col, dim)
+    scored = _cluster_topk_kernel(probes, index, k, id_col, vec_col)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
-    return (
+    return caching.own_session(
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
     )
@@ -219,7 +206,7 @@ def _knn_ivf_body(vectors, centroids, k, id_col, vec_col, dim, nprobe,
 
 def _cluster_score_sql(probes, index, id_col, vec_col, dim):
     """Pre-r7 pairwise scoring: cluster equi-join + per-pair codegen dot.
-    Kept for unknown dim and as the kernel's pytest equivalence anchor.
+    Test-only: the oracle the kernel is pytest-pinned against.
     Quadratic-per-cluster through ROW-AT-A-TIME expressions — at sf1.0
     (20k vectors, 8 clusters, nprobe 2) the driver measured 305 s."""
     withn_q = with_norm(probes, vec_col, "_n", dim)
@@ -247,7 +234,7 @@ def _cluster_score_sql(probes, index, id_col, vec_col, dim):
     )
 
 
-def _cluster_topk_kernel(probes, index, k, id_col, vec_col, dim,
+def _cluster_topk_kernel(probes, index, k, id_col, vec_col,
                          n_chunks: int = 16,
                          q_block_elems: int = 4_000_000):
     """Per-cluster top-k scoring as a COGROUP numpy kernel (r7): the same
@@ -259,7 +246,9 @@ def _cluster_topk_kernel(probes, index, k, id_col, vec_col, dim,
     element in the same order (acc = (…(q₁v₁ + q₂v₂) + …) elementwise),
     so every dot, norm, product and quotient is the identical IEEE-754
     operation sequence — same doubles out, pytest-pinned against the SQL
-    path.
+    path for both its expanded (dim given) and folded (dim=None, which
+    starts from 0.0 + q₁v₁ = q₁v₁) forms. The vector length is read from
+    the arrays, so the kernel serves every dim.
 
     Per-(query,cluster) the kernel emits only a top-k candidate SUPERSET:
     rows with raw cosine ≥ (k-th largest raw cosine) − 2e-6. The final
@@ -448,75 +437,10 @@ def embedding_lsh_pairs(vectors: DataFrame, threshold: float = 0.8,
     12.1 s → 2.8 s at sf0.1 when widened); more/narrower bands buy recall
     at candidate cost. The shuffle key is the bucket. No cross join
     anywhere."""
-    planes = random_hyperplanes(n_planes, dim, seed)
-    per_band = n_planes // bands
-    with caching.scope() as (handles, is_owner):
-        return caching.owned(
-            _embedding_lsh_body(vectors, threshold, bands, per_band,
-                                planes, id_col, vec_col, dim),
-            handles, is_owner)
-
-
-def _banded_signs_kernel(vectors: DataFrame, id_col: str, vec_col: str,
-                         planes: list[list[int]], bands: int,
-                         per_band: int) -> DataFrame:
-    """(id, band, bucket) rows: per-band sign-bit bucket strings from the
-    random-hyperplane projection, computed batchwise in numpy.
-
-    The pre-r7 form evaluated 32 ~50-term SQL sum expressions per row —
-    past the codegen method limit, so INTERPRETED (~2.5 s of the query at
-    sf1.0 even spread across the cluster). The kernel accumulates each
-    plane's sum left-associated over its NONZERO coefficients in index
-    order — the identical IEEE sequence as the old `t1 + t2 + …` F.expr
-    (zero terms skipped there too) — so every sign bit, bucket string and
-    candidate pair is unchanged (oracle-pinned)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        vectors.schema[id_col],
-        T.StructField("band", T.IntegerType(), False),
-        T.StructField("bucket", T.StringType(), False),
-    ])
-    nonzero = [[(i, float(wi)) for i, wi in enumerate(w) if wi]
-               for w in planes]
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {f.name: pd.Series([], dtype=object)
-                     for f in out_schema})
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            n = len(pdf)
-            bits = np.zeros((n, len(nonzero)), dtype=bool)
-            for p, nz in enumerate(nonzero):
-                i0, w0 = nz[0]
-                acc = V[:, i0] * w0
-                for i, wi in nz[1:]:
-                    acc = acc + V[:, i] * wi
-                bits[:, p] = acc > 0
-            chars = np.where(bits, "1", "0")
-            ids = pdf[id_col]
-            frames = []
-            for b in range(len(nonzero) // per_band):
-                seg = chars[:, b * per_band:(b + 1) * per_band]
-                frames.append(pd.DataFrame({
-                    id_col: ids, "band": b,
-                    "bucket": ["".join(r) for r in seg],
-                }))
-            yield pd.concat(frames, ignore_index=True)
-
-    return vectors.select(id_col, vec_col).mapInPandas(
-        run, schema=out_schema)
-
-
-def _embedding_lsh_body(vectors, threshold, bands, per_band, planes,
-                        id_col, vec_col, dim):
     from ..plans import partitioning
 
+    planes = random_hyperplanes(n_planes, dim, seed)
+    per_band = n_planes // bands
     # single-row-group embedding files scan as 1-2 tasks; the sign
     # projection (and the norm projection below) must not run serially —
     # spread once, reuse for both consumers (r7)
@@ -553,11 +477,64 @@ def _embedding_lsh_body(vectors, threshold, bands, per_band, planes,
     # and reuses the SQL-computed norms, so the doubles are bit-equal
     # (pytest-pinned); round+threshold stay in SQL.
     scored = _pair_cosine_kernel(paired, "va", "vb", "na", "nb", dim)
-    return (
+    return caching.own_session(
         scored.select("id_a", "id_b",
                       F.round(F.col("cosine_raw"), 6).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
+
+
+def _banded_signs_kernel(vectors: DataFrame, id_col: str, vec_col: str,
+                         planes: list[list[int]], bands: int,
+                         per_band: int) -> DataFrame:
+    """(id, band, bucket) rows: per-band sign-bit bucket strings from the
+    random-hyperplane projection, computed batchwise in numpy.
+
+    The pre-r7 form evaluated 32 ~50-term SQL sum expressions per row —
+    past the codegen method limit, so INTERPRETED (~2.5 s of the query at
+    sf1.0 even spread across the cluster). The kernel accumulates each
+    plane's sum left-associated over its NONZERO coefficients in index
+    order — the identical IEEE sequence as the old `t1 + t2 + …` F.expr
+    (zero terms skipped there too) — so every sign bit, bucket string and
+    candidate pair is unchanged (oracle-pinned)."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    out_schema = T.StructType([
+        vectors.schema[id_col],
+        T.StructField("band", T.IntegerType(), False),
+        T.StructField("bucket", T.StringType(), False),
+    ])
+    nonzero = [[(i, float(wi)) for i, wi in enumerate(w) if wi]
+               for w in planes]
+
+    def run(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            n = len(pdf)
+            bits = np.zeros((n, len(nonzero)), dtype=bool)
+            for p, nz in enumerate(nonzero):
+                i0, w0 = nz[0]
+                acc = V[:, i0] * w0
+                for i, wi in nz[1:]:
+                    acc = acc + V[:, i] * wi
+                bits[:, p] = acc > 0
+            chars = np.where(bits, "1", "0")
+            ids = pdf[id_col]
+            frames = []
+            for b in range(len(nonzero) // per_band):
+                seg = chars[:, b * per_band:(b + 1) * per_band]
+                frames.append(pd.DataFrame({
+                    id_col: ids, "band": b,
+                    "bucket": ["".join(r) for r in seg],
+                }))
+            yield pd.concat(frames, ignore_index=True)
+
+    return vectors.select(id_col, vec_col).mapInPandas(
+        run, schema=out_schema)
 
 
 def _pair_cosine_kernel(paired: DataFrame, va: str, vb: str,
@@ -578,9 +555,6 @@ def _pair_cosine_kernel(paired: DataFrame, va: str, vb: str,
     def run(batches):
         for pdf in batches:
             if not len(pdf):
-                yield pd.DataFrame(
-                    {f.name: pd.Series([], dtype=object)
-                     for f in out_schema})
                 continue
             A = np.stack(pdf[va].to_numpy()).astype(np.float64)
             B = np.stack(pdf[vb].to_numpy()).astype(np.float64)

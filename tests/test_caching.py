@@ -61,30 +61,11 @@ def test_transformed_result_reaped_by_own_session(spark):
 
 
 def _owned_range(spark, caching, n=100, materialize=False):
-    with caching.scope() as (handles, is_owner):
-        d = caching.managed(spark.range(n))
-        w = caching.owned(d, handles, is_owner)
+    d = caching.managed(spark.range(n))
+    w = caching.own_session(d)
     if materialize:
         d.count()  # materialize the cache via the UNWRAPPED handle
     return w
-
-
-def test_wrapper_disabled_degrades_to_release_all(spark):
-    """Force the Connect-style fallback: owned() returns the plain
-    DataFrame, nothing auto-releases, release_all() still reaps."""
-    from surya_spark.plans import caching
-
-    spark.catalog.clearCache()
-    caching._set_wrapper_enabled(False)
-    try:
-        w = _owned_range(spark, caching)
-        assert type(w).__name__ != "_OwnedDataFrame"
-        w.count()
-        assert _n_persisted(spark) >= 1  # no wrapper → no auto release
-        caching.release_all(spark)
-        assert _n_persisted(spark) == 0
-    finally:
-        caching._set_wrapper_enabled(True)
 
 
 def test_write_releases_caches(spark, tmp_path):

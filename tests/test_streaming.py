@@ -100,6 +100,7 @@ def test_stream_incremental_dedup(spark, tmp_path):
 
     from surya_spark.training import dedup
 
+    spark.catalog.clearCache()
     text_corpus = "the old corpus document about rivers and stones"
     text_a = "alpha beta gamma delta epsilon zeta eta theta"
     text_b = "completely different words describing mountain weather"
@@ -118,6 +119,8 @@ def test_stream_incremental_dedup(spark, tmp_path):
     q = ingest.stream_incremental_dedup(
         spark, docs_dir, index_dir, out_dir, ckpt, threshold=0.5)
     q.awaitTermination(180)
+    # the micro-batches release their dedup caches
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
 
     flags = {r["doc_id"]: r["is_novel"]
              for r in spark.read.parquet(out_dir).collect()}

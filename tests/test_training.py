@@ -4,6 +4,7 @@ multimodal plumbing."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from surya_spark import datagen
@@ -332,10 +333,12 @@ def test_minhash_novelty_flags_known_dup(spark):
         assert abs(r["max_est"] * 64 - round(r["max_est"] * 64)) < 1e-9
 
 
-def test_knn_ivf_kernel_matches_sql_path(spark):
+@pytest.mark.parametrize("dim", [64, None])
+def test_knn_ivf_kernel_matches_sql_path(spark, dim):
     """The r7 cogroup numpy top-k kernel must reproduce the SQL
     cluster-join scoring BIT-for-bit (left-associated accumulation =
-    identical IEEE op sequence), including rank assignment."""
+    identical IEEE op sequence), including rank assignment — both for
+    the expanded dot (dim given) and the any-length fold (dim=None)."""
     from pyspark.sql import Window
 
     from surya_spark.plans import caching
@@ -344,15 +347,15 @@ def test_knn_ivf_kernel_matches_sql_path(spark):
     cents = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("centroid_id"), "embedding")
 
-    new = similarity.knn_ivf(emb, cents, k=3, dim=64, nprobe=2) \
+    new = similarity.knn_ivf(emb, cents, k=3, dim=dim, nprobe=2) \
         .orderBy("query_id", "rank").collect()
     spark.catalog.clearCache()
 
     probes = caching.managed(similarity.assign_clusters(
-        emb, cents, "vec_id", "embedding", dim=64, nprobe=2))
+        emb, cents, "vec_id", "embedding", dim=dim, nprobe=2))
     index = probes.filter(F.col("probe_rank") == 1)
     scored = similarity._cluster_score_sql(
-        probes, index, "vec_id", "embedding", 64)
+        probes, index, "vec_id", "embedding", dim)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id"))
     old = (scored.withColumn("rank", F.row_number().over(w).cast("long"))

@@ -271,7 +271,7 @@ def timings(spark, sf_dir: str, reps: int, scale: int) -> dict:
             t0 = time.time()
             fn().write.mode("overwrite").format("noop").save()
             best = min(best, time.time() - t0)
-            caching.release_all(spark)
+            caching.release_all()
             spark.catalog.clearCache()
         times[name] = round(best, 3)
     return times
