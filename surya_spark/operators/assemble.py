@@ -30,16 +30,11 @@ from pyspark.sql import types as T
 
 
 def explode_spans(documents: DataFrame) -> DataFrame:
-    return documents.select(
-        "doc_id",
-        F.explode("spans").alias("s"),
-    ).select(
-        "doc_id",
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("offset"),
-    )
+    """One row per span: (doc_id, kind, text, media_ref, offset)."""
+    # a SQL string is parsed in the JVM in one call; the Column-API
+    # form cost a py4j round trip per expression node (driver plan
+    # build time)
+    return documents.selectExpr("doc_id", "inline(spans)")
 
 
 def media_spans(span_rows: DataFrame) -> DataFrame:
@@ -197,17 +192,11 @@ def assemble_items(documents: DataFrame, items: DataFrame) -> DataFrame:
                 )
             ).alias("_s")
         )
-        .select(
+        .selectExpr(
             "doc_id",
-            F.transform(
-                "_s",
-                lambda s, i: F.struct(
-                    s["kind"].alias("kind"),
-                    s["text"].alias("text"),
-                    s["media_ref"].alias("media_ref"),
-                    i.cast("int").alias("offset"),
-                ),
-            ).alias("spans"),
+            "transform(_s, (s, i) -> named_struct('kind', s.kind, "
+            "'text', s.text, 'media_ref', s.media_ref, 'offset', i)) "
+            "AS spans",
         )
     )
 

@@ -1,23 +1,32 @@
 """The page pass: one mapInPandas over pages that does all the work
-keyed by a single page, sharing one zlib page decode.
+keyed by a single page.
 
 fused_page_items is the pass every production path runs (pipeline.extract
 with or without tables, its dual-DPI variant, checkpointed_extract, and
 through extract the streaming ingest and the CLI extract/ocr stages).
 Per page it detects, orders and slices the text lines
-(recognition.page_crop_rows) and recognizes each crop; runs layout and
-cuts the table crops (tables.table_crop_rows) and turns each into cells
+(recognition.page_line_crops) and recognizes each crop; runs layout and
+cuts the table crops (tables.page_table_crops) and turns each into cells
 (tables.crop_cells); then assigns line text to cells and packs the span
 items (assemble.page_items). Only those small (media_ref, sub_order,
 kind, text) rows leave the pass — no crop is persisted or shuffled, and
 the relational chain's crop union, recognize pass, cell pass, cell-text
 theta join and free-line anti-join (all page-local work) are gone from
-the plan.
+the plan. Crops never leave the pass either, so they are never
+serialized: each slot gets the in-memory crop (slots.crop_payload /
+table_crop_payload).
 
 fused_all_crops is the crop-level library surface of the same pass (the
 CLI `--stage table` and `--render-html`, the crop-parity tests): the
-tagged union of line and table crops. Both passes take their crops from
-one per-page helper, _page_crops, so they cannot drift.
+tagged union of line and table crops, serialized to crop_bytes
+(recognition.page_crop_rows, tables.table_crop_rows) because there
+they become Spark rows. Both passes run one per-page helper,
+_page_crops, with the crop kernels of their form; each form pair
+shares its geometry helper, so the two passes cannot drift.
+
+Decodes: the kernels share the page desc they decode (detect → line
+crops → table crops), but each surrogate slot (detect, layout)
+decodes the page blob itself, so a page is decoded about three times.
 
 Parity: the tests pin fused_all_crops' crops byte-identical to the
 relational chain (detection_stage → order_lines → slice_crops, and
@@ -55,11 +64,14 @@ _ALL_CROPS = T.StructType([
 
 
 def _page_crops(pdf: pd.DataFrame, detect_slot: Callable,
-                layout_slot: Callable | None) -> Iterator[tuple]:
+                layout_slot: Callable | None, line_kernel: Callable,
+                table_kernel: Callable) -> Iterator[tuple]:
     """Yield (media_ref, line_rows, table_rows) for each page of one
-    Arrow batch: page_crop_rows then, unless layout_slot is None,
-    table_crop_rows on the desc it returned, so each page is decoded at
-    most once. A batch that carries the paired 2× render (hr_bytes,
+    Arrow batch: line_kernel (recognition.page_crop_rows or
+    page_line_crops) then, unless layout_slot is None, table_kernel
+    (tables.table_crop_rows or page_table_crops) on the desc it
+    returned, so the kernels decode each page at most once between
+    them. A batch that carries the paired 2× render (hr_bytes,
     hr_width, hr_height; pipeline.paired_pages) takes its line crops
     from it, rescaled by the same expression as slice_crops' SQL:
     double(hr)/double(lo)."""
@@ -74,7 +86,7 @@ def _page_crops(pdf: pd.DataFrame, detect_slot: Callable,
     ):
         w, h = int(w), int(h)
         blob = bytes(blob)
-        line_rows, desc = recognition.page_crop_rows(
+        line_rows, desc = line_kernel(
             ref, w, h, blob, detect_slot, float(BAND),
             hr_blob=bytes(hrb) if highres else None,
             hr_scale=((float(hrw) / float(w), float(hrh) / float(h))
@@ -82,7 +94,7 @@ def _page_crops(pdf: pd.DataFrame, detect_slot: Callable,
         if layout_slot is None:  # caller skips the table family
             t_rows = []
         else:
-            t_rows, desc = tables.table_crop_rows(
+            t_rows, desc = table_kernel(
                 ref, w, h, blob, layout_slot, desc=desc)
         yield ref, line_rows, t_rows
 
@@ -93,8 +105,8 @@ def fused_all_crops(pages: DataFrame,
                     ) -> DataFrame:
     """pages → tagged union of recognition crops (crop_kind='line', the
     rows page_crop_rows emits) and table crops (crop_kind='table', the
-    rows table_crop_rows emits), one decode per page. layout_slot=None
-    skips the table family.
+    rows table_crop_rows emits). layout_slot=None skips the table
+    family.
 
     When `pages` carries the 2× render (hr_bytes, hr_width, hr_height —
     equi-joined on media_ref BEFORE this pass by pipeline.paired_pages),
@@ -106,7 +118,8 @@ def fused_all_crops(pages: DataFrame,
         for pdf in batches:
             rows = []
             for _, line_rows, t_rows in _page_crops(
-                    pdf, detect_slot, layout_slot):
+                    pdf, detect_slot, layout_slot,
+                    recognition.page_crop_rows, tables.table_crop_rows):
                 for r in line_rows:
                     rows.append({
                         "media_ref": r["media_ref"], "crop_kind": "line",
@@ -139,10 +152,12 @@ def fused_page_items(pages: DataFrame,
                      table_slot: Callable = slots.surrogate_table
                      ) -> DataFrame:
     """pages → span items (media_ref, sub_order, kind, text): the crops
-    of _page_crops, each line crop through recognize_slot (task
-    'ocr_with_boxes', recognize's default; chars are never built — span
-    assembly does not read them), each table crop through
-    tables.crop_cells, then assemble.page_items.
+    of _page_crops in their in-memory form (page_line_crops,
+    page_table_crops), each line crop through recognize_slot (task
+    'ocr_with_boxes', recognize's default; the slot builds its chars,
+    span assembly keeps only the text), each table crop through
+    tables.crop_cells, then assemble.page_items. Neither slot is ever
+    handed bytes here.
     layout_slot=None skips tables (every line is a free line); pages
     carrying the 2× render are read as fused_all_crops reads them.
 
@@ -153,17 +168,18 @@ def fused_page_items(pages: DataFrame,
         for pdf in batches:
             items = []
             for ref, line_rows, t_rows in _page_crops(
-                    pdf, detect_slot, layout_slot):
+                    pdf, detect_slot, layout_slot,
+                    recognition.page_line_crops, tables.page_table_crops):
                 lines = [
                     {**r, "text": recognition.line_text(
-                        recognize_slot(r["crop_bytes"], "ocr_with_boxes"))}
+                        recognize_slot(r["crop"], "ocr_with_boxes"))}
                     for r in line_rows
                 ]
                 cells = [
                     {"table_idx": t["table_idx"], **cell}
                     for t in t_rows
                     for cell in tables.crop_cells(
-                        t["crop_bytes"], t["x1"], t["y1"], table_slot)
+                        t["crop"], t["x1"], t["y1"], table_slot)
                 ]
                 items.extend(assemble.page_items(ref, lines, cells))
             yield pd.DataFrame(items, columns=assemble.ITEMS.fieldNames())

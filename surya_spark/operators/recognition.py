@@ -188,8 +188,8 @@ def page_crop_rows(ref: str, w: int, h: int, blob: bytes,
                    desc=None, hr_blob: bytes | None = None,
                    hr_scale: tuple[float, float] | None = None
                    ) -> tuple[list[dict], object]:
-    """Per-page kernel of the page pass (operators/fused: fused_page_items
-    and fused_all_crops) for the detect→order→slice chain:
+    """Per-page kernel of the crop-level page pass (fused.fused_all_crops)
+    for the detect→order→slice chain:
     detect slot → fused post-process (detection._postprocess_page) →
     column-aware reading order → crop encode (slots.encode_crop),
     emitting the crop rows the relational chain
@@ -197,7 +197,8 @@ def page_crop_rows(ref: str, w: int, h: int, blob: bytes,
     without ever materializing the line table. Every step is page-local,
     so the relational chain's two line-table exchanges (order window +
     slice aggregate) are pure overhead here; crops are pytest-pinned
-    byte-identical against it.
+    byte-identical against it. page_line_crops is the same kernel with
+    the crops left unserialized.
 
     Ordering contract matches order_lines exactly: two-column iff no
     line crosses the central strip (x1 < 0.48w AND x2 > 0.52w), col_id
@@ -208,9 +209,10 @@ def page_crop_rows(ref: str, w: int, h: int, blob: bytes,
 
     Returns (crop row dicts, decoded page or the desc passed in): a
     caller running several page-grain kernels hands the returned desc to
-    the next kernel and the blob is zlib-decoded at most once per page.
-    desc stays None when no line survives post-processing (the decode is
-    lazy — pages with no text never pay it).
+    the next kernel, and the kernels decode the blob at most once per
+    page between them (the slots decode it themselves). desc stays None
+    when no line survives post-processing (the decode is lazy — pages
+    with no text never pay it).
 
     hr_blob + hr_scale=(ws, hs) select the dual-DPI path (r7, VERDICT
     r06 #3): detection runs on the LOWRES blob as always, crops are
@@ -221,6 +223,39 @@ def page_crop_rows(ref: str, w: int, h: int, blob: bytes,
     highres kernel — and rows carry (res_x, res_y) = (ws, hs) while the
     output bbox columns stay in lowres space. The LOWRES desc is never
     decoded here on that path (the table kernel decodes it if needed)."""
+    rows, boxes, crop_desc, desc = _line_boxes(
+        ref, w, h, blob, detect_slot, band_v, desc, hr_blob, hr_scale)
+    for row, (bbox, poly) in zip(rows, boxes):
+        row["crop_bytes"] = slots.encode_crop(crop_desc, bbox, poly)
+    return rows, desc
+
+
+def page_line_crops(ref: str, w: int, h: int, blob: bytes,
+                    detect_slot: Callable, band_v: float,
+                    desc=None, hr_blob: bytes | None = None,
+                    hr_scale: tuple[float, float] | None = None
+                    ) -> tuple[list[dict], object]:
+    """page_crop_rows with each crop left in memory: the rows carry
+    `crop`, the slots.crop_payload a recognize slot takes, instead of
+    `crop_bytes`. The page pass (fused.fused_page_items) hands these
+    straight to the recognize slot, so no line crop is serialized."""
+    rows, boxes, crop_desc, desc = _line_boxes(
+        ref, w, h, blob, detect_slot, band_v, desc, hr_blob, hr_scale)
+    for row, (bbox, poly) in zip(rows, boxes):
+        row["crop"] = slots.crop_payload(crop_desc, bbox, poly)
+    return rows, desc
+
+
+def _line_boxes(ref: str, w: int, h: int, blob: bytes,
+                detect_slot: Callable, band_v: float, desc,
+                hr_blob: bytes | None, hr_scale
+                ) -> tuple[list[dict], list[tuple], object, object]:
+    """detect slot → fused post-process (detection._postprocess_page) →
+    column-aware reading order for one page. Returns (rows, boxes,
+    crop_desc, desc): the line rows of page_crop_rows without their
+    crop, each row's crop geometry (bbox, polygon) in the space of
+    crop_desc (the page the crops are cut from), and the lowres desc
+    (or the one passed in; None when nothing needed it)."""
     import math
 
     from . import detection as _det
@@ -231,7 +266,7 @@ def page_crop_rows(ref: str, w: int, h: int, blob: bytes,
          for i, d in enumerate(detect_slot(ref, int(w), int(h), blob))],
         int(w), int(h))
     if not page_rows:
-        return [], desc
+        return [], [], None, desc
     crossing = any(
         r["x1"] < wd * 0.48 and r["x2"] > wd * 0.52
         for r in page_rows)
@@ -245,28 +280,27 @@ def page_crop_rows(ref: str, w: int, h: int, blob: bytes,
     if hr_blob is None:
         if desc is None:
             desc = decode_page(blob)
-        enc_desc = desc
+        crop_desc = desc
         ws = hs = 1.0
     else:
-        enc_desc = decode_page(hr_blob)
+        crop_desc = decode_page(hr_blob)
         ws, hs = float(hr_scale[0]), float(hr_scale[1])
-    rows = []
+    rows, boxes = [], []
     for pos, r in enumerate(page_rows, start=1):
         if hr_blob is None:
-            bbox = [r["x1"], r["y1"], r["x2"], r["y2"]]
-            poly = r["polygon"]
+            boxes.append(([r["x1"], r["y1"], r["x2"], r["y2"]],
+                          r["polygon"]))
         else:
-            bbox, poly = _highres_box(r, r["polygon"], ws, hs)
+            boxes.append(_highres_box(r, r["polygon"], ws, hs))
         rows.append({
             "media_ref": ref,
             "line_idx": int(r["line_idx"]),
             "position": pos,
             "x1": r["x1"], "y1": r["y1"],
             "x2": r["x2"], "y2": r["y2"],
-            "crop_bytes": slots.encode_crop(enc_desc, bbox, poly),
             "res_x": ws, "res_y": hs,
         })
-    return rows, desc
+    return rows, boxes, crop_desc, desc
 
 
 _OCR_OUT = T.StructType([

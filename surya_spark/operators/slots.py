@@ -8,6 +8,13 @@ fixture-backed surrogates that decode the SPG1 page descriptors; a GPU
 deployment swaps in torch-backed callables with identical signatures —
 the Spark plan does not change.
 
+Detect and layout slots take the page blob. Recognize and table slots
+take a crop: inside the page pass (fused.fused_page_items) that is the
+in-memory crop (crop_payload / table_crop_payload — a deployment's
+pixel slice), never serialized; from a crop table (slice_crops,
+table_crops, fused_all_crops) it is the crop_bytes SPC1 blob. A slot
+normalizes either form with as_crop.
+
 Surrogate realism: detection emits *noisy, unordered, duplicated* boxes so
 the relational post-processing (containment anti-join, y-expand, confidence
 normalization, reading-order sort) is actually load-bearing, exactly like
@@ -117,10 +124,11 @@ def _is_axis_rect(polygon, bbox, eps: float = 1e-9) -> bool:
     )
 
 
-def encode_crop(desc: dict, bbox: list[float],
-                polygon: list[list[float]] | None = None) -> bytes:
-    """Slice a page descriptor to a crop blob: truth lines overlapping the
-    crop ≥50% of their area, coordinates shifted to crop space.
+def crop_payload(desc: dict, bbox: list[float],
+                 polygon: list[list[float]] | None = None) -> dict:
+    """Slice a page descriptor to the in-memory crop a recognize slot
+    takes: truth lines overlapping the crop ≥50% of their area,
+    coordinates shifted to crop space.
 
     With a non-rectangular polygon (skewed quad from rotated text), the
     visibility rule is the descriptor analog of the reference's fillPoly
@@ -182,7 +190,14 @@ def encode_crop(desc: dict, bbox: list[float],
                 "bbox": [lx1 - cx1, ly1 - cy1, lx2 - cx1, ly2 - cy1],
                 "text": ln["text"],
             })
-    payload = {"crop": [0.0, 0.0, cx2 - cx1, cy2 - cy1], "lines": kept}
+    return {"crop": [0.0, 0.0, cx2 - cx1, cy2 - cy1], "lines": kept}
+
+
+def encode_crop(desc: dict, bbox: list[float],
+                polygon: list[list[float]] | None = None) -> bytes:
+    """crop_payload serialized to an SPC1 crop blob — the form a crop
+    takes where it becomes a Spark row (slice_crops, fused_all_crops);
+    decode_crop(encode_crop(d, b, p)) == crop_payload(d, b, p)."""
     # insertion order IS sorted order for every dict here ("crop"<"lines",
     # "bbox"<"text"), so dropping sort_keys produces byte-identical JSON
     # without the per-key sort; level-1 deflate halves the kernel's
@@ -190,13 +205,21 @@ def encode_crop(desc: dict, bbox: list[float],
     # producer/consumer pair — fused and relational alike — shares this
     # one encoder, and no oracle hashes crop blobs) (r7, profiled)
     return CROP_MAGIC + zlib.compress(
-        json.dumps(payload).encode(), 1)
+        json.dumps(crop_payload(desc, bbox, polygon)).encode(), 1)
 
 
 def decode_crop(blob: bytes) -> dict:
     if not blob.startswith(CROP_MAGIC):
         raise ValueError("not an SPC1 crop blob")
     return json.loads(zlib.decompress(blob[len(CROP_MAGIC):]))
+
+
+def as_crop(crop) -> dict:
+    """A crop as a recognize or table slot receives it → its payload:
+    the in-memory dict (the page pass hands crops over without
+    serializing them) passes through; SPC1 bytes (a crop table's
+    crop_bytes) are decoded."""
+    return crop if isinstance(crop, dict) else decode_crop(crop)
 
 
 # ---------------------------------------------------------------- recognition
@@ -210,10 +233,11 @@ TASK_MAX_TOKENS = {
 }
 
 
-def surrogate_recognize(crop_bytes: bytes,
+def surrogate_recognize(crop: dict | bytes,
                         task: str = "ocr_with_boxes",
                         input_text: str | None = None) -> dict:
-    """crop blob → (text, chars, confidence). Picks the truth line covering
+    """crop → (text, chars, confidence); the crop is a crop_payload dict
+    or its SPC1 blob (as_crop). Picks the truth line covering
     the largest share of the crop; chars get evenly-divided boxes, like the
     reference's per-token bbox head output
     (/root/reference/surya/recognition/__init__.py:609-771).
@@ -239,7 +263,7 @@ def surrogate_recognize(crop_bytes: bytes,
     cond = (input_text or "").strip()
     if len(cond) > TASK_MAX_TOKENS.get(task, 224):
         cond = ""
-    desc = decode_crop(crop_bytes)
+    desc = as_crop(crop)
     _, _, cw, ch = desc["crop"]
     best, best_cover = None, -1.0
     for ln in desc["lines"]:
@@ -275,22 +299,23 @@ def surrogate_recognize(crop_bytes: bytes,
     return {"text": text, "chars": chars, "confidence": conf}
 
 
-def surrogate_recognize_batch(blobs: list[bytes],
+def surrogate_recognize_batch(crops: list,
                               tasks: list[str],
                               texts: list[str | None] | None = None
                               ) -> list[dict]:
     """Batch-signature recognizer for the continuous-batching path
-    (recognition.recognize(batch_slot=...)): one result per input, in
-    order. A GPU deployment replaces the loop with a single padded-tensor
+    (recognition.recognize(batch_slot=...)): one result per input crop
+    (either form surrogate_recognize takes), in order. A GPU deployment
+    replaces the loop with a single padded-tensor
     forward pass over the (width-sorted) micro-batch — the padding waste
     bound is what the width-descending admission buys
     (ref /root/reference/surya/recognition/__init__.py:501-607).
     texts: optional per-item input_text (None = unconditioned), the
     batch analog of RecognitionPrompt.text (ref :354-371)."""
     if texts is None:
-        texts = [None] * len(blobs)
-    return [surrogate_recognize(b, t, x)
-            for b, t, x in zip(blobs, tasks, texts)]
+        texts = [None] * len(crops)
+    return [surrogate_recognize(c, t, x)
+            for c, t, x in zip(crops, tasks, texts)]
 
 
 class SurrogateStepRecognizer:
@@ -299,7 +324,7 @@ class SurrogateStepRecognizer:
     /root/reference/surya/recognition/__init__.py:501-607). The
     three-callable contract a GPU deployment fills with real tensors:
 
-      prefill(blobs, tasks[, texts]) -> list[state]
+      prefill(crops, tasks[, texts]) -> list[state]
                                              # encoder pass + KV-cache
                                              # rows for newly admitted;
                                              # texts = optional per-item
@@ -320,13 +345,13 @@ class SurrogateStepRecognizer:
         self.prefill_calls = 0
         self.step_calls = 0
 
-    def prefill(self, blobs: list[bytes], tasks: list[str],
+    def prefill(self, crops: list, tasks: list[str],
                 texts: list[str | None] | None = None) -> list[dict]:
         self.prefill_calls += 1
         if texts is None:
-            texts = [None] * len(blobs)
-        return [{"r": surrogate_recognize(b, t, x), "pos": 0}
-                for b, t, x in zip(blobs, tasks, texts)]
+            texts = [None] * len(crops)
+        return [{"r": surrogate_recognize(c, t, x), "pos": 0}
+                for c, t, x in zip(crops, tasks, texts)]
 
     def step(self, states: list[dict]) -> list[bool]:
         self.step_calls += 1
@@ -366,11 +391,15 @@ def surrogate_layout(media_ref: str, width: int, height: int,
 
 
 # ------------------------------------------------------------------ table rec
-def surrogate_table(crop_bytes: bytes) -> list[dict]:
-    """Table crop blob → row/col items in emit order (pass 1 of the
+def surrogate_table(crop: dict | bytes) -> list[dict]:
+    """Table crop → row/col items in emit order (pass 1 of the
     reference's two-pass decode, /root/reference/surya/table_rec/__init__.py:181-231).
-    The cell grid is assembled relationally downstream."""
-    desc = decode_crop(crop_bytes) if crop_bytes.startswith(CROP_MAGIC) else None
+    The crop is a table_crop_payload dict or its SPC1 blob (as_crop);
+    bytes that are not an SPC1 blob yield no items. The cell grid is
+    assembled relationally downstream."""
+    desc = (as_crop(crop)
+            if isinstance(crop, dict) or crop.startswith(CROP_MAGIC)
+            else None)
     table = desc.get("table") if desc else None
     if not table:
         return []
@@ -407,16 +436,23 @@ def surrogate_table(crop_bytes: bytes) -> list[dict]:
     return items
 
 
-def encode_table_crop(desc: dict, bbox: list[float]) -> bytes:
-    """Crop a page descriptor to its table region (coordinates kept in crop
-    space) — the layout→table crop join payload."""
+def table_crop_payload(desc: dict, bbox: list[float]) -> dict:
+    """Crop a page descriptor to its table region (coordinates kept in
+    crop space): the in-memory crop a table slot takes."""
     cx1, cy1, _, _ = bbox
     t = desc.get("table")
     payload = {"crop": [0.0, 0.0, bbox[2] - bbox[0], bbox[3] - bbox[1]],
                "lines": [], "table": None}
     if t:
         payload["table"] = {**t, "x": t["x"] - cx1, "y": t["y"] - cy1}
-    return CROP_MAGIC + zlib.compress(json.dumps(payload, sort_keys=True).encode())
+    return payload
+
+
+def encode_table_crop(desc: dict, bbox: list[float]) -> bytes:
+    """table_crop_payload serialized to an SPC1 crop blob — the
+    layout→table crop join payload (table_crops, fused_all_crops)."""
+    return CROP_MAGIC + zlib.compress(json.dumps(
+        table_crop_payload(desc, bbox), sort_keys=True).encode())
 
 
 # -------------------------------------------------------- provider pattern

@@ -41,14 +41,20 @@ _TABLE_CROPS = T.StructType([
 TABLE_LABELS = ("Table", "TableOfContents")
 
 
+def _table_bbox(b, expand_pct: float = 0.01) -> list[float]:
+    """A table box (b's x1..y2) expanded by expand_pct of its size on
+    every side: the one crop-box rule of every table crop."""
+    dx = (b["x2"] - b["x1"]) * expand_pct
+    dy = (b["y2"] - b["y1"]) * expand_pct
+    return [b["x1"] - dx, b["y1"] - dy, b["x2"] + dx, b["y2"] + dy]
+
+
 def table_crop_row(ref: str, table_idx: int, b, desc,
                    expand_pct: float) -> dict:
     """One table box (b's x1..y2) → its crop row: the box expanded by
     expand_pct of its size on every side, then encoded from the decoded
     page desc. The one crop rule of table_crops and table_crop_rows."""
-    dx = (b["x2"] - b["x1"]) * expand_pct
-    dy = (b["y2"] - b["y1"]) * expand_pct
-    bbox = [b["x1"] - dx, b["y1"] - dy, b["x2"] + dx, b["y2"] + dy]
+    bbox = _table_bbox(b, expand_pct)
     return {
         "media_ref": ref, "table_idx": table_idx,
         "x1": bbox[0], "y1": bbox[1],
@@ -106,8 +112,8 @@ def table_crop_rows(ref: str, w: int, h: int, blob: bytes,
                     merge_tolerance: float = 0.05,
                     merge_margin: float = 0.05,
                     desc=None) -> tuple[list[dict], object]:
-    """Per-page kernel of the page pass (operators/fused: fused_page_items
-    and fused_all_crops) for the layout→table-crop chain:
+    """Per-page kernel of the crop-level page pass (fused.fused_all_crops)
+    for the layout→table-crop chain:
     layout slot (tiled per layout.page_tile_plan for oversize pages) →
     cross-tile merge → header/footer relabel → Table filter → ordered
     table_idx → inline crop encode, emitting the rows
@@ -119,11 +125,51 @@ def table_crop_rows(ref: str, w: int, h: int, blob: bytes,
     relabel_header_footer_record) so the two paths cannot drift, and
     crops are pytest-pinned byte-identical against the relational path.
     Per-page work is bounded (≤4 tiles × ≤100 regions).
+    page_table_crops is the same kernel with the crops left
+    unserialized.
 
     Returns (crop row dicts, decoded page or the desc passed in) —
-    callers chaining several page-grain kernels reuse desc and the blob
-    is zlib-decoded at most once per page; pages with no tables (and
+    callers chaining several page-grain kernels reuse desc, so the
+    kernels decode the blob at most once per page between them (the
+    slots decode it themselves); pages with no tables (and
     small enough to skip tiling) never pay the decode."""
+    tboxes, desc = _table_boxes(ref, w, h, blob, layout_slot, desc,
+                                slice_min, slice_size, max_slices,
+                                merge_tolerance, merge_margin)
+    return [table_crop_row(ref, t_idx, b, desc, expand_pct)
+            for t_idx, b in enumerate(tboxes)], desc
+
+
+def page_table_crops(ref: str, w: int, h: int, blob: bytes,
+                     layout_slot: Callable,
+                     desc=None) -> tuple[list[dict], object]:
+    """table_crop_rows (at its default tiling and expansion) with each
+    crop left in memory: the rows carry `crop`, the
+    slots.table_crop_payload a table slot takes, instead of
+    `crop_bytes`. The page pass (fused.fused_page_items) hands these
+    straight to tables.crop_cells, so no table crop is serialized."""
+    tboxes, desc = _table_boxes(ref, w, h, blob, layout_slot, desc)
+    rows = []
+    for t_idx, b in enumerate(tboxes):
+        bbox = _table_bbox(b)
+        rows.append({
+            "media_ref": ref, "table_idx": t_idx,
+            "x1": bbox[0], "y1": bbox[1],
+            "x2": bbox[2], "y2": bbox[3],
+            "crop": slots.table_crop_payload(desc, bbox),
+        })
+    return rows, desc
+
+
+def _table_boxes(ref: str, w: int, h: int, blob: bytes,
+                 layout_slot: Callable, desc,
+                 slice_min: int = 1500, slice_size: int = 1200,
+                 max_slices: int = 4, merge_tolerance: float = 0.05,
+                 merge_margin: float = 0.05) -> tuple[list[dict], object]:
+    """layout slot (tiled) → cross-tile merge → header/footer relabel →
+    Table filter for one page: its table boxes in table_idx order, and
+    the decoded page (decoded here only when there is a table or a
+    tiled page, unless it was passed in)."""
     from . import layout as L
 
     desc_out = desc
@@ -161,8 +207,7 @@ def table_crop_rows(ref: str, w: int, h: int, blob: bytes,
         tboxes.sort(key=lambda r: (r["y1"], r["x1"], r["x2"], r["y2"]))
     if desc_out is None:
         desc_out = decode_page(blob)
-    return [table_crop_row(ref, t_idx, b, desc_out, expand_pct)
-            for t_idx, b in enumerate(tboxes)], desc_out
+    return tboxes, desc_out
 
 
 def normalize_table_item(item: dict, dx, dy) -> dict:
@@ -293,15 +338,16 @@ def cells_for_table(items: list, min_cover: float = 0.9) -> list:
     return out
 
 
-def crop_cells(blob: bytes, x1: float, y1: float,
+def crop_cells(crop, x1: float, y1: float,
                slot: Callable = slots.surrogate_table,
                min_cover: float = 0.9) -> list:
-    """One table crop → its cells: table slot → normalize_table_item
-    (shift by the crop origin (x1, y1)) → cells_for_table. The per-table
-    step of fused_table_cells and of the page pass
-    (fused.fused_page_items)."""
+    """One table crop (whichever form it comes in: crop_bytes from a
+    crop table, the in-memory payload in the page pass) → its cells:
+    table slot → normalize_table_item (shift by the crop origin (x1,
+    y1)) → cells_for_table. The per-table step of fused_table_cells and
+    of the page pass (fused.fused_page_items)."""
     return cells_for_table(
-        [normalize_table_item(it, x1, y1) for it in slot(blob)], min_cover)
+        [normalize_table_item(it, x1, y1) for it in slot(crop)], min_cover)
 
 
 def fused_table_cells(crops: DataFrame,

@@ -3,8 +3,8 @@
 The flagship dataflow (SURVEY.md §7.2), all DataFrame ops:
 
     explode spans ─► media spans ⋈ page_blobs ─► pages
-    pages ─► ONE page pass (fused.fused_page_items), one zlib decode
-             per page:
+    pages ─► ONE page pass (fused.fused_page_items), crops handed to
+             their slots in memory (never serialized):
                detect slot → clean/expand → order → slice → recognize slot
                layout slot [tiled] → merge → relabel → table crops
                  → table slot → grid → spanning override

@@ -1,7 +1,8 @@
 """Deployment dry-run contract tests (SURVEY.md §2.9): the slot
 extension surface must carry a ModelProvider-backed callable through the
-real Spark plan — lazy per-executor load, crop bytes in, schema-valid
-dicts out — not just the bare surrogates the other tests inject.
+real Spark plan — lazy per-executor load, page blobs or crops in,
+schema-valid dicts out — not just the bare surrogates the other tests
+inject.
 
 The torch-backed variant skips in this sandbox (no torch) and runs on a
 GPU box; the provider-plumbing variant runs everywhere because the
@@ -11,13 +12,18 @@ schema validation) is library-independent.
 Slot I/O spec (also in COVERAGE.md):
   detect(media_ref: str, width: int, height: int, img_bytes: bytes)
       -> list[{polygon: [[x,y]*4], confidence: float}]
-  recognize(crop_bytes: bytes, task: str) ->
+  recognize(crop, task: str) ->
       {text: str, confidence: float,
        chars: [{text, x1, y1, x2, y2, confidence, bbox_valid}]}
   layout(media_ref, width, height, img_bytes) ->
       list[{emit_idx: int, label: str, x1..y2, confidence, top_k: dict}]
-  table(crop_bytes) -> list[{item_kind: row|col|spanning_cell, item_id,
+  table(crop) -> list[{item_kind: row|col|spanning_cell, item_id,
        x1..y2, is_header, colspan, rowspan}]
+
+A crop is the in-memory dict inside the page pass (slots.crop_payload /
+table_crop_payload; a real deployment's pixel slice) and SPC1 bytes
+from a crop table (crop_bytes); a slot normalizes it with
+slots.as_crop.
 """
 
 from __future__ import annotations
@@ -25,7 +31,7 @@ from __future__ import annotations
 import pytest
 
 from surya_spark import datagen, pipeline
-from surya_spark.operators import slots
+from surya_spark.operators import fused, recognition, slots
 
 def test_model_provider_slot_through_extract(spark):
     """A ModelProvider-wrapped slot must produce byte-identical spans to
@@ -56,6 +62,44 @@ def test_model_provider_slot_through_extract(spark):
         detect_slot=provided_detect).collect()
     key = lambda r: r["doc_id"]  # noqa: E731
     assert sorted(via_provider, key=key) == sorted(base, key=key)
+
+
+def test_model_provider_recognize_slot_through_extract(spark):
+    """The same contract for the recognize slot: a ModelProvider-backed
+    recognizer that normalizes its crop with slots.as_crop gives the
+    surrogate's spans, on the page pass (in-memory crops) and on the
+    relational recognize (crop bytes)."""
+
+    def load_recognizer(path):
+        from surya_spark.operators import slots as worker_slots
+
+        return worker_slots.surrogate_recognize
+
+    provider = slots.ModelProvider("fake://checkpoints/rec.pt",
+                                   load_recognizer)
+
+    def provided_recognize(crop, task):
+        from surya_spark.operators import slots as worker_slots
+
+        model = provider.get()  # lazy, once per python worker
+        return model(worker_slots.as_crop(crop), task)
+
+    docs = datagen.gen_documents(spark, 6, partitions=2)
+    blobs = datagen.gen_page_blobs(spark, 6, partitions=2)
+    base = pipeline.extract(docs, blobs, with_tables=True).collect()
+    via_provider = pipeline.extract(
+        docs, blobs, with_tables=True,
+        recognize_slot=provided_recognize).collect()
+    key = lambda r: r["doc_id"]  # noqa: E731
+    assert sorted(via_provider, key=key) == sorted(base, key=key)
+
+    crops = fused.line_crops(fused.fused_all_crops(
+        pipeline.pages_for(docs, blobs), layout_slot=None))
+    cols = ["media_ref", "line_idx", "text", "confidence"]
+    got = recognition.recognize(crops, slot=provided_recognize,
+                                emit_chars=False).select(cols)
+    want = recognition.recognize(crops, emit_chars=False).select(cols)
+    assert sorted(got.collect()) == sorted(want.collect())
 
 
 def test_model_provider_caches_once_per_process():
