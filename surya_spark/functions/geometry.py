@@ -47,21 +47,6 @@ def poly_rescale(poly: Column, sx: Column | float, sy: Column | float) -> Column
     )
 
 
-def poly_clamp(poly: Column, x_max: Column, y_max: Column) -> Column:
-    """Clip corners into [0, x_max] × [0, y_max].
-    Ref: surya/common/polygon.py:76-81,183-186."""
-    return F.transform(
-        poly,
-        lambda c: F.array(
-            F.greatest(F.lit(0.0), F.least(c[0], x_max.cast("double"))),
-            F.greatest(F.lit(0.0), F.least(c[1], y_max.cast("double"))),
-        ),
-    )
-
-
-def poly_shift(poly: Column, dx: Column | float, dy: Column | float) -> Column:
-    """Translate. Ref: surya/common/polygon.py:175-181."""
-    return F.transform(poly, lambda c: F.array(c[0] + F.lit(dx), c[1] + F.lit(dy)))
 
 
 def bbox_to_poly(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
@@ -219,11 +204,6 @@ def merge_left(ax1, bx1) -> Column:
     return F.least(ax1, bx1)
 
 
-def merge_right(ax2, bx2) -> Column:
-    """New right edge: max of the two x2 values (polygon corners 1 and 2).
-    Ref: surya/common/polygon.py:95-98."""
-    return F.greatest(ax2, bx2)
-
 
 def poly_merge_left(poly: Column, other_x1: Column) -> Column:
     """Extend only the left edge of a polygon to cover other_x1 (corners 0
@@ -302,26 +282,6 @@ def poly_contains(pa: Column, pb: Column) -> Column:
     )
 
 
-def poly_valid(p: Column) -> Column:
-    """Cornerwise-ordered quad sanity: left corners left of right corners,
-    top corners above bottom corners. intersect_poly of disjoint quads
-    violates this — gate shoelace areas on it."""
-    return (
-        (p[0][0] <= p[1][0]) & (p[3][0] <= p[2][0])
-        & (p[0][1] <= p[3][1]) & (p[1][1] <= p[2][1])
-    )
-
-
-def poly_overlap_pct(pa: Column, pb: Column) -> Column:
-    """Fraction of pb covered by pa under cornerwise intersection +
-    shoelace area — the corner-accurate analog of intersection_pct
-    (ref surya/common/polygon.py:161-173, which uses bbox overlap)."""
-    inter = intersect_poly(pa, pb)
-    area_b = poly_area_shoelace(pb)
-    return F.when(
-        poly_valid(inter) & (area_b > 0),
-        poly_area_shoelace(inter) / area_b,
-    ).otherwise(F.lit(0.0))
 
 
 def intersect_bbox(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2) -> list[Column]:

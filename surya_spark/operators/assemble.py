@@ -58,10 +58,11 @@ def free_lines(ocr_lines: DataFrame, cells: DataFrame | None) -> DataFrame:
     return ln.join(cl.hint("shuffle_hash"), on=pred, how="left_anti")
 
 
-# span packing: line sub_orders live in [0, 1e6), cell sub_orders in
-# [1e6, ...) with 1000 columns per row — guarded at runtime on both paths
-# (stage_items, page_items) because silent violation would mis-order
-# spans, not fail
+# span packing: line sub_orders live in [0, LINE_BOUND), cell sub_orders
+# at LINE_BOUND + row_id·CELL_COLS + col_id for row_id < ROW_BOUND —
+# guarded at runtime on both paths (stage_items, page_items) because
+# silent violation would mis-order spans, not fail
+LINE_BOUND, CELL_COLS, ROW_BOUND = 1_000_000, 1000, 1_000_000_000
 LINE_BOUND_ERROR = "assemble_spans: line position >= 1e6 breaks span packing"
 CELL_BOUND_ERROR = (
     "assemble_spans: table exceeds 1000 cols / 1e9 rows packing bound")
@@ -79,11 +80,11 @@ def stage_items(ocr_lines: DataFrame,
     """ocr_lines + cells with text (tables.assign_cell_text) → span items
     (media_ref, sub_order, kind, text): free lines (center-containment
     anti-join) as 'text' items at sub_order = position, cells as 'cell'
-    items at 1e6 + row_id·1000 + col_id. The relational formulation the
-    page pass (fused.fused_page_items, kernel page_items) is pinned
-    equal to."""
+    items at LINE_BOUND + row_id·CELL_COLS + col_id. The relational
+    formulation the page pass (fused.fused_page_items, kernel
+    page_items) is pinned equal to."""
     line_order = F.when(
-        F.col("position") < 1_000_000, F.col("position").cast("long")
+        F.col("position") < LINE_BOUND, F.col("position").cast("long")
     ).otherwise(F.raise_error(LINE_BOUND_ERROR).cast("long"))
     lines = free_lines(ocr_lines, cells).select(
         "media_ref",
@@ -93,8 +94,8 @@ def stage_items(ocr_lines: DataFrame,
     if cells is None:
         return lines
     cell_order = F.when(
-        (F.col("col_id") < 1000) & (F.col("row_id") < 1_000_000_000),
-        F.lit(1_000_000) + F.col("row_id").cast("long") * 1000
+        (F.col("col_id") < CELL_COLS) & (F.col("row_id") < ROW_BOUND),
+        F.lit(LINE_BOUND) + F.col("row_id").cast("long") * CELL_COLS
         + F.col("col_id"),
     ).otherwise(F.raise_error(CELL_BOUND_ERROR).cast("long"))
     # union here so assemble_items joins the media spans ONCE (half the
@@ -137,16 +138,16 @@ def page_items(ref: str, lines: list[dict], cells: list[dict]) -> list:
             if c["x1"] <= cx < c["x2"] and c["y1"] <= cy < c["y2"]:
                 claimed[i] = True
                 inside.append((lines[i]["position"], lines[i]["text"]))
-        if not (c["col_id"] < 1000 and c["row_id"] < 1_000_000_000):
+        if not (c["col_id"] < CELL_COLS and c["row_id"] < ROW_BOUND):
             raise ValueError(CELL_BOUND_ERROR)
         items.append((
-            ref, 1_000_000 + c["row_id"] * 1000 + c["col_id"], "cell",
+            ref, LINE_BOUND + c["row_id"] * CELL_COLS + c["col_id"], "cell",
             " ".join(t for _, t in sorted(inside * k)),
         ))
     for ln, taken in zip(lines, claimed):
         if taken:
             continue
-        if not ln["position"] < 1_000_000:
+        if not ln["position"] < LINE_BOUND:
             raise ValueError(LINE_BOUND_ERROR)
         items.append((ref, int(ln["position"]), "text", ln["text"]))
     return items

@@ -24,7 +24,15 @@ from pyspark.sql import types as T
 
 from .. import schemas
 from ..functions import geometry as G
+from ..plans.partitioning import DETECTOR_CHUNK_PX
 from . import slots
+
+# non-vertical boxes grow by this fraction of their height at top and
+# bottom; a box at least VERTICAL_RATIO times taller than wide is
+# vertical and left as is (ref surya/detection/heatmap.py:169-175,
+# settings.py:73-75)
+Y_EXPAND_PCT = 0.05
+VERTICAL_RATIO = 3
 
 _DETECT_OUT = T.StructType(
     list(schemas.LINES)
@@ -99,8 +107,8 @@ def _containment_keep(x1, y1, x2, y2, ids, block_elems: int = 8_000_000):
     return ~(contained | (area <= 0))
 
 
-def _postprocess_page(rows: list[dict], page_w: int, page_h: int,
-                      y_pct: float = 0.05) -> list[dict]:
+def _postprocess_page(rows: list[dict], page_w: int,
+                      page_h: int) -> list[dict]:
     """Fused per-page post-processing: containment clean + 5% y-expand
     clamped to the page + max-confidence normalization — numerically
     identical to clean_contained_boxes → expand_and_normalize, but run
@@ -133,10 +141,10 @@ def _postprocess_page(rows: list[dict], page_w: int, page_h: int,
     ids = np.array([r["line_idx"] for r in rows])
     P = np.array([r["polygon"] for r in rows], dtype=float)  # (n, 4, 2)
     keep = _containment_keep(x1, y1, x2, y2, ids)
-    # vertical boxes (height >= 3x width) skip expand AND clamp, per
-    # reference (parallel_get_boxes only expands/fits non-vertical boxes)
-    vertical = (y2 - y1) >= 3 * (x2 - x1)
-    dy = (y2 - y1) * y_pct
+    # vertical boxes skip expand AND clamp, per reference
+    # (parallel_get_boxes only expands/fits non-vertical boxes)
+    vertical = (y2 - y1) >= VERTICAL_RATIO * (x2 - x1)
+    dy = (y2 - y1) * Y_EXPAND_PCT
     ny = P[:, :, 1].copy()
     ny[:, 0:2] -= dy[:, None]
     ny[:, 2:4] += dy[:, None]
@@ -210,13 +218,12 @@ def detect_lines(pages: DataFrame,
 
 def split_detect_lines(pages: DataFrame,
                        slot: Callable = slots.surrogate_detect,
-                       chunk_px: int = 1400,
                        postprocess: bool = False) -> DataFrame:
-    """Chunked detection for tall pages: explode each page into ≤chunk_px
-    vertical slices, run the detector per slice, shift results back and
-    re-stitch — the reference's vertical split + heatmap stitch
-    (/root/reference/surya/detection/util.py:7-36,
-     /root/reference/surya/detection/__init__.py:134-151) re-expressed as
+    """Chunked detection for tall pages: explode each page into
+    ≤DETECTOR_CHUNK_PX vertical slices, run the detector per slice, shift
+    results back and re-stitch — the reference's vertical split +
+    heatmap stitch (ref surya/detection/util.py:7-36,
+    surya/detection/__init__.py:134-151) re-expressed as
     flatMap → infer → relational re-key. Bounds the per-item activation
     footprint no matter how tall the page is; short pages pass through as
     a single slice with zero extra cost.
@@ -235,14 +242,14 @@ def split_detect_lines(pages: DataFrame,
             ):
                 desc = decode_page(bytes(blob))
                 page_rows = []
-                n_chunks = max(1, math.ceil(int(h) / chunk_px))
+                n_chunks = max(1, math.ceil(int(h) / DETECTOR_CHUNK_PX))
                 for ci in range(n_chunks):
-                    y0 = ci * chunk_px
-                    ch = min(chunk_px, int(h) - y0)
+                    y0 = ci * DETECTOR_CHUNK_PX
+                    ch = min(DETECTOR_CHUNK_PX, int(h) - y0)
                     sub_lines = []
                     for ln in desc["lines"]:
                         cy = (ln["bbox"][1] + ln["bbox"][3]) / 2.0
-                        if y0 <= cy < y0 + chunk_px:
+                        if y0 <= cy < y0 + DETECTOR_CHUNK_PX:
                             b = ln["bbox"]
                             sub_lines.append({
                                 "bbox": [b[0], b[1] - y0, b[2], b[3] - y0],
@@ -395,9 +402,9 @@ def clean_contained_boxes_kernel(lines: DataFrame,
     return lines.groupBy(key).applyInPandas(sweep, schema=out_schema).select(cols)
 
 
-def expand_and_normalize(lines: DataFrame, y_pct: float = 0.05) -> DataFrame:
-    """5% vertical expansion clamped to the page — skipped for vertical
-    boxes (height ≥ 3×width), matching the reference
+def expand_and_normalize(lines: DataFrame) -> DataFrame:
+    """Y_EXPAND_PCT vertical expansion clamped to the page — skipped for
+    vertical boxes (height ≥ VERTICAL_RATIO×width), matching the reference
     (/root/reference/surya/detection/heatmap.py:170-176) — and per-page
     max-confidence normalization
     (/root/reference/surya/detection/heatmap.py:100-107) via a window.
@@ -418,7 +425,7 @@ def expand_and_normalize(lines: DataFrame, y_pct: float = 0.05) -> DataFrame:
     poly = F.col("polygon")
     w_pg = F.col("page_width").cast("double")
     h_pg = F.col("page_height").cast("double")
-    dy = (F.col("y2") - F.col("y1")) * F.lit(y_pct)
+    dy = (F.col("y2") - F.col("y1")) * F.lit(Y_EXPAND_PCT)
 
     def clamp(v, m):
         return F.greatest(F.lit(0.0), F.least(v, m))
@@ -430,7 +437,8 @@ def expand_and_normalize(lines: DataFrame, y_pct: float = 0.05) -> DataFrame:
             clamp(F.element_at(c, 2) + F.lit(float(sign)) * dy, h_pg),
         )
 
-    vertical = (F.col("y2") - F.col("y1")) >= 3 * (F.col("x2") - F.col("x1"))
+    vertical = ((F.col("y2") - F.col("y1"))
+                >= VERTICAL_RATIO * (F.col("x2") - F.col("x1")))
     expanded = F.when(vertical, poly).otherwise(
         F.array(corner(1, -1), corner(2, -1), corner(3, +1), corner(4, +1))
     )
@@ -454,11 +462,11 @@ def expand_and_normalize(lines: DataFrame, y_pct: float = 0.05) -> DataFrame:
 
 def detection_stage(pages: DataFrame,
                     slot: Callable = slots.surrogate_detect,
-                    chunked: bool = False,
-                    chunk_px: int = 1400) -> DataFrame:
+                    chunked: bool = False) -> DataFrame:
     """Full detection stage: infer → clean → expand/normalize.
-    chunked=True routes through the vertical split/stitch path (bounded
-    activation memory for tall pages).
+    chunked=True routes through the vertical split/stitch path
+    (DETECTOR_CHUNK_PX slices: bounded activation memory for tall
+    pages).
 
     The per-page post-processing runs inside the detect UDF — zero extra
     shuffles. The relational anti-join + window form
@@ -467,6 +475,6 @@ def detection_stage(pages: DataFrame,
     from a source other than the detect slot, and is the test oracle
     this stage is pinned equal to."""
     return (
-        split_detect_lines(pages, slot, chunk_px, postprocess=True)
+        split_detect_lines(pages, slot, postprocess=True)
         if chunked else detect_lines(pages, slot, postprocess=True)
     )

@@ -20,6 +20,17 @@ from pyspark.sql import types as T
 from .. import schemas
 from . import slots
 
+# ImageSlicer tiling and merge rules (ref surya/settings.py:101-105,
+# surya/layout/slicer.py:19-140): pages over TILE_MIN px on either axis
+# split into at most MAX_TILES tiles of at least TILE_SIZE px along the
+# longer axis, and cross-tile parts merge back by MERGE_TOLERANCE overlap
+# with a MERGE_MARGIN expand
+TILE_MIN, TILE_SIZE, MAX_TILES = 1500, 1200, 4
+MERGE_TOLERANCE, MERGE_MARGIN = 0.05, 0.05
+# a PageHeader/PageFooter centered between these fractions of the page
+# height is relabeled (ref surya/layout/__init__.py:162-174)
+HF_MIDDLE = (0.2, 0.8)
+
 _LAYOUT_OUT = T.StructType(
     list(schemas.REGIONS)
     + [
@@ -52,9 +63,10 @@ def relabel_headers_footers(regions: DataFrame) -> DataFrame:
     their second-best label (/root/reference/surya/layout/__init__.py:162-174).
     The top_k map makes this a pure expression: second-best = the top_k key
     with max prob among keys ≠ current label."""
+    lo, hi = HF_MIDDLE
     cy = (F.col("y1") + F.col("y2")) / 2.0
-    in_middle = (cy > F.col("page_height") * 0.2) & (
-        cy < F.col("page_height") * 0.8
+    in_middle = (cy > F.col("page_height") * lo) & (
+        cy < F.col("page_height") * hi
     )
     entries = F.map_entries("top_k")
     second_best = F.get(
@@ -84,8 +96,9 @@ def relabel_header_footer_record(label: str, y1: float, y2: float,
     alternates resolve identically on both paths."""
     if label not in ("PageHeader", "PageFooter"):
         return label
+    lo, hi = HF_MIDDLE
     cy = (y1 + y2) / 2.0
-    if not (cy > page_height * 0.2 and cy < page_height * 0.8):
+    if not (cy > page_height * lo and cy < page_height * hi):
         return label
     best_k, best_v = None, None
     for k, v in top_k.items():
@@ -137,23 +150,21 @@ _TILED_OUT = T.StructType(
 )
 
 
-def page_tile_plan(w: int, h: int, slice_min: int = 1500,
-                   slice_size: int = 1200,
-                   max_slices: int = 4) -> tuple[bool, int, int]:
+def page_tile_plan(w: int, h: int) -> tuple[bool, int, int]:
     """Tile geometry shared by the relational splitter and the fused
     page pass (tables.table_crop_rows): split along the longer axis
-    when either dimension exceeds slice_min, step sized so at most
-    max_slices tiles result (ref surya/layout/slicer.py:19-38,
-    settings.py:101-105). Returns (along_h, step, n_tiles)."""
+    when either dimension exceeds TILE_MIN, step sized so at most
+    MAX_TILES tiles result (ref surya/layout/slicer.py:19-38,
+    settings.py:101-105). Returns (along_h, step, n_tiles); n_tiles is
+    1 exactly when neither dimension exceeds TILE_MIN."""
     import math
 
     along_h = h >= w
     dim = h if along_h else w
-    if max(w, h) > slice_min:
-        step = max(slice_size, dim // max_slices + 1)
-    else:
-        step = dim  # single tile
-    return along_h, step, max(1, math.ceil(dim / step))
+    if max(w, h) <= TILE_MIN:
+        return along_h, dim, 1
+    step = max(TILE_SIZE, dim // MAX_TILES + 1)
+    return along_h, step, math.ceil(dim / step)
 
 
 def tile_sub_blob(desc: dict, w: int, h: int, along_h: bool,
@@ -209,12 +220,10 @@ def tile_slot_records(ref: str, w: int, h: int, desc: dict,
 
 
 def split_layout_regions(pages: DataFrame,
-                         slot: Callable = slots.surrogate_layout,
-                         slice_min: int = 1500,
-                         slice_size: int = 1200,
-                         max_slices: int = 4) -> DataFrame:
-    """Layout tile pre-split: pages larger than slice_min px on either axis
-    are exploded into ≤max_slices tiles along the LONGER axis, the layout
+                         slot: Callable = slots.surrogate_layout
+                         ) -> DataFrame:
+    """Layout tile pre-split: pages larger than TILE_MIN px on either axis
+    are exploded into ≤MAX_TILES tiles along the LONGER axis, the layout
     slot runs per tile (bounding its activation budget no matter how tall
     the page), and results are shifted back into page coordinates tagged
     with tile_idx — the reference ImageSlicer.slice
@@ -233,8 +242,7 @@ def split_layout_regions(pages: DataFrame,
                 pdf["media_ref"], pdf["width"], pdf["height"], pdf["img_bytes"]
             ):
                 w, h = int(w), int(h)
-                along_h, step, n_tiles = page_tile_plan(
-                    w, h, slice_min, slice_size, max_slices)
+                along_h, step, n_tiles = page_tile_plan(w, h)
                 if n_tiles == 1:
                     # fast path: no re-encode — the slot sees the original
                     # blob, so small pages cost exactly what layout_regions
@@ -260,9 +268,7 @@ def split_layout_regions(pages: DataFrame,
     return pages.mapInPandas(run, schema=_TILED_OUT)
 
 
-def try_merge_tile_region(box1: dict, rec: dict, along_h: bool,
-                          merge_tolerance: float = 0.05,
-                          merge_margin: float = 0.05) -> bool:
+def try_merge_tile_region(box1: dict, rec: dict, along_h: bool) -> bool:
     """The slicer merge rule for ONE (kept, candidate) pair
     (/root/reference/surya/layout/slicer.py:68-140): margin-expanded
     along-axis overlap area vs either box's area, more-than-half
@@ -273,7 +279,7 @@ def try_merge_tile_region(box1: dict, rec: dict, along_h: bool,
     w1, h1 = box1["x2"] - box1["x1"], box1["y2"] - box1["y1"]
     w2, h2 = rec["x2"] - rec["x1"], rec["y2"] - rec["y1"]
     if along_h:
-        m = int(min(h1, h2) * merge_margin)
+        m = int(min(h1, h2) * MERGE_MARGIN)
         ov = (min(box1["y2"] + m, rec["y2"] + m)
               - max(box1["y1"] - m, rec["y1"] - m))
         inter = max(0.0, ov) * max(
@@ -282,7 +288,7 @@ def try_merge_tile_region(box1: dict, rec: dict, along_h: bool,
                     - max(box1["x1"], rec["x1"]))
         half = cross > w1 // 2 or cross > w2 // 2
     else:
-        m = int(min(w1, w2) * merge_margin)
+        m = int(min(w1, w2) * MERGE_MARGIN)
         ov = (min(box1["x2"] + m, rec["x2"] + m)
               - max(box1["x1"] - m, rec["x1"] - m))
         inter = max(0.0, ov) * max(
@@ -296,7 +302,7 @@ def try_merge_tile_region(box1: dict, rec: dict, along_h: bool,
     pics = {"Picture", "Figure"}
     lbl = (box1["label"] == rec["label"]
            or (box1["label"] in pics and rec["label"] in pics))
-    if pct > merge_tolerance and half and lbl:
+    if pct > MERGE_TOLERANCE and half and lbl:
         box1["x1"] = min(box1["x1"], rec["x1"])
         box1["y1"] = min(box1["y1"], rec["y1"])
         box1["x2"] = max(box1["x2"], rec["x2"])
@@ -305,9 +311,7 @@ def try_merge_tile_region(box1: dict, rec: dict, along_h: bool,
     return False
 
 
-def accumulate_tile_merges(recs: list, along_h: bool,
-                           merge_tolerance: float = 0.05,
-                           merge_margin: float = 0.05) -> list:
+def accumulate_tile_merges(recs: list, along_h: bool) -> list:
     """Sequential first-match-wins merge accumulation over records in
     stitched order (tile_idx, then within-tile position): tile 0's boxes
     are accumulated verbatim, later tiles' boxes merge into the first
@@ -320,8 +324,7 @@ def accumulate_tile_merges(recs: list, along_h: bool,
         merged = False
         if rec["tile_idx"] > 0:
             for box1 in kept:
-                if try_merge_tile_region(box1, rec, along_h,
-                                         merge_tolerance, merge_margin):
+                if try_merge_tile_region(box1, rec, along_h):
                     merged = True
                     break
         if not merged:
@@ -329,25 +332,23 @@ def accumulate_tile_merges(recs: list, along_h: bool,
     return kept
 
 
-def merge_tile_regions(tiled: DataFrame,
-                       merge_tolerance: float = 0.05,
-                       merge_margin: float = 0.05) -> DataFrame:
+def merge_tile_regions(tiled: DataFrame) -> DataFrame:
     """Slicer join/merge rules (/root/reference/surya/layout/slicer.py:68-140):
     a region from tile t merges into an accumulated region when (a) either
-    direction's intersection_pct with a 5% margin exceeds merge_tolerance,
-    (b) cross-axis overlap exceeds half of either box's extent, and (c) the
-    labels match (Picture/Figure interchangeable). Merged = bbox union;
-    the later tile's box is dropped. Sequential accumulation per page is
-    inherently ordered → applyInPandas per media_ref (≤100 regions/page,
-    trivial group work; the shuffle key is the page — scales)."""
+    direction's intersection_pct with a MERGE_MARGIN margin exceeds
+    MERGE_TOLERANCE, (b) cross-axis overlap exceeds half of either box's
+    extent, and (c) the labels match (Picture/Figure interchangeable).
+    Merged = bbox union; the later tile's box is dropped. Sequential
+    accumulation per page is inherently ordered → applyInPandas per
+    media_ref (≤100 regions/page, trivial group work; the shuffle key is
+    the page — scales)."""
     out_schema = tiled.drop("tile_idx", "merge_dir").schema
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["tile_idx", "position"], kind="mergesort")
         # merge_dir is a per-page constant (set by the splitter)
         along_h = pdf["merge_dir"].iloc[0] == "height"
-        kept = accumulate_tile_merges(pdf.to_dict("records"), along_h,
-                                      merge_tolerance, merge_margin)
+        kept = accumulate_tile_merges(pdf.to_dict("records"), along_h)
         for rec in kept:
             rec.pop("tile_idx", None)
             rec.pop("merge_dir", None)
@@ -362,18 +363,17 @@ def layout_stage(pages: DataFrame,
 
 
 def layout_stage_tiled(pages: DataFrame,
-                       slot: Callable = slots.surrogate_layout,
-                       slice_min: int = 1500) -> DataFrame:
+                       slot: Callable = slots.surrogate_layout) -> DataFrame:
     """layout_stage with the big-page tile pre-split: oversize pages go
     split → per-tile slot → global positions (stitch_positions) →
     cross-tile merge; pages within the threshold take the plain
     layout_regions path — no stitch join, no merge applyInPandas, zero
-    extra shuffles for the ~95% of pages that don't need tiling. The two
-    branches union before the header/footer relabel."""
-    ok = (F.col("width") <= slice_min) & (F.col("height") <= slice_min)
+    extra shuffles for the ~95% of pages that don't need tiling (TILE_MIN
+    on both axes). The two branches union before the header/footer
+    relabel."""
+    ok = (F.col("width") <= TILE_MIN) & (F.col("height") <= TILE_MIN)
     small = position_regions(layout_regions(pages.filter(ok), slot))
-    tiled = split_layout_regions(pages.filter(~ok), slot,
-                                 slice_min=slice_min)
+    tiled = split_layout_regions(pages.filter(~ok), slot)
     merged = merge_tile_regions(stitch_positions(tiled))
     cols = small.columns
     return relabel_headers_footers(

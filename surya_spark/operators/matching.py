@@ -12,6 +12,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# coverage_score sums coverage in integer units of 1/COVER_UNITS, so the
+# per-key sums are exact on both engines
+COVER_UNITS = 1_000_000
+
 _MATCH_OUT = T.StructType([
     T.StructField("key", T.StringType(), False),
     T.StructField("pred_id", T.LongType(), False),
@@ -210,7 +214,7 @@ def penalized_iou_scores(pred: DataFrame, ref: DataFrame) -> DataFrame:
     matched = greedy_iou_match(pred, ref, metric="coverage")
     snapped = F.when(F.col("iou") > 0.95, F.lit(1.0)).otherwise(F.col("iou"))
     agg = matched.groupBy("key").agg(
-        F.sum(F.floor(snapped * 1e6)).cast("long").alias("cov_sum_u"))
+        F.sum(F.floor(snapped * COVER_UNITS)).cast("long").alias("cov_sum_u"))
     n_p = pred.groupBy("key").agg(
         F.count(F.lit(1)).cast("long").alias("n_pred"))
     n_r = ref.groupBy("key").agg(
@@ -222,10 +226,10 @@ def penalized_iou_scores(pred: DataFrame, ref: DataFrame) -> DataFrame:
     )
     mn = F.least("n_pred", "n_ref")
     denom = F.col("n_pred") + F.col("n_ref") - mn
-    num = F.col("cov_sum_u") - (F.col("n_ref") - mn) * F.lit(1_000_000)
+    num = F.col("cov_sum_u") - (F.col("n_ref") - mn) * F.lit(COVER_UNITS)
     return j.select(
         "key",
         num.cast("long").alias("score_num_u"),
         denom.cast("long").alias("denom"),
-        (num / denom / F.lit(1e6)).alias("score"),
+        (num / denom / F.lit(COVER_UNITS)).alias("score"),
     )

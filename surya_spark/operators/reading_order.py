@@ -21,10 +21,13 @@ from pyspark.sql import functions as F
 from ..datagen import BAND
 from ..functions import geometry as G
 
+# a page is two-column iff no line crosses the central strip
+# x ∈ [STRIP_LO·w, STRIP_HI·w]
+STRIP_LO, STRIP_HI = 0.48, 0.52
+
 
 def order_lines_with_separators(lines: DataFrame,
-                                separators: DataFrame,
-                                band: float = float(BAND)) -> DataFrame:
+                                separators: DataFrame) -> DataFrame:
     """Column-aware ordering driven by DETECTED vertical separators (the
     affinity-map vertical lines of the reference, merged by
     operators/matching.merge_vertical_lines): col_id = number of
@@ -49,22 +52,23 @@ def order_lines_with_separators(lines: DataFrame,
                 F.size(F.filter("sep_xs", lambda s: s < cx)),
             ).otherwise(F.lit(0)),
         )
-        .withColumn("y_band", G.y_band(F.col("y1"), band))
+        .withColumn("y_band", G.y_band(F.col("y1"), float(BAND)))
         .drop("sep_xs")
     )
     w = Window.partitionBy("media_ref").orderBy("col_id", "y_band", "x1", "y1")
     return df.withColumn("position", F.row_number().over(w))
 
 
-def order_lines(lines: DataFrame, band: float = float(BAND)) -> DataFrame:
-    """Adds col_id, y_band, position (1-based reading order per page).
+def order_lines(lines: DataFrame) -> DataFrame:
+    """Adds col_id, y_band (datagen.BAND px bands), position (1-based
+    reading order per page).
     Requires columns media_ref, x1, y1, x2, y2, page_width."""
     w_page = Window.partitionBy("media_ref")
     cx = G.center_x(F.col("x1"), F.col("x2"))
     half = F.col("page_width").cast("double") / 2.0
     crossing = F.when(
-        (F.col("x1") < F.col("page_width") * 0.48)
-        & (F.col("x2") > F.col("page_width") * 0.52),
+        (F.col("x1") < F.col("page_width") * STRIP_LO)
+        & (F.col("x2") > F.col("page_width") * STRIP_HI),
         1,
     ).otherwise(0)
     df = (
@@ -73,7 +77,7 @@ def order_lines(lines: DataFrame, band: float = float(BAND)) -> DataFrame:
             "col_id",
             F.when((F.col("_crossing") == 0) & (cx >= half), 1).otherwise(0),
         )
-        .withColumn("y_band", G.y_band(F.col("y1"), band))
+        .withColumn("y_band", G.y_band(F.col("y1"), float(BAND)))
         .drop("_crossing")
     )
     # line_idx as final tie-break: matches recognition.page_crop_rows'

@@ -29,6 +29,7 @@ from .. import schemas
 from ..datagen import decode_page
 from ..plans import caching
 from . import slots
+from .reading_order import STRIP_HI, STRIP_LO
 
 _CROPS = T.StructType([
     T.StructField("media_ref", T.StringType(), False),
@@ -69,9 +70,9 @@ def slice_crops(lines: DataFrame, pages: DataFrame,
     struct and each crop is polygon-MASKED (encode_crop's fillPoly
     analog; ref surya/input/processing.py:57-101): skewed quads from
     rotated text stop leaking neighbor-line ink into recognition.
-    Axis-aligned polygons are bit-identical to the bbox-only path, so
-    they are NULLed out before the aggregate as a pure payload
-    optimization (pytest-pinned bit-equal).
+    Axis-aligned polygons give the bbox-only path's bytes
+    (slots.crop_payload takes the bbox path for them; pytest-pinned
+    bit-equal).
 
     With highres_pages (a second blob table of the SAME pages at higher
     resolution — the reference's 192-DPI render), crops are taken from the
@@ -92,31 +93,6 @@ def slice_crops(lines: DataFrame, pages: DataFrame,
         # rides the box struct to the crop row so recognize() can seed
         # the decode with it
         box_cols.append("input_text")
-    if has_poly:
-        # Axis-aligned quads carry zero information beyond the bbox —
-        # encode_crop takes the identical bbox path for them (pytest-
-        # pinned bit-equal), so NULL them before the per-page aggregate:
-        # 8 doubles + two levels of Arrow list offsets per line stay out
-        # of collect_list, the shuffle, and the Python loop; only
-        # genuinely skewed quads (rotated text) keep their corners.
-        # Measured ~free at bench scale (2.47 vs 2.47 s min over 4k
-        # docs, round 5); kept as shuffle-payload hygiene for the 100×
-        # regime, where the boxes list is the one corpus-∝ aggregate
-        # this join ships.
-        # Exact == is safe: the quad corners and the bbox are derived
-        # from the same doubles in _postprocess_page (bbox = corner
-        # min/max), and a false negative merely keeps the polygon.
-        p = F.col("polygon")
-        c1, c2, c3, c4 = (F.element_at(p, i) for i in (1, 2, 3, 4))
-        is_rect = (
-            (F.size(p) == 4)
-            & (c1[0] == F.col("x1")) & (c1[1] == F.col("y1"))
-            & (c2[0] == F.col("x2")) & (c2[1] == F.col("y1"))
-            & (c3[0] == F.col("x2")) & (c3[1] == F.col("y2"))
-            & (c4[0] == F.col("x1")) & (c4[1] == F.col("y2"))
-        )
-        lines = lines.withColumn(
-            "polygon", F.when(is_rect, F.lit(None)).otherwise(p))
     if has_poly:
         box_cols.append("polygon")
     boxes = lines.groupBy("media_ref").agg(
@@ -201,8 +177,9 @@ def page_crop_rows(ref: str, w: int, h: int, blob: bytes,
     the crops left unserialized.
 
     Ordering contract matches order_lines exactly: two-column iff no
-    line crosses the central strip (x1 < 0.48w AND x2 > 0.52w), col_id
-    by center-x half, y-band floor(y1/band), position = 1-based rank by
+    line crosses the central strip (x1 < STRIP_LO·w AND x2 > STRIP_HI·w,
+    reading_order's constants), col_id by center-x half, y-band
+    floor(y1/band_v), position = 1-based rank by
     (col_id, y_band, x1, y1) — line_idx appended as the final tie-break
     (the relational row_number is partition-order-dependent on exact
     ties; fixtures keep keys unique).
@@ -267,9 +244,8 @@ def _line_boxes(ref: str, w: int, h: int, blob: bytes,
         int(w), int(h))
     if not page_rows:
         return [], [], None, desc
-    crossing = any(
-        r["x1"] < wd * 0.48 and r["x2"] > wd * 0.52
-        for r in page_rows)
+    lo, hi = wd * STRIP_LO, wd * STRIP_HI
+    crossing = any(r["x1"] < lo and r["x2"] > hi for r in page_rows)
     half = wd / 2.0
     page_rows.sort(key=lambda r: (
         0 if crossing or (r["x1"] + r["x2"]) / 2.0 < half

@@ -39,22 +39,27 @@ _TABLE_CROPS = T.StructType([
 ])
 
 TABLE_LABELS = ("Table", "TableOfContents")
+# a table crop is its layout box grown by this fraction of its size on
+# every side (ref surya/scripts/table_recognition.py:47-75)
+TABLE_EXPAND_PCT = 0.01
+# a grid cell at least this covered by a spanning cell collapses into it
+# (ref surya/table_rec/__init__.py:313-327)
+SPAN_MIN_COVER = 0.9
 
 
-def _table_bbox(b, expand_pct: float = 0.01) -> list[float]:
-    """A table box (b's x1..y2) expanded by expand_pct of its size on
-    every side: the one crop-box rule of every table crop."""
-    dx = (b["x2"] - b["x1"]) * expand_pct
-    dy = (b["y2"] - b["y1"]) * expand_pct
+def _table_bbox(b) -> list[float]:
+    """A table box (b's x1..y2) expanded by TABLE_EXPAND_PCT of its size
+    on every side: the one crop-box rule of every table crop."""
+    dx = (b["x2"] - b["x1"]) * TABLE_EXPAND_PCT
+    dy = (b["y2"] - b["y1"]) * TABLE_EXPAND_PCT
     return [b["x1"] - dx, b["y1"] - dy, b["x2"] + dx, b["y2"] + dy]
 
 
-def table_crop_row(ref: str, table_idx: int, b, desc,
-                   expand_pct: float) -> dict:
+def table_crop_row(ref: str, table_idx: int, b, desc) -> dict:
     """One table box (b's x1..y2) → its crop row: the box expanded by
-    expand_pct of its size on every side, then encoded from the decoded
-    page desc. The one crop rule of table_crops and table_crop_rows."""
-    bbox = _table_bbox(b, expand_pct)
+    _table_bbox, then encoded from the decoded page desc. The one crop
+    rule of table_crops and table_crop_rows."""
+    bbox = _table_bbox(b)
     return {
         "media_ref": ref, "table_idx": table_idx,
         "x1": bbox[0], "y1": bbox[1],
@@ -63,8 +68,7 @@ def table_crop_row(ref: str, table_idx: int, b, desc,
     }
 
 
-def table_crops(regions: DataFrame, pages: DataFrame,
-                expand_pct: float = 0.01) -> DataFrame:
+def table_crops(regions: DataFrame, pages: DataFrame) -> DataFrame:
     """Layout regions labeled Table → ordered table_idx per page → crop
     blobs. table_idx = row_number over y (top-to-bottom), matching the
     reference's per-page table ordering. The window tie-breaks on
@@ -97,8 +101,7 @@ def table_crops(regions: DataFrame, pages: DataFrame,
             ):
                 desc = decode_page(bytes(blob))
                 rows.extend(
-                    table_crop_row(ref, int(b["table_idx"]), b, desc,
-                                   expand_pct)
+                    table_crop_row(ref, int(b["table_idx"]), b, desc)
                     for b in tboxes)
             yield pd.DataFrame(rows)
 
@@ -107,10 +110,6 @@ def table_crops(regions: DataFrame, pages: DataFrame,
 
 def table_crop_rows(ref: str, w: int, h: int, blob: bytes,
                     layout_slot: Callable,
-                    slice_min: int = 1500, slice_size: int = 1200,
-                    max_slices: int = 4, expand_pct: float = 0.01,
-                    merge_tolerance: float = 0.05,
-                    merge_margin: float = 0.05,
                     desc=None) -> tuple[list[dict], object]:
     """Per-page kernel of the crop-level page pass (fused.fused_all_crops)
     for the layout→table-crop chain:
@@ -133,19 +132,16 @@ def table_crop_rows(ref: str, w: int, h: int, blob: bytes,
     kernels decode the blob at most once per page between them (the
     slots decode it themselves); pages with no tables (and
     small enough to skip tiling) never pay the decode."""
-    tboxes, desc = _table_boxes(ref, w, h, blob, layout_slot, desc,
-                                slice_min, slice_size, max_slices,
-                                merge_tolerance, merge_margin)
-    return [table_crop_row(ref, t_idx, b, desc, expand_pct)
+    tboxes, desc = _table_boxes(ref, w, h, blob, layout_slot, desc)
+    return [table_crop_row(ref, t_idx, b, desc)
             for t_idx, b in enumerate(tboxes)], desc
 
 
 def page_table_crops(ref: str, w: int, h: int, blob: bytes,
                      layout_slot: Callable,
                      desc=None) -> tuple[list[dict], object]:
-    """table_crop_rows (at its default tiling and expansion) with each
-    crop left in memory: the rows carry `crop`, the
-    slots.table_crop_payload a table slot takes, instead of
+    """table_crop_rows with each crop left in memory: the rows carry
+    `crop`, the slots.table_crop_payload a table slot takes, instead of
     `crop_bytes`. The page pass (fused.fused_page_items) hands these
     straight to tables.crop_cells, so no table crop is serialized."""
     tboxes, desc = _table_boxes(ref, w, h, blob, layout_slot, desc)
@@ -162,10 +158,7 @@ def page_table_crops(ref: str, w: int, h: int, blob: bytes,
 
 
 def _table_boxes(ref: str, w: int, h: int, blob: bytes,
-                 layout_slot: Callable, desc,
-                 slice_min: int = 1500, slice_size: int = 1200,
-                 max_slices: int = 4, merge_tolerance: float = 0.05,
-                 merge_margin: float = 0.05) -> tuple[list[dict], object]:
+                 layout_slot: Callable, desc) -> tuple[list[dict], object]:
     """layout slot (tiled) → cross-tile merge → header/footer relabel →
     Table filter for one page: its table boxes in table_idx order, and
     the decoded page (decoded here only when there is a table or a
@@ -173,11 +166,10 @@ def _table_boxes(ref: str, w: int, h: int, blob: bytes,
     from . import layout as L
 
     desc_out = desc
-    if w <= slice_min and h <= slice_min:
+    along_h, step, n_tiles = L.page_tile_plan(w, h)
+    if n_tiles == 1:
         kept = list(layout_slot(ref, w, h, blob))
     else:
-        along_h, step, n_tiles = L.page_tile_plan(
-            w, h, slice_min, slice_size, max_slices)
         if desc_out is None:
             desc_out = decode_page(blob)
         recs = L.tile_slot_records(ref, w, h, desc_out, layout_slot,
@@ -186,8 +178,7 @@ def _table_boxes(ref: str, w: int, h: int, blob: bytes,
         # order (stable on ties, like the relational mergesort); records
         # arrive grouped by tile in tile order
         recs.sort(key=lambda r: (r["tile_idx"], r["emit_idx"]))
-        kept = L.accumulate_tile_merges(
-            recs, along_h, merge_tolerance, merge_margin)
+        kept = L.accumulate_tile_merges(recs, along_h)
     tboxes = [
         r for r in kept
         if L.relabel_header_footer_record(
@@ -274,11 +265,11 @@ _TABLE_CELLS = T.StructType([
 ])
 
 
-def cells_for_table(items: list, min_cover: float = 0.9) -> list:
+def cells_for_table(items: list) -> list:
     """Per-table twin of cell_grid + apply_spanning_cells, as a plain
     list-of-dicts kernel: grid = rows × cols (cell bbox = row ∩ col),
-    then grid cells covered ≥min_cover by a spanning cell collapse to
-    the span's min-(row,col) anchor with the span bbox + col/rowspan
+    then grid cells covered ≥SPAN_MIN_COVER by a spanning cell collapse
+    to the span's min-(row,col) anchor with the span bbox + col/rowspan
     (/root/reference/surya/table_rec/__init__.py:304-344,313-327).
 
     Same join semantics as the relational form, including the edge
@@ -290,7 +281,7 @@ def cells_for_table(items: list, min_cover: float = 0.9) -> list:
     Contract: slot coordinates must be FINITE. On a NaN coordinate the
     two paths would diverge — Python comparisons with NaN are False
     (cell stays uncovered here) while Spark orders NaN greater than
-    every value (cover >= min_cover turns true relationally) — so
+    every value (cover >= SPAN_MIN_COVER turns true relationally) — so
     normalize_table_item, the shared ingest boundary of BOTH paths,
     rejects non-finite coordinates before they reach the predicate."""
     rows_i = [it for it in items if it["item_kind"] == "row"]
@@ -305,6 +296,7 @@ def cells_for_table(items: list, min_cover: float = 0.9) -> list:
                 "x1": max(r["x1"], c["x1"]), "y1": r["y1"],
                 "x2": min(r["x2"], c["x2"]), "y2": r["y2"],
             })
+    min_cover = SPAN_MIN_COVER  # a local in the per-pair loop
     matches = []  # (grid idx, span idx) with coverage ≥ min_cover
     for gi, g in enumerate(grid):
         a = (g["x2"] - g["x1"]) * (g["y2"] - g["y1"])
@@ -339,20 +331,18 @@ def cells_for_table(items: list, min_cover: float = 0.9) -> list:
 
 
 def crop_cells(crop, x1: float, y1: float,
-               slot: Callable = slots.surrogate_table,
-               min_cover: float = 0.9) -> list:
+               slot: Callable = slots.surrogate_table) -> list:
     """One table crop (whichever form it comes in: crop_bytes from a
     crop table, the in-memory payload in the page pass) → its cells:
     table slot → normalize_table_item (shift by the crop origin (x1,
     y1)) → cells_for_table. The per-table step of fused_table_cells and
     of the page pass (fused.fused_page_items)."""
     return cells_for_table(
-        [normalize_table_item(it, x1, y1) for it in slot(crop)], min_cover)
+        [normalize_table_item(it, x1, y1) for it in slot(crop)])
 
 
 def fused_table_cells(crops: DataFrame,
-                      slot: Callable = slots.surrogate_table,
-                      min_cover: float = 0.9) -> DataFrame:
+                      slot: Callable = slots.surrogate_table) -> DataFrame:
     """One table-grain pass for the slot→grid→spanning chain:
     table slot → page-coordinate shift → cell grid → spanning-cell
     override, emitting the same rows as
@@ -380,7 +370,7 @@ def fused_table_cells(crops: DataFrame,
                 pdf["media_ref"], pdf["table_idx"], pdf["x1"], pdf["y1"],
                 pdf["crop_bytes"],
             ):
-                for cell in crop_cells(bytes(blob), x1, y1, slot, min_cover):
+                for cell in crop_cells(bytes(blob), x1, y1, slot):
                     rows.append({"media_ref": ref, "table_idx": int(ti),
                                  **cell})
             yield pd.DataFrame(rows)
@@ -416,11 +406,10 @@ def cell_grid(items: DataFrame) -> DataFrame:
     )
 
 
-def apply_spanning_cells(cells: DataFrame, items: DataFrame,
-                         min_cover: float = 0.9) -> DataFrame:
-    """Spanning-cell override: grid cells covered ≥min_cover by a spanning
-    cell are collapsed — the minimum covered col becomes the anchor, its
-    bbox widens to the span, covered non-anchors drop
+def apply_spanning_cells(cells: DataFrame, items: DataFrame) -> DataFrame:
+    """Spanning-cell override: grid cells covered ≥SPAN_MIN_COVER by a
+    spanning cell are collapsed — the minimum covered col becomes the
+    anchor, its bbox widens to the span, covered non-anchors drop
     (/root/reference/surya/table_rec/__init__.py:313-327). Pure relational:
     a theta join (center containment + coverage pct) refined from the
     (media_ref, table_idx) equi key, then a min() window for the anchor."""
@@ -441,7 +430,7 @@ def apply_spanning_cells(cells: DataFrame, items: DataFrame,
         sp.hint("shuffle_hash"),
         (cells["media_ref"] == sp["s_media_ref"])
         & (cells["table_idx"] == sp["s_table_idx"])
-        & (cover >= min_cover),
+        & (cover >= SPAN_MIN_COVER),
         "left",
     )
 

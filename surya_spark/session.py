@@ -9,7 +9,6 @@ ones thrash the Arrow serializer.
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -51,20 +50,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-@contextmanager
-def arrow_batch(spark: SparkSession, records_per_batch: int):
-    """Temporarily bound Arrow batch size for image-carrying UDF stages.
-
-    Mirrors the reference's cost-based GPU batch packing
-    (/root/reference/surya/detection/__init__.py:73-90): a batch of page
-    blobs must fit executor memory, so inference stages run with small
-    Arrow batches while relational stages keep the large default.
-    """
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key, "10000")
-    spark.conf.set(key, str(records_per_batch))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)

@@ -1,4 +1,4 @@
-"""File sources: folder scans of media bytes + page-range selection.
+"""File sources: folder scans of media bytes + page-range parsing.
 
 Reference: load_from_file / load_from_folder route pdf-vs-image loaders
 and skip dotfiles (/root/reference/surya/input/load.py:42-78); the CLI
@@ -8,7 +8,7 @@ parses page ranges like "0,5-10,20"
 Spark shape: the binaryFile data source handles globbing, recursive
 listing and gives (path, modificationTime, length, content); dispatch by
 extension is a column expression; decode stays in the multimodal UDF
-slots. Page-range selection is a pushed-down isin() filter.
+slots.
 """
 
 from __future__ import annotations
@@ -56,10 +56,3 @@ def load_media_folder(spark: SparkSession, path: str,
         )
     )
 
-
-def filter_page_range(pages: DataFrame, spec: str,
-                      page_col: str = "page_idx") -> DataFrame:
-    """Pushed-down page selection: .isin over the parsed range reaches the
-    parquet/Iceberg scan as an IN filter (partition pruning when the table
-    is partitioned by page bucket)."""
-    return pages.filter(F.col(page_col).isin(parse_page_range(spec)))

@@ -15,7 +15,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_META = T.StructType([
@@ -135,17 +134,3 @@ def media_features(media: DataFrame, dim: int = 16,
 
     return media.select(ref_col, bytes_col).mapInPandas(run, schema=FEATURES)
 
-
-def frame_sample_plan(media_meta: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame-sampling *plan* as relational rows (media_ref, frame_idx)
-    — the decode itself is a deployment slot. Demonstrates explode-based
-    fan-out with a bounded multiplier."""
-    n_frames = F.greatest(
-        F.lit(1), (F.col("n_bytes") / 1000).cast("int")
-    )  # fake duration proxy
-    return media_meta.select(
-        "media_ref",
-        F.explode(
-            F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))
-        ).alias("frame_idx"),
-    )

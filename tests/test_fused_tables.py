@@ -3,7 +3,8 @@ fused.fused_all_crops (layout→table-crop inside the one page-grain
 pass, kernel tables.table_crop_rows) must emit exactly what the
 relational chain table_crops(layout_stage_tiled(pages), pages) emits —
 crop bytes included — across the tiled (tall/wide), small-page,
-relabel→Table, and no-table paths."""
+relabel→Table, and no-table paths, and on both sides of the TILE_MIN
+tiling threshold."""
 
 from __future__ import annotations
 
@@ -68,6 +69,16 @@ def test_fused_table_crops_byte_identical_to_relational(spark):
                 {"label": "Text", "bbox": [60, 100, 964, 900],
                  "order": 0},
             ]),
+            # tiling edge: 1500×1500 is one tile, 1000×1501 two tiles
+            # split at y=1200, which its Table crosses
+            _page("blob://f/edge1500", 1500, 1500, [
+                {"label": "Table", "bbox": [100, 1100, 1400, 1300],
+                 "order": 0},
+            ], table_desc),
+            _page("blob://f/edge1501", 1000, 1501, [
+                {"label": "Table", "bbox": [100, 1100, 900, 1300],
+                 "order": 0},
+            ], table_desc),
         ],
         "media_ref string, width int, height int, img_bytes binary",
     )
@@ -109,3 +120,14 @@ def test_fused_table_crops_byte_identical_to_relational(spark):
     assert [t for t, _ in two] == [0, 1] and two[0][1] < two[1][1]
     # and the no-table page contributed nothing
     assert all(m != "blob://f/none" for m, *_ in fused_fixed)
+
+
+def test_tile_plan_single_tile_iff_within_tile_min():
+    """page_tile_plan's one-tile case (the page pass's untiled branch in
+    tables._table_boxes) is exactly layout_stage_tiled's TILE_MIN filter
+    on both axes."""
+    for w in (1200, 1500, 1501, 4800, 4801):
+        for h in (900, 1500, 1501):
+            one_tile = layout.page_tile_plan(w, h)[2] == 1
+            assert one_tile == (w <= layout.TILE_MIN
+                                and h <= layout.TILE_MIN), (w, h)

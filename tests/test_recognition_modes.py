@@ -105,10 +105,10 @@ def test_highres_double_resolution_path(spark):
 
 
 def test_axis_rect_polygon_nullout_is_bit_identical(spark):
-    """slice_crops NULLs axis-aligned polygons before the per-page
-    aggregate (pure payload optimization — encode_crop takes the bbox
-    path for them either way). The crop bytes must be bit-identical to
-    the polygon-less call, and a genuinely skewed quad must still mask."""
+    """Axis-aligned polygons carry nothing beyond the bbox: slice_crops
+    with the polygon column must give crop bytes bit-identical to the
+    polygon-less call (encode_crop takes the bbox path for axis
+    rectangles), and a genuinely skewed quad must still mask."""
     from surya_spark.operators import detection, reading_order
 
     pages = _pages(spark, n=6)
@@ -127,9 +127,9 @@ def test_axis_rect_polygon_nullout_is_bit_identical(spark):
     )
     assert with_poly == without and len(with_poly) > 0
 
-    # a non-rect quad survives the null-out filter (stays masked): a
-    # 2px-wide strip polygon masks away the truth line the bbox crop
-    # keeps, so its crop bytes MUST differ from the bbox-path crop
+    # a non-rect quad stays masked: a 2px-wide strip polygon masks away
+    # the truth line the bbox crop keeps, so its crop bytes MUST differ
+    # from the bbox-path crop
     one = ordered.orderBy("media_ref", "line_idx").limit(1).collect()[0]
     strip = spark.createDataFrame(
         [(one["media_ref"], one["line_idx"], one["position"],
