@@ -1406,10 +1406,7 @@ def q_simhash_pairs(spark, sf_dir):
     # max_dist=3 with max_dist+1 segment blocking → recall is exact by
     # pigeonhole; the oracle computes the NON-blocked all-pairs answer,
     # so any blocking recall bug is a machine-checked mismatch.
-    # hash_mode='md5' is the DuckDB-replicable signature (the library
-    # default is the all-JVM xxhash64 path, pinned against a
-    # Spark-evaluated expected-signature fixture in test_training)
-    sim = dedup.simhash(_t(spark, sf_dir, "documents"), hash_mode="md5")
+    sim = dedup.simhash(_t(spark, sf_dir, "documents"))
     return dedup.simhash_pairs(sim, max_dist=3)
 
 

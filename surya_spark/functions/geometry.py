@@ -131,17 +131,6 @@ def center_x(x1: Column, x2: Column) -> Column:
     return (x1 + x2) / 2.0
 
 
-def center_y(y1: Column, y2: Column) -> Column:
-    return (y1 + y2) / 2.0
-
-
-def distance(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2) -> Column:
-    """Euclidean center distance. Ref: surya/common/polygon.py:192-198."""
-    dx = center_x(ax1, ax2) - center_x(bx1, bx2)
-    dy = center_y(ay1, ay2) - center_y(by1, by2)
-    return F.sqrt(dx * dx + dy * dy)
-
-
 # ------------------------------------------------------------- overlap algebra
 def x_overlap(ax1, ax2, bx1, bx2, margin: float = 0.0) -> Column:
     """1-D overlap length with optional margin.
@@ -195,14 +184,6 @@ def merge_bbox(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2) -> list[Column]:
         F.greatest(ax2, bx2).alias("x2"),
         F.greatest(ay2, by2).alias("y2"),
     ]
-
-
-def merge_left(ax1, bx1) -> Column:
-    """New left edge after absorbing the box to the left: min of the two
-    x1 values (applied to polygon corners 0 and 3 in poly_merge_left).
-    Ref: surya/common/polygon.py:90-93."""
-    return F.least(ax1, bx1)
-
 
 
 def poly_merge_left(poly: Column, other_x1: Column) -> Column:

@@ -61,7 +61,6 @@ def stream_incremental_dedup(
     checkpoint_dir: str,
     docs_schema=None,
     threshold: float = 0.5,
-    hash_mode: str = "md5lin",
     max_files_per_trigger: int = 1,
     available_now: bool = True,
 ):
@@ -71,6 +70,8 @@ def stream_incremental_dedup(
     with corpus_index= — the ~300 B/doc table; corpus text is never
     re-read), then the batch's NOVEL docs' signatures are appended to
     the index, so a duplicate arriving two batches later is caught.
+    Probe and append both use minhash's default family (md5lin), so a
+    restarted stream always probes an index written in its own family.
 
     Scale shape: per micro-batch cost = banded equi-join of the batch
     against the index + one compact parquet append — both ∝ batch, not
@@ -132,7 +133,7 @@ def stream_incremental_dedup(
         if have_index:
             flagged = dedup.minhash_novelty(
                 batch_df, corpus_index=idx,
-                threshold=threshold, hash_mode=hash_mode)
+                threshold=threshold)
         else:
             flagged = batch_df.select(
                 "doc_id", F.lit(0.0).alias("max_est"),
@@ -167,8 +168,7 @@ def stream_incremental_dedup(
         novel = batch_df.join(
             flagged.filter("is_novel").select("doc_id"), "doc_id",
             "left_semi")
-        dedup.minhash_index(novel, hash_mode=hash_mode) \
-            .write.mode("append").parquet(index_dir)
+        dedup.minhash_index(novel).write.mode("append").parquet(index_dir)
         flagged.unpersist()
         # the batch transformed minhash_novelty's owned result, so no
         # owned action ran: the micro-batch releases its caches itself

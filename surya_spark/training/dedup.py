@@ -196,6 +196,19 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
     ).filter(F.col("jaccard") >= threshold))
 
 
+# minhash hash family → the shingle-id hash its permutations run over
+SHINGLE_HASH = {"md5lin": "md5", "xxhash64": "xxhash64"}
+
+
+def _shingle_hash(hash_mode: str) -> str:
+    """SHINGLE_HASH[hash_mode]; any other mode is a ValueError (a typo
+    such as simhash's old 'md5' must not silently select xxhash64)."""
+    if hash_mode not in SHINGLE_HASH:
+        raise ValueError(f"minhash hash_mode must be 'md5lin' or "
+                         f"'xxhash64', got {hash_mode!r}")
+    return SHINGLE_HASH[hash_mode]
+
+
 def _minhash_wide(rows: DataFrame, n_hashes: int,
                   hash_mode: str) -> DataFrame:
     """(doc_id, h0..h{n-1}) from flat shingle-id rows: one groupBy with
@@ -206,8 +219,9 @@ def _minhash_wide(rows: DataFrame, n_hashes: int,
     hash_mode='xxhash64': sig_i = min xxhash64(s, i) (fast JVM path).
     hash_mode='md5lin':   sig_i = min (a_i·(s mod P) + b_i) mod P over the
     md5-based 60-bit shingle ids — one md5 per shingle plus 64 exact
-    integer multiply-adds, replicable bit-for-bit by the DuckDB oracle."""
-    if hash_mode == "md5lin":
+    integer multiply-adds, replicable bit-for-bit by the DuckDB oracle.
+    Any other mode raises ValueError."""
+    if _shingle_hash(hash_mode) == "md5":
         coeffs = lin_coeffs(n_hashes)
         sm = F.pmod(F.col("s"), F.lit(LIN_P))
         aggs = [
@@ -226,10 +240,10 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", k: int = 3,
                        n_hashes: int = 64,
                        hash_mode: str = "xxhash64") -> DataFrame:
-    """MinHash signature array per doc (see _minhash_wide)."""
-    sh_hash = "md5" if hash_mode == "md5lin" else "xxhash64"
-    ex = shingle_id_rows(docs, text_col, id_col, k, hashed=sh_hash)
-    return _minhash_wide(ex, n_hashes, hash_mode).select(
+    """MinHash signature array per doc: minhash_index's h0..h{n-1} as
+    one `sig` array column."""
+    return minhash_index(docs, text_col, id_col, k, n_hashes,
+                         hash_mode).select(
         "doc_id",
         F.array(*[F.col(f"h{i}") for i in range(n_hashes)]).alias("sig"),
     )
@@ -294,25 +308,13 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
     wanting exhaustive low-similarity pairs should use ngram_jaccard_pairs).
     hash_mode='md5lin' makes every hash DuckDB-replicable (oracle parity);
     'xxhash64' is the fastest JVM path."""
-    rows_per_band = n_hashes // bands
-    sh_hash = "md5" if hash_mode == "md5lin" else "xxhash64"
     # the flat shingle index feeds BOTH the signature agg and the
     # verify joins — persist or Spark re-executes the lineage per
     # branch; released by the first action on the returned pairs
-    rows = caching.managed(
-        shingle_id_rows(docs, text_col, id_col, k, hashed=sh_hash))
-    wide = _minhash_wide(rows, n_hashes, hash_mode)
-    band_cols = [
-        F.concat_ws(",", *[
-            F.col(f"h{b * rows_per_band + j}").cast("string")
-            for j in range(rows_per_band)
-        ])
-        for b in range(bands)
-    ]
-    banded = wide.select(
-        "doc_id",
-        F.posexplode(F.array(*band_cols)).alias("band", "bucket")
-    )
+    rows = caching.managed(shingle_id_rows(
+        docs, text_col, id_col, k, hashed=_shingle_hash(hash_mode)))
+    banded = _banded(_minhash_wide(rows, n_hashes, hash_mode),
+                     n_hashes, bands)
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
@@ -340,22 +342,16 @@ _SIMHASH_OUT = T.StructType([
 
 
 def simhash(docs: DataFrame, text_col: str = "text",
-            id_col: str = "doc_id", bits: int = 64,
-            hash_mode: str = "xxhash64") -> DataFrame:
+            id_col: str = "doc_id") -> DataFrame:
     """64-bit SimHash per document. Near-dup pairs = small Hamming
     distance; pair generation uses segment blocking (pigeonhole: dist ≤ 3
     → at least one identical 16-bit segment), see simhash_pairs.
 
-    hash_mode='xxhash64' (default): the ENTIRE signature is JVM-side —
-    posexplode normalized tokens → xxhash64 per token → 64 CASE-vote sum
-    aggregates → sign pack, all whole-stage codegen, zero Python in the
-    path (round-6: this was the last per-item Python loop in the dedup
-    family; the token-hash kernel dominates signature cost at corpus
-    scale). One shuffle (the vote groupBy on doc_id).
-    hash_mode='md5': per-token md5 in an Arrow-batched numpy kernel,
-    replicable bit-for-bit by the DuckDB oracle (md5 → low 8 bytes
-    little-endian) — the correctness-gate mode. Same ±1 vote and
-    strict sign rule in both modes; empty/token-less docs sign to 0.
+    Each token hashes to the low 8 bytes (little-endian) of its md5 in an
+    Arrow-batched numpy kernel that the DuckDB oracle replicates bit for
+    bit; every token votes ±1 per bit, a bit is set iff its vote is
+    strictly positive, and empty/token-less docs sign to 0. A
+    non-numeric doc id raises ValueError.
 
     Tokens come from the SAME normalize_text universe as
     shingle_id_rows/minhash (HTML/math stripped, bullets standardized,
@@ -363,69 +359,10 @@ def simhash(docs: DataFrame, text_col: str = "text",
     every dedup operator; normalization always runs as JVM column
     expressions.
 
-    COMPATIBILITY: the round-6 default flip to 'xxhash64' changed the
-    signature VALUES for default callers — signatures persisted by
-    earlier md5-mode runs are incompatible with newly computed xxhash64
-    ones. Pipelines that store signatures and re-join them across
-    versions must pin hash_mode explicitly (advisor finding)."""
-    if hash_mode == "xxhash64":
-        if bits != 64:
-            raise ValueError("xxhash64 mode emits 64-bit signatures")
-        from ..plans import partitioning
-
-        # spread BEFORE the regex normalization: single-row-group corpus
-        # files scan as one task (r7; see shingle_id_rows) — keyed on the
-        # doc id so the vote groupBy reuses the exchange.
-        # The cast mirrors the md5 kernel's int(did): a NON-numeric id
-        # must fail loudly (advisor finding — a silently-NULL cast would
-        # collapse all such docs into one NULL signature group).
-        # try_cast + raise_error gives the same loud failure whether or
-        # not ANSI mode is on (ANSI's own CAST_INVALID_INPUT would fire
-        # first under the default config, with a less specific message).
-        did = F.col(id_col).try_cast("long")
-        norm = partitioning.spread_small_input(docs, id_col).select(
-            F.when(
-                F.col(id_col).isNotNull() & did.isNull(),
-                F.raise_error(F.concat(
-                    F.lit("simhash: non-numeric doc id "),
-                    F.col(id_col).cast("string"))).cast("long"),
-            ).otherwise(did).alias("doc_id"),
-            TX.normalize_text(F.col(text_col)).alias("_t"))
-        # empty tokens (blank doc → split yields ['']) hash to NULL and
-        # vote 0 on every bit, so token-less docs still reach the groupBy
-        # and sign to 0 exactly like the md5 kernel — no second scan or
-        # re-join of the input needed
-        th = norm.select(
-            "doc_id",
-            F.explode(F.split(F.col("_t"), " ")).alias("tok"),
-        ).select(
-            "doc_id",
-            F.when(F.col("tok") != "", F.xxhash64("tok")).alias("th"),
-        )
-        # each vote/pack expression is ONE SQL string (late-round-1 rule:
-        # composing hundreds of Column objects through py4j is driver
-        # time; F.expr parses to the same plan with the same semantics).
-        # r7: vote v_k = (+1 per set bit, −1 per clear bit over non-null
-        # tokens) = 2·ones_k − n, so the per-row agg update is a bare
-        # shift-and-mask sum plus ONE shared count instead of 64
-        # three-branch CASEs; sum() skips NULL th (empty-token rows)
-        # exactly like the old CASE's 0 arm. Sign rule v_k > 0 becomes
-        # 2·ones_k > n — identical packs.
-        votes = th.groupBy("doc_id").agg(
-            F.expr("count(th)").alias("n_tok"),
-            *[F.expr(f"sum(shiftright(th, {k}) & 1)").alias(f"o{k}")
-              for k in range(bits)])
-        pack = " + ".join(
-            f"(CASE WHEN 2 * o{k} > n_tok THEN "
-            f"shiftleft(CAST(1 AS BIGINT), {k}) "
-            f"ELSE CAST(0 AS BIGINT) END)"
-            for k in range(bits)
-        )
-        return votes.select(
-            "doc_id", F.expr(pack).alias("simhash"))
-    if hash_mode != "md5":
-        raise ValueError(f"unknown hash_mode {hash_mode!r}")
-
+    This is the only signature path: an all-JVM xxhash64 form (posexplode
+    → 64 vote aggregates) measured slower at both 54 and 900 tokens/doc
+    (BENCH.md). Signatures stored by default callers of versions that
+    defaulted to that form differ from these values."""
     import hashlib
 
     from ..plans import partitioning
@@ -437,36 +374,36 @@ def simhash(docs: DataFrame, text_col: str = "text",
         F.col(id_col), TX.normalize_text(F.col(text_col)).alias(text_col))
 
     def run(batches):
-        # token-hash memo (r7): md5 is deterministic, and corpus
-        # vocabulary is tiny relative to token instances — one md5 per
-        # DISTINCT token per task instead of one per occurrence
-        memo: dict[str, int] = {}
+        class TokenHash(dict):
+            # token-hash memo (r7): md5 is deterministic, and corpus
+            # vocabulary is tiny relative to token instances — one md5 per
+            # DISTINCT token per task instead of one per occurrence.
+            # Process-independent (python hash() varies by PYTHONHASHSEED
+            # — never use it in a distributed job): the low 8 bytes of
+            # md5, little-endian, as a signed int64.
+            def __missing__(self, t: str) -> int:
+                h = self[t] = int.from_bytes(
+                    hashlib.md5(t.encode()).digest()[:8], "little",
+                    signed=True)
+                return h
 
-        def _tok_hash(t: str) -> int:
-            # process-independent 64-bit token hash (python hash() varies
-            # by PYTHONHASHSEED — never use it in a distributed job)
-            h = memo.get(t)
-            if h is None:
-                h = int.from_bytes(
-                    hashlib.md5(t.encode()).digest()[:8], "little")
-                memo[t] = h
-            return h
-
+        tok_hash = TokenHash().__getitem__
         for pdf in batches:
             ids, hashes = [], []
             for did, txt in zip(pdf[id_col], pdf[text_col]):
                 toks = str(txt).lower().split()
-                if toks:
-                    hs = np.array([_tok_hash(t) for t in toks], dtype=np.uint64)
-                    bitmat = ((hs[:, None] >> np.arange(bits, dtype=np.uint64))
-                              & np.uint64(1)).astype(np.int64)
-                    acc = (2 * bitmat - 1).sum(axis=0)
-                else:
-                    acc = np.zeros(bits, dtype=np.int64)
-                val = int(((acc > 0).astype(np.uint64)
-                           << np.arange(bits, dtype=np.uint64)).sum())
-                ids.append(int(did))
-                hashes.append(val - (1 << 64) if val >= (1 << 63) else val)
+                hs = np.fromiter(map(tok_hash, toks), "<i8", len(toks))
+                # ones[k] = tokens with bit k set; bit k's ±1 vote is
+                # 2·ones[k] − n, and the bit is set iff that is > 0
+                ones = np.unpackbits(hs.view(np.uint8).reshape(-1, 8),
+                                     axis=1, bitorder="little").sum(axis=0)
+                sig = np.packbits(2 * ones > len(toks), bitorder="little")
+                hashes.append(int(sig.view("<i8")[0]))
+                try:
+                    ids.append(int(did))
+                except ValueError:
+                    raise ValueError(
+                        f"simhash: non-numeric doc id {did!r}") from None
             yield pd.DataFrame({"doc_id": ids, "simhash": hashes})
 
     return docs.select(id_col, text_col).mapInPandas(run, schema=_SIMHASH_OUT)
@@ -543,9 +480,9 @@ def minhash_index(docs: DataFrame, text_col: str = "text",
     feed it to minhash_novelty(corpus_index=) so new batches never
     re-read or re-shingle corpus text. Streaming analog:
     streaming/ingest.stream_incremental_dedup."""
-    sh_hash = "md5" if hash_mode == "md5lin" else "xxhash64"
     return _minhash_wide(
-        shingle_id_rows(docs, text_col, id_col, k, hashed=sh_hash),
+        shingle_id_rows(docs, text_col, id_col, k,
+                        hashed=_shingle_hash(hash_mode)),
         n_hashes, hash_mode)
 
 

@@ -168,7 +168,7 @@ def test_poly_merge_left_right_and_quad_intersection(spark):
     ).collect()[0]
     ml = [[float(v) for v in c] for c in row["ml"]]
     mr = [[float(v) for v in c] for c in row["mr"]]
-    # merge_left moves corners 0 and 3 only (ref polygon.py:90-93)
+    # poly_merge_left moves corners 0 and 3 only (ref polygon.py:90-93)
     assert ml == [[4.0, 0.0], [20.0, 0.0], [20.0, 5.0], [4.0, 5.0]]
     assert mr == [[10.0, 0.0], [30.0, 0.0], [30.0, 5.0], [10.0, 5.0]]
 

@@ -52,13 +52,15 @@ def test_minhash_lsh_pairs(spark):
     assert (1, 4) not in pairs
 
 
-def test_simhash_jvm_signature_parity(spark):
-    """The all-JVM xxhash64 signature path (round 6) pinned against an
-    independently-evaluated expectation: token hashes come from Spark's
-    own xxhash64 (one tiny query), the ±1 vote + strict-sign pack is then
-    recomputed driver-side in numpy — any drift in the 64 CASE-vote
-    aggregates or the sign-pack expression is a hard mismatch. Also pins
-    the token-less-document rule (signature 0)."""
+def test_simhash_signature_parity(spark):
+    """simhash pinned against an independent driver-side expectation:
+    each Spark-normalized token hashes to the low 8 bytes (little-endian)
+    of its md5 (the rule the DuckDB oracle replicates), then the ±1 vote
+    + strict-sign pack is recomputed in numpy — any drift in the kernel's
+    token hash, memo or pack is a hard mismatch. Also pins the
+    token-less-document rule (signature 0)."""
+    import hashlib
+
     import numpy as np
 
     from surya_spark.functions import text as TX
@@ -68,17 +70,17 @@ def test_simhash_jvm_signature_parity(spark):
             pd.DataFrame([(7, "", "c"), (8, "   ", "c")],
                          columns=["doc_id", "text", "source"])))
     got = {r["doc_id"]: r["simhash"]
-           for r in dedup.simhash(docs, hash_mode="xxhash64").collect()}
+           for r in dedup.simhash(docs).collect()}
 
     toks = docs.select(
         "doc_id",
         F.explode(F.split(TX.normalize_text(F.col("text")), " "))
         .alias("tok"),
-    ).filter(F.col("tok") != "").select("doc_id", F.xxhash64("tok")
-                                        .alias("th")).collect()
+    ).filter(F.col("tok") != "").collect()
     votes: dict[int, np.ndarray] = {}
     for r in toks:
-        h = np.uint64(r["th"] % (1 << 64))
+        h = np.uint64(int.from_bytes(
+            hashlib.md5(r["tok"].encode()).digest()[:8], "little"))
         bits = ((h >> np.arange(64, dtype=np.uint64)) & np.uint64(1))
         votes.setdefault(r["doc_id"], np.zeros(64, np.int64))
         votes[r["doc_id"]] += 2 * bits.astype(np.int64) - 1
@@ -91,7 +93,7 @@ def test_simhash_jvm_signature_parity(spark):
         exp = val - (1 << 64) if val >= (1 << 63) else val
         assert got[did] == exp, f"doc {did}: {got[did]} != {exp}"
     assert got[7] == 0 and got[8] == 0
-    # the dup pair must still collide bit-for-bit in the JVM mode
+    # the dup pair must still collide bit-for-bit
     assert got[1] == got[2]
 
 
@@ -133,6 +135,18 @@ def test_ngram_df_cap_drops_hot_shingles(spark):
     capped = dedup.ngram_jaccard_pairs(docs, threshold=0.01, df_cap=3).count()
     assert uncapped > 0      # every pair shares 'common stop shingle'
     assert capped == 0       # hot shingle removed → no shared shingles left
+
+
+@pytest.mark.parametrize("op", [
+    "minhash_signatures", "minhash_lsh_pairs", "minhash_index",
+    "minhash_novelty"])
+def test_minhash_rejects_unknown_hash_mode(spark, op):
+    """An unknown minhash family (here simhash's old mode name 'md5') is a
+    ValueError naming both families, not silent xxhash64 signatures."""
+    docs = _docs(spark)
+    args = (docs, docs) if op == "minhash_novelty" else (docs,)
+    with pytest.raises(ValueError, match="md5lin.*xxhash64"):
+        getattr(dedup, op)(*args, hash_mode="md5")
 
 
 def test_minhash_md5lin_matches_xxhash_pairs(spark):
@@ -367,9 +381,9 @@ def test_knn_ivf_kernel_matches_sql_path(spark, dim):
 
 
 def test_simhash_nonnumeric_id_raises(spark):
-    """xxhash64-mode simhash must fail loudly on non-numeric doc ids
-    (advisor finding: a silently-NULL cast would collapse such docs into
-    one NULL signature group; the md5 kernel's int(did) already raises)."""
+    """simhash must fail loudly on non-numeric doc ids (a silently-NULL
+    cast would collapse such docs into one NULL signature group): the
+    kernel's int(did) raises ValueError naming the id."""
     import pandas as pd
     import pytest
 
