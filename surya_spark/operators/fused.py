@@ -1,20 +1,20 @@
 """The page pass: one mapInPandas over pages that does all the work
 keyed by a single page.
 
-fused_page_items is the pass every production path runs (pipeline.extract
-with or without tables, its dual-DPI variant, checkpointed_extract, and
-through extract the streaming ingest and the CLI extract/ocr stages).
-Per page it detects, orders and slices the text lines
-(recognition.page_line_crops) and recognizes each crop; runs layout and
-cuts the table crops (tables.page_table_crops) and turns each into cells
-(tables.crop_cells); then assigns line text to cells and packs the span
-items (assemble.page_items). Only those small (media_ref, sub_order,
-kind, text) rows leave the pass — no crop is persisted or shuffled, and
-the relational chain's crop union, recognize pass, cell pass, cell-text
-theta join and free-line anti-join (all page-local work) are gone from
-the plan. Crops never leave the pass either, so they are never
-serialized: each slot gets the in-memory crop (slots.crop_payload /
-table_crop_payload).
+fused_page_items is the pass every production path runs
+(pipeline.extract with or without tables, its dual-DPI variant,
+checkpointed_extract, and through extract the streaming ingest and the
+CLI extract/ocr stages). Per page it detects, orders and slices the text
+lines (recognition.page_line_crops) and recognizes them in one slot
+call; runs layout and cuts the table crops (tables.page_table_crops) and
+turns each into cells (tables.crop_cells); then assigns line text to
+cells and packs the span items (assemble.page_items). Only those small
+(media_ref, sub_order, kind, text) rows leave the pass — no crop is
+persisted or shuffled, and the relational chain's crop union, recognize
+pass, cell pass, cell-text theta join and free-line anti-join (all
+page-local work) are gone from the plan. Crops never leave the pass
+either, so they are never serialized: each slot gets the in-memory crop
+(slots.crop_payload / table_crop_payload).
 
 fused_all_crops is the crop-level library surface of the same pass (the
 CLI `--stage table` and `--render-html`, the crop-parity tests): the
@@ -145,19 +145,19 @@ def fused_all_crops(pages: DataFrame,
     return pages.mapInPandas(run, schema=_ALL_CROPS)
 
 
-def fused_page_items(pages: DataFrame,
-                     detect_slot: Callable = slots.surrogate_detect,
-                     recognize_slot: Callable = slots.surrogate_recognize,
-                     layout_slot: Callable | None = slots.surrogate_layout,
-                     table_slot: Callable = slots.surrogate_table
-                     ) -> DataFrame:
+def fused_page_items(
+        pages: DataFrame,
+        detect_slot: Callable = slots.surrogate_detect,
+        recognize_slot: Callable = slots.surrogate_recognize_batch,
+        layout_slot: Callable | None = slots.surrogate_layout,
+        table_slot: Callable = slots.surrogate_table) -> DataFrame:
     """pages → span items (media_ref, sub_order, kind, text): the crops
     of _page_crops in their in-memory form (page_line_crops,
-    page_table_crops), each line crop through recognize_slot (task
-    'ocr_with_boxes', recognize's default; the slot builds its chars,
-    span assembly keeps only the text), each table crop through
-    tables.crop_cells, then assemble.page_items. Neither slot is ever
-    handed bytes here.
+    page_table_crops); one recognize_slot call per page with lines, on
+    the page's line crops in reading order (recognize's contract, task
+    'ocr_with_boxes' for each; the slot builds its chars, span assembly
+    keeps only the text); each table crop through tables.crop_cells;
+    then assemble.page_items. Neither slot is ever handed bytes here.
     layout_slot=None skips tables (every line is a free line); pages
     carrying the 2× render are read as fused_all_crops reads them.
 
@@ -170,11 +170,11 @@ def fused_page_items(pages: DataFrame,
             for ref, line_rows, t_rows in _page_crops(
                     pdf, detect_slot, layout_slot,
                     recognition.page_line_crops, tables.page_table_crops):
-                lines = [
-                    {**r, "text": recognition.line_text(
-                        recognize_slot(r["crop"], "ocr_with_boxes"))}
-                    for r in line_rows
-                ]
+                results = recognition._recognize_batch(
+                    recognize_slot, [r["crop"] for r in line_rows],
+                    ["ocr_with_boxes"] * len(line_rows)) if line_rows else []
+                lines = [{**r, "text": recognition.line_text(res)}
+                         for r, res in zip(line_rows, results)]
                 cells = [
                     {"table_idx": t["table_idx"], **cell}
                     for t in t_rows

@@ -11,9 +11,10 @@ Spark shape, designed so page bytes shuffle at most once and never fan out:
 line bboxes are tiny → aggregate them per page (collect_list), join ONTO
 the page blobs (one row per page, not per line), slice all of a page's
 crops in a single mapInPandas pass, and explode. Downstream only small
-crop blobs move. The recognizer is a second mapInPandas slot over crops;
-its internal continuous-batching micro-scheduler is invisible to the plan
-(SURVEY.md §7.3) — the surrogate just decodes the fixture descriptor.
+crop blobs move. The recognizer is a second mapInPandas pass over crops,
+calling the recognize slot once per Arrow batch (the page pass calls it
+once per page); micro-scheduling (continuous_slot) lives inside the
+slot, invisible to the plan (SURVEY.md §7.3).
 """
 
 from __future__ import annotations
@@ -293,7 +294,7 @@ _OCR_OUT = T.StructType([
 ])
 
 
-def _continuous_schedule(blobs: list, tasks: list, step_slot,
+def _continuous_schedule(blobs: list, tasks: list, step_recognizer,
                          n_slots: int,
                          min_prefill_ratio: float = 0.2,
                          max_steps: int = 100_000,
@@ -330,21 +331,21 @@ def _continuous_schedule(blobs: list, tasks: list, step_slot,
             admit = [queue.popleft()
                      for _ in range(min(len(empty), len(queue)))]
             if texts is None:
-                states = step_slot.prefill([blobs[i] for i in admit],
-                                           [tasks[i] for i in admit])
+                states = step_recognizer.prefill(
+                    [blobs[i] for i in admit], [tasks[i] for i in admit])
             else:
-                states = step_slot.prefill([blobs[i] for i in admit],
-                                           [tasks[i] for i in admit],
-                                           [texts[i] for i in admit])
+                states = step_recognizer.prefill(
+                    [blobs[i] for i in admit], [tasks[i] for i in admit],
+                    [texts[i] for i in admit])
             for b, i, st in zip(empty, admit, states):
                 slots_arr[b] = (i, st)
             continue
         active = [(b, i, st) for b, s in enumerate(slots_arr)
                   if s is not None for i, st in [s]]
-        done = step_slot.step([st for _, _, st in active])
+        done = step_recognizer.step([st for _, _, st in active])
         for d, (b, i, st) in zip(done, active):
             if d:
-                results[i] = step_slot.result(st)
+                results[i] = step_recognizer.result(st)
                 slots_arr[b] = None
     return results
 
@@ -360,18 +361,47 @@ def line_text(result: dict, given: str | None = None) -> str:
     return result["text"]
 
 
+def _recognize_batch(slot: Callable, crops: list, tasks: list[str],
+                     texts: list | None = None) -> list[dict]:
+    """slot(crops, tasks[, texts]) — the one call site of recognize and
+    the page pass (fused.fused_page_items). A slot returning another
+    number of results than crops raises here, naming both counts."""
+    results = (slot(crops, tasks) if texts is None
+               else slot(crops, tasks, texts))
+    if len(results) != len(crops):
+        raise ValueError(
+            f"recognize slot returned {len(results)} results for "
+            f"{len(crops)} crops")
+    return results
+
+
+def continuous_slot(step_recognizer, n_slots: int) -> Callable:
+    """A prefill/step/result recognizer (slots.SurrogateStepRecognizer
+    documents the contract) as a recognize slot: each call runs
+    _continuous_schedule with n_slots decoder slots (the reference's
+    recognition_batch_size)."""
+    def slot(crops: list, tasks: list[str],
+             texts: list | None = None) -> list[dict]:
+        return _continuous_schedule(crops, tasks, step_recognizer, n_slots,
+                                    texts=texts)
+
+    return slot
+
+
 def recognize(crops: DataFrame,
-              slot: Callable = slots.surrogate_recognize,
+              slot: Callable = slots.surrogate_recognize_batch,
               task: str = "ocr_with_boxes",
-              emit_chars: bool = True,
-              batch_slot: Callable | None = None,
-              micro_batch: int = 64,
-              step_slot=None,
-              rec_slots: int = 64) -> DataFrame:
+              emit_chars: bool = True) -> DataFrame:
     """crop blobs → ocr_lines. Width-descending sort within partitions
     mirrors the reference's batch admission order
     (/root/reference/surya/recognition/__init__.py:847-854) — a physical
     optimization only; result order is re-pinned by explicit keys.
+
+    slot(crops: list, tasks: list[str]) -> list[dict], one result per
+    crop in order, is called once per Arrow batch of that stream, so a
+    padded-tensor recognizer wastes minimal padding; it schedules its own
+    micro-batches inside the call (ref recognition/__init__.py:501-607;
+    continuous_slot).
 
     task: per-stage decode mode (a plan-time parameter, not data — same as
     the reference's TaskNames routing, recognition/__init__.py:86-102). A
@@ -383,38 +413,17 @@ def recognize(crops: DataFrame,
     cost of the whole pipeline at sf-scale). Callers that don't consume
     chars (the span-assembly flagship) must pass False.
 
-    batch_slot: continuous-batching analog for GPU recognizers (ref
-    recognition/__init__.py:501-607). When set, the UDF feeds the slot
-    micro_batch-sized slices of the width-DESCENDING row stream —
-    same-width crops decode together, so a padded-tensor recognizer
-    wastes minimal padding, and each finished micro-batch immediately
-    admits the next-widest crops (the reference's admission policy; the
-    in-flight sequence replacement it adds on top only matters for a
-    shared KV cache, which per-batch decoding doesn't keep). Signature:
-    batch_slot(blobs: list[bytes], tasks: list[str]) -> list[dict], one
-    result dict per input in order.
-
-    step_slot: the FULL continuous-batching analog with in-flight slot
-    replacement (_continuous_schedule; ref prediction_loop,
-    recognition/__init__.py:501-607) — a prefill/step/result object
-    (slots.SurrogateStepRecognizer documents the contract); rec_slots =
-    the decoder slot count (the reference's recognition_batch_size).
-    Mutually exclusive with batch_slot; per-row outputs are pinned
-    byte-identical to the plain path across slot schedules.
-
     input_text conditioning (ref recognition/__init__.py:86-102,354-471;
     behavior contract = ref tests/test_recognition.py:17-38): when crops
     carry an `input_text` column (threaded by slice_crops /
-    recognize_given_boxes), each slot is called with a third argument —
-    slot(blob, task, input_text); batch/step slots get a texts list. A
-    slot result carrying original_text_good=True (the reference's
-    empty-decode short-circuit for verified-good given text, :889-899)
-    resolves to the CALLER'S text with chars=[] and confidence 1.0, and
-    the output grows an `original_text_good` boolean column so verify
-    workflows can filter on it. Without the column, signatures and
-    schema are unchanged — every existing 2-arg slot keeps working."""
-    if batch_slot is not None and step_slot is not None:
-        raise ValueError("pass at most one of batch_slot / step_slot")
+    recognize_given_boxes), the slot is called with a third argument —
+    slot(crops, tasks, texts). A slot result carrying
+    original_text_good=True (the reference's empty-decode short-circuit
+    for verified-good given text, :889-899) resolves to the CALLER'S
+    text with chars=[] and confidence 1.0, and the output grows an
+    `original_text_good` boolean column so verify workflows can filter
+    on it. Without the column, the call and the schema are unchanged —
+    a 2-argument slot keeps working."""
     sorted_crops = crops.sortWithinPartitions((F.col("x2") - F.col("x1")).desc())
     has_task_col = "task" in crops.columns
     has_input = "input_text" in crops.columns
@@ -440,45 +449,19 @@ def recognize(crops: DataFrame,
         for pdf in batches:
             rows = []
             n = len(pdf)
-            tasks = pdf["task"] if has_task_col else [task] * n
             rxs = pdf["res_x"] if has_res else [1.0] * n
             rys = pdf["res_y"] if has_res else [1.0] * n
             texts = ([None if t is None else str(t)
-                      for t in pdf["input_text"]] if has_input
-                     else [None] * n)
-            if batch_slot is not None:
-                blobs = [bytes(b) for b in pdf["crop_bytes"]]
-                tlist = list(tasks)
-                results: list[dict] = []
-                for s in range(0, n, micro_batch):
-                    if has_input:
-                        results.extend(
-                            batch_slot(blobs[s:s + micro_batch],
-                                       tlist[s:s + micro_batch],
-                                       texts[s:s + micro_batch]))
-                    else:
-                        results.extend(
-                            batch_slot(blobs[s:s + micro_batch],
-                                       tlist[s:s + micro_batch]))
-            elif step_slot is not None:
-                results = _continuous_schedule(
-                    [bytes(b) for b in pdf["crop_bytes"]], list(tasks),
-                    step_slot, rec_slots,
-                    texts=texts if has_input else None)
-            else:
-                results = None
-            for i, (ref, li, pos, x1, y1, x2, y2, blob, tk, rx, ry) in \
+                      for t in pdf["input_text"]] if has_input else None)
+            results = _recognize_batch(
+                slot, [bytes(b) for b in pdf["crop_bytes"]],
+                list(pdf["task"]) if has_task_col else [task] * n, texts)
+            for i, (ref, li, pos, x1, y1, x2, y2, r, rx, ry) in \
                     enumerate(zip(
                         pdf["media_ref"], pdf["line_idx"], pdf["position"],
                         pdf["x1"], pdf["y1"], pdf["x2"], pdf["y2"],
-                        pdf["crop_bytes"], tasks, rxs, rys,
+                        results, rxs, rys,
                     )):
-                if results is not None:
-                    r = results[i]
-                elif has_input:
-                    r = slot(bytes(blob), tk, texts[i])
-                else:
-                    r = slot(bytes(blob), tk)
                 rx, ry = float(rx), float(ry)
                 otg = bool(r.get("original_text_good", False))
                 # rescale chars from (possibly highres) crop space by
@@ -499,7 +482,7 @@ def recognize(crops: DataFrame,
                 row = {
                     "media_ref": ref, "line_idx": int(li), "position": int(pos),
                     "x1": x1, "y1": y1, "x2": x2, "y2": y2,
-                    "text": line_text(r, texts[i]),
+                    "text": line_text(r, texts[i] if has_input else None),
                     "chars": chars,
                     "confidence": 1.0 if otg else r["confidence"],
                 }
@@ -516,7 +499,7 @@ def recognize(crops: DataFrame,
 
 
 def recognize_given_boxes(boxes: DataFrame, pages: DataFrame,
-                          slot: Callable = slots.surrogate_recognize,
+                          slot: Callable = slots.surrogate_recognize_batch,
                           task: str = "ocr_with_boxes",
                           emit_chars: bool = True) -> DataFrame:
     """The parity-critical library mode: caller supplies line bboxes and
@@ -546,7 +529,8 @@ def recognize_given_boxes(boxes: DataFrame, pages: DataFrame,
 
 
 def recognize_blocks(pages: DataFrame,
-                     slot: Callable = slots.surrogate_recognize) -> DataFrame:
+                     slot: Callable = slots.surrogate_recognize_batch
+                     ) -> DataFrame:
     """LaTeX-OCR entry: the whole page is one box, decoded in
     block_without_boxes mode → <math>-wrapped text
     (/root/reference/ocr_latex.py, scripts/ocr_latex.py:23-31)."""

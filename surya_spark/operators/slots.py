@@ -8,12 +8,13 @@ fixture-backed surrogates that decode the SPG1 page descriptors; a GPU
 deployment swaps in torch-backed callables with identical signatures —
 the Spark plan does not change.
 
-Detect and layout slots take the page blob. Recognize and table slots
-take a crop: inside the page pass (fused.fused_page_items) that is the
-in-memory crop (crop_payload / table_crop_payload — a deployment's
-pixel slice), never serialized; from a crop table (slice_crops,
-table_crops, fused_all_crops) it is the crop_bytes SPC1 blob. A slot
-normalizes either form with as_crop.
+Detect and layout slots take the page blob, a table slot one crop and a
+recognize slot a batch of crops (recognition.recognize's contract).
+Inside the page pass (fused.fused_page_items) a crop is the in-memory
+crop (crop_payload / table_crop_payload — a deployment's pixel slice),
+never serialized; from a crop table (slice_crops, table_crops,
+fused_all_crops) it is the crop_bytes SPC1 blob. A slot normalizes
+either form with as_crop.
 
 Surrogate realism: detection emits *noisy, unordered, duplicated* boxes so
 the relational post-processing (containment anti-join, y-expand, confidence
@@ -303,25 +304,23 @@ def surrogate_recognize_batch(crops: list,
                               tasks: list[str],
                               texts: list[str | None] | None = None
                               ) -> list[dict]:
-    """Batch-signature recognizer for the continuous-batching path
-    (recognition.recognize(batch_slot=...)): one result per input crop
-    (either form surrogate_recognize takes), in order. A GPU deployment
-    replaces the loop with a single padded-tensor
-    forward pass over the (width-sorted) micro-batch — the padding waste
-    bound is what the width-descending admission buys
+    """The default recognize slot: surrogate_recognize mapped over the
+    batch, one result per input crop (either form surrogate_recognize
+    takes), in order. A GPU deployment replaces the loop with padded-
+    tensor forward passes over the (width-sorted) batch — the padding
+    waste bound is what the width-descending admission buys
     (ref /root/reference/surya/recognition/__init__.py:501-607).
     texts: optional per-item input_text (None = unconditioned), the
     batch analog of RecognitionPrompt.text (ref :354-371)."""
-    if texts is None:
-        texts = [None] * len(crops)
     return [surrogate_recognize(c, t, x)
-            for c, t, x in zip(crops, tasks, texts)]
+            for c, t, x in zip(crops, tasks, texts or [None] * len(crops))]
 
 
 class SurrogateStepRecognizer:
     """Step-wise recognizer surrogate for the continuous-batching
     scheduler (recognition._continuous_schedule; ref
-    /root/reference/surya/recognition/__init__.py:501-607). The
+    /root/reference/surya/recognition/__init__.py:501-607) that
+    recognition.continuous_slot makes a recognize slot. The
     three-callable contract a GPU deployment fills with real tensors:
 
       prefill(crops, tasks[, texts]) -> list[state]
@@ -337,24 +336,15 @@ class SurrogateStepRecognizer:
 
     The surrogate decodes the whole crop at prefill and replays it one
     character per step, so sequence lengths (and therefore slot
-    lifetimes) match the text the batch path produces — the scheduler's
-    output must be byte-identical to the per-crop path, pytest-pinned.
-    Call counters expose the step count for the padding-waste test."""
-
-    def __init__(self):
-        self.prefill_calls = 0
-        self.step_calls = 0
+    lifetimes) match the text the default slot produces — the
+    scheduler's output must be byte-identical to it, pytest-pinned."""
 
     def prefill(self, crops: list, tasks: list[str],
                 texts: list[str | None] | None = None) -> list[dict]:
-        self.prefill_calls += 1
-        if texts is None:
-            texts = [None] * len(crops)
         return [{"r": surrogate_recognize(c, t, x), "pos": 0}
-                for c, t, x in zip(crops, tasks, texts)]
+                for c, t, x in zip(crops, tasks, texts or [None] * len(crops))]
 
     def step(self, states: list[dict]) -> list[bool]:
-        self.step_calls += 1
         done = []
         for st in states:
             st["pos"] += 1

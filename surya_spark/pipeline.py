@@ -114,7 +114,7 @@ def extract(
     page_blobs: DataFrame,
     with_tables: bool = True,
     detect_slot=slots.surrogate_detect,
-    recognize_slot=slots.surrogate_recognize,
+    recognize_slot=slots.surrogate_recognize_batch,
     layout_slot=slots.surrogate_layout,
     table_slot=slots.surrogate_table,
     highres_blobs: DataFrame | None = None,
@@ -128,7 +128,8 @@ def extract(
     with its 2× render (paired_pages) before the pass: line crops come
     from the 2× render with polygons int-rescaled (ref
     recognition/__init__.py:158-170, scripts/config.py:36-42);
-    detection, layout and table crops read the lowres blob."""
+    detection, layout and table crops read the lowres blob.
+    recognize_slot (recognize's batch contract) is called once per page."""
     items = _page_items(
         documents, page_blobs, highres_blobs,
         detect_slot=detect_slot, recognize_slot=recognize_slot,

@@ -12,7 +12,8 @@ write/read calls):
     dynamic-partition-overwrite of exactly its buckets (idempotent on
     retry — a re-run of a group replaces, never duplicates);
   * after each group commits, one lineage row per bucket is appended to
-    <base>/_lineage/ recording (stage, bucket, rows, wall_ms, ts);
+    <base>/_lineage/ recording (stage, bucket, rows, wall_ms, ts), or
+    rows=0 and the error when its write raised (that commits nothing);
   * resume = read lineage, skip groups whose buckets are all committed.
 
 The reference has no analog (single-process lists in memory); this is the
@@ -57,7 +58,10 @@ class CheckpointRunner:
         lin = self.lineage()
         if lin is None:
             return set()
-        rows = lin.filter(F.col("stage") == stage).select("bucket").collect()
+        # a failed group's lineage rows carry its error: not committed
+        rows = (lin.filter((F.col("stage") == stage)
+                           & F.col("error").isNull())
+                .select("bucket").collect())
         return {r["bucket"] for r in rows}
 
     def _record(self, stage: str, group: int, bucket_rows: dict[int, int],
@@ -142,7 +146,19 @@ class CheckpointRunner:
                 buckets = list(range(g * per_group, (g + 1) * per_group))
                 t0 = time.time()
                 part = df.filter(F.col("_bucket").isin(buckets))
-                part.write.mode("overwrite").partitionBy("_bucket").parquet(out)
+                try:
+                    part.write.mode("overwrite").partitionBy(
+                        "_bucket").parquet(out)
+                except Exception as e:
+                    # best effort: the caller gets the original exception
+                    try:
+                        self._record(
+                            name, g, dict.fromkeys(buckets, 0),
+                            int((time.time() - t0) * 1000),
+                            error=f"{type(e).__name__}: {str(e)[:500]}")
+                    except Exception as rec:
+                        e.add_note(f"lineage error rows not written: {rec!r}")
+                    raise
                 wall_ms = int((time.time() - t0) * 1000)
                 # r7: count from the (persisted) source of the write just
                 # committed, not a parquet read-back of the output dir —

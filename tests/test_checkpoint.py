@@ -161,3 +161,41 @@ def test_checkpointed_highres_matches_extract_and_resumes(spark, tmp_path):
     assert _spans_dict(out) == direct and len(direct) == N_DOCS
     lowres = _spans_dict(pipeline.extract(docs, blobs, with_tables=True))
     assert direct != lowres
+
+
+def test_failed_group_write_records_error_and_resumes(spark, tmp_path):
+    """A group whose write raises appends one lineage row per bucket with
+    rows=0 and the error, re-raises, and stays uncommitted: metrics()
+    counts errors on exactly its buckets and a healthy re-run writes it."""
+    base = str(tmp_path / "ckpt_err")
+    docs = datagen.gen_documents(spark, N_DOCS, partitions=2)
+    blobs = datagen.gen_page_blobs(spark, N_DOCS, partitions=2)
+    runner = CheckpointRunner(spark, base, n_buckets=8, n_groups=4)
+    bucket = F.pmod(F.xxhash64(F.col("media_ref")), F.lit(8))
+    bad = [2, 3]  # group 1
+
+    def healthy():
+        return pipeline.pages_for(docs, blobs)
+
+    def failing():
+        return healthy().withColumn(
+            "img_bytes",
+            F.when(bucket.isin(bad), F.raise_error(F.lit("bad page")))
+            .otherwise(F.col("img_bytes")))
+
+    # group 0 commits, then group 1's write raises
+    runner.stage("pages", healthy, bucket_key="media_ref", max_groups=1)
+    with pytest.raises(Exception, match="bad page"):
+        runner.stage("pages", failing, bucket_key="media_ref")
+    errors = {r["bucket"]: r["errors"]
+              for r in runner.metrics().filter(F.col("stage") == "pages")
+              .collect()}
+    assert {b for b, n in errors.items() if n > 0} == set(bad)
+    err_rows = runner.lineage().filter(F.col("error").isNotNull()).collect()
+    assert all(r["rows"] == 0 and "bad page" in r["error"]
+               for r in err_rows)
+
+    out = runner.stage("pages", healthy, bucket_key="media_ref")
+    assert out.count() == healthy().count()
+    ok = runner.lineage().filter(F.col("error").isNull())
+    assert {r["bucket"] for r in ok.collect()} == set(range(8))

@@ -90,11 +90,14 @@ def test_page_pass_never_hands_slots_bytes(spark):
     2× render: every crop they get is the in-memory payload, and the
     spans equal the default extract's."""
 
-    def recognize_slot(crop, task):
+    def recognize_slot(crops, tasks):
         from surya_spark.operators import slots as worker_slots
 
-        assert isinstance(crop, dict), type(crop)
-        return worker_slots.surrogate_recognize(crop, task)
+        out = []
+        for crop, task in zip(crops, tasks):
+            assert isinstance(crop, dict), type(crop)
+            out.append(worker_slots.surrogate_recognize(crop, task))
+        return out
 
     def table_slot(crop):
         from surya_spark.operators import slots as worker_slots

@@ -12,9 +12,10 @@ schema validation) is library-independent.
 Slot I/O spec (also in COVERAGE.md):
   detect(media_ref: str, width: int, height: int, img_bytes: bytes)
       -> list[{polygon: [[x,y]*4], confidence: float}]
-  recognize(crop, task: str) ->
-      {text: str, confidence: float,
-       chars: [{text, x1, y1, x2, y2, confidence, bbox_valid}]}
+  recognize(crops: list, tasks: list[str]) ->
+      list[{text: str, confidence: float,
+            chars: [{text, x1, y1, x2, y2, confidence, bbox_valid}]}]
+      (one result per crop, in order)
   layout(media_ref, width, height, img_bytes) ->
       list[{emit_idx: int, label: str, x1..y2, confidence, top_k: dict}]
   table(crop) -> list[{item_kind: row|col|spanning_cell, item_id,
@@ -78,11 +79,12 @@ def test_model_provider_recognize_slot_through_extract(spark):
     provider = slots.ModelProvider("fake://checkpoints/rec.pt",
                                    load_recognizer)
 
-    def provided_recognize(crop, task):
+    def provided_recognize(crops, tasks):
         from surya_spark.operators import slots as worker_slots
 
         model = provider.get()  # lazy, once per python worker
-        return model(worker_slots.as_crop(crop), task)
+        return [model(worker_slots.as_crop(crop), task)
+                for crop, task in zip(crops, tasks)]
 
     docs = datagen.gen_documents(spark, 6, partitions=2)
     blobs = datagen.gen_page_blobs(spark, 6, partitions=2)

@@ -8,9 +8,9 @@ verify/correct library mode (ref surya/recognition/__init__.py:86-102,
 * wrong given text → normal decode (truth text, flag false);
 * overlong given text (> task max_tokens) → DROPPED as likely invalid,
   normal decode (the 400-char case the reference test times);
-* absent column → schema and slot signatures unchanged;
-* all three recognize paths (per-crop, batch_slot, step_slot) stay
-  row-identical under conditioning.
+* absent column → schema and the 2-argument slot call unchanged;
+* three recognize slots (the default, a batch slot slicing into 3s,
+  continuous_slot) stay row-identical under conditioning.
 """
 
 from __future__ import annotations
@@ -78,8 +78,8 @@ def test_no_input_text_column_keeps_schema_and_slot_arity(spark):
         "media_ref string, line_idx int, x1 double, y1 double, "
         "x2 double, y2 double")
 
-    def two_arg_slot(blob, task):  # a deployment slot predating the mode
-        return slots.surrogate_recognize(blob, task)
+    def two_arg_slot(crops, tasks):  # a deployment slot predating the mode
+        return slots.surrogate_recognize_batch(crops, tasks)
 
     out = recognition.recognize_given_boxes(boxes, pages,
                                             slot=two_arg_slot)
@@ -109,11 +109,20 @@ def test_all_three_paths_identical_under_conditioning(spark):
              r["original_text_good"], round(r["confidence"], 12))
             for r in df.collect())
 
+    def sliced_slot(crops, tasks, texts):
+        from surya_spark.operators import slots as worker_slots
+
+        out = []
+        for s in range(0, len(crops), 3):
+            out.extend(worker_slots.surrogate_recognize_batch(
+                crops[s:s + 3], tasks[s:s + 3], texts[s:s + 3]))
+        return out
+
     plain = rows(recognition.recognize(crops))
-    batched = rows(recognition.recognize(
-        crops, batch_slot=slots.surrogate_recognize_batch, micro_batch=3))
+    batched = rows(recognition.recognize(crops, slot=sliced_slot))
     stepped = rows(recognition.recognize(
-        crops, step_slot=slots.SurrogateStepRecognizer(), rec_slots=4))
+        crops, slot=recognition.continuous_slot(
+            slots.SurrogateStepRecognizer(), 4)))
     assert batched == plain and stepped == plain and len(plain) > 0
     assert any(r[3] for r in plain) and any(not r[3] for r in plain)
 

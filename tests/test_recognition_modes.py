@@ -146,10 +146,20 @@ def test_axis_rect_polygon_nullout_is_bit_identical(spark):
 
 
 def test_batch_slot_matches_per_row_path(spark):
-    """Continuous-batching analog: micro-batched batch_slot output must be
-    row-identical to the per-row slot path, including across micro-batch
-    boundaries (micro_batch=3 on a ragged-width page set)."""
-    from surya_spark.operators import detection, reading_order, slots
+    """Continuous-batching analog: a slot that feeds its batch to the
+    surrogate in micro-batches of 3 must be row-identical to the default
+    slot, including across micro-batch boundaries (a ragged-width page
+    set)."""
+    from surya_spark.operators import detection, reading_order
+
+    def sliced_slot(crops, tasks):
+        from surya_spark.operators import slots as worker_slots
+
+        out = []
+        for s in range(0, len(crops), 3):
+            out.extend(worker_slots.surrogate_recognize_batch(
+                crops[s:s + 3], tasks[s:s + 3]))
+        return out
 
     pages = _pages(spark, n=8)
     ordered = reading_order.order_lines(detection.detection_stage(pages))
@@ -159,9 +169,7 @@ def test_batch_slot_matches_per_row_path(spark):
     key = lambda r: (r["media_ref"], r["line_idx"])  # noqa: E731
     per_row = sorted(recognition.recognize(crops).collect(), key=key)
     batched = sorted(
-        recognition.recognize(
-            crops, batch_slot=slots.surrogate_recognize_batch,
-            micro_batch=3).collect(),
+        recognition.recognize(crops, slot=sliced_slot).collect(),
         key=key)
     assert batched == per_row
     assert len(per_row) > 3  # micro-batch boundary actually crossed
@@ -169,7 +177,7 @@ def test_batch_slot_matches_per_row_path(spark):
 
 def test_step_slot_equivalence_through_spark(spark):
     """Continuous batching with in-flight slot replacement must produce
-    byte-identical rows to the plain per-crop path, at a slot count that
+    byte-identical rows to the default slot, at a slot count that
     forces many admission waves."""
     from surya_spark.operators import detection, reading_order, slots
 
@@ -187,7 +195,8 @@ def test_step_slot_equivalence_through_spark(spark):
 
     plain = rows(recognition.recognize(crops))
     stepped = rows(recognition.recognize(
-        crops, step_slot=slots.SurrogateStepRecognizer(), rec_slots=4))
+        crops, slot=recognition.continuous_slot(
+            slots.SurrogateStepRecognizer(), 4)))
     assert stepped == plain and len(plain) > 0
 
 

@@ -22,8 +22,8 @@ the driver checks correctness at the small SFs):
   the vocab and understate dedup-family costs at scale.
 * embeddings: fresh unit-normalized N(0,1) 64-d float32 vectors
   (matches measured sf0.1 marginals: unit norms, |x|~0.1 mean, no
-  high-cosine pairs), labels uniform 0..9. Count follows the measured
-  500@sf0.01 -> 2000@sf0.1 decade (x4 per decade -> 8000 at sf1.0).
+  high-cosine pairs), labels uniform 0..9. Count scales with the factor
+  (2000 at sf0.1 -> 20000 at sf1.0, the driver's count).
 * events: regenerated (ts sorted over 30 days of 2024-01, user_id
   uniform over 15000*sf users, 5 uniform event types, value ~
   Exp(mean 50) rounded to 2dp, props {"k": U(0,99)}).
@@ -156,7 +156,7 @@ def main() -> None:
     rng = np.random.RandomState(20260822)
     replicate_tpch(src, dst, factor)
     gen_documents(dst, 5_000 * factor, rng)
-    gen_embeddings(dst, 2_000 * 4, rng)  # x4 per decade, measured
+    gen_embeddings(dst, 2_000 * factor, rng)
     gen_events(dst, 100_000 * factor, 1_500 * factor, rng)
     with open(f"{dst}/_DONE", "w") as fh:
         fh.write("ok\n")
