@@ -7,16 +7,19 @@ rescale → clean contained boxes → 5% y-expand → confidence normalization
  /root/reference/surya/common/util.py:9-36).
 
 Spark shape: the model+polygonize step is one mapInPandas slot over page
-blobs (Arrow-batched, image bytes never shuffled again after this stage);
-everything downstream is pure relational — the containment filter is a
-LEFT ANTI self-join within a page, expansion/normalization are column
-expressions and a window.
+blobs (Arrow-batched, image bytes never shuffled again after this stage).
+Post-processing has two forms pinned equal: postprocess_lines, one numpy
+program over a whole Arrow batch's lines inside that UDF (the page pass
+and detection_stage), and the relational library form — the containment
+filter is a LEFT ANTI self-join within a page, expansion/normalization
+are column expressions and a window.
 """
 
 from __future__ import annotations
 
 from typing import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -43,80 +46,123 @@ _DETECT_OUT = T.StructType(
 )
 
 
-def _containment_keep(x1, y1, x2, y2, ids, block_elems: int = 8_000_000):
-    """Vectorized per-page containment survivor mask: drop i if some j with
-    strictly larger area (area-tie → lower id) bbox-contains it, or if
-    area(i) <= 0 — the shared kernel behind _postprocess_page and
-    clean_contained_boxes_kernel.
+def _containment_keep(x1, y1, x2, y2, ids, block_elems: int = 8_000_000,
+                      page=None):
+    """Vectorized containment survivor mask over one page or a batch of
+    pages: drop box i if some box j of the same page with strictly larger
+    area (area tie → lower id) bbox-contains it, or if area(i) <= 0.
+    page holds each box's page key (None: all boxes are one page); ids
+    need to be distinct only within a page. The shared kernel behind
+    postprocess_lines (one call per Arrow batch) and
+    clean_contained_boxes_kernel (one call per page group).
 
-    Memory guard (round-3 verdict #3): the naive n×n boolean matrix is
-    ~100 MB at n=10k boxes PER PAGE, ×32 workers → executor OOM on a
-    pathological page. Work proceeds in row-blocks of ≤ block_elems
-    matrix cells (~8 MB of bool), so peak memory is O(block·n).
+    Pruning, per page: boxes are taken in x1 order and a container j
+    is tested only against the boxes with x1 ∈ [x1ⱼ, x1ⱼ + max_width],
+    max_width being the widest box of ITS page — a box i that j contains
+    has x1ⱼ ≤ x1ᵢ < x2ᵢ ≤ x2ⱼ ≤ x1ⱼ + max_width. With bench-shaped boxes
+    (width ≤ 124 over a 900-px page) that window holds ~15% of the page.
+    The derivation needs x1ᵢ < x2ᵢ, which inverted boxes (x2 < x1,
+    possibly positive area) violate, so a page holding one tests its
+    containers against the whole page (never on sane detector output).
+    The evaluated predicate — and so the mask — is the brute-force
+    all-pairs one.
 
-    r7 pruning: rows and columns are processed in x1-sorted order, and
-    each container block only tests the columns it could possibly
-    contain — a container j of box i needs x1ⱼ ≤ x1ᵢ and
-    x1ᵢ < x2ᵢ ≤ x2ⱼ ≤ x1ⱼ + max_width, so for a block of containers
-    with x1 ∈ [lo_x, hi_x] the candidate columns are exactly those with
-    x1 ∈ [lo_x, hi_x + max_width]. With bench-shaped boxes (width ≤ 124
-    over a 900-px page) that window holds ~15% of the page's boxes, so
-    the per-page work drops ~7× while the evaluated predicate — and
-    therefore the survivor mask — is unchanged."""
-    import numpy as np
-
+    Memory guard: the candidate (container, box)
+    pairs are evaluated in blocks of at most block_elems pairs (~8 MB of
+    bool each), so peak memory stays O(block_elems + n) however many
+    boxes a page holds."""
     n = x1.shape[0]
     area = (x2 - x1) * (y2 - y1)
     if n == 0:
         return np.zeros(0, dtype=bool)
-    order = np.argsort(x1, kind="stable")
-    sx1, sy1 = x1[order], y1[order]
-    sx2, sy2 = x2[order], y2[order]
-    sids, sarea = ids[order], area[order]
-    wmax = float((sx2 - sx1).max())
-    # the column-window derivation uses x1ᵢ < x2ᵢ, which inverted boxes
-    # (x2 < x1, possibly positive area) violate — fall back to full-width
-    # columns when any exist (never on sane detector output)
-    windowed = not bool((sx2 < sx1).any())
+    pg = np.zeros(n, dtype=np.int64) if page is None else np.asarray(page)
+    order = np.lexsort((x1, pg))
+    sx1, sy1, sx2, sy2 = x1[order], y1[order], x2[order], y2[order]
+    sids, sarea, spg = ids[order], area[order], pg[order]
+    new_page = np.r_[True, spg[1:] != spg[:-1]]
+    starts = np.flatnonzero(new_page)
+    seg = np.cumsum(new_page) - 1  # page segment of each sorted box
+    ends = np.r_[starts[1:], n]
+    idx = np.arange(n)
+    # window start: the first box of the container's x1 tie run
+    lo = np.maximum.accumulate(np.where(
+        new_page | np.r_[True, sx1[1:] != sx1[:-1]], idx, 0))
+    # window end: one past the page's last box with x1 <= x1ⱼ + max_width
+    # — merge these queries into the (page, x1) order, boxes before
+    # queries on ties; queries keep their own order, so query j lands
+    # at rank j + (boxes at or before it)
+    reach = sx1 + np.maximum.reduceat(sx2 - sx1, starts)[seg]
+    merged = np.lexsort((np.r_[np.zeros(n, bool), np.ones(n, bool)],
+                         np.r_[sx1, reach], np.r_[seg, seg]))
+    rank = np.empty(2 * n, dtype=np.int64)
+    rank[merged] = np.arange(2 * n)
+    hi = rank[n:] - idx
+    inverted = np.logical_or.reduceat(sx2 < sx1, starts)[seg]
+    lo = np.where(inverted, starts[seg], lo)
+    hi = np.where(inverted, ends[seg], hi)
+    counts = hi - lo
+    last = np.cumsum(counts)  # one past each container's last pair
+    first = last - counts
     contained_s = np.zeros(n, dtype=bool)
-    step = max(1, block_elems // max(n, 1))
-    for s in range(0, n, step):
-        e = min(n, s + step)
-        # rows s:e are candidate CONTAINERS (x1-sorted); only columns
-        # whose x1 falls in the block's reachable window can be contained
-        if windowed:
-            lo = int(np.searchsorted(sx1, sx1[s], side="left"))
-            hi = int(np.searchsorted(sx1, sx1[e - 1] + wmax, side="right"))
-        else:
-            lo, hi = 0, n
-        block = (
-            (sx1[s:e, None] <= sx1[None, lo:hi])
-            & (sy1[s:e, None] <= sy1[None, lo:hi])
-            & (sx2[s:e, None] >= sx2[None, lo:hi])
-            & (sy2[s:e, None] >= sy2[None, lo:hi])
-            & (sids[s:e, None] != sids[None, lo:hi])
-            & (
-                (sarea[s:e, None] > sarea[None, lo:hi])
-                | ((sarea[s:e, None] == sarea[None, lo:hi])
-                   & (sids[s:e, None] < sids[None, lo:hi]))
-            )
-        )
-        contained_s[lo:hi] |= block.any(axis=0)
+    for p0 in range(0, int(last[-1]), block_elems):
+        p1 = min(int(last[-1]), p0 + block_elems)
+        r0 = int(np.searchsorted(last, p0, side="right"))
+        r1 = int(np.searchsorted(last, p1 - 1, side="right")) + 1
+        c = counts[r0:r1]
+        j = np.repeat(idx[r0:r1], c)  # container
+        i = np.arange(first[r0], last[r1 - 1]) + np.repeat(
+            lo[r0:r1] - first[r0:r1], c)  # candidate contained box
+        cut = slice(p0 - first[r0], p1 - first[r0])
+        j, i = j[cut], i[cut]
+        aj, ai, dj, di = sarea[j], sarea[i], sids[j], sids[i]
+        hit = ((sx1[j] <= sx1[i]) & (sy1[j] <= sy1[i])
+               & (sx2[j] >= sx2[i]) & (sy2[j] >= sy2[i]) & (dj != di)
+               & ((aj > ai) | ((aj == ai) & (dj < di))))
+        contained_s[i[hit]] = True
     contained = np.zeros(n, dtype=bool)
     contained[order] = contained_s
     return ~(contained | (area <= 0))
 
 
-def _postprocess_page(rows: list[dict], page_w: int,
-                      page_h: int) -> list[dict]:
-    """Fused per-page post-processing: containment clean + 5% y-expand
-    clamped to the page + max-confidence normalization — numerically
-    identical to clean_contained_boxes → expand_and_normalize, but run
-    where the page's rows already sit (inside the detect UDF), so the
-    anti-join and window shuffles disappear from the flagship plan.
-    (Round-3 measurement: the shuffle-hash anti-join, required once the
-    driver broadcast was banned, cost ~2 line-table shuffles per run;
-    per-page work belongs in the page-grain kernel.)
+def slot_lines(outs: list, y0=None) -> dict:
+    """Detect-slot outputs, one list per slot call, → line columns: call
+    (index into outs), line_idx (emission index within the call),
+    polygon (n, 4, 2) shifted down by its call's y0 (a chunk's page
+    offset), its bbox x1..y2 (corner min/max) and confidence. The one
+    slot → line rule of detect_lines, split_detect_lines and the page
+    pass (recognition.batch_line_crops). A slot emits 4-corner
+    polygons."""
+    counts = np.array([len(o) for o in outs], dtype=np.int64)
+    call = np.repeat(np.arange(len(outs)), counts)
+    flat = [d for o in outs for d in o]
+    poly = np.array([d["polygon"] for d in flat],
+                    dtype=float).reshape(-1, 4, 2)
+    if y0 is not None:
+        dy = np.asarray(y0)[call][:, None]
+        poly[:, :, 1] = np.where(dy != 0, poly[:, :, 1] + dy, poly[:, :, 1])
+    xs, ys = poly[:, :, 0], poly[:, :, 1]
+    return {
+        "call": call,
+        "line_idx": np.arange(call.size) - np.repeat(
+            np.cumsum(counts) - counts, counts),
+        "polygon": poly,
+        "x1": xs.min(axis=1), "y1": ys.min(axis=1),
+        "x2": xs.max(axis=1), "y2": ys.max(axis=1),
+        "confidence": np.array([d["confidence"] for d in flat],
+                               dtype=float),
+    }
+
+
+def postprocess_lines(lines: dict, page, page_w, page_h) -> dict:
+    """Detection post-process of a whole Arrow batch of pages' lines
+    (slot_lines columns; page = each line's index into page_w/page_h):
+    containment clean per page + 5% y-expand clamped to the page +
+    per-page max-confidence normalization — numerically identical to
+    clean_contained_boxes → expand_and_normalize, but run where the rows
+    already sit (inside the detect UDF), so the anti-join and window
+    shuffles disappear from the flagship plan, and run once per batch,
+    so per-call numpy overhead is paid once, not once per page.
+    Returns the surviving lines' columns (with "page"), in input order.
 
     The slot's POLYGON survives: skewed minAreaRect quads from CRAFT
     output (ref surya/detection/heatmap.py:83-103) keep their corners —
@@ -129,89 +175,74 @@ def _postprocess_page(rows: list[dict], page_w: int,
     (bbox is a derived property of the polygon in the reference). Float
     arithmetic throughout — the engine's established contract; the
     reference's int() truncation in expand() is a rasterization detail
-    its own crop code re-truncates anyway."""
-    import numpy as np
-
-    if not rows:
-        return rows
-    x1 = np.array([r["x1"] for r in rows], dtype=float)
-    y1 = np.array([r["y1"] for r in rows], dtype=float)
-    x2 = np.array([r["x2"] for r in rows], dtype=float)
-    y2 = np.array([r["y2"] for r in rows], dtype=float)
-    ids = np.array([r["line_idx"] for r in rows])
-    P = np.array([r["polygon"] for r in rows], dtype=float)  # (n, 4, 2)
-    keep = _containment_keep(x1, y1, x2, y2, ids)
+    its own crop code re-truncates anyway. A page whose surviving
+    confidences are all ≤ 0 keeps them as they are (no 0/0)."""
+    keep = _containment_keep(lines["x1"], lines["y1"], lines["x2"],
+                             lines["y2"], lines["line_idx"], page=page)
+    page = np.asarray(page)[keep]
+    P = lines["polygon"][keep]
+    x1, y1 = lines["x1"][keep], lines["y1"][keep]
+    x2, y2 = lines["x2"][keep], lines["y2"][keep]
     # vertical boxes skip expand AND clamp, per reference
     # (parallel_get_boxes only expands/fits non-vertical boxes)
-    vertical = (y2 - y1) >= VERTICAL_RATIO * (x2 - x1)
-    dy = (y2 - y1) * Y_EXPAND_PCT
+    vertical = ((y2 - y1) >= VERTICAL_RATIO * (x2 - x1))[:, None]
+    dy = ((y2 - y1) * Y_EXPAND_PCT)[:, None]
     ny = P[:, :, 1].copy()
-    ny[:, 0:2] -= dy[:, None]
-    ny[:, 2:4] += dy[:, None]
-    nx = np.clip(P[:, :, 0], 0.0, float(page_w))
-    ny = np.clip(ny, 0.0, float(page_h))
-    nx = np.where(vertical[:, None], P[:, :, 0], nx)
-    ny = np.where(vertical[:, None], P[:, :, 1], ny)
-    ex1, ex2 = nx.min(axis=1), nx.max(axis=1)
-    ey1, ey2 = ny.min(axis=1), ny.max(axis=1)
-    conf = np.array([r["confidence"] for r in rows], dtype=float)
-    cmax = conf[keep].max() if keep.any() else 1.0
-    out = []
-    for i, r in enumerate(rows):
-        if not keep[i]:
-            continue
-        out.append({
-            **r,
-            "x1": float(ex1[i]), "y1": float(ey1[i]),
-            "x2": float(ex2[i]), "y2": float(ey2[i]),
-            "polygon": [[float(nx[i, j]), float(ny[i, j])]
-                        for j in range(4)],
-            "confidence": float(conf[i] / cmax),
-        })
-    return out
-
-
-def slot_line(ref: str, line_idx: int, d: dict, y0: int = 0) -> dict:
-    """One detect-slot output → a line row: the polygon (shifted down by
-    y0, a chunk's page offset), its bbox (corner min/max) and the slot
-    confidence. The one slot → line rule of detect_lines,
-    split_detect_lines and the page pass (recognition.page_crop_rows)."""
-    poly = (d["polygon"] if not y0
-            else [[p[0], p[1] + y0] for p in d["polygon"]])
-    xs = [p[0] for p in poly]
-    ys = [p[1] for p in poly]
+    ny[:, 0:2] -= dy
+    ny[:, 2:4] += dy
+    nx = np.clip(P[:, :, 0], 0.0, np.asarray(page_w, float)[page][:, None])
+    ny = np.clip(ny, 0.0, np.asarray(page_h, float)[page][:, None])
+    nx = np.where(vertical, P[:, :, 0], nx)
+    ny = np.where(vertical, P[:, :, 1], ny)
+    conf = lines["confidence"][keep]
+    cmax = np.full(len(page_w), -np.inf)
+    np.maximum.at(cmax, page, conf)
+    cmax = cmax[page]
     return {
-        "media_ref": ref, "line_idx": line_idx, "polygon": poly,
-        "x1": min(xs), "y1": min(ys),
-        "x2": max(xs), "y2": max(ys),
-        "confidence": d["confidence"],
+        "page": page, "line_idx": lines["line_idx"][keep],
+        "polygon": np.stack([nx, ny], axis=2),
+        "x1": nx.min(axis=1), "y1": ny.min(axis=1),
+        "x2": nx.max(axis=1), "y2": ny.max(axis=1),
+        "confidence": np.divide(conf, cmax, out=conf.copy(),
+                                where=cmax > 0),
     }
+
+
+def _lines_frame(lines: dict, page, refs, widths, heights) -> pd.DataFrame:
+    """Line columns (page = index into refs/widths/heights) → the
+    _DETECT_OUT frame."""
+    return pd.DataFrame({
+        "media_ref": refs[page], "line_idx": lines["line_idx"],
+        "polygon": lines["polygon"].tolist(),
+        "x1": lines["x1"], "y1": lines["y1"],
+        "x2": lines["x2"], "y2": lines["y2"],
+        "confidence": lines["confidence"],
+        "page_width": widths[page], "page_height": heights[page],
+    })
 
 
 def detect_lines(pages: DataFrame,
                  slot: Callable = slots.surrogate_detect,
                  postprocess: bool = False) -> DataFrame:
     """page_blobs → detected lines (noisy, unordered, may contain
-    duplicates). One Arrow batch of pages in, exploded lines out.
-    postprocess=True fuses clean/expand/normalize per page in-UDF
-    (_postprocess_page)."""
+    duplicates). One Arrow batch of pages in, exploded lines out: the
+    slot runs once per page, postprocess=True then cleans, expands and
+    normalizes the whole batch's lines in one postprocess_lines call."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for ref, w, h, blob in zip(
-                pdf["media_ref"], pdf["width"], pdf["height"], pdf["img_bytes"]
-            ):
-                page_rows = [
-                    {**slot_line(ref, i, d),
-                     "page_width": int(w), "page_height": int(h)}
-                    for i, d in enumerate(
-                        slot(ref, int(w), int(h), bytes(blob)))
-                ]
-                if postprocess:
-                    page_rows = _postprocess_page(page_rows, int(w), int(h))
-                rows.extend(page_rows)
-            yield pd.DataFrame(rows)
+            refs = pdf["media_ref"].to_numpy()
+            widths = pdf["width"].to_numpy(np.int64)
+            heights = pdf["height"].to_numpy(np.int64)
+            lines = slot_lines([
+                slot(ref, int(w), int(h), bytes(blob))
+                for ref, w, h, blob in zip(refs, widths, heights,
+                                           pdf["img_bytes"])])
+            page = lines["call"]
+            if postprocess:
+                lines = postprocess_lines(lines, page, widths, heights)
+                page = lines["page"]
+            yield _lines_frame(lines, page, refs, widths, heights)
 
     return pages.mapInPandas(run, schema=_DETECT_OUT)
 
@@ -236,12 +267,13 @@ def split_detect_lines(pages: DataFrame,
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for ref, w, h, blob in zip(
-                pdf["media_ref"], pdf["width"], pdf["height"], pdf["img_bytes"]
-            ):
+            refs = pdf["media_ref"].to_numpy()
+            widths = pdf["width"].to_numpy(np.int64)
+            heights = pdf["height"].to_numpy(np.int64)
+            outs, call_page, call_chunk = [], [], []
+            for p, (ref, w, h, blob) in enumerate(
+                    zip(refs, widths, heights, pdf["img_bytes"])):
                 desc = decode_page(bytes(blob))
-                page_rows = []
                 n_chunks = max(1, math.ceil(int(h) / DETECTOR_CHUNK_PX))
                 for ci in range(n_chunks):
                     y0 = ci * DETECTOR_CHUNK_PX
@@ -257,26 +289,28 @@ def split_detect_lines(pages: DataFrame,
                             })
                     sub_blob = encode_page(
                         {**desc, "h": ch, "lines": sub_lines})
-                    for i, d in enumerate(
-                        slot(f"{ref}#c{ci}", int(w), ch, sub_blob)
-                    ):
-                        page_rows.append({
-                            **slot_line(ref, ci * 100_000 + i, d, y0),
-                            "page_width": int(w), "page_height": int(h),
-                        })
-                if postprocess:
-                    # all chunks of the page are in hand — dense re-key
-                    # THEN the cross-chunk containment clean run here,
-                    # replacing the stitched relational form (window
-                    # re-key → anti-join) with zero shuffles; kept rows
-                    # carry their pre-clean dense ids exactly like the
-                    # relational path
-                    page_rows.sort(key=lambda r: r["line_idx"])
-                    for j, r in enumerate(page_rows):
-                        r["line_idx"] = j
-                    page_rows = _postprocess_page(page_rows, int(w), int(h))
-                rows.extend(page_rows)
-            yield pd.DataFrame(rows)
+                    outs.append(slot(f"{ref}#c{ci}", int(w), ch, sub_blob))
+                    call_page.append(p)
+                    call_chunk.append(ci)
+            call_chunk = np.array(call_chunk, dtype=np.int64)
+            lines = slot_lines(outs, y0=call_chunk * DETECTOR_CHUNK_PX)
+            page = np.array(call_page, dtype=np.int64)[lines["call"]]
+            if postprocess:
+                # all chunks of every page are in hand, in page then chunk
+                # then emission order — dense re-key (each line's rank in
+                # its page) THEN the cross-chunk containment clean run
+                # here, replacing the stitched relational form (window
+                # re-key → anti-join) with zero shuffles; kept rows carry
+                # their pre-clean dense ids exactly like the relational
+                # path
+                lines["line_idx"] = np.arange(page.size) - np.searchsorted(
+                    page, page, side="left")
+                lines = postprocess_lines(lines, page, widths, heights)
+                page = lines["page"]
+            else:
+                lines["line_idx"] = (call_chunk[lines["call"]] * 100_000
+                                     + lines["line_idx"])
+            yield _lines_frame(lines, page, refs, widths, heights)
 
     raw = pages.mapInPandas(run, schema=_DETECT_OUT)
     if postprocess:
@@ -407,7 +441,9 @@ def expand_and_normalize(lines: DataFrame) -> DataFrame:
     vertical boxes (height ≥ VERTICAL_RATIO×width), matching the reference
     (/root/reference/surya/detection/heatmap.py:170-176) — and per-page
     max-confidence normalization
-    (/root/reference/surya/detection/heatmap.py:100-107) via a window.
+    (ref surya/detection/heatmap.py:100-107) via a window;
+    a page whose maximum is ≤ 0 keeps its confidences (no 0/0 — ANSI
+    mode raises DIVIDE_BY_ZERO on it).
 
     The POLYGON column is expanded CORNERWISE (top corners 0,1 −dy,
     bottom corners 2,3 +dy, each corner clamped to the page — ref
@@ -444,7 +480,7 @@ def expand_and_normalize(lines: DataFrame) -> DataFrame:
     )
     xs = [expanded[i][0] for i in range(4)]
     ys = [expanded[i][1] for i in range(4)]
-    w = Window.partitionBy("media_ref")
+    cmax = F.max("confidence").over(Window.partitionBy("media_ref"))
     return (
         lines.withColumns({
             "polygon": expanded,
@@ -455,7 +491,8 @@ def expand_and_normalize(lines: DataFrame) -> DataFrame:
         })
         .withColumn(
             "confidence",
-            F.col("confidence") / F.max("confidence").over(w),
+            F.when(cmax > 0, F.col("confidence") / cmax)
+            .otherwise(F.col("confidence")),
         )
     )
 
@@ -468,9 +505,10 @@ def detection_stage(pages: DataFrame,
     (DETECTOR_CHUNK_PX slices: bounded activation memory for tall
     pages).
 
-    The per-page post-processing runs inside the detect UDF — zero extra
-    shuffles. The relational anti-join + window form
-    (expand_and_normalize(clean_contained_boxes(...)) over the raw
+    The post-processing runs inside the detect UDF, once per Arrow batch
+    (postprocess_lines) — zero extra shuffles. The relational anti-join
+    + window form (expand_and_normalize(clean_contained_boxes(...)) over
+    the raw
     detect_lines / split_detect_lines output) stays for lines that come
     from a source other than the detect slot, and is the test oracle
     this stage is pinned equal to."""

@@ -4,35 +4,42 @@ keyed by a single page.
 fused_page_items is the pass every production path runs
 (pipeline.extract with or without tables, its dual-DPI variant,
 checkpointed_extract, and through extract the streaming ingest and the
-CLI extract/ocr stages). Per page it detects, orders and slices the text
-lines (recognition.page_line_crops) and recognizes them in one slot
-call; runs layout and cuts the table crops (tables.page_table_crops) and
-turns each into cells (tables.crop_cells); then assigns line text to
-cells and packs the span items (assemble.page_items). Only those small
+CLI extract/ocr stages). For each Arrow batch of pages it first runs the
+line geometry of the whole batch (recognition.batch_line_crops): the
+detect slot once per page, then containment clean, expand, reading
+order and crop visibility as one numpy program over all the batch's
+lines. Then, per page, it recognizes the page's line crops in one slot
+call; runs layout and cuts the table crops (tables.page_table_crops)
+and turns each into cells (tables.crop_cells); then assigns line text
+to cells and packs the span items (assemble.page_items). Engine
+geometry runs per batch, slots per page. Only those small
 (media_ref, sub_order, kind, text) rows leave the pass — no crop is
 persisted or shuffled, and the relational chain's crop union, recognize
 pass, cell pass, cell-text theta join and free-line anti-join (all
 page-local work) are gone from the plan. Crops never leave the pass
 either, so they are never serialized: each slot gets the in-memory crop
-(slots.crop_payload / table_crop_payload).
+(slots.crop_payloads / table_crop_payload).
 
 fused_all_crops is the crop-level library surface of the same pass (the
 CLI `--stage table` and `--render-html`, the crop-parity tests): the
 tagged union of line and table crops, serialized to crop_bytes
-(recognition.page_crop_rows, tables.table_crop_rows) because there
-they become Spark rows. Both passes run one per-page helper,
-_page_crops, with the crop kernels of their form; each form pair
-shares its geometry helper, so the two passes cannot drift.
+(slots.pack_crop, tables.table_crop_rows) because there they become
+Spark rows. Both passes run one helper, _page_crops, with the table
+kernel of their form, so the two passes cannot drift; the per-page
+entry points recognition.page_crop_rows / page_line_crops are one-page
+batches of the same geometry.
 
-Decodes: the kernels share the page desc they decode (detect → line
-crops → table crops), but each surrogate slot (detect, layout)
-decodes the page blob itself, so a page is decoded about three times.
+Decodes: the line geometry decodes each page with lines once and hands
+that desc to the table kernel (on the dual-DPI path it decodes the 2×
+render instead), but each surrogate slot (detect, layout) decodes the
+page blob itself, so a page is decoded about three times.
 
 Parity: the tests pin fused_all_crops' crops byte-identical to the
 relational chain (detection_stage → order_lines → slice_crops, and
 table_crops(layout_stage_tiled(pages), pages)) and fused_page_items'
 items equal to that chain's recognize ∥ table_items → cell_grid /
-apply_spanning_cells → assign_cell_text → assemble.stage_items.
+apply_spanning_cells → assign_cell_text → assemble.stage_items, and
+both passes' output independent of where a batch boundary falls.
 """
 
 from __future__ import annotations
@@ -64,39 +71,37 @@ _ALL_CROPS = T.StructType([
 
 
 def _page_crops(pdf: pd.DataFrame, detect_slot: Callable,
-                layout_slot: Callable | None, line_kernel: Callable,
+                layout_slot: Callable | None,
                 table_kernel: Callable) -> Iterator[tuple]:
     """Yield (media_ref, line_rows, table_rows) for each page of one
-    Arrow batch: line_kernel (recognition.page_crop_rows or
-    page_line_crops) then, unless layout_slot is None, table_kernel
-    (tables.table_crop_rows or page_table_crops) on the desc it
-    returned, so the kernels decode each page at most once between
-    them. A batch that carries the paired 2× render (hr_bytes,
-    hr_width, hr_height; pipeline.paired_pages) takes its line crops
-    from it, rescaled by the same expression as slice_crops' SQL:
+    Arrow batch: first the line geometry of the whole batch
+    (recognition.batch_line_crops, rows with the in-memory `crop`), then
+    per page, unless layout_slot is None, table_kernel
+    (tables.table_crop_rows or page_table_crops) on the desc the line
+    geometry decoded, so each page is decoded at most once between them.
+    A batch that carries the paired 2× render (hr_bytes, hr_width,
+    hr_height; pipeline.paired_pages) takes its line crops from it,
+    rescaled by the same expression as slice_crops' SQL:
     double(hr)/double(lo)."""
     highres = "hr_bytes" in pdf.columns
-    n = len(pdf)
-    hb = pdf["hr_bytes"] if highres else [None] * n
-    hw = pdf["hr_width"] if highres else [0] * n
-    hh = pdf["hr_height"] if highres else [0] * n
-    for ref, w, h, blob, hrb, hrw, hrh in zip(
-        pdf["media_ref"], pdf["width"], pdf["height"],
-        pdf["img_bytes"], hb, hw, hh,
-    ):
-        w, h = int(w), int(h)
-        blob = bytes(blob)
-        line_rows, desc = line_kernel(
-            ref, w, h, blob, detect_slot, float(BAND),
-            hr_blob=bytes(hrb) if highres else None,
-            hr_scale=((float(hrw) / float(w), float(hrh) / float(h))
-                      if highres else None))
+    refs = pdf["media_ref"].tolist()
+    widths = [int(w) for w in pdf["width"]]
+    heights = [int(h) for h in pdf["height"]]
+    blobs = [bytes(b) for b in pdf["img_bytes"]]
+    line_rows, descs = recognition.batch_line_crops(
+        refs, widths, heights, blobs, detect_slot, float(BAND),
+        hr_blobs=[bytes(b) for b in pdf["hr_bytes"]] if highres else None,
+        hr_scales=[(float(hw) / float(w), float(hh) / float(h))
+                   for hw, hh, w, h in zip(pdf["hr_width"],
+                                           pdf["hr_height"], widths,
+                                           heights)] if highres else None)
+    for i, ref in enumerate(refs):
         if layout_slot is None:  # caller skips the table family
             t_rows = []
         else:
-            t_rows, desc = table_kernel(
-                ref, w, h, blob, layout_slot, desc=desc)
-        yield ref, line_rows, t_rows
+            t_rows, _ = table_kernel(ref, widths[i], heights[i], blobs[i],
+                                     layout_slot, desc=descs[i])
+        yield ref, line_rows[i], t_rows
 
 
 def fused_all_crops(pages: DataFrame,
@@ -104,9 +109,9 @@ def fused_all_crops(pages: DataFrame,
                     layout_slot: Callable | None = slots.surrogate_layout
                     ) -> DataFrame:
     """pages → tagged union of recognition crops (crop_kind='line', the
-    rows page_crop_rows emits) and table crops (crop_kind='table', the
-    rows table_crop_rows emits). layout_slot=None skips the table
-    family.
+    rows page_crop_rows emits for each page) and table crops
+    (crop_kind='table', the rows table_crop_rows emits). layout_slot=None
+    skips the table family.
 
     When `pages` carries the 2× render (hr_bytes, hr_width, hr_height —
     equi-joined on media_ref BEFORE this pass by pipeline.paired_pages),
@@ -118,8 +123,7 @@ def fused_all_crops(pages: DataFrame,
         for pdf in batches:
             rows = []
             for _, line_rows, t_rows in _page_crops(
-                    pdf, detect_slot, layout_slot,
-                    recognition.page_crop_rows, tables.table_crop_rows):
+                    pdf, detect_slot, layout_slot, tables.table_crop_rows):
                 for r in line_rows:
                     rows.append({
                         "media_ref": r["media_ref"], "crop_kind": "line",
@@ -127,7 +131,7 @@ def fused_all_crops(pages: DataFrame,
                         "position": r["position"], "table_idx": None,
                         "x1": r["x1"], "y1": r["y1"],
                         "x2": r["x2"], "y2": r["y2"],
-                        "crop_bytes": r["crop_bytes"],
+                        "crop_bytes": slots.pack_crop(r["crop"]),
                         "res_x": r["res_x"], "res_y": r["res_y"],
                     })
                 for r in t_rows:
@@ -152,7 +156,7 @@ def fused_page_items(
         layout_slot: Callable | None = slots.surrogate_layout,
         table_slot: Callable = slots.surrogate_table) -> DataFrame:
     """pages → span items (media_ref, sub_order, kind, text): the crops
-    of _page_crops in their in-memory form (page_line_crops,
+    of _page_crops in their in-memory form (batch_line_crops,
     page_table_crops); one recognize_slot call per page with lines, on
     the page's line crops in reading order (recognize's contract, task
     'ocr_with_boxes' for each; the slot builds its chars, span assembly
@@ -168,8 +172,7 @@ def fused_page_items(
         for pdf in batches:
             items = []
             for ref, line_rows, t_rows in _page_crops(
-                    pdf, detect_slot, layout_slot,
-                    recognition.page_line_crops, tables.page_table_crops):
+                    pdf, detect_slot, layout_slot, tables.page_table_crops):
                 results = recognition._recognize_batch(
                     recognize_slot, [r["crop"] for r in line_rows],
                     ["ocr_with_boxes"] * len(line_rows)) if line_rows else []

@@ -80,7 +80,7 @@ def order_lines(lines: DataFrame) -> DataFrame:
         .withColumn("y_band", G.y_band(F.col("y1"), float(BAND)))
         .drop("_crossing")
     )
-    # line_idx as final tie-break: matches recognition.page_crop_rows'
+    # line_idx as final tie-break: matches recognition.batch_line_crops'
     # sort key, so exact (col_id, y_band, x1, y1) ties order identically
     # across paths AND across shuffles (row_number on a non-total order
     # is partition-order-dependent)

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from typing import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -29,7 +30,7 @@ from pyspark.sql import types as T
 from .. import schemas
 from ..datagen import decode_page
 from ..plans import caching
-from . import slots
+from . import detection, slots
 from .reading_order import STRIP_HI, STRIP_LO
 
 _CROPS = T.StructType([
@@ -165,46 +166,25 @@ def page_crop_rows(ref: str, w: int, h: int, blob: bytes,
                    desc=None, hr_blob: bytes | None = None,
                    hr_scale: tuple[float, float] | None = None
                    ) -> tuple[list[dict], object]:
-    """Per-page kernel of the crop-level page pass (fused.fused_all_crops)
-    for the detect→order→slice chain:
-    detect slot → fused post-process (detection._postprocess_page) →
-    column-aware reading order → crop encode (slots.encode_crop),
-    emitting the crop rows the relational chain
-    slice_crops(order_lines(detection_stage(pages)), pages) produces —
-    without ever materializing the line table. Every step is page-local,
-    so the relational chain's two line-table exchanges (order window +
-    slice aggregate) are pure overhead here; crops are pytest-pinned
-    byte-identical against it. page_line_crops is the same kernel with
-    the crops left unserialized.
-
-    Ordering contract matches order_lines exactly: two-column iff no
-    line crosses the central strip (x1 < STRIP_LO·w AND x2 > STRIP_HI·w,
-    reading_order's constants), col_id by center-x half, y-band
-    floor(y1/band_v), position = 1-based rank by
-    (col_id, y_band, x1, y1) — line_idx appended as the final tie-break
-    (the relational row_number is partition-order-dependent on exact
-    ties; fixtures keep keys unique).
+    """One page of the crop-level page pass (fused.fused_all_crops) for
+    the detect→order→slice chain: batch_line_crops over a one-page batch,
+    each crop serialized (slots.pack_crop) to `crop_bytes` — the crop
+    rows the relational chain
+    slice_crops(order_lines(detection_stage(pages)), pages) produces,
+    without ever materializing the line table (pytest-pinned
+    byte-identical). page_line_crops leaves the crops in memory.
 
     Returns (crop row dicts, decoded page or the desc passed in): a
     caller running several page-grain kernels hands the returned desc to
     the next kernel, and the kernels decode the blob at most once per
     page between them (the slots decode it themselves). desc stays None
-    when no line survives post-processing (the decode is lazy — pages
-    with no text never pay it).
-
-    hr_blob + hr_scale=(ws, hs) select the dual-DPI path (r7, VERDICT
-    r06 #3): detection runs on the LOWRES blob as always, crops are
-    encoded from the HIGHRES descriptor with bbox and polygon rescaled
-    by int() truncation per the reference
-    (/root/reference/surya/recognition/__init__.py:158-170,
-    surya/common/polygon.py rescale) — exactly slice_crops'
-    highres kernel — and rows carry (res_x, res_y) = (ws, hs) while the
-    output bbox columns stay in lowres space. The LOWRES desc is never
-    decoded here on that path (the table kernel decodes it if needed)."""
-    rows, boxes, crop_desc, desc = _line_boxes(
-        ref, w, h, blob, detect_slot, band_v, desc, hr_blob, hr_scale)
-    for row, (bbox, poly) in zip(rows, boxes):
-        row["crop_bytes"] = slots.encode_crop(crop_desc, bbox, poly)
+    when no line survives post-processing, and on the dual-DPI path
+    (hr_blob + hr_scale=(ws, hs)), which cuts its crops from the highres
+    page."""
+    rows, desc = page_line_crops(ref, w, h, blob, detect_slot, band_v,
+                                 desc, hr_blob, hr_scale)
+    for row in rows:
+        row["crop_bytes"] = slots.pack_crop(row.pop("crop"))
     return rows, desc
 
 
@@ -215,69 +195,96 @@ def page_line_crops(ref: str, w: int, h: int, blob: bytes,
                     ) -> tuple[list[dict], object]:
     """page_crop_rows with each crop left in memory: the rows carry
     `crop`, the slots.crop_payload a recognize slot takes, instead of
-    `crop_bytes`. The page pass (fused.fused_page_items) hands these
-    straight to the recognize slot, so no line crop is serialized."""
-    rows, boxes, crop_desc, desc = _line_boxes(
-        ref, w, h, blob, detect_slot, band_v, desc, hr_blob, hr_scale)
-    for row, (bbox, poly) in zip(rows, boxes):
-        row["crop"] = slots.crop_payload(crop_desc, bbox, poly)
-    return rows, desc
+    `crop_bytes`."""
+    rows, descs = batch_line_crops(
+        [ref], [w], [h], [blob], detect_slot, band_v, [desc],
+        None if hr_blob is None else [hr_blob],
+        None if hr_scale is None else [hr_scale])
+    return rows[0], descs[0]
 
 
-def _line_boxes(ref: str, w: int, h: int, blob: bytes,
-                detect_slot: Callable, band_v: float, desc,
-                hr_blob: bytes | None, hr_scale
-                ) -> tuple[list[dict], list[tuple], object, object]:
-    """detect slot → fused post-process (detection._postprocess_page) →
-    column-aware reading order for one page. Returns (rows, boxes,
-    crop_desc, desc): the line rows of page_crop_rows without their
-    crop, each row's crop geometry (bbox, polygon) in the space of
-    crop_desc (the page the crops are cut from), and the lowres desc
-    (or the one passed in; None when nothing needed it)."""
-    import math
+def batch_line_crops(refs: list, widths: list, heights: list, blobs: list,
+                     detect_slot: Callable, band_v: float,
+                     descs: list | None = None, hr_blobs: list | None = None,
+                     hr_scales: list | None = None
+                     ) -> tuple[list[list[dict]], list]:
+    """The line geometry of the page pass for one Arrow batch of pages:
+    the detect slot once per page, then ONE numpy program over all the
+    batch's lines — post-process (detection.postprocess_lines),
+    column-aware reading order, crop boxes and crop visibility
+    (slots.crop_payloads) — so per-call overhead is paid per batch, not
+    per page. Returns (line rows per page, each row with `crop`, in
+    reading order; the lowres desc per page).
 
-    from . import detection as _det
+    Ordering contract matches order_lines exactly: two-column iff no
+    line crosses the central strip (x1 < STRIP_LO·w AND x2 > STRIP_HI·w,
+    reading_order's constants), col_id by center-x half, y-band
+    floor(y1/band_v), position = 1-based rank by
+    (col_id, y_band, x1, y1) — line_idx appended as the final tie-break
+    (the relational row_number is partition-order-dependent on exact
+    ties; fixtures keep keys unique) — one lexsort keyed by page first.
 
-    wd = float(w)
-    page_rows = _det._postprocess_page(
-        [_det.slot_line(ref, i, d)
-         for i, d in enumerate(detect_slot(ref, int(w), int(h), blob))],
-        int(w), int(h))
-    if not page_rows:
-        return [], [], None, desc
-    lo, hi = wd * STRIP_LO, wd * STRIP_HI
-    crossing = any(r["x1"] < lo and r["x2"] > hi for r in page_rows)
-    half = wd / 2.0
-    page_rows.sort(key=lambda r: (
-        0 if crossing or (r["x1"] + r["x2"]) / 2.0 < half
-        else 1,
-        math.floor(r["y1"] / band_v),
-        r["x1"], r["y1"], r["line_idx"],
-    ))
-    if hr_blob is None:
-        if desc is None:
-            desc = decode_page(blob)
-        crop_desc = desc
-        ws = hs = 1.0
+    descs: the pages' lowres descs where a caller has them (None
+    entries are decoded here, only for pages with lines). hr_blobs +
+    hr_scales=[(ws, hs), ...] select the dual-DPI path: detection runs
+    on the LOWRES blob as always, crops are cut from the HIGHRES
+    descriptor with bbox and polygon rescaled by int() truncation per
+    the reference (ref surya/recognition/__init__.py:158-170,
+    surya/common/polygon.py rescale) — exactly slice_crops' highres
+    kernel (_highres_box) — and rows carry (res_x, res_y) = (ws, hs)
+    while the output bbox columns stay in lowres space. The LOWRES desc
+    is never decoded on that path (the table kernel decodes it if
+    needed)."""
+    n_pages = len(refs)
+    descs = [None] * n_pages if descs is None else list(descs)
+    wd = np.array(widths, dtype=float)
+    lines = detection.slot_lines([
+        detect_slot(ref, int(w), int(h), blob)
+        for ref, w, h, blob in zip(refs, widths, heights, blobs)])
+    ln = detection.postprocess_lines(lines, lines["call"], wd,
+                                     np.array(heights, dtype=float))
+    page, x1, y1, x2, y2 = (ln[c] for c in ("page", "x1", "y1", "x2", "y2"))
+    w_line = wd[page]
+    crossing = np.zeros(n_pages, dtype=bool)
+    crossing[page[(x1 < w_line * STRIP_LO) & (x2 > w_line * STRIP_HI)]] = True
+    col = np.where(crossing[page] | ((x1 + x2) / 2.0 < w_line / 2.0), 0, 1)
+    order = np.lexsort((ln["line_idx"], y1, x1, np.floor(y1 / band_v), col,
+                        page))
+    ln = {c: v[order] for c, v in ln.items()}
+    page, x1, y1, x2, y2 = (ln[c] for c in ("page", "x1", "y1", "x2", "y2"))
+    quads = ln["polygon"]
+    position = np.arange(1, page.size + 1) - np.searchsorted(page, page)
+    boxes = np.stack([x1, y1, x2, y2], axis=1)
+    with_lines = np.unique(page).tolist()
+    if hr_blobs is None:
+        for p in with_lines:
+            if descs[p] is None:
+                descs[p] = decode_page(blobs[p])
+        crop_descs = descs
+        ws = hs = np.ones(n_pages)
     else:
-        crop_desc = decode_page(hr_blob)
-        ws, hs = float(hr_scale[0]), float(hr_scale[1])
-    rows, boxes = [], []
-    for pos, r in enumerate(page_rows, start=1):
-        if hr_blob is None:
-            boxes.append(([r["x1"], r["y1"], r["x2"], r["y2"]],
-                          r["polygon"]))
-        else:
-            boxes.append(_highres_box(r, r["polygon"], ws, hs))
-        rows.append({
-            "media_ref": ref,
-            "line_idx": int(r["line_idx"]),
-            "position": pos,
-            "x1": r["x1"], "y1": r["y1"],
-            "x2": r["x2"], "y2": r["y2"],
-            "res_x": ws, "res_y": hs,
+        crop_descs = [None] * n_pages
+        for p in with_lines:
+            crop_descs[p] = decode_page(hr_blobs[p])
+        ws = np.array([float(s[0]) for s in hr_scales])
+        hs = np.array([float(s[1]) for s in hr_scales])
+        scale = np.stack([ws[page], hs[page]], axis=1)
+        # int() truncation toward zero: np.trunc would turn int(-0.5)'s
+        # 0 into -0.0, and the crop bytes with it
+        boxes = (boxes * np.tile(scale, 2)).astype(np.int64).astype(float)
+        quads = (quads * scale[:, None, :]).astype(np.int64).astype(float)
+    crops = slots.crop_payloads(crop_descs, page, boxes, quads)
+    rows = [[] for _ in range(n_pages)]
+    for p, li, pos, a, b, c, d, rx, ry, crop in zip(
+            page.tolist(), ln["line_idx"].tolist(), position.tolist(),
+            x1.tolist(), y1.tolist(), x2.tolist(), y2.tolist(),
+            ws[page].tolist(), hs[page].tolist(), crops):
+        rows[p].append({
+            "media_ref": refs[p], "line_idx": li, "position": pos,
+            "x1": a, "y1": b, "x2": c, "y2": d,
+            "res_x": rx, "res_y": ry, "crop": crop,
         })
-    return rows, boxes, crop_desc, desc
+    return rows, descs
 
 
 _OCR_OUT = T.StructType([

@@ -11,10 +11,11 @@ the Spark plan does not change.
 Detect and layout slots take the page blob, a table slot one crop and a
 recognize slot a batch of crops (recognition.recognize's contract).
 Inside the page pass (fused.fused_page_items) a crop is the in-memory
-crop (crop_payload / table_crop_payload — a deployment's pixel slice),
-never serialized; from a crop table (slice_crops, table_crops,
-fused_all_crops) it is the crop_bytes SPC1 blob. A slot normalizes
-either form with as_crop.
+crop (crop_payloads, cut for a whole Arrow batch at once, /
+table_crop_payload — a deployment's pixel slice), never serialized;
+from a crop table (slice_crops, table_crops, fused_all_crops) it is the
+crop_bytes SPC1 blob (pack_crop). A slot normalizes either form with
+as_crop.
 
 Surrogate realism: detection emits *noisy, unordered, duplicated* boxes so
 the relational post-processing (containment anti-join, y-expand, confidence
@@ -26,7 +27,10 @@ the CRAFT polygonization output the reference cleans up
 from __future__ import annotations
 
 import json
+import math
 import zlib
+
+import numpy as np
 
 from ..datagen import MAGIC, SEED, _seed, decode_page
 
@@ -45,8 +49,6 @@ def _rng(*parts):
     the constructing form for exactly that reason)."""
     global _RS
     if _RS is None:
-        import numpy as np
-
         _RS = np.random.RandomState(0)
     _RS.seed(_seed(*parts))
     return _RS
@@ -95,8 +97,6 @@ def surrogate_detect_heatmap(media_ref: str, width: int, height: int,
     dilated by the CC buffer (±1+int(sqrt(line_height)) px), which the
     downstream stages must absorb exactly as they absorb real CRAFT
     output."""
-    import numpy as np
-
     from ..functions import imageops as I
 
     desc = decode_page(img_bytes)
@@ -113,100 +113,131 @@ def surrogate_detect_heatmap(media_ref: str, width: int, height: int,
 
 
 # ---------------------------------------------------------------- crop encode
-def _is_axis_rect(polygon, bbox, eps: float = 1e-9) -> bool:
-    """polygon == the clockwise corner rectangle of bbox."""
-    if polygon is None or len(polygon) != 4:
-        return polygon is None
-    x1, y1, x2, y2 = bbox
-    rect = [[x1, y1], [x2, y1], [x2, y2], [x1, y2]]
-    return all(
-        abs(float(p[0]) - r[0]) <= eps and abs(float(p[1]) - r[1]) <= eps
-        for p, r in zip(polygon, rect)
-    )
+def _axis_rects(boxes, quads):
+    """Per crop: quads[k] (4 corners) is the clockwise corner rectangle
+    of boxes[k] (x1, y1, x2, y2) to 1e-9 — such a crop is its bbox."""
+    rect = boxes[:, [0, 1, 2, 1, 2, 3, 0, 3]].reshape(-1, 4, 2)
+    return (np.abs(quads - rect) <= 1e-9).all(axis=(1, 2))
+
+
+def crop_payloads(descs: list, page, boxes, quads=None) -> list[dict]:
+    """The in-memory crop a recognize slot takes, for each of a batch of
+    line crops: crop k is boxes[k] (x1, y1, x2, y2; an (n, 4) array)
+    cut from descs[page[k]] and kept to the truth lines it shows — those
+    overlapping it ≥50% of their area — with coordinates shifted to crop
+    space. The visibility of every (crop, truth line of its page) pair is
+    one numpy pass (intersection by min/max, line area floored at 1e-9);
+    crop_payload is the one-crop call.
+
+    quads (an (n, 4, 2) array) are the crops' polygons. A non-rectangular
+    one (skewed quad from rotated text) masks its crop — the descriptor
+    analog of the reference's fillPoly masking
+    (ref surya/input/processing.py:57-101): pixels outside
+    the polygon are padded away, so a truth line counts as visible by
+    the fraction of its area covered by the polygon RASTER
+    (imageops.fill_poly_mask), not by the bbox — neighbor-line ink in
+    the bbox corners of a skewed crop no longer leaks in. Those crops
+    take the raster per crop; a quad that is its bbox's corner rectangle
+    takes the bbox path (bit-identical to no polygon)."""
+    masks = [None] * len(boxes)
+    if quads is not None:
+        for k in np.flatnonzero(~_axis_rects(boxes, quads)):
+            masks[k] = quads[k]
+    return _payloads(descs, np.asarray(page), boxes, masks)
 
 
 def crop_payload(desc: dict, bbox: list[float],
                  polygon: list[list[float]] | None = None) -> dict:
-    """Slice a page descriptor to the in-memory crop a recognize slot
-    takes: truth lines overlapping the crop ≥50% of their area,
-    coordinates shifted to crop space.
-
-    With a non-rectangular polygon (skewed quad from rotated text), the
-    visibility rule is the descriptor analog of the reference's fillPoly
-    masking (/root/reference/surya/input/processing.py:57-101): pixels
-    outside the polygon are padded away, so a truth line counts as
-    visible by the fraction of its area covered by the polygon RASTER
-    (imageops.fill_poly_mask), not by the bbox — neighbor-line ink in
-    the bbox corners of a skewed crop no longer leaks in. Axis-aligned
-    polygons take the exact float bbox path (bit-identical to the
-    polygon-less call).
-
-    Degenerate polygons (< 3 corners — a raster can't be filled) fall
-    back to the unmasked bbox path rather than an all-false mask that
-    would silently drop every truth line, matching slice_and_pad_poly /
-    the reference's polygon validation short-circuit
-    (/root/reference/surya/common/polygon.py:17-35)."""
-    cx1, cy1, cx2, cy2 = bbox
-    masked = (polygon is not None and len(polygon) >= 3
-              and not _is_axis_rect(polygon, bbox))
+    """crop_payloads for one crop, whose polygon may have any number of
+    corners: a degenerate one (< 3 corners — a raster can't be filled)
+    falls back to the unmasked bbox path rather than an all-false mask
+    that would silently drop every truth line, matching
+    slice_and_pad_poly / the reference's polygon validation
+    short-circuit (ref surya/common/polygon.py:17-35)."""
+    box = np.array([bbox], dtype=float)
     mask = None
-    if masked:
-        import math
-
-        import numpy as np
-
-        from ..functions.imageops import fill_poly_mask
-
-        cw = int(math.ceil(cx2 - cx1))
-        ch = int(math.ceil(cy2 - cy1))
+    if polygon is not None and len(polygon) >= 3:
         # Arrow delivers array<array<double>> as an object array of
         # arrays — normalize corner-by-corner
-        shifted = np.array(
-            [[float(p[0]) - cx1, float(p[1]) - cy1] for p in polygon])
-        mask = fill_poly_mask(ch, cw, shifted)
-    kept = []
-    for ln in desc["lines"]:
-        lx1, ly1, lx2, ly2 = ln["bbox"]
-        area = (lx2 - lx1) * (ly2 - ly1)
-        if area < 1e-9:
-            area = 1e-9
-        if not masked:
-            # conditional expressions instead of max()/min() builtins:
-            # this loop runs per (crop, line) in the flagship's fused
-            # kernel and the builtin-call overhead was visible in its
-            # profile (r7); identical float arithmetic
-            ix = (lx2 if lx2 < cx2 else cx2) - (lx1 if lx1 > cx1 else cx1)
-            iy = (ly2 if ly2 < cy2 else cy2) - (ly1 if ly1 > cy1 else cy1)
-            visible = ix * iy if (ix > 0.0 and iy > 0.0) else 0.0
-        else:
-            import math
+        mask = np.array([[float(p[0]), float(p[1])] for p in polygon])
+        if len(mask) == 4 and _axis_rects(box, mask[None])[0]:
+            mask = None
+    return _payloads([desc], np.zeros(1, dtype=np.int64), box, [mask])[0]
 
+
+def _payloads(descs: list, page, boxes, masks: list) -> list[dict]:
+    """crop_payloads with each crop's masking polygon (or None) decided."""
+    from ..functions.imageops import fill_poly_mask
+
+    n = len(masks)
+    truth = [[] if d is None else d["lines"] for d in descs]
+    n_truth = np.array([len(t) for t in truth], dtype=np.int64)
+    flat = [ln for t in truth for ln in t]
+    tb = np.array([ln["bbox"] for ln in flat], dtype=float).reshape(-1, 4)
+    area = (tb[:, 2] - tb[:, 0]) * (tb[:, 3] - tb[:, 1])
+    area = np.where(area < 1e-9, 1e-9, area)
+    first_truth = np.cumsum(n_truth) - n_truth
+    masked = np.array([m is not None for m in masks], dtype=bool)
+    # every (unmasked crop, truth line of its page) pair, crop-major
+    counts = np.where(masked, 0, n_truth[page])
+    k = np.repeat(np.arange(n), counts)
+    t = np.arange(k.size) + np.repeat(
+        first_truth[page] - (np.cumsum(counts) - counts), counts)
+    cb, lb = boxes[k], tb[t]
+    ix = np.minimum(lb[:, 2], cb[:, 2]) - np.maximum(lb[:, 0], cb[:, 0])
+    iy = np.minimum(lb[:, 3], cb[:, 3]) - np.maximum(lb[:, 1], cb[:, 1])
+    visible = np.where((ix > 0.0) & (iy > 0.0), ix * iy, 0.0)
+    hit = visible / area[t] >= 0.5
+    kept = [[] for _ in range(n)]
+    for c, ti in zip(k[hit].tolist(), t[hit].tolist()):
+        kept[c].append(ti)
+    box_list = boxes.tolist()
+    for c in np.flatnonzero(masked).tolist():
+        cx1, cy1, cx2, cy2 = box_list[c]
+        mask = fill_poly_mask(int(math.ceil(cy2 - cy1)),
+                              int(math.ceil(cx2 - cx1)),
+                              masks[c] - np.array([cx1, cy1]))
+        base = int(first_truth[page[c]])
+        for ti in range(base, base + int(n_truth[page[c]])):
+            lx1, ly1, lx2, ly2 = flat[ti]["bbox"]
             a = max(0, int(math.floor(lx1 - cx1)))
             b = min(mask.shape[1], int(math.ceil(lx2 - cx1)))
-            c = max(0, int(math.floor(ly1 - cy1)))
+            y = max(0, int(math.floor(ly1 - cy1)))
             d = min(mask.shape[0], int(math.ceil(ly2 - cy1)))
-            visible = float(mask[c:d, a:b].sum()) if (b > a and d > c) else 0.0
-        if visible / area >= 0.5:
-            kept.append({
+            visible = float(mask[y:d, a:b].sum()) if (b > a and d > y) else 0.0
+            if visible / area[ti] >= 0.5:
+                kept[c].append(ti)
+    out = []
+    for (cx1, cy1, cx2, cy2), ts in zip(box_list, kept):
+        lines = []
+        for ti in ts:
+            lx1, ly1, lx2, ly2 = flat[ti]["bbox"]
+            lines.append({
                 "bbox": [lx1 - cx1, ly1 - cy1, lx2 - cx1, ly2 - cy1],
-                "text": ln["text"],
+                "text": flat[ti]["text"],
             })
-    return {"crop": [0.0, 0.0, cx2 - cx1, cy2 - cy1], "lines": kept}
+        out.append({"crop": [0.0, 0.0, cx2 - cx1, cy2 - cy1],
+                    "lines": lines})
+    return out
 
 
-def encode_crop(desc: dict, bbox: list[float],
-                polygon: list[list[float]] | None = None) -> bytes:
-    """crop_payload serialized to an SPC1 crop blob — the form a crop
+def pack_crop(payload: dict) -> bytes:
+    """A crop payload serialized to an SPC1 crop blob — the form a crop
     takes where it becomes a Spark row (slice_crops, fused_all_crops);
-    decode_crop(encode_crop(d, b, p)) == crop_payload(d, b, p)."""
+    decode_crop(pack_crop(p)) == p."""
     # insertion order IS sorted order for every dict here ("crop"<"lines",
     # "bbox"<"text"), so dropping sort_keys produces byte-identical JSON
     # without the per-key sort; level-1 deflate halves the kernel's
     # compression time (blob bytes differ from level-6 but every
     # producer/consumer pair — fused and relational alike — shares this
     # one encoder, and no oracle hashes crop blobs) (r7, profiled)
-    return CROP_MAGIC + zlib.compress(
-        json.dumps(crop_payload(desc, bbox, polygon)).encode(), 1)
+    return CROP_MAGIC + zlib.compress(json.dumps(payload).encode(), 1)
+
+
+def encode_crop(desc: dict, bbox: list[float],
+                polygon: list[list[float]] | None = None) -> bytes:
+    """pack_crop(crop_payload(desc, bbox, polygon))."""
+    return pack_crop(crop_payload(desc, bbox, polygon))
 
 
 def decode_crop(blob: bytes) -> dict:
