@@ -62,26 +62,28 @@ def bbox_to_poly(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
 # are required the moment a real model is plugged into any slot.
 
 BOX_DIM = 1024.0  # ref surya/table_rec/model/config.py BOX_DIM
+# a 6-tuple's skews are shifted by SKEW_SCALER into positive space, and a
+# skew under SKEW_MIN in magnitude is zero (ref surya/layout/util.py:4-40)
+SKEW_SCALER = BOX_DIM // 2
+SKEW_MIN = 0.001
 
 
 def bbox6_to_poly(cx: Column, cy: Column, w: Column, h: Column,
                   sx6: Column, sy6: Column,
-                  skew_scaler: float = BOX_DIM // 2,
-                  skew_min: float = 0.001,
                   x_scale: Column | float = 1.0,
                   y_scale: Column | float = 1.0) -> Column:
     """(cx,cy,w,h,skew_x,skew_y) 6-tuple → 4-corner polygon.
     Ref semantics: surya/layout/util.py:4-40 and
-    surya/table_rec/shaper.py:114-142 — skew = floor((s−scaler)/2)
+    surya/table_rec/shaper.py:114-142 — skew = floor((s−SKEW_SCALER)/2)
     (float floor, NOT trunc: negative skews floor toward −inf), skews with
-    |skew| < skew_min zeroed, corners scaled by img/1024 at the end
+    |skew| < SKEW_MIN zeroed, corners scaled by img/1024 at the end
     (x_scale/y_scale; the scale multiplies, it does not truncate)."""
     x1, y1 = cx - w / 2, cy - h / 2
     x2, y2 = cx + w / 2, cy + h / 2
-    sx = F.floor((sx6 - F.lit(skew_scaler)) / 2).cast("double")
-    sy = F.floor((sy6 - F.lit(skew_scaler)) / 2).cast("double")
-    sx = F.when(F.abs(sx) < skew_min, F.lit(0.0)).otherwise(sx)
-    sy = F.when(F.abs(sy) < skew_min, F.lit(0.0)).otherwise(sy)
+    sx = F.floor((sx6 - F.lit(SKEW_SCALER)) / 2).cast("double")
+    sy = F.floor((sy6 - F.lit(SKEW_SCALER)) / 2).cast("double")
+    sx = F.when(F.abs(sx) < SKEW_MIN, F.lit(0.0)).otherwise(sx)
+    sy = F.when(F.abs(sy) < SKEW_MIN, F.lit(0.0)).otherwise(sy)
     xs, ys = F.lit(x_scale), F.lit(y_scale)
     return F.array(
         F.array((x1 - sx) * xs, (y1 - sy) * ys),
@@ -91,18 +93,18 @@ def bbox6_to_poly(cx: Column, cy: Column, w: Column, h: Column,
     )
 
 
-def poly_to_bbox6(poly: Column, box_dim: float = BOX_DIM) -> list[Column]:
+def poly_to_bbox6(poly: Column) -> list[Column]:
     """4-corner polygon → (cx,cy,width,height,skew_x,skew_y) with skews
-    shifted by box_dim//2 into positive space; corners clipped to
-    [0, box_dim] first. Ref: surya/table_rec/shaper.py:83-112."""
+    shifted by SKEW_SCALER into positive space; corners clipped to
+    [0, BOX_DIM] first. Ref: surya/table_rec/shaper.py:83-112."""
     def cl(i: int, axis: int) -> Column:
         v = poly[i][axis]
         return F.greatest(F.lit(0.0), F.least(v.cast("double"),
-                                              F.lit(float(box_dim))))
+                                              F.lit(BOX_DIM)))
 
     x1, x2, x3, x4 = cl(0, 0), cl(1, 0), cl(2, 0), cl(3, 0)
     y1, y2, y3, y4 = cl(0, 1), cl(1, 1), cl(2, 1), cl(3, 1)
-    shift = F.lit(float(int(box_dim) // 2))
+    shift = F.lit(SKEW_SCALER)
     return [
         ((x1 + x2 + x3 + x4) / 4).alias("cx"),
         ((y1 + y2 + y3 + y4) / 4).alias("cy"),

@@ -201,7 +201,7 @@ def erode_v(img: np.ndarray, k: int) -> np.ndarray:
     return _sliding_extreme_1d(np.asarray(img), k, axis=0, take_max=False)
 
 
-def dilate_v(img: np.ndarray, k: int, iterations: int = 1) -> np.ndarray:
+def dilate_v(img: np.ndarray, k: int, iterations: int) -> np.ndarray:
     """Vertical-kernel (k,1) grayscale dilation (sliding column max)."""
     out = np.asarray(img)
     for _ in range(iterations):
@@ -296,10 +296,13 @@ def min_area_rect(points: np.ndarray) -> np.ndarray:
 
 # ----------------------------------------------------- heatmap -> boxes
 
+# a heatmap component of fewer pixels is noise, not a line
+# (ref surya/detection/heatmap.py:44-50)
+MIN_COMPONENT_SIZE = 10
+
 
 def detect_boxes_from_heatmap(linemap: np.ndarray, text_threshold: float,
-                              low_text: float,
-                              min_size: int = 10
+                              low_text: float
                               ) -> tuple[list[np.ndarray], list[float]]:
     """The CRAFT-style polygonization the reference's detection slot runs
     after the model (surya/detection/heatmap.py:27-107): dynamic
@@ -318,7 +321,7 @@ def detect_boxes_from_heatmap(linemap: np.ndarray, text_threshold: float,
     max_conf = 0.0
     for k in range(1, n + 1):
         x, y, w, h, size = stats[k - 1]
-        if size < min_size:
+        if size < MIN_COMPONENT_SIZE:
             continue
         niter = int(math.sqrt(min(w, h)))
         buffer = 1
@@ -399,9 +402,14 @@ def _resample_axis(img: np.ndarray, out_n: int, axis: int,
     return np.moveaxis(out, 0, axis)
 
 
-def _cubic_kernel(x: np.ndarray, A: float = -0.75) -> np.ndarray:
-    """Keys cubic convolution kernel with A=-0.75 — cv2 INTER_CUBIC's
+# Keys cubic convolution constant of cv2 INTER_CUBIC
+CUBIC_A = -0.75
+
+
+def _cubic_kernel(x: np.ndarray) -> np.ndarray:
+    """Keys cubic convolution kernel with A=CUBIC_A — cv2 INTER_CUBIC's
     constant (exactly reproduces linear functions at any phase)."""
+    A = CUBIC_A
     ax = np.abs(x)
     return np.where(
         ax <= 1.0,
@@ -466,25 +474,24 @@ def scale_to_fit_dims(height: int, width: int,
     return height, width
 
 
-def scale_to_fit(img: np.ndarray, max_size: tuple[int, int],
-                 min_size: tuple[int, int] = (168, 168),
-                 method: str = "lanczos") -> np.ndarray:
-    """Reference uses INTER_LANCZOS4 here
-    (ref surya/common/surya/processor/__init__.py:176-177); pass
-    method="bilinear" for the cheaper filter."""
+def scale_to_fit(img: np.ndarray, max_size: tuple[int, int]) -> np.ndarray:
+    """scale_to_fit_dims' target size, resized with INTER_LANCZOS4 as the
+    reference does (ref surya/common/surya/processor/__init__.py:176-177)."""
     h, w = img.shape[:2]
-    nh, nw = scale_to_fit_dims(h, w, max_size, min_size)
+    nh, nw = scale_to_fit_dims(h, w, max_size)
     if (nh, nw) == (h, w):
         return np.asarray(img, dtype=np.float64)
-    resize = lanczos_resize if method == "lanczos" else bilinear_resize
-    return resize(img, nh, nw)
+    return lanczos_resize(img, nh, nw)
 
 
-def normalize_image(img: np.ndarray, mean, std,
-                    rescale_factor: float = 1.0 / 255.0) -> np.ndarray:
+# pixel values are rescaled from 0..255 to 0..1 before standardizing
+RESCALE_FACTOR = 1.0 / 255.0
+
+
+def normalize_image(img: np.ndarray, mean, std) -> np.ndarray:
     """rescale → standardize, the processor's _image_processor
     (ref surya/common/surya/processor/__init__.py:178-181)."""
-    out = np.asarray(img, dtype=np.float64) * rescale_factor
+    out = np.asarray(img, dtype=np.float64) * RESCALE_FACTOR
     return (out - np.asarray(mean)) / np.asarray(std)
 
 
@@ -593,15 +600,19 @@ def sobel(img: np.ndarray, vertical: bool = True) -> np.ndarray:
     return _conv3(img, k)
 
 
-def vertical_edge_map(img: np.ndarray, k: int = 20,
-                      dilate_iterations: int = 3) -> np.ndarray:
+# vertical_edge_map dilates its eroded edge map this many times
+# (ref surya/detection/affinity.py:19-41)
+EDGE_DILATE_ITERATIONS = 3
+
+
+def vertical_edge_map(img: np.ndarray, k: int = 20) -> np.ndarray:
     """abs-Sobel → scale to 0..255 → (k,1) erode then dilate×3: keeps only
     edges that persist vertically (ref affinity.py:19-41)."""
     s = np.abs(sobel(img, vertical=True))
     mx = s.max()
     scaled = np.zeros_like(s) if mx == 0 else (255 * s / mx)
     scaled = scaled.astype(np.uint8).astype(np.float64)
-    return dilate_v(erode_v(scaled, k), k, iterations=dilate_iterations)
+    return dilate_v(erode_v(scaled, k), k, EDGE_DILATE_ITERATIONS)
 
 
 def canny(img: np.ndarray, low: float = 150.0,

@@ -295,13 +295,12 @@ def normalized_edit_distance(p: Column, r: Column) -> Column:
     return F.when(m > 0, d / m).otherwise(F.lit(0.0))
 
 
-def edit_distance_mean(pred: DataFrame, pred_col: str = "pred",
-                       ref_col: str = "ref") -> DataFrame:
+def edit_distance_mean(pred: DataFrame) -> DataFrame:
     """Dataset-level texify metric: mean normalized edit distance after
     normalization; the CI floor gate asserts mean < 0.2
     (ref benchmark/utils/verify_benchmark_scores.py:41-44)."""
     nd = normalized_edit_distance(
-        normalize_for_edit(F.col(pred_col)), normalize_for_edit(F.col(ref_col)))
+        normalize_for_edit(F.col("pred")), normalize_for_edit(F.col("ref")))
     return pred.select(nd.alias("nd")).agg(
         F.avg("nd").alias("mean_edit_distance"),
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -339,9 +338,7 @@ def render_ink_iou(pred: str, ref: str) -> float:
     return float((a & b).sum() / union) if union else 1.0
 
 
-def render_overlap_score(pairs: DataFrame,
-                         pred_col: str = "pred",
-                         ref_col: str = "ref") -> DataFrame:
+def render_overlap_score(pairs: DataFrame) -> DataFrame:
     """(key, pred, ref) → per-pair render_ink_iou, Arrow-batched. The
     render happens where the pair row lives — no shuffle beyond the
     input's partitioning; cost ∝ text length, perfectly parallel."""
@@ -359,9 +356,9 @@ def render_overlap_score(pairs: DataFrame,
                 "key": pdf["key"],
                 "render_iou": [
                     render_ink_iou(p, r)
-                    for p, r in zip(pdf[pred_col], pdf[ref_col])
+                    for p, r in zip(pdf["pred"], pdf["ref"])
                 ],
             })
 
-    return pairs.select("key", pred_col, ref_col).mapInPandas(
+    return pairs.select("key", "pred", "ref").mapInPandas(
         run, schema=out_schema)

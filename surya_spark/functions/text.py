@@ -45,18 +45,24 @@ def normalize_text(text: Column) -> Column:
     return F.lower(F.trim(t))
 
 
-def detect_repeat_token(tokens: Column, window: int = 40) -> Column:
+# detect_repeat_token looks at this many trailing tokens
+# (ref surya/recognition/util.py:59-69)
+REPEAT_WINDOW = 40
+
+
+def detect_repeat_token(tokens: Column) -> Column:
     """True when decoding has degenerated into a short loop: the trailing
-    `window` tokens hold ≤5 distinct values AND the final distinct-count
-    run exactly repeats the run before it — the reference's periodicity
-    rule, not just low diversity. Ref: surya/recognition/util.py:59-69."""
-    tail = F.slice(tokens, -window, window)
+    REPEAT_WINDOW tokens hold ≤5 distinct values AND the final
+    distinct-count run exactly repeats the run before it — the
+    reference's periodicity rule, not just low diversity.
+    Ref: surya/recognition/util.py:59-69."""
+    tail = F.slice(tokens, -REPEAT_WINDOW, REPEAT_WINDOW)
     u = F.size(F.array_distinct(tail))
     # slice() rejects start=0, and the guards below don't short-circuit
     # expression evaluation — clamp u for the empty-array case
     us = F.greatest(u, F.lit(1))
     return (
-        (F.size(tokens) >= window)
+        (F.size(tokens) >= REPEAT_WINDOW)
         & (u <= 5)
         & (F.slice(tail, -us, us) == F.slice(tail, -2 * us, us))
     )
@@ -162,39 +168,3 @@ def fingerprint(text: Column) -> Column:
     Spark and any ANSI oracle, used for exact dedup."""
     return F.md5(F.encode(normalize_text(text), "UTF-8"))
 
-
-def shingles(text: Column, k: int = 3) -> Column:
-    """Word k-shingles of the normalized text as an array<string> (distinct).
-    Readable/debuggable form; hot paths should use shingle_ids (hashed,
-    ~4× cheaper — no per-shingle string building)."""
-    toks = tokenize_ws(normalize_text(text))
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    sh = F.transform(
-        idx, lambda i: F.array_join(F.slice(toks, i + 1, k), " ")
-    )
-    return F.when(n >= k, F.array_distinct(sh)).otherwise(
-        F.array(F.array_join(toks, " "))
-    )
-
-
-def shingle_ids(text: Column, k: int = 3) -> Column:
-    """Distinct 64-bit ids of word k-shingles: xxhash64 over the k member
-    tokens directly — skips building shingle strings entirely. Set sizes
-    (|A|, |A∩B|, |A∪B|) are collision-equal to the string form with
-    probability 1−O(n²/2⁶⁴), which is what dedup math consumes.
-
-    NOTE: array-valued form, evaluated as interpreted higher-order
-    functions — fine for small inputs; hot paths must use the flat
-    shingle_id_rows (posexplode + lead windows, whole-stage codegen,
-    measured ~10× faster at sf0.1)."""
-    toks = tokenize_ws(normalize_text(text))
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    ids = F.transform(
-        idx,
-        lambda i: F.xxhash64(*[F.element_at(toks, i + j + 1)
-                               for j in range(k)]),
-    )
-    whole = F.array(F.xxhash64(F.array_join(toks, " ")))
-    return F.when(n >= k, F.array_distinct(ids)).otherwise(whole)

@@ -48,14 +48,18 @@ def clean_math_tags_py(text: str) -> str:
     return "".join(result)
 
 
-def truncate_repetitions_py(text: str, min_len: int = 8) -> str:
+# truncate_repetitions_py's shortest repeated unit
+MIN_REPEAT_LEN = 8
+
+
+def truncate_repetitions_py(text: str) -> str:
     """Remove a repeated tail: if the string ends with ≥2 copies of the
-    same substring (length ≥ min_len), keep a single copy (nougat-style
-    degenerate-decode cleanup)."""
-    if len(text) < 2 * min_len:
+    same substring (length ≥ MIN_REPEAT_LEN), keep a single copy
+    (nougat-style degenerate-decode cleanup)."""
+    if len(text) < 2 * MIN_REPEAT_LEN:
         return text
     max_rep_len = len(text) // 2
-    for rep_len in range(max_rep_len, min_len - 1, -1):
+    for rep_len in range(max_rep_len, MIN_REPEAT_LEN - 1, -1):
         tail = text[-rep_len:]
         n = 1
         while (

@@ -359,10 +359,10 @@ def clean_contained_boxes(lines: DataFrame) -> DataFrame:
 
 
 def clean_contained_quads(lines: DataFrame,
-                          poly_col: str = "polygon",
                           key: str = "media_ref",
                           id_col: str = "line_idx") -> DataFrame:
-    """Quad-aware variant of clean_contained_boxes: containment and area
+    """Quad-aware variant of clean_contained_boxes over the `polygon`
+    column: containment and area
     use the CORNERWISE quad predicates (G.poly_contains +
     G.poly_area_shoelace) instead of bbox reductions, so skewed
     minAreaRect quads from rotated text (ref
@@ -374,7 +374,7 @@ def clean_contained_quads(lines: DataFrame,
     side derives from the corpus). Shoelace areas of integer-cornered
     quads are exact in double, so the operator is oracle-replicable."""
     a, b = lines.alias("a"), lines.alias("b")
-    pa, pb = F.col(f"b.{poly_col}"), F.col(f"a.{poly_col}")
+    pa, pb = F.col("b.polygon"), F.col("a.polygon")
     area_a = G.poly_area_shoelace(pb)
     area_b = G.poly_area_shoelace(pa)
     contained = (
@@ -388,7 +388,7 @@ def clean_contained_quads(lines: DataFrame,
         )
     )
     kept = a.join(b.hint("shuffle_hash"), on=contained, how="left_anti")
-    return kept.filter(G.poly_area_shoelace(F.col(poly_col)) > 0)
+    return kept.filter(G.poly_area_shoelace(F.col("polygon")) > 0)
 
 
 def clean_contained_boxes_kernel(lines: DataFrame,

@@ -23,11 +23,10 @@ either, so they are never serialized: each slot gets the in-memory crop
 fused_all_crops is the crop-level library surface of the same pass (the
 CLI `--stage table` and `--render-html`, the crop-parity tests): the
 tagged union of line and table crops, serialized to crop_bytes
-(slots.pack_crop, tables.table_crop_rows) because there they become
-Spark rows. Both passes run one helper, _page_crops, with the table
-kernel of their form, so the two passes cannot drift; the per-page
-entry points recognition.page_crop_rows / page_line_crops are one-page
-batches of the same geometry.
+(slots.pack_crop, slots.pack_table_crop) because there they become
+Spark rows. Both passes run one helper, _page_crops, so the two passes
+cannot drift; the per-page entry points recognition.page_crop_rows /
+page_line_crops are one-page batches of the same geometry.
 
 Decodes: the line geometry decodes each page with lines once and hands
 that desc to the table kernel (on the dual-DPI path it decodes the 2×
@@ -71,14 +70,13 @@ _ALL_CROPS = T.StructType([
 
 
 def _page_crops(pdf: pd.DataFrame, detect_slot: Callable,
-                layout_slot: Callable | None,
-                table_kernel: Callable) -> Iterator[tuple]:
+                layout_slot: Callable | None) -> Iterator[tuple]:
     """Yield (media_ref, line_rows, table_rows) for each page of one
-    Arrow batch: first the line geometry of the whole batch
-    (recognition.batch_line_crops, rows with the in-memory `crop`), then
-    per page, unless layout_slot is None, table_kernel
-    (tables.table_crop_rows or page_table_crops) on the desc the line
-    geometry decoded, so each page is decoded at most once between them.
+    Arrow batch, every row with its in-memory `crop`: first the line
+    geometry of the whole batch (recognition.batch_line_crops), then per
+    page, unless layout_slot is None, tables.page_table_crops on the
+    desc the line geometry decoded, so each page is decoded at most once
+    between them.
     A batch that carries the paired 2× render (hr_bytes, hr_width,
     hr_height; pipeline.paired_pages) takes its line crops from it,
     rescaled by the same expression as slice_crops' SQL:
@@ -99,8 +97,9 @@ def _page_crops(pdf: pd.DataFrame, detect_slot: Callable,
         if layout_slot is None:  # caller skips the table family
             t_rows = []
         else:
-            t_rows, _ = table_kernel(ref, widths[i], heights[i], blobs[i],
-                                     layout_slot, desc=descs[i])
+            t_rows, _ = tables.page_table_crops(
+                ref, widths[i], heights[i], blobs[i], layout_slot,
+                desc=descs[i])
         yield ref, line_rows[i], t_rows
 
 
@@ -123,7 +122,7 @@ def fused_all_crops(pages: DataFrame,
         for pdf in batches:
             rows = []
             for _, line_rows, t_rows in _page_crops(
-                    pdf, detect_slot, layout_slot, tables.table_crop_rows):
+                    pdf, detect_slot, layout_slot):
                 for r in line_rows:
                     rows.append({
                         "media_ref": r["media_ref"], "crop_kind": "line",
@@ -141,7 +140,7 @@ def fused_all_crops(pages: DataFrame,
                         "table_idx": r["table_idx"],
                         "x1": r["x1"], "y1": r["y1"],
                         "x2": r["x2"], "y2": r["y2"],
-                        "crop_bytes": r["crop_bytes"],
+                        "crop_bytes": slots.pack_table_crop(r["crop"]),
                         "res_x": None, "res_y": None,
                     })
             yield pd.DataFrame(rows)
@@ -172,7 +171,7 @@ def fused_page_items(
         for pdf in batches:
             items = []
             for ref, line_rows, t_rows in _page_crops(
-                    pdf, detect_slot, layout_slot, tables.page_table_crops):
+                    pdf, detect_slot, layout_slot):
                 results = recognition._recognize_batch(
                     recognize_slot, [r["crop"] for r in line_rows],
                     ["ocr_with_boxes"] * len(line_rows)) if line_rows else []

@@ -10,7 +10,8 @@ column expressions — no HTML parser library, no Python in the hot path:
   2. per block compute text length, word count, and LINK DENSITY
      (characters inside <a> anchors / total text characters) — the single
      strongest boilerplate signal (navigation, footers, related-links);
-  3. keep blocks with >= min_words words and link density <= threshold;
+  3. keep blocks with >= MIN_WORDS words and link density <=
+     MAX_LINK_DENSITY;
   4. re-assemble kept blocks in document order.
 
 Everything is split/regexp/explode/window — whole-stage codegen, shuffle
@@ -32,6 +33,10 @@ BLOCK_TAG_RE = (
 ANCHOR_RE = r"(?is)<a\b[^>]*>(.*?)</a>"
 TAG_RE = r"<[^>]+>"
 WS_RE = r"\s+"
+# a main-content block has at least MIN_WORDS words and at most this
+# share of its characters inside anchors (boilerpipe's density rule)
+MIN_WORDS = 5
+MAX_LINK_DENSITY = 0.33
 
 
 def _clean(c: Column) -> Column:
@@ -39,20 +44,19 @@ def _clean(c: Column) -> Column:
                                    WS_RE, " "))
 
 
-def html_blocks(docs: DataFrame, html_col: str = "html",
-                id_col: str = "doc_id") -> DataFrame:
+def html_blocks(docs: DataFrame) -> DataFrame:
     """(doc_id, block_idx, text, n_chars, n_words, link_density) — one row
-    per DOM block. Link text is everything inside <a> anchors within the
-    block; density = link chars / text chars (1.0 for empty blocks so they
-    never pass the filter)."""
+    per DOM block of the `html` column. Link text is everything inside <a>
+    anchors within the block; density = link chars / text chars (1.0 for
+    empty blocks so they never pass the filter)."""
     from ..plans import partitioning
 
     # r7: block split + per-block regex cleaning over a single-row-group
     # corpus file would run on one scan task — spread first (no-op when
     # the input is already well partitioned)
-    ex = partitioning.spread_small_input(docs, id_col).select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.split(F.col(html_col), BLOCK_TAG_RE))
+    ex = partitioning.spread_small_input(docs, "doc_id").select(
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("html"), BLOCK_TAG_RE))
         .alias("block_idx", "raw"),
     )
     text = _clean(F.col("raw"))
@@ -72,14 +76,12 @@ def html_blocks(docs: DataFrame, html_col: str = "html",
     )
 
 
-def strip_boilerplate(docs: DataFrame, html_col: str = "html",
-                      id_col: str = "doc_id", min_words: int = 5,
-                      max_link_density: float = 0.33) -> DataFrame:
+def strip_boilerplate(docs: DataFrame) -> DataFrame:
     """(doc_id, main_text, n_blocks_kept, n_blocks_total): kept blocks
     joined in document order with newlines — the extracted main content."""
-    blocks = html_blocks(docs, html_col, id_col)
-    keep = (F.col("n_words") >= min_words) & (
-        F.col("link_density") <= max_link_density)
+    blocks = html_blocks(docs)
+    keep = (F.col("n_words") >= MIN_WORDS) & (
+        F.col("link_density") <= MAX_LINK_DENSITY)
     flagged = blocks.withColumn("keep", keep)
     return (
         flagged.groupBy("doc_id")

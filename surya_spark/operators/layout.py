@@ -116,27 +116,25 @@ def position_regions(regions: DataFrame) -> DataFrame:
     return regions.withColumn("position", F.row_number().over(w))
 
 
-def stitch_positions(tiled: DataFrame,
-                     key: str = "media_ref",
-                     tile_col: str = "tile_idx",
-                     emit_col: str = "emit_idx") -> DataFrame:
+def stitch_positions(tiled: DataFrame) -> DataFrame:
     """Slicer re-join: regions decoded per tile get global reading-order
-    positions by offsetting each tile's emit indices with the cumulative
-    count of earlier tiles (/root/reference/surya/layout/slicer.py:89-116).
-    One window, no Python."""
+    positions by offsetting each tile's emit indices (emit_idx) with the
+    cumulative count of earlier tiles (tile_idx) of the page (media_ref)
+    (/root/reference/surya/layout/slicer.py:89-116). One window, no
+    Python."""
     # cumulative emitted-before-this-tile count
-    counts = tiled.groupBy(key, tile_col).agg(
+    counts = tiled.groupBy("media_ref", "tile_idx").agg(
         F.count(F.lit(1)).alias("_n_tile"))
-    w_cum = Window.partitionBy(key).orderBy(tile_col).rowsBetween(
+    w_cum = Window.partitionBy("media_ref").orderBy("tile_idx").rowsBetween(
         Window.unboundedPreceding, -1)
     offsets = counts.withColumn(
         "_offset", F.coalesce(F.sum("_n_tile").over(w_cum), F.lit(0)))
     return (
-        tiled.join(offsets.select(key, tile_col, "_offset")
+        tiled.join(offsets.select("media_ref", "tile_idx", "_offset")
                    .hint("shuffle_hash"),  # corpus-derived side, never
-                   [key, tile_col])        # driver-broadcast (BENCH.md 7)
+                   ["media_ref", "tile_idx"])  # driver-broadcast (BENCH.md 7)
         .withColumn("position",
-                    (F.col(emit_col) + F.col("_offset") + 1).cast("int"))
+                    (F.col("emit_idx") + F.col("_offset") + 1).cast("int"))
         .drop("_offset")
     )
 

@@ -20,6 +20,10 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# a document is bad when more than this share of its spans is bad
+# (ref surya/scripts/streamlit_app.py:54-57)
+BAD_DOC_FRAC = 0.2
+
 
 def heuristic_label(text: Column) -> Column:
     """'good' iff ≥70% of characters are alphanumeric/whitespace (and text
@@ -31,11 +35,11 @@ def heuristic_label(text: Column) -> Column:
     ).otherwise(F.lit("bad"))
 
 
-def classify_spans(span_rows: DataFrame, text_col: str = "text",
+def classify_spans(span_rows: DataFrame,
                    model_udf: Callable | None = None) -> DataFrame:
-    """Adds ocr_label to text-span rows. model_udf: optional pandas_udf
-    (Series→Series of 'good'/'bad') replacing the heuristic — the real
-    DistilBERT slot in deployment.
+    """Adds ocr_label to text-span rows (their `text` column).
+    model_udf: optional pandas_udf (Series→Series of 'good'/'bad')
+    replacing the heuristic — the real DistilBERT slot in deployment.
 
     Tokenization is MODEL-PROVIDER-INTERNAL by contract: the slot takes
     raw text, and a real provider brings its own wordpiece tokenizer
@@ -46,8 +50,8 @@ def classify_spans(span_rows: DataFrame, text_col: str = "text",
     from ..plans import partitioning
 
     label = (
-        model_udf(F.col(text_col)) if model_udf is not None
-        else heuristic_label(F.col(text_col))
+        model_udf(F.col("text")) if model_udf is not None
+        else heuristic_label(F.col("text"))
     )
     # r7: regex/model labeling is per-row heavy — spread single-row-group
     # corpus scans across the cluster first (no-op at deployment scale)
@@ -55,8 +59,7 @@ def classify_spans(span_rows: DataFrame, text_col: str = "text",
         "ocr_label", label)
 
 
-def doc_bad_vote(labeled: DataFrame, doc_col: str = "doc_id",
-                 threshold: float = 0.2) -> DataFrame:
+def doc_bad_vote(labeled: DataFrame, doc_col: str = "doc_id") -> DataFrame:
     """Per-doc fraction of 'bad' spans and the bad-PDF verdict."""
     return (
         labeled.groupBy(doc_col)
@@ -66,5 +69,5 @@ def doc_bad_vote(labeled: DataFrame, doc_col: str = "doc_id",
             ).alias("bad_frac"),
             F.count(F.lit(1)).alias("n_spans"),
         )
-        .withColumn("is_bad_doc", F.col("bad_frac") > threshold)
+        .withColumn("is_bad_doc", F.col("bad_frac") > BAD_DOC_FRAC)
     )

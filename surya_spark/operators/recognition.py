@@ -163,7 +163,7 @@ def slice_crops(lines: DataFrame, pages: DataFrame,
 
 def page_crop_rows(ref: str, w: int, h: int, blob: bytes,
                    detect_slot: Callable, band_v: float,
-                   desc=None, hr_blob: bytes | None = None,
+                   hr_blob: bytes | None = None,
                    hr_scale: tuple[float, float] | None = None
                    ) -> tuple[list[dict], object]:
     """One page of the crop-level page pass (fused.fused_all_crops) for
@@ -174,15 +174,15 @@ def page_crop_rows(ref: str, w: int, h: int, blob: bytes,
     without ever materializing the line table (pytest-pinned
     byte-identical). page_line_crops leaves the crops in memory.
 
-    Returns (crop row dicts, decoded page or the desc passed in): a
-    caller running several page-grain kernels hands the returned desc to
-    the next kernel, and the kernels decode the blob at most once per
-    page between them (the slots decode it themselves). desc stays None
+    Returns (crop row dicts, decoded page): a caller running several
+    page-grain kernels hands the returned desc to the next kernel, and
+    the kernels decode the blob at most once per page between them (the
+    slots decode it themselves). desc stays None
     when no line survives post-processing, and on the dual-DPI path
     (hr_blob + hr_scale=(ws, hs)), which cuts its crops from the highres
     page."""
     rows, desc = page_line_crops(ref, w, h, blob, detect_slot, band_v,
-                                 desc, hr_blob, hr_scale)
+                                 hr_blob, hr_scale)
     for row in rows:
         row["crop_bytes"] = slots.pack_crop(row.pop("crop"))
     return rows, desc
@@ -190,14 +190,14 @@ def page_crop_rows(ref: str, w: int, h: int, blob: bytes,
 
 def page_line_crops(ref: str, w: int, h: int, blob: bytes,
                     detect_slot: Callable, band_v: float,
-                    desc=None, hr_blob: bytes | None = None,
+                    hr_blob: bytes | None = None,
                     hr_scale: tuple[float, float] | None = None
                     ) -> tuple[list[dict], object]:
     """page_crop_rows with each crop left in memory: the rows carry
     `crop`, the slots.crop_payload a recognize slot takes, instead of
     `crop_bytes`."""
     rows, descs = batch_line_crops(
-        [ref], [w], [h], [blob], detect_slot, band_v, [desc],
+        [ref], [w], [h], [blob], detect_slot, band_v,
         None if hr_blob is None else [hr_blob],
         None if hr_scale is None else [hr_scale])
     return rows[0], descs[0]
@@ -205,7 +205,7 @@ def page_line_crops(ref: str, w: int, h: int, blob: bytes,
 
 def batch_line_crops(refs: list, widths: list, heights: list, blobs: list,
                      detect_slot: Callable, band_v: float,
-                     descs: list | None = None, hr_blobs: list | None = None,
+                     hr_blobs: list | None = None,
                      hr_scales: list | None = None
                      ) -> tuple[list[list[dict]], list]:
     """The line geometry of the page pass for one Arrow batch of pages:
@@ -224,8 +224,7 @@ def batch_line_crops(refs: list, widths: list, heights: list, blobs: list,
     (the relational row_number is partition-order-dependent on exact
     ties; fixtures keep keys unique) — one lexsort keyed by page first.
 
-    descs: the pages' lowres descs where a caller has them (None
-    entries are decoded here, only for pages with lines). hr_blobs +
+    The lowres desc is decoded only for pages with lines. hr_blobs +
     hr_scales=[(ws, hs), ...] select the dual-DPI path: detection runs
     on the LOWRES blob as always, crops are cut from the HIGHRES
     descriptor with bbox and polygon rescaled by int() truncation per
@@ -236,7 +235,7 @@ def batch_line_crops(refs: list, widths: list, heights: list, blobs: list,
     is never decoded on that path (the table kernel decodes it if
     needed)."""
     n_pages = len(refs)
-    descs = [None] * n_pages if descs is None else list(descs)
+    descs = [None] * n_pages
     wd = np.array(widths, dtype=float)
     lines = detection.slot_lines([
         detect_slot(ref, int(w), int(h), blob)
@@ -507,7 +506,6 @@ def recognize(crops: DataFrame,
 
 def recognize_given_boxes(boxes: DataFrame, pages: DataFrame,
                           slot: Callable = slots.surrogate_recognize_batch,
-                          task: str = "ocr_with_boxes",
                           emit_chars: bool = True) -> DataFrame:
     """The parity-critical library mode: caller supplies line bboxes and
     skips detection (/root/reference/surya/recognition/__init__.py:773-942
@@ -532,7 +530,7 @@ def recognize_given_boxes(boxes: DataFrame, pages: DataFrame,
         if opt in boxes.columns:
             cols.append(opt)
     crops = slice_crops(boxes.select(*cols), pages)
-    return recognize(crops, slot, task, emit_chars=emit_chars)
+    return recognize(crops, slot, emit_chars=emit_chars)
 
 
 def recognize_blocks(pages: DataFrame,
@@ -553,7 +551,7 @@ def recognize_blocks(pages: DataFrame,
     return recognize(crops, slot, task="block_without_boxes")
 
 
-def drop_repeated_lines(ocr_lines: DataFrame, window: int = 40) -> DataFrame:
+def drop_repeated_lines(ocr_lines: DataFrame) -> DataFrame:
     """The reference's drop_repeated_text=True post-check
     (/root/reference/surya/recognition/__init__.py:643-655, pinned by ref
     tests/test_recognition.py:41-56): a line whose decoded stream has
@@ -567,7 +565,7 @@ def drop_repeated_lines(ocr_lines: DataFrame, window: int = 40) -> DataFrame:
     # chars-as-tokens: the relational stand-in for the decoder's token-id
     # stream (a looping id stream IS a looping char stream after decode)
     toks = F.array_remove(F.split(F.col("text"), ""), "")
-    rep = detect_repeat_token(toks, window)
+    rep = detect_repeat_token(toks)
     cols = {
         "text": F.when(rep, F.lit("")).otherwise(F.col("text")),
         "confidence": F.when(rep, F.lit(0.0)).otherwise(F.col("confidence")),
@@ -599,9 +597,14 @@ def line_confidence(ocr_lines: DataFrame) -> DataFrame:
     )
 
 
-def dedupe_close_chars(ocr_lines: DataFrame, tol: float = 0.1) -> DataFrame:
-    """Drop consecutive chars whose bboxes coincide within tol px —
-    multi-token characters decode to repeated boxes in the reference
+# consecutive chars whose bbox corners all lie within this many px of
+# each other are one character (ref surya/recognition/util.py:100-120)
+CLOSE_CHAR_TOL = 0.1
+
+
+def dedupe_close_chars(ocr_lines: DataFrame) -> DataFrame:
+    """Drop consecutive chars whose bboxes coincide within CLOSE_CHAR_TOL
+    px — multi-token characters decode to repeated boxes in the reference
     (clean_close_polygons, /root/reference/surya/recognition/util.py:100-120).
     Lag-window formulation over exploded chars; rebuilt nested."""
     ex = ocr_lines.select(
@@ -610,10 +613,10 @@ def dedupe_close_chars(ocr_lines: DataFrame, tol: float = 0.1) -> DataFrame:
     )
     w = Window.partitionBy("media_ref", "line_idx").orderBy("pos")
     close = (
-        (F.abs(F.col("ch.x1") - F.lag("ch.x1").over(w)) < tol)
-        & (F.abs(F.col("ch.y1") - F.lag("ch.y1").over(w)) < tol)
-        & (F.abs(F.col("ch.x2") - F.lag("ch.x2").over(w)) < tol)
-        & (F.abs(F.col("ch.y2") - F.lag("ch.y2").over(w)) < tol)
+        (F.abs(F.col("ch.x1") - F.lag("ch.x1").over(w)) < CLOSE_CHAR_TOL)
+        & (F.abs(F.col("ch.y1") - F.lag("ch.y1").over(w)) < CLOSE_CHAR_TOL)
+        & (F.abs(F.col("ch.x2") - F.lag("ch.x2").over(w)) < CLOSE_CHAR_TOL)
+        & (F.abs(F.col("ch.y2") - F.lag("ch.y2").over(w)) < CLOSE_CHAR_TOL)
         & (F.col("ch.text") == F.lag("ch.text").over(w))
     )
     kept = ex.withColumn("_dup", F.coalesce(close, F.lit(False))).filter(

@@ -469,11 +469,17 @@ def table_crop_payload(desc: dict, bbox: list[float]) -> dict:
     return payload
 
 
+def pack_table_crop(payload: dict) -> bytes:
+    """A table crop payload serialized to an SPC1 crop blob — the form a
+    table crop takes where it becomes a Spark row (table_crops,
+    fused_all_crops); decode_crop(pack_table_crop(p)) == p."""
+    return CROP_MAGIC + zlib.compress(
+        json.dumps(payload, sort_keys=True).encode())
+
+
 def encode_table_crop(desc: dict, bbox: list[float]) -> bytes:
-    """table_crop_payload serialized to an SPC1 crop blob — the
-    layout→table crop join payload (table_crops, fused_all_crops)."""
-    return CROP_MAGIC + zlib.compress(json.dumps(
-        table_crop_payload(desc, bbox), sort_keys=True).encode())
+    """pack_table_crop(table_crop_payload(desc, bbox))."""
+    return pack_table_crop(table_crop_payload(desc, bbox))
 
 
 # -------------------------------------------------------- provider pattern

@@ -57,8 +57,8 @@ def _table_bbox(b) -> list[float]:
 
 def table_crop_row(ref: str, table_idx: int, b, desc) -> dict:
     """One table box (b's x1..y2) → its crop row: the box expanded by
-    _table_bbox, then encoded from the decoded page desc. The one crop
-    rule of table_crops and table_crop_rows."""
+    _table_bbox, then encoded from the decoded page desc — table_crops'
+    form of page_table_crops' rows."""
     bbox = _table_bbox(b)
     return {
         "media_ref": ref, "table_idx": table_idx,
@@ -111,11 +111,23 @@ def table_crops(regions: DataFrame, pages: DataFrame) -> DataFrame:
 def table_crop_rows(ref: str, w: int, h: int, blob: bytes,
                     layout_slot: Callable,
                     desc=None) -> tuple[list[dict], object]:
-    """Per-page kernel of the crop-level page pass (fused.fused_all_crops)
-    for the layout→table-crop chain:
-    layout slot (tiled per layout.page_tile_plan for oversize pages) →
-    cross-tile merge → header/footer relabel → Table filter → ordered
-    table_idx → inline crop encode, emitting the rows
+    """page_table_crops with each crop serialized to `crop_bytes`
+    (slots.pack_table_crop): the rows table_crops(layout_stage_tiled(
+    pages), pages) produces for one page, as fused.fused_all_crops emits
+    them."""
+    rows, desc = page_table_crops(ref, w, h, blob, layout_slot, desc)
+    return [{**{k: v for k, v in r.items() if k != "crop"},
+             "crop_bytes": slots.pack_table_crop(r["crop"])}
+            for r in rows], desc
+
+
+def page_table_crops(ref: str, w: int, h: int, blob: bytes,
+                     layout_slot: Callable,
+                     desc=None) -> tuple[list[dict], object]:
+    """Per-page kernel of the page pass (fused) for the layout→table-crop
+    chain: layout slot (tiled per layout.page_tile_plan for oversize
+    pages) → cross-tile merge → header/footer relabel → Table filter →
+    ordered table_idx → crop, emitting the tables
     table_crops(layout_stage_tiled(pages), pages) produces — without
     materializing the region table. The relational chain's stitch join,
     merge shuffle, position and table_idx windows and collect_list join
@@ -124,26 +136,16 @@ def table_crop_rows(ref: str, w: int, h: int, blob: bytes,
     relabel_header_footer_record) so the two paths cannot drift, and
     crops are pytest-pinned byte-identical against the relational path.
     Per-page work is bounded (≤4 tiles × ≤100 regions).
-    page_table_crops is the same kernel with the crops left
-    unserialized.
+
+    The rows carry `crop`, the slots.table_crop_payload a table slot
+    takes: fused_page_items hands it straight to tables.crop_cells, so
+    no table crop is serialized there.
 
     Returns (crop row dicts, decoded page or the desc passed in) —
     callers chaining several page-grain kernels reuse desc, so the
     kernels decode the blob at most once per page between them (the
     slots decode it themselves); pages with no tables (and
     small enough to skip tiling) never pay the decode."""
-    tboxes, desc = _table_boxes(ref, w, h, blob, layout_slot, desc)
-    return [table_crop_row(ref, t_idx, b, desc)
-            for t_idx, b in enumerate(tboxes)], desc
-
-
-def page_table_crops(ref: str, w: int, h: int, blob: bytes,
-                     layout_slot: Callable,
-                     desc=None) -> tuple[list[dict], object]:
-    """table_crop_rows with each crop left in memory: the rows carry
-    `crop`, the slots.table_crop_payload a table slot takes, instead of
-    `crop_bytes`. The page pass (fused.fused_page_items) hands these
-    straight to tables.crop_cells, so no table crop is serialized."""
     tboxes, desc = _table_boxes(ref, w, h, blob, layout_slot, desc)
     rows = []
     for t_idx, b in enumerate(tboxes):

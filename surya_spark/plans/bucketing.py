@@ -14,8 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def write_bucketed(df: DataFrame, table: str, key: str,
-                   n_buckets: int = 16,
-                   sort_within: bool = True) -> None:
+                   n_buckets: int = 16) -> None:
     """Materialize df as a bucketed+sorted managed table (overwrite).
     Drops any stale table AND its warehouse location first — an orphaned
     location from a previous in-memory catalog session blocks
@@ -28,10 +27,8 @@ def write_bucketed(df: DataFrame, table: str, key: str,
     loc = warehouse.replace("file:", "") + "/" + table.lower()
     shutil.rmtree(loc, ignore_errors=True)
 
-    w = df.write.mode("overwrite").bucketBy(n_buckets, key)
-    if sort_within:
-        w = w.sortBy(key)
-    w.saveAsTable(table)
+    df.write.mode("overwrite").bucketBy(n_buckets, key).sortBy(key) \
+        .saveAsTable(table)
 
 
 def bucketed_join(spark: SparkSession, left_table: str, right_table: str,

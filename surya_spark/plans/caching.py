@@ -50,9 +50,9 @@ _registry: list = []
 _registry_lock = threading.Lock()
 
 
-def managed(df: DataFrame, storage_level=None) -> DataFrame:
+def managed(df: DataFrame) -> DataFrame:
     """persist() + register for deferred release."""
-    p = df.persist(storage_level) if storage_level is not None else df.persist()
+    p = df.persist()
     with _registry_lock:
         _registry.append(p)
     return p

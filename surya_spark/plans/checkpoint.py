@@ -26,6 +26,7 @@ from __future__ import annotations
 import time
 from typing import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,10 +50,18 @@ class CheckpointRunner:
         return f"{self.base}/_lineage"
 
     def lineage(self) -> DataFrame | None:
+        """The lineage rows, or None while no group has committed: the
+        directory is absent, or holds only the _temporary/ of a run
+        killed during its first append. Any other read failure (a
+        corrupt lineage file) raises — reading it as a fresh run would
+        forget every committed bucket and recompute them all."""
         try:
             return self.spark.read.parquet(self._lineage_path())
-        except Exception:
-            return None
+        except AnalysisException as e:
+            if e.getCondition() in ("PATH_NOT_FOUND",
+                                    "UNABLE_TO_INFER_SCHEMA"):
+                return None
+            raise
 
     def _committed_buckets(self, stage: str) -> set[int]:
         lin = self.lineage()

@@ -23,8 +23,9 @@ from pyspark.sql import functions as F
 DETECTOR_CHUNK_PX = 1400  # vertical split height, settings.py:58-60 analog
 
 
-def page_cost(height: Column, chunk: int = DETECTOR_CHUNK_PX) -> Column:
-    return F.greatest(F.lit(1), F.ceil(height.cast("double") / chunk)).cast("int")
+def page_cost(height: Column) -> Column:
+    return F.greatest(F.lit(1), F.ceil(
+        height.cast("double") / DETECTOR_CHUNK_PX)).cast("int")
 
 
 def pack_by_cost(df: DataFrame, cost_col: str, n_partitions: int,
@@ -72,8 +73,12 @@ def two_phase_agg(df: DataFrame, key: str, cost_col: str, child: str,
     return partial.groupBy(key).agg(*final_aggs)
 
 
-def spread_small_input(df: DataFrame, *key_cols: str,
-                       min_ratio: float = 0.5) -> DataFrame:
+# spread_small_input leaves an input with at least this share of
+# defaultParallelism partitions as it is
+SPREAD_MIN_RATIO = 0.5
+
+
+def spread_small_input(df: DataFrame, *key_cols: str) -> DataFrame:
     """Repartition a SMALL input so heavy per-row expressions downstream
     (regex normalization, wide projections, Python kernels) use the whole
     cluster instead of the scan's split count.
@@ -83,16 +88,17 @@ def spread_small_input(df: DataFrame, *key_cols: str,
     exist, and Catalyst evaluates every downstream narrow projection
     inside that task (measured: the dedup family's normalize+tokenize ran
     on 2 of 32 cores at sf1.0, 5.2 s of pure serial regex). Scale-aware:
-    a no-op whenever the input already has ≥ min_ratio × defaultParallelism
-    partitions — a 100 TB table with thousands of splits is never
-    reshuffled, so this costs nothing on the deployment path.
+    a no-op whenever the input already has ≥ SPREAD_MIN_RATIO ×
+    defaultParallelism partitions — a 100 TB table with thousands of
+    splits is never reshuffled, so this costs nothing on the deployment
+    path.
 
     With key_cols, hash-repartitions on them (spark.sql.shuffle.partitions
     many) so a downstream window/groupBy/cogroup on the same key reuses
     the exchange (no second shuffle); without, round-robin."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= max(1, int(target * min_ratio)):
+    if df.rdd.getNumPartitions() >= max(1, int(target * SPREAD_MIN_RATIO)):
         return df
     if key_cols:
         return df.repartition(*[F.col(c) for c in key_cols])

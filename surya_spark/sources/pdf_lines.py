@@ -81,20 +81,19 @@ def fake_pdf_extract(pdf_bytes: bytes) -> list[dict]:
 
 
 def pdf_text_lines(pdfs: DataFrame,
-                   extractor: Callable[[bytes], list[dict]] = fake_pdf_extract,
-                   ref_col: str = "media_ref",
-                   bytes_col: str = "img_bytes",
-                   img_width: str = "width",
-                   img_height: str = "height") -> DataFrame:
-    """pdf blobs → ground-truth line table (media_ref, page_idx, line_idx,
-    bbox in IMAGE pixel space). Rescale from PDF point space uses int
-    truncation exactly like the reference (surya/common/util.py:39-51)."""
+                   extractor: Callable[[bytes], list[dict]] = fake_pdf_extract
+                   ) -> DataFrame:
+    """pdf blobs (media_ref, img_bytes, width, height) → ground-truth line
+    table (media_ref, page_idx, line_idx, bbox in IMAGE pixel space).
+    Rescale from PDF point space uses int truncation exactly like the
+    reference (surya/common/util.py:39-51)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for ref, blob, iw, ih in zip(
-                pdf[ref_col], pdf[bytes_col], pdf[img_width], pdf[img_height]
+                pdf["media_ref"], pdf["img_bytes"], pdf["width"],
+                pdf["height"]
             ):
                 for pi, page in enumerate(extractor(bytes(blob))):
                     ws = float(iw) / page["page_w"]
@@ -109,16 +108,21 @@ def pdf_text_lines(pdfs: DataFrame,
                         })
             yield pd.DataFrame(rows)
 
-    return pdfs.select(ref_col, bytes_col, img_width, img_height) \
+    return pdfs.select("media_ref", "img_bytes", "width", "height") \
         .mapInPandas(run, schema=PDF_LINES)
 
 
-def join_adjacent_lines(lines: DataFrame, max_gap: float = 5.0) -> DataFrame:
+# join_adjacent_lines' largest vertical gap between joined lines
+# (ref benchmark/utils/bbox.py:28-53)
+MAX_JOIN_GAP = 5.0
+
+
+def join_adjacent_lines(lines: DataFrame) -> DataFrame:
     """The reference's join_lines (benchmark/utils/bbox.py:28-53): when an
     earlier line horizontally contains a later one and the vertical gap
-    |y1_a − y2_b| ≤ max_gap, the later merges into the earlier. The greedy
-    accumulate-into-first semantics are ordered → applyInPandas per
-    (media_ref, page_idx) group; groups are one PDF page (small), the
+    |y1_a − y2_b| ≤ MAX_JOIN_GAP, the later merges into the earlier. The
+    greedy accumulate-into-first semantics are ordered → applyInPandas
+    per (media_ref, page_idx) group; groups are one PDF page (small), the
     shuffle key is the page — scales."""
     schema = lines.schema
 
@@ -133,7 +137,7 @@ def join_adjacent_lines(lines: DataFrame, max_gap: float = 5.0) -> DataFrame:
                         b["x1"], b["y1"], b["x2"], b["y2"]):
                     continue
                 if (a["x1"] <= b["x1"] and a["x2"] >= b["x2"]
-                        and abs(a["y1"] - b["y2"]) <= max_gap):
+                        and abs(a["y1"] - b["y2"]) <= MAX_JOIN_GAP):
                     to_merge.setdefault(i, []).append(j)
         merged_away: set[int] = set()
         out = []

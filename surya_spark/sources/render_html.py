@@ -5,8 +5,8 @@ render_text_as_html, used by its streamlit/texify apps to visually
 check OCR + math output against the page image).
 
 Contract mirrored from the reference:
-  * every coordinate is scaled by `scaler` (default 2) and int-truncated;
-  * per-box font size = min(0.75 * min(width, height), base_font_size);
+  * every coordinate is scaled by SCALER (2) and int-truncated;
+  * per-box font size = min(0.75 * min(width, height), BASE_FONT_SIZE);
   * boxes taller than 2x their width get the vertical writing-mode class;
   * text that already carries HTML/MathML markup (html/math/div/sub/sup/
     i/u/mark/small/del/b/br/code tags) is embedded as-is so the math
@@ -34,6 +34,9 @@ _MARKUP_RE = re.compile(
     re.IGNORECASE)
 
 KATEX_MARKER = "<!-- katex.js bundle goes here at deployment -->"
+# the reference's render_text_as_html defaults
+BASE_FONT_SIZE = 16
+SCALER = 2
 
 _PAGE_CSS = """
 body {{ margin: 0; padding: 0; width: {w}px; height: {h}px;
@@ -46,11 +49,10 @@ body {{ margin: 0; padding: 0; width: {w}px; height: {h}px;
 """
 
 
-def _box_span(i: int, text: str, bbox, scaler: int,
-              base_font_size: int) -> str:
-    x1, y1, x2, y2 = (int(v * scaler) for v in bbox)
+def _box_span(i: int, text: str, bbox) -> str:
+    x1, y1, x2, y2 = (int(v * SCALER) for v in bbox)
     w, h = x2 - x1, y2 - y1
-    font = min(int(min(w, h) * 0.75), base_font_size)
+    font = min(int(min(w, h) * 0.75), BASE_FONT_SIZE)
     cls = "text-box vertical-text" if h > 2 * w else "text-box"
     body = (text if ("<" in text and ">" in text
                      and _MARKUP_RE.search(text))
@@ -61,13 +63,12 @@ def _box_span(i: int, text: str, bbox, scaler: int,
             f'style="{style}">{body}</span>')
 
 
-def page_html(texts, bboxes, width: int, height: int,
-              base_font_size: int = 16, scaler: int = 2) -> str:
+def page_html(texts, bboxes, width: int, height: int) -> str:
     """One self-contained HTML document re-typesetting the page's lines
     (ref render_text_as_html semantics, see module docstring)."""
-    w, h = int(width * scaler), int(height * scaler)
+    w, h = int(width * SCALER), int(height * SCALER)
     spans = "\n".join(
-        _box_span(i, t, b, scaler, base_font_size)
+        _box_span(i, t, b)
         for i, (t, b) in enumerate(zip(texts, bboxes)))
     return (
         "<!DOCTYPE html>\n<html>\n<head>\n<style>"
@@ -84,9 +85,7 @@ _RENDERED = T.StructType([
 ])
 
 
-def html_render_pages(ocr_lines: DataFrame, pages: DataFrame,
-                      base_font_size: int = 16,
-                      scaler: int = 2) -> DataFrame:
+def html_render_pages(ocr_lines: DataFrame, pages: DataFrame) -> DataFrame:
     """ocr_lines(media_ref, position, text, x1..y2) ⋈ page dims → one
     HTML document per page, lines in reading order. Aggregate-then-join
     (shuffle_hash — the line table derives from the corpus, never a
@@ -113,8 +112,7 @@ def html_render_pages(ocr_lines: DataFrame, pages: DataFrame,
                           for ln in lines]
                 rows.append({
                     "media_ref": ref, "n_lines": len(texts),
-                    "html": page_html(texts, bboxes, int(w), int(h),
-                                      base_font_size, scaler),
+                    "html": page_html(texts, bboxes, int(w), int(h)),
                 })
             yield pd.DataFrame(rows)
 

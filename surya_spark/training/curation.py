@@ -22,20 +22,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import text as TX
 from . import textstats
 
 
-def curate_corpus(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id",
-                  min_quality: float = 0.5,
+def curate_corpus(docs: DataFrame, min_quality: float = 0.5,
                   shard_tokens: int = 2000) -> DataFrame:
     """(doc_id, lang_pred, quality, n_tokens, keep, shard_id): keep =
     quality ≥ min_quality AND first occurrence of the content fingerprint;
     kept docs are packed into shards of ~shard_tokens tokens per language
     (cumulative token count ordered by doc_id — deterministic, not
     arrival-ordered)."""
-    prof = textstats.text_profile(docs, text_col=text_col, id_col=id_col)
+    prof = textstats.text_profile(docs)
     w_fp = Window.partitionBy("fp").orderBy("doc_id")
     ranked = prof.withColumn("dup_rank", F.row_number().over(w_fp))
     keep = (F.col("quality") >= min_quality) & (F.col("dup_rank") == 1)

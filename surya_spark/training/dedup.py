@@ -17,19 +17,27 @@ from pyspark.sql import types as T
 from ..functions import text as TX
 from ..plans import caching
 
+# words per shingle (shingle_id_rows' k)
+SHINGLE_K = 3
+# a minhash signature has N_HASHES components, banded into BANDS LSH
+# bands of N_HASHES // BANDS rows each
+N_HASHES = 64
+BANDS = 16
 # 31-bit Mersenne prime for the minhash linear-permutation family
 # sig_i(x) = (a_i * (h(x) mod P) + b_i) mod P — products stay < 2^62 so the
 # arithmetic is exact in BIGINT on both Spark and DuckDB (oracle parity)
 # with no overflow even under ANSI mode.
 LIN_P = 2_147_483_647
+# seed of the (a_i, b_i) draws, shared with the DuckDB oracle
+LIN_SEED = 20240816
 
 
-def lin_coeffs(n: int, seed: int = 20240816) -> list[tuple[int, int]]:
+def lin_coeffs(n: int) -> list[tuple[int, int]]:
     """Deterministic (a_i, b_i) pairs for the linear minhash permutations.
     Shared by the Spark implementation and the DuckDB oracle generator."""
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(LIN_SEED)
     return [(rng.randrange(1, LIN_P), rng.randrange(0, LIN_P))
             for _ in range(n)]
 
@@ -42,18 +50,16 @@ def md5_id60(col) -> "F.Column":
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def shingle_id_rows(docs: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id", k: int = 3,
-                    extra_cols: tuple[str, ...] = (),
+def shingle_id_rows(docs: DataFrame, extra_cols: tuple[str, ...] = (),
                     hashed: str = "xxhash64") -> DataFrame:
-    """Flat (doc_id, [extra...], s) rows of DISTINCT hashed word k-shingles.
+    """Flat (doc_id, [extra...], s) rows of DISTINCT hashed word
+    k-shingles of the `text` column, k = SHINGLE_K.
 
     Physical shape chosen by measurement: posexplode tokens → lead(k−1)
     window → xxhash64(tok, lead1, …) → dropDuplicates. Every step is
     whole-stage-codegen; the array-valued transform() formulation of the
     same thing evaluates interpreted and ran ~10× slower at sf0.1.
-    Short docs (< k tokens) contribute one whole-text shingle, matching
-    TX.shingles/shingle_ids semantics exactly.
+    Short docs (< k tokens) contribute one whole-text shingle.
 
     hashed='xxhash64' (fast JVM path) or 'md5' (md5_id60 of the
     space-joined shingle string — bit-replicable by the DuckDB oracle).
@@ -71,10 +77,11 @@ def shingle_id_rows(docs: DataFrame, text_col: str = "text",
       that column was ~8× the shuffle bytes of the window exchange."""
     from ..plans import partitioning
 
-    base = partitioning.spread_small_input(docs, id_col).select(
-        F.col(id_col).alias("doc_id"),
+    k = SHINGLE_K
+    base = partitioning.spread_small_input(docs, "doc_id").select(
+        F.col("doc_id"),
         *[F.col(c) for c in extra_cols],
-        TX.tokenize_ws(TX.normalize_text(F.col(text_col))).alias("toks"),
+        TX.tokenize_ws(TX.normalize_text(F.col("text"))).alias("toks"),
     )
     nt = F.size("toks")
     explodable = (
@@ -104,35 +111,32 @@ def shingle_id_rows(docs: DataFrame, text_col: str = "text",
     )
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact near-dup via content fingerprint (md5 of normalized text):
     rank within fingerprint group; keep = rank 1. One hash-partitioned
     shuffle on the fingerprint — at 100 TB this is the cheapest possible
     dedup (no pairwise work at all)."""
-    w = Window.partitionBy("fp").orderBy(id_col)
+    w = Window.partitionBy("fp").orderBy("doc_id")
     return (
         docs.select(
-            F.col(id_col).alias("doc_id"),
-            TX.fingerprint(F.col(text_col)).alias("fp"),
+            F.col("doc_id"),
+            TX.fingerprint(F.col("text")).alias("fp"),
         )
         .withColumn("dup_rank", F.row_number().over(w).cast("long"))
         .withColumn("keep", F.col("dup_rank") == 1)
     )
 
 
-def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", block_col: str = "source",
-                        k: int = 3, threshold: float = 0.5,
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
                         df_cap: int | None = None) -> DataFrame:
     """n-gram (word k-shingle) Jaccard via an inverted index: explode
-    (doc, shingle), self-join on (block, shingle), count co-occurrences →
-    |A∩B|; |A∪B| = |A|+|B|−|A∩B|.
+    (doc, shingle), self-join on (block = `source`, shingle), count
+    co-occurrences → |A∩B|; |A∪B| = |A|+|B|−|A∩B|.
 
     Only pairs that SHARE a shingle are ever materialized — the
     all-pairs-within-block array-intersection variant degrades
     quadratically with block size, while this shape scales with shingle
-    co-occurrence. Shingles travel as hashed 64-bit ids (shingle_ids);
+    co-occurrence. Shingles travel as hashed 64-bit ids (shingle_id_rows);
     per-doc set sizes attach at PAIR grain after the co-occurrence
     aggregate (r7 — keeping them on the exploded rows forced an extra
     doc_id window shuffle of the whole index between the df-cap window
@@ -147,10 +151,9 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
     exact Jaccard over the capped shingle universe (a well-defined,
     oracle-replicable semantic, not an approximation of the uncapped one).
     Worst-case join fan-out per (block, shingle) key is then df_cap²."""
-    rows = shingle_id_rows(docs, text_col, id_col, k,
-                           extra_cols=(block_col,))
+    rows = shingle_id_rows(docs, extra_cols=("source",))
     if df_cap is not None:
-        wdf = Window.partitionBy(block_col, "s")
+        wdf = Window.partitionBy("source", "s")
         rows = (
             rows.withColumn("_df", F.count(F.lit(1)).over(wdf))
             .filter(F.col("_df") <= df_cap)
@@ -163,7 +166,7 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
     # and back; set sizes now attach at PAIR grain (two small joins on an
     # aggregate ~50k-row table), the _jaccard_over_candidates shape. The
     # capped index feeds three consumers → persist (CLAUDE.md rule 2).
-    ex = caching.managed(rows.withColumnRenamed(block_col, "block"))
+    ex = caching.managed(rows.withColumnRenamed("source", "block"))
     n = ex.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("double").alias("n"))
     a, b = ex.alias("a"), ex.alias("b")
@@ -209,10 +212,9 @@ def _shingle_hash(hash_mode: str) -> str:
     return SHINGLE_HASH[hash_mode]
 
 
-def _minhash_wide(rows: DataFrame, n_hashes: int,
-                  hash_mode: str) -> DataFrame:
+def _minhash_wide(rows: DataFrame, hash_mode: str) -> DataFrame:
     """(doc_id, h0..h{n-1}) from flat shingle-id rows: one groupBy with
-    n_hashes min() aggregates. All JVM/codegen; the naive alternative
+    N_HASHES min() aggregates. All JVM/codegen; the naive alternative
     (nested higher-order transforms over the shingle array) falls out of
     whole-stage codegen and runs ~50× slower — measured, not guessed.
 
@@ -222,7 +224,7 @@ def _minhash_wide(rows: DataFrame, n_hashes: int,
     integer multiply-adds, replicable bit-for-bit by the DuckDB oracle.
     Any other mode raises ValueError."""
     if _shingle_hash(hash_mode) == "md5":
-        coeffs = lin_coeffs(n_hashes)
+        coeffs = lin_coeffs(N_HASHES)
         sm = F.pmod(F.col("s"), F.lit(LIN_P))
         aggs = [
             F.min(F.pmod(F.lit(a) * sm + F.lit(b), F.lit(LIN_P))).alias(f"h{i}")
@@ -231,21 +233,18 @@ def _minhash_wide(rows: DataFrame, n_hashes: int,
     else:
         aggs = [
             F.min(F.xxhash64(F.col("s"), F.lit(i))).alias(f"h{i}")
-            for i in range(n_hashes)
+            for i in range(N_HASHES)
         ]
     return rows.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", k: int = 3,
-                       n_hashes: int = 64,
+def minhash_signatures(docs: DataFrame,
                        hash_mode: str = "xxhash64") -> DataFrame:
     """MinHash signature array per doc: minhash_index's h0..h{n-1} as
     one `sig` array column."""
-    return minhash_index(docs, text_col, id_col, k, n_hashes,
-                         hash_mode).select(
+    return minhash_index(docs, hash_mode).select(
         "doc_id",
-        F.array(*[F.col(f"h{i}") for i in range(n_hashes)]).alias("sig"),
+        F.array(*[F.col(f"h{i}") for i in range(N_HASHES)]).alias("sig"),
     )
 
 
@@ -291,10 +290,7 @@ def _jaccard_over_candidates(cand: DataFrame, rows: DataFrame) -> DataFrame:
     return out.select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
 
 
-def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", k: int = 3,
-                      n_hashes: int = 64, bands: int = 16,
-                      threshold: float = 0.5,
+def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5,
                       hash_mode: str = "xxhash64") -> DataFrame:
     """MinHash + LSH banding: band bucket = the signature slice itself
     (comma-joined); candidates = equi-join on (band, bucket); candidates
@@ -312,9 +308,8 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
     # verify joins — persist or Spark re-executes the lineage per
     # branch; released by the first action on the returned pairs
     rows = caching.managed(shingle_id_rows(
-        docs, text_col, id_col, k, hashed=_shingle_hash(hash_mode)))
-    banded = _banded(_minhash_wide(rows, n_hashes, hash_mode),
-                     n_hashes, bands)
+        docs, hashed=_shingle_hash(hash_mode)))
+    banded = _banded(_minhash_wide(rows, hash_mode))
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
@@ -341,8 +336,7 @@ _SIMHASH_OUT = T.StructType([
 ])
 
 
-def simhash(docs: DataFrame, text_col: str = "text",
-            id_col: str = "doc_id") -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """64-bit SimHash per document. Near-dup pairs = small Hamming
     distance; pair generation uses segment blocking (pigeonhole: dist ≤ 3
     → at least one identical 16-bit segment), see simhash_pairs.
@@ -370,8 +364,8 @@ def simhash(docs: DataFrame, text_col: str = "text",
     # r7: spread before the Python kernel — the md5 signature ran on the
     # corpus file's TWO scan partitions (9 s of the bench query at sf1.0
     # was this kernel on 2 of 32 workers)
-    docs = partitioning.spread_small_input(docs, id_col).select(
-        F.col(id_col), TX.normalize_text(F.col(text_col)).alias(text_col))
+    docs = partitioning.spread_small_input(docs, "doc_id").select(
+        F.col("doc_id"), TX.normalize_text(F.col("text")).alias("text"))
 
     def run(batches):
         class TokenHash(dict):
@@ -390,7 +384,7 @@ def simhash(docs: DataFrame, text_col: str = "text",
         tok_hash = TokenHash().__getitem__
         for pdf in batches:
             ids, hashes = [], []
-            for did, txt in zip(pdf[id_col], pdf[text_col]):
+            for did, txt in zip(pdf["doc_id"], pdf["text"]):
                 toks = str(txt).lower().split()
                 hs = np.fromiter(map(tok_hash, toks), "<i8", len(toks))
                 # ones[k] = tokens with bit k set; bit k's ±1 vote is
@@ -406,7 +400,7 @@ def simhash(docs: DataFrame, text_col: str = "text",
                         f"simhash: non-numeric doc id {did!r}") from None
             yield pd.DataFrame({"doc_id": ids, "simhash": hashes})
 
-    return docs.select(id_col, text_col).mapInPandas(run, schema=_SIMHASH_OUT)
+    return docs.select("doc_id", "text").mapInPandas(run, schema=_SIMHASH_OUT)
 
 
 def simhash_pairs(sim: DataFrame, max_dist: int = 3) -> DataFrame:
@@ -456,41 +450,34 @@ def simhash_pairs(sim: DataFrame, max_dist: int = 3) -> DataFrame:
     return cand.filter(F.col("hamming") <= max_dist)
 
 
-def _banded(wide: DataFrame, n_hashes: int, bands: int) -> DataFrame:
+def _banded(wide: DataFrame) -> DataFrame:
     """(doc_id, h0..h{n-1}) → exploded (doc_id, band, bucket) rows; the
     bucket is the comma-joined signature slice (the LSH band key)."""
-    rows_per_band = n_hashes // bands
+    rows_per_band = N_HASHES // BANDS
     band_cols = [
         F.concat_ws(",", *[
             F.col(f"h{b * rows_per_band + j}").cast("string")
             for j in range(rows_per_band)
         ])
-        for b in range(bands)
+        for b in range(BANDS)
     ]
     return wide.select(
         "doc_id", F.posexplode(F.array(*band_cols)).alias("band", "bucket"))
 
 
-def minhash_index(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id", k: int = 3,
-                  n_hashes: int = 64,
-                  hash_mode: str = "md5lin") -> DataFrame:
+def minhash_index(docs: DataFrame, hash_mode: str = "md5lin") -> DataFrame:
     """The compact corpus signature index (doc_id, h0..h{n-1}) — the
     ~300 B/doc table a rolling crawl materializes ONCE and appends to;
     feed it to minhash_novelty(corpus_index=) so new batches never
     re-read or re-shingle corpus text. Streaming analog:
     streaming/ingest.stream_incremental_dedup."""
     return _minhash_wide(
-        shingle_id_rows(docs, text_col, id_col, k,
-                        hashed=_shingle_hash(hash_mode)),
-        n_hashes, hash_mode)
+        shingle_id_rows(docs, hashed=_shingle_hash(hash_mode)), hash_mode)
 
 
 def minhash_novelty(new_docs: DataFrame,
                     corpus_docs: DataFrame | None = None,
-                    text_col: str = "text", id_col: str = "doc_id",
-                    threshold: float = 0.5, k: int = 3,
-                    n_hashes: int = 64, bands: int = 16,
+                    threshold: float = 0.5,
                     hash_mode: str = "md5lin",
                     corpus_index: DataFrame | None = None) -> DataFrame:
     """INCREMENTAL dedup: flag each NEW document as novel or near-dup of
@@ -512,15 +499,13 @@ def minhash_novelty(new_docs: DataFrame,
     est ≥ t."""
     if (corpus_docs is None) == (corpus_index is None):
         raise ValueError("pass exactly one of corpus_docs / corpus_index")
-    new_wide = caching.managed(minhash_index(
-        new_docs, text_col, id_col, k, n_hashes, hash_mode))
+    new_wide = caching.managed(minhash_index(new_docs, hash_mode))
     corp_wide = caching.managed(
         corpus_index if corpus_index is not None
-        else minhash_index(corpus_docs, text_col, id_col, k,
-                           n_hashes, hash_mode))
+        else minhash_index(corpus_docs, hash_mode))
     cand = (
-        _banded(new_wide, n_hashes, bands).alias("n")
-        .join(_banded(corp_wide, n_hashes, bands).alias("c")
+        _banded(new_wide).alias("n")
+        .join(_banded(corp_wide).alias("c")
               .hint("shuffle_hash"),
               (F.col("n.band") == F.col("c.band"))
               & (F.col("n.bucket") == F.col("c.bucket")))
@@ -530,7 +515,7 @@ def minhash_novelty(new_docs: DataFrame,
     )
     agree = sum(
         (F.col(f"a.h{i}") == F.col(f"b.h{i}")).cast("int")
-        for i in range(n_hashes)
+        for i in range(N_HASHES)
     )
     est = (
         cand
@@ -539,13 +524,13 @@ def minhash_novelty(new_docs: DataFrame,
         .join(corp_wide.alias("b").hint("shuffle_hash"),
               F.col("corp_id") == F.col("b.doc_id"))
         .select("new_id",
-                (agree.cast("double") / F.lit(float(n_hashes)))
+                (agree.cast("double") / F.lit(float(N_HASHES)))
                 .alias("est"))
         .groupBy("new_id")
         .agg(F.max("est").alias("max_est"))
     )
     out = (
-        new_docs.select(F.col(id_col).alias("doc_id"))
+        new_docs.select(F.col("doc_id"))
         .join(est.withColumnRenamed("new_id", "doc_id")
               .hint("shuffle_hash"), "doc_id", "left")
         .select(

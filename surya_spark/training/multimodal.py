@@ -83,27 +83,26 @@ def _fake_decode(blob: bytes) -> dict:
     return {"width": None, "height": None, "format": "unknown"}
 
 
-def media_metadata(media: DataFrame, ref_col: str = "media_ref",
-                   bytes_col: str = "img_bytes",
-                   media_type: str = "image",
-                   decoder=_fake_decode) -> DataFrame:
-    """binary column → typed metadata rows. One Arrow batch of blobs per
-    UDF call; blobs never shuffle (derived columns are tiny)."""
+def media_metadata(media: DataFrame, decoder=_fake_decode) -> DataFrame:
+    """(media_ref, img_bytes) image blobs → typed metadata rows. One
+    Arrow batch of blobs per UDF call; blobs never shuffle (derived
+    columns are tiny)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for ref, blob in zip(pdf[ref_col], pdf[bytes_col]):
+            for ref, blob in zip(pdf["media_ref"], pdf["img_bytes"]):
                 blob = bytes(blob)
                 meta = decoder(blob)
                 rows.append({
-                    "media_ref": ref, "media_type": media_type,
+                    "media_ref": ref, "media_type": "image",
                     "width": meta["width"], "height": meta["height"],
                     "n_bytes": len(blob), "format": meta["format"],
                 })
             yield pd.DataFrame(rows)
 
-    return media.select(ref_col, bytes_col).mapInPandas(run, schema=MEDIA_META)
+    return media.select("media_ref", "img_bytes").mapInPandas(
+        run, schema=MEDIA_META)
 
 
 def _fake_features(blob: bytes, dim: int) -> list[float]:
@@ -119,18 +118,18 @@ def _fake_features(blob: bytes, dim: int) -> list[float]:
 
 
 def media_features(media: DataFrame, dim: int = 16,
-                   ref_col: str = "media_ref",
-                   bytes_col: str = "img_bytes",
                    extractor=_fake_features) -> DataFrame:
-    """binary column → fixed-dim feature vector (Arrow-batched)."""
+    """(media_ref, img_bytes) blobs → fixed-dim feature vector
+    (Arrow-batched)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = [
                 {"media_ref": ref, "feature": extractor(bytes(blob), dim)}
-                for ref, blob in zip(pdf[ref_col], pdf[bytes_col])
+                for ref, blob in zip(pdf["media_ref"], pdf["img_bytes"])
             ]
             yield pd.DataFrame(rows)
 
-    return media.select(ref_col, bytes_col).mapInPandas(run, schema=FEATURES)
+    return media.select("media_ref", "img_bytes").mapInPandas(
+        run, schema=FEATURES)
 

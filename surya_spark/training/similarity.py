@@ -65,11 +65,6 @@ def norm(a: Column | str, dim: int | None = None) -> Column:
     )
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    d = norm(a, dim) * norm(b, dim)
-    return F.when(d > 0, dot(a, b, dim) / d).otherwise(F.lit(0.0))
-
-
 def with_norm(df: DataFrame, vec_col: str, out_col: str,
               dim: int | None = None) -> DataFrame:
     """Materialize the vector norm as a column BEFORE any pairwise join:
@@ -81,10 +76,9 @@ def with_norm(df: DataFrame, vec_col: str, out_col: str,
 
 
 def knn_bruteforce(vectors: DataFrame, queries: DataFrame, k: int = 5,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   query_id: str = "query_id",
                    dim: int | None = None) -> DataFrame:
-    """Exact top-k neighbors per query by cosine. CONTRACT: queries MUST
+    """Exact top-k neighbors per query by cosine: (vec_id, embedding)
+    vectors against (query_id, embedding) queries. CONTRACT: queries MUST
     be small (it is driver-broadcast — the deliberate exception to the
     no-data-derived-broadcast rule, valid only because the query set is
     bounded by the caller, e.g. a pushed filter); anyone re-wiring this
@@ -95,7 +89,7 @@ def knn_bruteforce(vectors: DataFrame, queries: DataFrame, k: int = 5,
     from ..plans import partitioning
 
     q = with_norm(
-        queries.select(F.col(query_id), F.col(vec_col).alias("q_vec")),
+        queries.select(F.col("query_id"), F.col("embedding").alias("q_vec")),
         "q_vec", "q_n", dim)
     # r7: the map-side nested loop evaluates |Q| dot expressions per
     # vector row — on a single-row-group embeddings file that ran on 2 of
@@ -103,18 +97,18 @@ def knn_bruteforce(vectors: DataFrame, queries: DataFrame, k: int = 5,
     # inputs)
     v = with_norm(
         partitioning.spread_small_input(vectors).select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("v_vec")),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("v_vec")),
         "v_vec", "v_n", dim)
     d = F.col("q_n") * F.col("v_n")
     cos = F.when(d > 0, dot("q_vec", "v_vec", dim) / d) \
         .otherwise(F.lit(0.0))
     scored = v.crossJoin(F.broadcast(q)).select(
-        query_id,
+        "query_id",
         "neighbor_id",
         F.round(cos, 6).alias("cosine"),
     )
-    w = Window.partitionBy(query_id).orderBy(
+    w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
     return (
@@ -124,11 +118,10 @@ def knn_bruteforce(vectors: DataFrame, queries: DataFrame, k: int = 5,
 
 
 def assign_clusters(vectors: DataFrame, centroids: DataFrame,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    cent_id: str = "centroid_id",
                     dim: int | None = None,
                     nprobe: int = 1) -> DataFrame:
-    """IVF coarse quantization: the nprobe nearest centroids per vector
+    """IVF coarse quantization: the nprobe nearest (centroid_id, embedding)
+    centroids per (vec_id, embedding) vector
     (centroids broadcast; ranking via window over the small per-vector
     candidate set). Output carries (cluster, probe_rank, c_cos) — rank 1
     is the primary assignment used to index a vector; ranks 2..nprobe are
@@ -136,34 +129,34 @@ def assign_clusters(vectors: DataFrame, centroids: DataFrame,
     from ..plans import partitioning
 
     c = with_norm(
-        centroids.select(F.col(cent_id), F.col(vec_col).alias("c_vec")),
+        centroids.select(F.col("centroid_id"),
+                         F.col("embedding").alias("c_vec")),
         "c_vec", "c_n", dim)
     # r7: spread on the vector id BEFORE the per-vector×centroid dot
     # expressions (single-row-group scans are one task); the probe_rank
     # window partitions by the same id and reuses this exchange
     vv = with_norm(
-        partitioning.spread_small_input(vectors, id_col)
-        .select(id_col, vec_col), vec_col, "v_n", dim)
+        partitioning.spread_small_input(vectors, "vec_id")
+        .select("vec_id", "embedding"), "embedding", "v_n", dim)
     d = F.col("v_n") * F.col("c_n")
-    cos = F.when(d > 0, dot(vec_col, "c_vec", dim) / d) \
+    cos = F.when(d > 0, dot("embedding", "c_vec", dim) / d) \
         .otherwise(F.lit(0.0))
     scored = vv.crossJoin(F.broadcast(c)).select(
-        id_col, vec_col, cent_id,
+        "vec_id", "embedding", "centroid_id",
         F.round(cos, 6).alias("c_cos"),
     )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("c_cos").desc(), F.col(cent_id)
+    w = Window.partitionBy("vec_id").orderBy(
+        F.col("c_cos").desc(), F.col("centroid_id")
     )
     return (
         scored.withColumn("probe_rank", F.row_number().over(w))
         .filter(F.col("probe_rank") <= nprobe)
-        .select(id_col, vec_col, F.col(cent_id).alias("cluster"),
+        .select("vec_id", "embedding", F.col("centroid_id").alias("cluster"),
                 "probe_rank", "c_cos")
     )
 
 
 def knn_ivf(vectors: DataFrame, centroids: DataFrame, k: int = 3,
-            id_col: str = "vec_id", vec_col: str = "embedding",
             dim: int | None = None, nprobe: int = 1,
             cluster_cap: int | None = None) -> DataFrame:
     """Approximate top-k neighbors for every vector: assign clusters, then
@@ -184,17 +177,16 @@ def knn_ivf(vectors: DataFrame, centroids: DataFrame, k: int = 3,
     # The cache is released by the first action on the returned top-k
     # (persist-lifecycle ownership, plans/caching.py).
     probes = caching.managed(
-        assign_clusters(vectors, centroids, id_col, vec_col,
-                        dim=dim, nprobe=nprobe))
+        assign_clusters(vectors, centroids, dim=dim, nprobe=nprobe))
     index = probes.filter(F.col("probe_rank") == 1)
     if cluster_cap is not None:
         w_cap = Window.partitionBy("cluster").orderBy(
-            F.col("c_cos").desc(), F.col(id_col))
+            F.col("c_cos").desc(), F.col("vec_id"))
         index = (
             index.withColumn("_cr", F.row_number().over(w_cap))
             .filter(F.col("_cr") <= cluster_cap).drop("_cr")
         )
-    scored = _cluster_topk_kernel(probes, index, k, id_col, vec_col)
+    scored = _cluster_topk_kernel(probes, index, k)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
@@ -204,22 +196,22 @@ def knn_ivf(vectors: DataFrame, centroids: DataFrame, k: int = 3,
     )
 
 
-def _cluster_score_sql(probes, index, id_col, vec_col, dim):
+def _cluster_score_sql(probes, index, dim):
     """Pre-r7 pairwise scoring: cluster equi-join + per-pair codegen dot.
     Test-only: the oracle the kernel is pytest-pinned against.
     Quadratic-per-cluster through ROW-AT-A-TIME expressions — at sf1.0
     (20k vectors, 8 clusters, nprobe 2) the driver measured 305 s."""
-    withn_q = with_norm(probes, vec_col, "_n", dim)
-    withn_i = with_norm(index, vec_col, "_n", dim)
+    withn_q = with_norm(probes, "embedding", "_n", dim)
+    withn_i = with_norm(index, "embedding", "_n", dim)
     a = withn_q.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
         F.col("_n").alias("q_n"),
         "cluster",
     )
     b = withn_i.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("v_vec"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("v_vec"),
         F.col("_n").alias("v_n"),
         "cluster",
     )
@@ -234,9 +226,13 @@ def _cluster_score_sql(probes, index, id_col, vec_col, dim):
     )
 
 
-def _cluster_topk_kernel(probes, index, k, id_col, vec_col,
-                         n_chunks: int = 16,
-                         q_block_elems: int = 4_000_000):
+# _cluster_topk_kernel salts each cluster's queries into IVF_CHUNKS
+# groups, and bounds its accumulator matrix at Q_BLOCK_ELEMS elements
+IVF_CHUNKS = 16
+Q_BLOCK_ELEMS = 4_000_000
+
+
+def _cluster_topk_kernel(probes, index, k):
     """Per-cluster top-k scoring as a COGROUP numpy kernel (r7): the same
     per-cluster pairwise cosines as _cluster_score_sql, evaluated as
     vectorized array ops instead of per-row codegen expressions.
@@ -256,9 +252,9 @@ def _cluster_topk_kernel(probes, index, k, id_col, vec_col,
     neighbor-id tie-break; a candidate outside the margin cannot enter
     the global top-k because any x, y with x − y > 1e-6 satisfy
     round6(x) > round6(y), so ≥ k candidates strictly precede it in its
-    own cluster regardless of id ties. Queries are salted into n_chunks
+    own cluster regardless of id ties. Queries are salted into IVF_CHUNKS
     groups per cluster (index side replicated per chunk) so 8 clusters
-    still fill 32 cores; q_block_elems bounds the accumulator matrix."""
+    still fill 32 cores; Q_BLOCK_ELEMS bounds the accumulator matrix."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -267,12 +263,12 @@ def _cluster_topk_kernel(probes, index, k, id_col, vec_col,
     # (index is a filter of it), and cogroup key resolution is ambiguous
     # on self-derived column references
     qside = probes.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("vec"),
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("vec"),
         F.col("cluster").alias("q_cl"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_chunks)).alias("q_ck"),
+        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(IVF_CHUNKS)).alias("q_ck"),
     )
     iside = index.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("vec"),
+        F.col("vec_id").alias("nid"), F.col("embedding").alias("vec"),
         F.col("cluster").alias("i_cl"),
     ).withColumn(
         # bigint to MATCH q_ck's type: cogroup aligns groups by key VALUE
@@ -280,10 +276,10 @@ def _cluster_topk_kernel(probes, index, k, id_col, vec_col,
         # disjoint group sets (measured: 64% of queries lost)
         "i_ck",
         F.explode(F.array(*[F.lit(i).cast("bigint")
-                            for i in range(n_chunks)])),
+                            for i in range(IVF_CHUNKS)])),
     )
 
-    id_type = probes.schema[id_col].dataType
+    id_type = probes.schema["vec_id"].dataType
     out_schema = T.StructType([
         T.StructField("query_id", id_type, False),
         T.StructField("neighbor_id", id_type, False),
@@ -307,7 +303,7 @@ def _cluster_topk_kernel(probes, index, k, id_col, vec_col,
         qn = _norms(Q)
         inn = _norms(I)
         ni = len(idf)
-        step = max(1, q_block_elems // max(ni, 1))
+        step = max(1, Q_BLOCK_ELEMS // max(ni, 1))
         frames = []
         for s in range(0, len(qdf), step):
             e = min(len(qdf), s + step)
@@ -343,9 +339,12 @@ def _cluster_topk_kernel(probes, index, k, id_col, vec_col,
     )
 
 
+# k-means seed of train_centroids
+KMEANS_SEED = 42
+
+
 def train_centroids(vectors: DataFrame, k: int = 8,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    seed: int = 42, max_iter: int = 10) -> DataFrame:
+                    max_iter: int = 10) -> DataFrame:
     """IVF coarse quantizer training: k-means|| over the embedding column
     (distributed MLlib implementation — the scale path for building the
     index, not just probing it). Returns (centroid_id, embedding) in the
@@ -354,20 +353,20 @@ def train_centroids(vectors: DataFrame, k: int = 8,
     from pyspark.ml.functions import array_to_vector, vector_to_array
 
     feat = vectors.select(
-        F.col(id_col),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
+        F.col("vec_id"),
+        array_to_vector(F.col("embedding").cast("array<double>"))
+        .alias("features"),
     )
-    model = KMeans(k=k, seed=seed, maxIter=max_iter).fit(feat)
+    model = KMeans(k=k, seed=KMEANS_SEED, maxIter=max_iter).fit(feat)
     centers = model.clusterCenters()
     sdf = vectors.sparkSession.createDataFrame(
         [(i, [float(v) for v in c]) for i, c in enumerate(centers)],
-        f"centroid_id int, {vec_col} array<float>",
+        "centroid_id int, embedding array<float>",
     )
     return sdf
 
 
 def cosine_near_dup(vectors: DataFrame, threshold: float = 0.95,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
                     block_col: str | None = None,
                     dim: int | None = None,
                     allow_cross_join: bool = False) -> DataFrame:
@@ -383,14 +382,14 @@ def cosine_near_dup(vectors: DataFrame, threshold: float = 0.95,
             "cosine_near_dup without block_col is an O(n^2) cross join; "
             "pass allow_cross_join=True for small inputs, or use "
             "embedding_lsh_pairs for label-free near-dup at scale")
-    withn = with_norm(vectors, vec_col, "_n", dim)
+    withn = with_norm(vectors, "embedding", "_n", dim)
     a = withn.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"),
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("vec_a"),
         F.col("_n").alias("n_a"),
         *( [F.col(block_col).alias("blk")] if block_col else [] ),
     )
     b = withn.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"),
+        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vec_b"),
         F.col("_n").alias("n_b"),
         *( [F.col(block_col).alias("blk")] if block_col else [] ),
     )
@@ -407,24 +406,26 @@ def cosine_near_dup(vectors: DataFrame, threshold: float = 0.95,
     ).filter(F.col("cosine") >= threshold)
 
 
-def random_hyperplanes(n_planes: int, dim: int,
-                       seed: int = 20240816) -> list[list[int]]:
+# seed of the random-hyperplane draws, shared with the DuckDB oracle
+PLANE_SEED = 20240816
+# embedding_lsh_pairs splits its sign bits into this many LSH bands
+LSH_BANDS = 4
+
+
+def random_hyperplanes(n_planes: int, dim: int) -> list[list[int]]:
     """Deterministic random-hyperplane coefficients (small integers in
     [-3, 3]): float32 embedding × small int products are EXACT in double,
     so the sign bits — the only thing that matters — are bit-reproducible
     by the DuckDB oracle summing in the same element order."""
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(PLANE_SEED)
     return [[rng.randint(-3, 3) for _ in range(dim)]
             for _ in range(n_planes)]
 
 
 def embedding_lsh_pairs(vectors: DataFrame, threshold: float = 0.8,
-                        n_planes: int = 32, bands: int = 4,
-                        id_col: str = "vec_id", vec_col: str = "embedding",
-                        dim: int = 64,
-                        seed: int = 20240816) -> DataFrame:
+                        n_planes: int = 32, dim: int = 64) -> DataFrame:
     """Label-free cosine near-dup at scale: random-hyperplane LSH
     (sign-bit SimHash over embeddings) replaces cosine_near_dup's
     block_col requirement — bucket = a band of sign bits, candidates =
@@ -439,36 +440,36 @@ def embedding_lsh_pairs(vectors: DataFrame, threshold: float = 0.8,
     anywhere."""
     from ..plans import partitioning
 
-    planes = random_hyperplanes(n_planes, dim, seed)
-    per_band = n_planes // bands
+    planes = random_hyperplanes(n_planes, dim)
+    per_band = n_planes // LSH_BANDS
     # single-row-group embedding files scan as 1-2 tasks; the sign
     # projection (and the norm projection below) must not run serially —
     # spread once, reuse for both consumers (r7)
-    vectors = partitioning.spread_small_input(vectors, id_col)
+    vectors = partitioning.spread_small_input(vectors, "vec_id")
     # banded feeds both sides of the self-join — persist the tiny
     # (id, band, bucket) table so the projection runs exactly once
-    banded = caching.managed(_banded_signs_kernel(
-        vectors, id_col, vec_col, planes, bands, per_band))
+    banded = caching.managed(_banded_signs_kernel(vectors, planes, per_band))
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
         )
         .distinct()
     )
     cand = caching.managed(cand)  # feeds both sides of the verify join
-    withn = with_norm(vectors.select(id_col, vec_col), vec_col, "_n", dim)
-    va = withn.select(F.col(id_col).alias("id_a"),
-                      F.col(vec_col).alias("va"), F.col("_n").alias("na"))
-    vb = withn.select(F.col(id_col).alias("id_b"),
-                      F.col(vec_col).alias("vb"), F.col("_n").alias("nb"))
+    withn = with_norm(vectors.select("vec_id", "embedding"), "embedding",
+                      "_n", dim)
+    va = withn.select(F.col("vec_id").alias("id_a"),
+                      F.col("embedding").alias("va"), F.col("_n").alias("na"))
+    vb = withn.select(F.col("vec_id").alias("id_b"),
+                      F.col("embedding").alias("vb"), F.col("_n").alias("nb"))
     paired = cand.join(va, "id_a").join(vb, "id_b")
     # per-pair cosine as a vectorized Arrow kernel: the 64-term per-row
     # SQL dot over millions of candidate pairs was the query's dominant
@@ -484,10 +485,9 @@ def embedding_lsh_pairs(vectors: DataFrame, threshold: float = 0.8,
     )
 
 
-def _banded_signs_kernel(vectors: DataFrame, id_col: str, vec_col: str,
-                         planes: list[list[int]], bands: int,
+def _banded_signs_kernel(vectors: DataFrame, planes: list[list[int]],
                          per_band: int) -> DataFrame:
-    """(id, band, bucket) rows: per-band sign-bit bucket strings from the
+    """(vec_id, band, bucket) rows: per-band sign-bit bucket strings from the
     random-hyperplane projection, computed batchwise in numpy.
 
     The pre-r7 form evaluated 32 ~50-term SQL sum expressions per row —
@@ -502,7 +502,7 @@ def _banded_signs_kernel(vectors: DataFrame, id_col: str, vec_col: str,
     from pyspark.sql import types as T
 
     out_schema = T.StructType([
-        vectors.schema[id_col],
+        vectors.schema["vec_id"],
         T.StructField("band", T.IntegerType(), False),
         T.StructField("bucket", T.StringType(), False),
     ])
@@ -513,7 +513,7 @@ def _banded_signs_kernel(vectors: DataFrame, id_col: str, vec_col: str,
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             n = len(pdf)
             bits = np.zeros((n, len(nonzero)), dtype=bool)
             for p, nz in enumerate(nonzero):
@@ -523,17 +523,17 @@ def _banded_signs_kernel(vectors: DataFrame, id_col: str, vec_col: str,
                     acc = acc + V[:, i] * wi
                 bits[:, p] = acc > 0
             chars = np.where(bits, "1", "0")
-            ids = pdf[id_col]
+            ids = pdf["vec_id"]
             frames = []
             for b in range(len(nonzero) // per_band):
                 seg = chars[:, b * per_band:(b + 1) * per_band]
                 frames.append(pd.DataFrame({
-                    id_col: ids, "band": b,
+                    "vec_id": ids, "band": b,
                     "bucket": ["".join(r) for r in seg],
                 }))
             yield pd.concat(frames, ignore_index=True)
 
-    return vectors.select(id_col, vec_col).mapInPandas(
+    return vectors.select("vec_id", "embedding").mapInPandas(
         run, schema=out_schema)
 
 

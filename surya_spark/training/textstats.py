@@ -10,19 +10,18 @@ from pyspark.sql import functions as F
 from ..functions import text as TX
 
 
-def text_profile(docs: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
-    """Per-doc: whitespace tokens, BPE-ish tokens, detected language,
-    quality score, fingerprint."""
+def text_profile(docs: DataFrame) -> DataFrame:
+    """Per-doc (doc_id): whitespace tokens, BPE-ish tokens, detected
+    language, quality score, fingerprint of the `text` column."""
     from ..plans import partitioning
 
-    t = F.col(text_col)
+    t = F.col("text")
     # r7: the profile's regex chains are heavy per-row work, and corpus
     # files with one row group scan as ONE task — spread first (no-op on
     # well-partitioned inputs; see partitioning.spread_small_input)
-    docs = partitioning.spread_small_input(docs, id_col)
+    docs = partitioning.spread_small_input(docs, "doc_id")
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         TX.token_count(t).alias("n_tokens"),
         TX.bpe_ish_token_count(t).alias("n_bpe_tokens"),
         TX.lang_id(t).alias("lang_pred"),
@@ -31,7 +30,7 @@ def text_profile(docs: DataFrame, text_col: str = "text",
     )
 
 
-def corpus_language_rollup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def corpus_language_rollup(docs: DataFrame) -> DataFrame:
     """Language × quality-band rollup — the kind of corpus report a
     training-data pipeline runs after extraction. Carries the
     human-readable language name (functions/languages.py, mirroring ref
@@ -42,9 +41,9 @@ def corpus_language_rollup(docs: DataFrame, text_col: str = "text") -> DataFrame
     from ..plans import partitioning
 
     prof = partitioning.spread_small_input(docs).select(
-        TX.lang_id(F.col(text_col)).alias("lang_pred"),
-        TX.quality_score(F.col(text_col)).alias("quality"),
-        TX.token_count(F.col(text_col)).alias("n_tokens"),
+        TX.lang_id(F.col("text")).alias("lang_pred"),
+        TX.quality_score(F.col("text")).alias("quality"),
+        TX.token_count(F.col("text")).alias("n_tokens"),
     )
     band = F.floor(F.col("quality") * 5).cast("int")
     return (

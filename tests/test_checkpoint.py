@@ -199,3 +199,35 @@ def test_failed_group_write_records_error_and_resumes(spark, tmp_path):
     assert out.count() == healthy().count()
     ok = runner.lineage().filter(F.col("error").isNull())
     assert {r["bucket"] for r in ok.collect()} == set(range(8))
+
+
+def _keys(spark):
+    return spark.range(64).select(F.col("id").cast("string").alias("k"))
+
+
+def test_corrupt_lineage_raises(spark, tmp_path):
+    """An unreadable lineage file must stop the run: read as "nothing
+    committed", it would make every later run forget and recompute all
+    committed buckets."""
+    import glob
+
+    base = str(tmp_path / "ckpt_corrupt")
+    runner = CheckpointRunner(spark, base, n_buckets=2, n_groups=1)
+    runner.stage("keys", lambda: _keys(spark), bucket_key="k")
+    [lineage_file] = glob.glob(f"{base}/_lineage/*.parquet")
+    with open(lineage_file, "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        runner.stage("keys", lambda: _keys(spark), bucket_key="k")
+
+
+def test_lineage_with_only_temporary_is_fresh(spark, tmp_path):
+    """A run killed during its first lineage append leaves only
+    _lineage/_temporary/: that is a fresh run, not an error."""
+    base = tmp_path / "ckpt_tmp"
+    (base / "_lineage" / "_temporary" / "0").mkdir(parents=True)
+    runner = CheckpointRunner(spark, str(base), n_buckets=2, n_groups=1)
+    assert runner.lineage() is None
+    out = runner.stage("keys", lambda: _keys(spark), bucket_key="k")
+    assert out.count() == 64
+    assert runner.lineage().count() == 2

@@ -388,11 +388,15 @@ def test_cubic_and_lanczos_resize_closed_forms():
     # A=-0.75 deliberately does not — its phase-0.75 first moment is
     # -3/64 — so the production kernel is validated against the direct
     # convolution below, not a ramp.)
-    import functools
+    def cr(x):  # _cubic_kernel's formula at A=-0.5
+        ax, A = np.abs(x), -0.5
+        return np.where(
+            ax <= 1.0, (A + 2.0) * ax ** 3 - (A + 3.0) * ax ** 2 + 1.0,
+            np.where(ax < 2.0, A * ax ** 3 - 5.0 * A * ax ** 2
+                     + 8.0 * A * ax - 4.0 * A, 0.0))
 
     yy, xx = np.mgrid[0:20, 0:30].astype(float)
     ramp = 2.0 * xx + 3.0 * yy + 1.0
-    cr = functools.partial(I._cubic_kernel, A=-0.5)
     out = I._resample_axis(
         I._resample_axis(ramp, 40, 0, cr, 2), 60, 1, cr, 2)
     yo = (np.arange(40) + 0.5) * 0.5 - 0.5

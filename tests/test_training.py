@@ -366,10 +366,9 @@ def test_knn_ivf_kernel_matches_sql_path(spark, dim):
     spark.catalog.clearCache()
 
     probes = caching.managed(similarity.assign_clusters(
-        emb, cents, "vec_id", "embedding", dim=dim, nprobe=2))
+        emb, cents, dim=dim, nprobe=2))
     index = probes.filter(F.col("probe_rank") == 1)
-    scored = similarity._cluster_score_sql(
-        probes, index, "vec_id", "embedding", dim)
+    scored = similarity._cluster_score_sql(probes, index, dim)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id"))
     old = (scored.withColumn("rank", F.row_number().over(w).cast("long"))

@@ -162,8 +162,8 @@ def telemetry(spark, sf_dir: str, cent_scaled: int = 80,
 
     # --- minhash band buckets (the candidate generator of minhash_lsh)
     wide = dedup._minhash_wide(
-        dedup.shingle_id_rows(docs, hashed="xxhash64"), 64, "xxhash64")
-    banded = dedup._banded(wide, 64, 16)
+        dedup.shingle_id_rows(docs, hashed="xxhash64"), "xxhash64")
+    banded = dedup._banded(wide)
     out["minhash_cand_pairs"], out["minhash_max_bucket"] = _c2(
         banded, "band", "bucket")
 
@@ -180,10 +180,10 @@ def telemetry(spark, sf_dir: str, cent_scaled: int = 80,
     # --- incremental dedup: new (odd) -> corpus (even) bucket fan-out
     new_b = dedup._banded(dedup._minhash_wide(
         dedup.shingle_id_rows(docs.filter(F.col("doc_id") % 2 == 1),
-                              hashed="xxhash64"), 64, "xxhash64"), 64, 16)
+                              hashed="xxhash64"), "xxhash64"))
     corp_b = dedup._banded(dedup._minhash_wide(
         dedup.shingle_id_rows(docs.filter(F.col("doc_id") % 2 == 0),
-                              hashed="xxhash64"), 64, "xxhash64"), 64, 16)
+                              hashed="xxhash64"), "xxhash64"))
     n = new_b.groupBy("band", "bucket").count() \
         .withColumnRenamed("count", "n_new")
     c = corp_b.groupBy("band", "bucket").count() \
