@@ -319,8 +319,7 @@ def q_quad_clean(spark, sf_dir):
         (F.col("bid") * 2 + 1).alias("line_idx"),
         quad(4).alias("polygon"))
     quads = outer.unionByName(inner)
-    kept = clean_contained_quads(quads, key="media_ref",
-                                 id_col="line_idx")
+    kept = clean_contained_quads(quads)
     return kept.select(
         F.col("media_ref").cast("bigint").alias("page_id"),
         F.col("line_idx").alias("quad_id"),
@@ -1381,12 +1380,11 @@ def q_recognition_input_text(spark, sf_dir):
 
 
 def q_minhash_lsh(spark, sf_dir):
-    # md5lin hash mode: every hash (shingle id, 64 linear permutations,
-    # band buckets) is replicated bit-for-bit by the DuckDB oracle, so
-    # candidate generation — not just verification — is machine-checked
+    # every hash (shingle id, 64 linear permutations, band buckets) is
+    # replicated bit-for-bit by the DuckDB oracle, so candidate
+    # generation — not just verification — is machine-checked
     return dedup.minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.05, hash_mode="md5lin"
-    )
+        _t(spark, sf_dir, "documents"), threshold=0.05)
 
 
 def q_incremental_dedup(spark, sf_dir):
@@ -1394,12 +1392,11 @@ def q_incremental_dedup(spark, sf_dir):
     the EXISTING corpus; each new doc is flagged novel unless a minhash
     band-bucket candidate in the corpus agrees on ≥30% of signature
     components (signature-agreement Jaccard estimate, exact 1/64
-    multiples — md5lin family for full oracle parity)."""
+    multiples — full oracle parity)."""
     d = _t(spark, sf_dir, "documents")
     new = d.filter(F.col("doc_id") % 2 == 1)
     corpus = d.filter(F.col("doc_id") % 2 == 0)
-    return dedup.minhash_novelty(new, corpus, threshold=0.3,
-                                 hash_mode="md5lin")
+    return dedup.minhash_novelty(new, corpus, threshold=0.3)
 
 
 def q_simhash_pairs(spark, sf_dir):

@@ -7,6 +7,11 @@ Usage:
   spark-submit scripts/corpus_tools.py neardup --input docs.parquet --out d/ \
       [--method minhash|simhash|jaccard] [--threshold 0.5]
   spark-submit scripts/corpus_tools.py knn --vectors emb.parquet --out d/ -k 5
+
+--method minhash signs with the md5lin family the DuckDB oracle
+replicates. Its default signature values changed from an xxhash64
+family to md5lin, so pairs can differ from older runs' output where
+banding recall did.
 """
 
 from __future__ import annotations

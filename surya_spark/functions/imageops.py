@@ -18,7 +18,7 @@ with no native-library dependency so they run inside any Python worker:
                                restricted to the near-axis angles the
                                caller keeps — implemented as gap-tolerant
                                run extraction, same output contract)
-* scale_to_fit / normalize / patch tiling
+* scale_to_fit_dims / normalize / patch tiling
                               (ref surya/common/surya/processor/
                                __init__.py:140-230)
 
@@ -27,8 +27,8 @@ work on decoded arrays, never on the driver, so everything scales with
 partition count. Interpolation: all three cv2 filters the reference
 uses are implemented with half-pixel centers and replicated borders —
 INTER_LINEAR (bilinear_resize, logit/heatmap resize), INTER_LANCZOS4
-(lanczos_resize, scale_to_fit), INTER_CUBIC Keys A=-0.75 (cubic_resize,
-patch tiling).
+(lanczos_resize), INTER_CUBIC Keys A=-0.75 (cubic_resize, patch
+tiling).
 """
 
 from __future__ import annotations
@@ -452,10 +452,13 @@ def double_resize(img: np.ndarray) -> np.ndarray:
     return bilinear_resize(img, h * 2, w * 2)
 
 
+# scale_to_fit_dims grows an image below this (h, w) pixel budget
+# (ref surya/common/surya/processor/__init__.py:140-176)
+MIN_IMAGE_SIZE = (168, 168)
+
+
 def scale_to_fit_dims(height: int, width: int,
-                      max_size: tuple[int, int],
-                      min_size: tuple[int, int] = (168, 168)
-                      ) -> tuple[int, int]:
+                      max_size: tuple[int, int]) -> tuple[int, int]:
     """Target (h, w) under the reference's pixel-budget rule: shrink by
     sqrt(max_pixels/current) with floor when over budget, grow with ceil
     when under the minimum, identity otherwise.
@@ -464,7 +467,7 @@ def scale_to_fit_dims(height: int, width: int,
         return height, width
     cur = width * height
     mx = max_size[0] * max_size[1]
-    mn = min_size[0] * min_size[1]
+    mn = MIN_IMAGE_SIZE[0] * MIN_IMAGE_SIZE[1]
     if cur > mx:
         f = (mx / cur) ** 0.5
         return math.floor(height * f), math.floor(width * f)
@@ -472,16 +475,6 @@ def scale_to_fit_dims(height: int, width: int,
         f = (mn / cur) ** 0.5
         return math.ceil(height * f), math.ceil(width * f)
     return height, width
-
-
-def scale_to_fit(img: np.ndarray, max_size: tuple[int, int]) -> np.ndarray:
-    """scale_to_fit_dims' target size, resized with INTER_LANCZOS4 as the
-    reference does (ref surya/common/surya/processor/__init__.py:176-177)."""
-    h, w = img.shape[:2]
-    nh, nw = scale_to_fit_dims(h, w, max_size)
-    if (nh, nw) == (h, w):
-        return np.asarray(img, dtype=np.float64)
-    return lanczos_resize(img, nh, nw)
 
 
 # pixel values are rescaled from 0..255 to 0..1 before standardizing
@@ -552,10 +545,14 @@ def fill_poly_mask(h: int, w: int, polygon) -> np.ndarray:
     return inside
 
 
-def slice_and_pad_poly(image: np.ndarray, polygon,
-                       pad_value: int = 255) -> np.ndarray:
+# slice_and_pad_poly paints pixels outside the polygon white
+# (ref surya/input/processing.py:63-101)
+POLY_PAD_VALUE = 255
+
+
+def slice_and_pad_poly(image: np.ndarray, polygon) -> np.ndarray:
     """Crop the polygon's bbox from the image and set pixels outside the
-    polygon to pad_value — the reference's slice_and_pad_poly
+    polygon to POLY_PAD_VALUE — the reference's slice_and_pad_poly
     (ref surya/input/processing.py:63-101): recognition crops of skewed
     lines must not carry neighbor-line ink in the bbox corners.
     Degenerate inputs (empty crop, <3 corners) return the unmasked crop,
@@ -570,7 +567,7 @@ def slice_and_pad_poly(image: np.ndarray, polygon,
     if ch == 0 or cw == 0 or len(pts) < 3:
         return crop
     mask = fill_poly_mask(ch, cw, pts - np.array([x1, y1], dtype=np.float64))
-    crop[~mask] = pad_value
+    crop[~mask] = POLY_PAD_VALUE
     return crop
 
 
@@ -600,23 +597,32 @@ def sobel(img: np.ndarray, vertical: bool = True) -> np.ndarray:
     return _conv3(img, k)
 
 
-# vertical_edge_map dilates its eroded edge map this many times
+# vertical_edge_map erodes with a (EDGE_KERNEL_LEN, 1) kernel, then
+# dilates with it EDGE_DILATE_ITERATIONS times
 # (ref surya/detection/affinity.py:19-41)
+EDGE_KERNEL_LEN = 20
 EDGE_DILATE_ITERATIONS = 3
 
 
-def vertical_edge_map(img: np.ndarray, k: int = 20) -> np.ndarray:
-    """abs-Sobel → scale to 0..255 → (k,1) erode then dilate×3: keeps only
-    edges that persist vertically (ref affinity.py:19-41)."""
+def vertical_edge_map(img: np.ndarray) -> np.ndarray:
+    """abs-Sobel → scale to 0..255 → (EDGE_KERNEL_LEN,1) erode then
+    dilate×3: keeps only edges that persist vertically
+    (ref affinity.py:19-41)."""
     s = np.abs(sobel(img, vertical=True))
     mx = s.max()
     scaled = np.zeros_like(s) if mx == 0 else (255 * s / mx)
     scaled = scaled.astype(np.uint8).astype(np.float64)
-    return dilate_v(erode_v(scaled, k), k, EDGE_DILATE_ITERATIONS)
+    return dilate_v(erode_v(scaled, EDGE_KERNEL_LEN), EDGE_KERNEL_LEN,
+                    EDGE_DILATE_ITERATIONS)
 
 
-def canny(img: np.ndarray, low: float = 150.0,
-          high: float = 200.0) -> np.ndarray:
+# canny's hysteresis thresholds on the L1 gradient magnitude
+# (ref affinity.py:50)
+CANNY_LOW = 150.0
+CANNY_HIGH = 200.0
+
+
+def canny(img: np.ndarray) -> np.ndarray:
     """Gradient-magnitude Canny: Sobel dx/dy → L1 magnitude → 4-direction
     non-max suppression → double threshold → hysteresis via connected
     components (weak pixels survive only in components touching a strong
@@ -638,8 +644,8 @@ def canny(img: np.ndarray, low: float = 150.0,
         n2 = pad[1 + dy2:1 + dy2 + h, 1 + dx2:1 + dx2 + w]
         keep &= ~sel | ((mag >= n1) & (mag >= n2))
     nms = np.where(keep, mag, 0.0)
-    strong = nms >= high
-    weak = nms >= low
+    strong = nms >= CANNY_HIGH
+    weak = nms >= CANNY_LOW
     if not strong.any():
         return np.zeros_like(strong)
     n, labels = connected_components(weak, connectivity=8)
@@ -652,12 +658,16 @@ def canny(img: np.ndarray, low: float = 150.0,
     return lut[labels]
 
 
+# extract_axis_segments keeps runs at least this many pixels long
+# (ref affinity.py:58)
+SEGMENT_MIN_LENGTH = 10
+
+
 def extract_axis_segments(edges: np.ndarray, vertical: bool = True,
-                          min_length: int = 10,
                           max_gap: int = 100) -> list[list[float]]:
     """Near-axis line segments from an edge mask: per column (vertical) or
     row (horizontal), merge edge-pixel runs separated by ≤ max_gap and
-    keep those ≥ min_length. The axis-restricted replacement for
+    keep those ≥ SEGMENT_MIN_LENGTH. The axis-restricted replacement for
     HoughLinesP + the reference's own angle filter
     (affinity.py:58-96 keeps only near-vertical/-horizontal lines).
     Returns [x1, y1, x2, y2] with the same ordering fix-ups."""
@@ -675,7 +685,7 @@ def extract_axis_segments(edges: np.ndarray, vertical: bool = True,
             if yy is not None and yy - prev <= max_gap:
                 prev = yy
                 continue
-            if prev - start + 1 >= min_length:
+            if prev - start + 1 >= SEGMENT_MIN_LENGTH:
                 segs.append([float(x), float(start), float(x), float(prev)]
                             if vertical else
                             [float(start), float(x), float(prev), float(x)])

@@ -19,11 +19,16 @@ from pyspark.sql import functions as F
 from . import geometry as G
 
 
-def _cov(pred: DataFrame, ref: DataFrame, threshold: float,
-         penalize_double: bool) -> DataFrame:
-    """Per-pred-box coverage = sum of intersections with ref boxes / area;
-    optionally penalized by double-cover (the reference subtracts coverage
-    counted twice across ref boxes)."""
+# a box counts as covered when more than this fraction of its area
+# is covered (ref benchmark/utils/metrics.py:113-168)
+COVERAGE_THRESHOLD = 0.5
+
+
+def _cov(pred: DataFrame, ref: DataFrame) -> DataFrame:
+    """Per-pred-box coverage = sum of intersections with ref boxes / area,
+    penalized by double-cover (the reference subtracts coverage counted
+    twice across ref boxes); covered_flag = coverage >
+    COVERAGE_THRESHOLD."""
     p, r = pred.alias("p"), ref.alias("r")
     inter = G.intersection_area(
         F.col("p.x1"), F.col("p.y1"), F.col("p.x2"), F.col("p.y2"),
@@ -39,12 +44,13 @@ def _cov(pred: DataFrame, ref: DataFrame, threshold: float,
     per_box = joined.groupBy("key", "box_id", "area").agg(
         F.sum("inter").alias("covered")
     )
-    cov = F.when(F.col("area") > 0, F.col("covered") / F.col("area")).otherwise(0.0)
-    if penalize_double:
-        cov = F.least(cov, F.lit(1.0))
+    cov = F.least(
+        F.when(F.col("area") > 0, F.col("covered") / F.col("area"))
+        .otherwise(0.0),
+        F.lit(1.0))
     return per_box.select(
         "key", "box_id", cov.alias("coverage"),
-        (cov > threshold).cast("int").alias("covered_flag"),
+        (cov > COVERAGE_THRESHOLD).cast("int").alias("covered_flag"),
     )
 
 
@@ -171,17 +177,16 @@ def coverage_per_box_kernel(pred: DataFrame, ref: DataFrame) -> DataFrame:
     )
 
 
-def coverage_precision_recall(pred: DataFrame, ref: DataFrame,
-                              threshold: float = 0.5) -> DataFrame:
+def coverage_precision_recall(pred: DataFrame, ref: DataFrame) -> DataFrame:
     """Per-key precision (pred boxes covered by ref) and recall (ref boxes
     covered by pred) — one row per key."""
     prec = (
-        _cov(pred, ref, threshold, True)
+        _cov(pred, ref)
         .groupBy("key")
         .agg((F.sum("covered_flag") / F.count(F.lit(1))).alias("precision"))
     )
     rec = (
-        _cov(ref, pred, threshold, True)
+        _cov(ref, pred)
         .groupBy("key")
         .agg((F.sum("covered_flag") / F.count(F.lit(1))).alias("recall"))
     )

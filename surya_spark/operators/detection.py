@@ -358,9 +358,7 @@ def clean_contained_boxes(lines: DataFrame) -> DataFrame:
     )
 
 
-def clean_contained_quads(lines: DataFrame,
-                          key: str = "media_ref",
-                          id_col: str = "line_idx") -> DataFrame:
+def clean_contained_quads(lines: DataFrame) -> DataFrame:
     """Quad-aware variant of clean_contained_boxes over the `polygon`
     column: containment and area
     use the CORNERWISE quad predicates (G.poly_contains +
@@ -378,13 +376,13 @@ def clean_contained_quads(lines: DataFrame,
     area_a = G.poly_area_shoelace(pb)
     area_b = G.poly_area_shoelace(pa)
     contained = (
-        (F.col(f"a.{key}") == F.col(f"b.{key}"))
-        & (F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
+        (F.col("a.media_ref") == F.col("b.media_ref"))
+        & (F.col("a.line_idx") != F.col("b.line_idx"))
         & G.poly_contains(pa, pb)
         & (
             (area_b > area_a)
             | ((area_b == area_a)
-               & (F.col(f"b.{id_col}") < F.col(f"a.{id_col}")))
+               & (F.col("b.line_idx") < F.col("a.line_idx")))
         )
     )
     kept = a.join(b.hint("shuffle_hash"), on=contained, how="left_anti")

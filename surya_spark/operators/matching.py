@@ -109,6 +109,12 @@ def greedy_iou_match(pred: DataFrame, ref: DataFrame,
     )
 
 
+# merge_vertical_lines joins two vertical segments whose x centres are
+# within VLINE_X_TOL px and whose y-intervals overlap or lie within
+# VLINE_Y_MARGIN px (ref surya/detection/affinity.py:105-153)
+VLINE_X_TOL = 12.0
+VLINE_Y_MARGIN = 4.0
+
 _VLINE_OUT = T.StructType([
     T.StructField("key", T.StringType(), False),
     T.StructField("group_id", T.IntegerType(), False),
@@ -120,8 +126,7 @@ _VLINE_OUT = T.StructType([
 ])
 
 
-def merge_vertical_lines(segments: DataFrame, x_tol: float = 12.0,
-                         y_margin: float = 4.0) -> DataFrame:
+def merge_vertical_lines(segments: DataFrame) -> DataFrame:
     """Transitive merge of vertical segments at similar x with overlapping
     y-intervals — union-find per page, mirroring
     /root/reference/surya/detection/affinity.py:105-153. Input columns:
@@ -144,8 +149,8 @@ def merge_vertical_lines(segments: DataFrame, x_tol: float = 12.0,
         y2 = segs["y2"].to_numpy()
         for i in range(n):
             for j in range(i + 1, n):
-                if abs(xs[i] - xs[j]) <= x_tol and (
-                    min(y2[i], y2[j]) + y_margin >= max(y1[i], y1[j])
+                if abs(xs[i] - xs[j]) <= VLINE_X_TOL and (
+                    min(y2[i], y2[j]) + VLINE_Y_MARGIN >= max(y1[i], y1[j])
                 ):
                     ri, rj = find(i), find(j)
                     if ri != rj:

@@ -300,15 +300,20 @@ _OCR_OUT = T.StructType([
 ])
 
 
+# the continuous scheduler prefills waiting items once more than this
+# fraction of its decoder slots is empty
+# (ref surya/recognition/__init__.py:501-607)
+MIN_PREFILL_RATIO = 0.2
+
+
 def _continuous_schedule(blobs: list, tasks: list, step_recognizer,
                          n_slots: int,
-                         min_prefill_ratio: float = 0.2,
                          max_steps: int = 100_000,
                          texts: list | None = None) -> list[dict]:
     """The reference's continuous-batching prediction loop
     (/root/reference/surya/recognition/__init__.py:501-607) with
     IN-FLIGHT SLOT REPLACEMENT, model-free: n_slots decoder slots; when
-    the empty-slot fraction exceeds min_prefill_ratio and items wait,
+    the empty-slot fraction exceeds MIN_PREFILL_RATIO and items wait,
     prefill admits them into the free slots; otherwise one step advances
     every in-flight sequence, and a finished sequence frees its slot
     IMMEDIATELY for the next admission — short sequences never wait for
@@ -333,7 +338,7 @@ def _continuous_schedule(blobs: list, tasks: list, step_recognizer,
                 "the step slot is not finishing sequences")
         steps += 1
         empty = [b for b, s in enumerate(slots_arr) if s is None]
-        if queue and (len(empty) / n_slots) > min_prefill_ratio:
+        if queue and (len(empty) / n_slots) > MIN_PREFILL_RATIO:
             admit = [queue.popleft()
                      for _ in range(min(len(empty), len(queue)))]
             if texts is None:

@@ -31,6 +31,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def read_if_present(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet table at `path`, or None while it does not exist yet:
+    the directory is absent, or holds no data file (empty, or only the
+    _temporary/ of a writer killed during its first commit). Any other
+    read failure raises — reading a corrupt or conflicting table as
+    absent would silently start it over."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
+
+
 class CheckpointRunner:
     def __init__(self, spark: SparkSession, base_dir: str,
                  n_buckets: int = 16, n_groups: int = 4):
@@ -50,18 +64,11 @@ class CheckpointRunner:
         return f"{self.base}/_lineage"
 
     def lineage(self) -> DataFrame | None:
-        """The lineage rows, or None while no group has committed: the
-        directory is absent, or holds only the _temporary/ of a run
-        killed during its first append. Any other read failure (a
-        corrupt lineage file) raises — reading it as a fresh run would
-        forget every committed bucket and recompute them all."""
-        try:
-            return self.spark.read.parquet(self._lineage_path())
-        except AnalysisException as e:
-            if e.getCondition() in ("PATH_NOT_FOUND",
-                                    "UNABLE_TO_INFER_SCHEMA"):
-                return None
-            raise
+        """The lineage rows, or None while no group has committed
+        (read_if_present). A corrupt lineage file raises — reading it as
+        a fresh run would forget every committed bucket and recompute
+        them all."""
+        return read_if_present(self.spark, self._lineage_path())
 
     def _committed_buckets(self, stage: str) -> set[int]:
         lin = self.lineage()

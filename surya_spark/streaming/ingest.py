@@ -70,8 +70,7 @@ def stream_incremental_dedup(
     with corpus_index= — the ~300 B/doc table; corpus text is never
     re-read), then the batch's NOVEL docs' signatures are appended to
     the index, so a duplicate arriving two batches later is caught.
-    Probe and append both use minhash's default family (md5lin), so a
-    restarted stream always probes an index written in its own family.
+    Probe and append both use minhash's one family (md5lin).
 
     Scale shape: per micro-batch cost = banded equi-join of the batch
     against the index + one compact parquet append — both ∝ batch, not
@@ -88,7 +87,7 @@ def stream_incremental_dedup(
     job, run inside the batch if needed. Long-running crawls should
     compact the index dir periodically (one small file lands per batch;
     at Delta/Iceberg deployments the table format's OPTIMIZE does it)."""
-    from ..plans import caching
+    from ..plans import caching, checkpoint
     from ..training import dedup
 
     if docs_schema is None:
@@ -106,31 +105,11 @@ def stream_incremental_dedup(
             return
         # index-existence probe through the Spark reader, not the
         # driver's local filesystem — index_dir may be HDFS/S3 where
-        # os.walk always reports nothing (an empty/missing dir raises
-        # AnalysisException: unable to infer schema / path not found)
-        from pyspark.errors import AnalysisException
-
-        try:
-            idx = spark.read.parquet(index_dir)
-            have_index = True
-        except AnalysisException as e:
-            # ONLY the two "no index yet" conditions may fall through to
-            # the novel-batch path; any other analysis failure (schema
-            # conflict in the index dir, bad path config) must surface —
-            # silently skipping dedup on a corrupt index would flag a
-            # whole batch novel
-            cls = getattr(e, "getCondition",
-                          getattr(e, "getErrorClass",
-                                  lambda: None))() or ""
-            msg = str(e)
-            if ("PATH_NOT_FOUND" in cls
-                    or "UNABLE_TO_INFER_SCHEMA" in cls
-                    or "Path does not exist" in msg
-                    or "Unable to infer schema" in msg):
-                idx, have_index = None, False
-            else:
-                raise
-        if have_index:
+        # os.walk always reports nothing. Only "no index yet" takes the
+        # novel-batch path; a corrupt index raises instead of flagging
+        # a whole batch novel.
+        idx = checkpoint.read_if_present(spark, index_dir)
+        if idx is not None:
             flagged = dedup.minhash_novelty(
                 batch_df, corpus_index=idx,
                 threshold=threshold)
@@ -147,18 +126,15 @@ def stream_incremental_dedup(
         # directory structures detected"). Fail fast with the remedy
         # instead of corrupting the directory.
         if not state["layout_checked"]:
-            try:
-                existing = spark.read.parquet(out_path)
-                if "batch_id" not in existing.columns:
-                    raise RuntimeError(
-                        f"flags path {out_path} holds an unpartitioned "
-                        "(pre-batch_id) layout; writing batch_id=N/ "
-                        "partitions into it would break partition "
-                        "discovery. Migrate it first: read the old "
-                        "files, add batch_id, rewrite partitioned — "
-                        "or point out_path at a fresh directory.")
-            except AnalysisException:
-                pass  # empty/absent dir: fresh layout, nothing to check
+            existing = checkpoint.read_if_present(spark, out_path)
+            if existing is not None and "batch_id" not in existing.columns:
+                raise RuntimeError(
+                    f"flags path {out_path} holds an unpartitioned "
+                    "(pre-batch_id) layout; writing batch_id=N/ "
+                    "partitions into it would break partition "
+                    "discovery. Migrate it first: read the old "
+                    "files, add batch_id, rewrite partitioned — "
+                    "or point out_path at a fresh directory.")
             state["layout_checked"] = True
         # idempotent under foreachBatch replay: dynamic partition
         # overwrite replaces exactly this batch's partition

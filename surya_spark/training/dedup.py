@@ -61,8 +61,10 @@ def shingle_id_rows(docs: DataFrame, extra_cols: tuple[str, ...] = (),
     same thing evaluates interpreted and ran ~10× slower at sf0.1.
     Short docs (< k tokens) contribute one whole-text shingle.
 
-    hashed='xxhash64' (fast JVM path) or 'md5' (md5_id60 of the
-    space-joined shingle string — bit-replicable by the DuckDB oracle).
+    hashed='xxhash64' (fast JVM path, ngram_jaccard_pairs' ids, which
+    no oracle reads) or 'md5' (md5_id60 of the space-joined shingle
+    string — the minhash family's ids, bit-replicable by the DuckDB
+    oracle).
 
     r7 physical cleanups, same rows out:
     * the input is spread across the cluster BEFORE the regex
@@ -199,50 +201,26 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
     ).filter(F.col("jaccard") >= threshold))
 
 
-# minhash hash family → the shingle-id hash its permutations run over
-SHINGLE_HASH = {"md5lin": "md5", "xxhash64": "xxhash64"}
-
-
-def _shingle_hash(hash_mode: str) -> str:
-    """SHINGLE_HASH[hash_mode]; any other mode is a ValueError (a typo
-    such as simhash's old 'md5' must not silently select xxhash64)."""
-    if hash_mode not in SHINGLE_HASH:
-        raise ValueError(f"minhash hash_mode must be 'md5lin' or "
-                         f"'xxhash64', got {hash_mode!r}")
-    return SHINGLE_HASH[hash_mode]
-
-
-def _minhash_wide(rows: DataFrame, hash_mode: str) -> DataFrame:
-    """(doc_id, h0..h{n-1}) from flat shingle-id rows: one groupBy with
-    N_HASHES min() aggregates. All JVM/codegen; the naive alternative
-    (nested higher-order transforms over the shingle array) falls out of
-    whole-stage codegen and runs ~50× slower — measured, not guessed.
-
-    hash_mode='xxhash64': sig_i = min xxhash64(s, i) (fast JVM path).
-    hash_mode='md5lin':   sig_i = min (a_i·(s mod P) + b_i) mod P over the
-    md5-based 60-bit shingle ids — one md5 per shingle plus 64 exact
-    integer multiply-adds, replicable bit-for-bit by the DuckDB oracle.
-    Any other mode raises ValueError."""
-    if _shingle_hash(hash_mode) == "md5":
-        coeffs = lin_coeffs(N_HASHES)
-        sm = F.pmod(F.col("s"), F.lit(LIN_P))
-        aggs = [
-            F.min(F.pmod(F.lit(a) * sm + F.lit(b), F.lit(LIN_P))).alias(f"h{i}")
-            for i, (a, b) in enumerate(coeffs)
-        ]
-    else:
-        aggs = [
-            F.min(F.xxhash64(F.col("s"), F.lit(i))).alias(f"h{i}")
-            for i in range(N_HASHES)
-        ]
+def _minhash_wide(rows: DataFrame) -> DataFrame:
+    """(doc_id, h0..h{n-1}) from flat md5 shingle-id rows: one groupBy
+    with N_HASHES min() aggregates, sig_i = min (a_i·(s mod P) + b_i) mod
+    P — one md5 per shingle plus 64 exact integer multiply-adds,
+    replicable bit-for-bit by the DuckDB oracle. All JVM/codegen; the
+    naive alternative (nested higher-order transforms over the shingle
+    array) falls out of whole-stage codegen and runs ~50× slower —
+    measured, not guessed."""
+    sm = F.pmod(F.col("s"), F.lit(LIN_P))
+    aggs = [
+        F.min(F.pmod(F.lit(a) * sm + F.lit(b), F.lit(LIN_P))).alias(f"h{i}")
+        for i, (a, b) in enumerate(lin_coeffs(N_HASHES))
+    ]
     return rows.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures(docs: DataFrame,
-                       hash_mode: str = "xxhash64") -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """MinHash signature array per doc: minhash_index's h0..h{n-1} as
     one `sig` array column."""
-    return minhash_index(docs, hash_mode).select(
+    return minhash_index(docs).select(
         "doc_id",
         F.array(*[F.col(f"h{i}") for i in range(N_HASHES)]).alias("sig"),
     )
@@ -290,8 +268,7 @@ def _jaccard_over_candidates(cand: DataFrame, rows: DataFrame) -> DataFrame:
     return out.select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
 
 
-def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5,
-                      hash_mode: str = "xxhash64") -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """MinHash + LSH banding: band bucket = the signature slice itself
     (comma-joined); candidates = equi-join on (band, bucket); candidates
     verified with exact shingle Jaccard via candidate-restricted
@@ -302,14 +279,16 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5,
     Output = pairs that are LSH candidates AND whose exact Jaccard ≥
     threshold (banding recall at low thresholds is probabilistic — callers
     wanting exhaustive low-similarity pairs should use ngram_jaccard_pairs).
-    hash_mode='md5lin' makes every hash DuckDB-replicable (oracle parity);
-    'xxhash64' is the fastest JVM path."""
+    Every hash (shingle id, permutations, band bucket) is the md5lin
+    family the DuckDB oracle replicates (minhash_index). The default
+    signature values changed from an xxhash64 family to md5lin, so
+    verified pairs differ from older output only where banding recall
+    does."""
     # the flat shingle index feeds BOTH the signature agg and the
     # verify joins — persist or Spark re-executes the lineage per
     # branch; released by the first action on the returned pairs
-    rows = caching.managed(shingle_id_rows(
-        docs, hashed=_shingle_hash(hash_mode)))
-    banded = _banded(_minhash_wide(rows, hash_mode))
+    rows = caching.managed(shingle_id_rows(docs, hashed="md5"))
+    banded = _banded(_minhash_wide(rows))
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
@@ -465,20 +444,18 @@ def _banded(wide: DataFrame) -> DataFrame:
         "doc_id", F.posexplode(F.array(*band_cols)).alias("band", "bucket"))
 
 
-def minhash_index(docs: DataFrame, hash_mode: str = "md5lin") -> DataFrame:
+def minhash_index(docs: DataFrame) -> DataFrame:
     """The compact corpus signature index (doc_id, h0..h{n-1}) — the
     ~300 B/doc table a rolling crawl materializes ONCE and appends to;
     feed it to minhash_novelty(corpus_index=) so new batches never
     re-read or re-shingle corpus text. Streaming analog:
     streaming/ingest.stream_incremental_dedup."""
-    return _minhash_wide(
-        shingle_id_rows(docs, hashed=_shingle_hash(hash_mode)), hash_mode)
+    return _minhash_wide(shingle_id_rows(docs, hashed="md5"))
 
 
 def minhash_novelty(new_docs: DataFrame,
                     corpus_docs: DataFrame | None = None,
                     threshold: float = 0.5,
-                    hash_mode: str = "md5lin",
                     corpus_index: DataFrame | None = None) -> DataFrame:
     """INCREMENTAL dedup: flag each NEW document as novel or near-dup of
     the EXISTING corpus — the operation a rolling crawl actually runs (a
@@ -499,10 +476,10 @@ def minhash_novelty(new_docs: DataFrame,
     est ≥ t."""
     if (corpus_docs is None) == (corpus_index is None):
         raise ValueError("pass exactly one of corpus_docs / corpus_index")
-    new_wide = caching.managed(minhash_index(new_docs, hash_mode))
+    new_wide = caching.managed(minhash_index(new_docs))
     corp_wide = caching.managed(
         corpus_index if corpus_index is not None
-        else minhash_index(corpus_docs, hash_mode))
+        else minhash_index(corpus_docs))
     cand = (
         _banded(new_wide).alias("n")
         .join(_banded(corp_wide).alias("c")

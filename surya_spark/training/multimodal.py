@@ -59,7 +59,7 @@ def real_image_pixels(blob: bytes):
     """Deployment slot: image bytes → RGB uint8 ndarray, the reference's
     Image.open(...).convert("RGB") load
     (ref surya/input/processing.py:30-33) — the array the imageops
-    kernels (scale_to_fit, patch_tile, slice_and_pad_poly) consume."""
+    kernels (lanczos_resize, patch_tile, slice_and_pad_poly) consume."""
     try:  # pragma: no cover - library absent in this container
         from PIL import Image
     except ImportError as e:

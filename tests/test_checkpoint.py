@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from surya_spark import datagen, pipeline
-from surya_spark.plans.checkpoint import CheckpointRunner
+from surya_spark.plans.checkpoint import CheckpointRunner, read_if_present
 
 N_DOCS = 24
 
@@ -231,3 +231,26 @@ def test_lineage_with_only_temporary_is_fresh(spark, tmp_path):
     out = runner.stage("keys", lambda: _keys(spark), bucket_key="k")
     assert out.count() == 64
     assert runner.lineage().count() == 2
+
+
+def test_read_if_present_raises_on_a_present_unreadable_table(spark,
+                                                             tmp_path):
+    """Only an absent or data-less table reads as None; any other
+    analysis error propagates. Here: columns `a` and `A`, written
+    case-sensitively, read case-insensitively (COLUMN_ALREADY_EXISTS)."""
+    from pyspark.errors import AnalysisException
+
+    (tmp_path / "empty").mkdir()
+    assert read_if_present(spark, str(tmp_path / "absent")) is None
+    assert read_if_present(spark, str(tmp_path / "empty")) is None
+    path = str(tmp_path / "case_dup")
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive")
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try:
+        spark.createDataFrame([(1, 2)], "a long, A long").write.parquet(path)
+        spark.conf.set("spark.sql.caseSensitive", "false")
+        with pytest.raises(AnalysisException,
+                           match="COLUMN_ALREADY_EXISTS"):
+            read_if_present(spark, path)
+    finally:
+        spark.conf.set("spark.sql.caseSensitive", case_sensitive)

@@ -140,14 +140,14 @@ def test_sobel_and_vertical_edge_map():
     s = I.sobel(img, vertical=True)
     assert abs(s[:, 19:21]).min() == 4.0  # full Sobel response at edge
     assert abs(s[:, :18]).max() == 0.0
-    v = I.vertical_edge_map(img, k=20)
+    v = I.vertical_edge_map(img)
     assert v[:, 19:21].max() == 255.0
 
 
 def test_canny_vertical_edge():
     img = np.zeros((30, 30))
     img[:, 15:] = 255.0
-    e = I.canny(img, low=150, high=200)
+    e = I.canny(img)
     assert e[:, 14:16].any()
     assert not e[:, :12].any() and not e[:, 19:].any()
 
@@ -157,14 +157,11 @@ def test_extract_axis_segments_gap_merge():
     e[5:15, 3] = True
     e[18:30, 3] = True  # 3-px gap -> merged when max_gap >= 3
     e[2:4, 7] = True    # too short
-    segs = I.extract_axis_segments(e, vertical=True, min_length=10,
-                                   max_gap=5)
+    segs = I.extract_axis_segments(e, vertical=True, max_gap=5)
     assert segs == [[3.0, 5.0, 3.0, 29.0]]
-    segs2 = I.extract_axis_segments(e, vertical=True, min_length=10,
-                                    max_gap=2)
+    segs2 = I.extract_axis_segments(e, vertical=True, max_gap=2)
     assert segs2 == [[3.0, 5.0, 3.0, 14.0], [3.0, 18.0, 3.0, 29.0]]
-    hs = I.extract_axis_segments(e.T, vertical=False, min_length=10,
-                                 max_gap=5)
+    hs = I.extract_axis_segments(e.T, vertical=False, max_gap=5)
     assert hs == [[5.0, 3.0, 29.0, 3.0]]
 
 
@@ -175,7 +172,7 @@ def test_scale_to_fit_and_normalize_and_tile():
     f = (250000 / 2000000) ** 0.5
     assert (h, w) == (math.floor(2000 * f), math.floor(1000 * f))
     # under minimum: ceil growth
-    h, w = I.scale_to_fit_dims(100, 100, (500, 500), (168, 168))
+    h, w = I.scale_to_fit_dims(100, 100, (500, 500))
     f = (168 * 168 / 10000) ** 0.5
     assert (h, w) == (math.ceil(100 * f), math.ceil(100 * f))
     # identity inside the band
@@ -329,7 +326,7 @@ def test_slice_and_pad_poly_masks_outside():
 
     img = np.arange(30 * 40, dtype=np.int32).reshape(30, 40)
     quad = [[5.0, 4.0], [35.0, 8.0], [33.0, 24.0], [3.0, 20.0]]
-    crop = I.slice_and_pad_poly(img, quad, pad_value=255)
+    crop = I.slice_and_pad_poly(img, quad)
     assert crop.shape == (20, 32)  # bbox [3,4] .. [35,24]
     mask = I.fill_poly_mask(20, 32, np.asarray(quad) - [3.0, 4.0])
     assert (crop[~mask] == 255).all()

@@ -12,8 +12,10 @@ parameter (``self``/``cls``) is skipped, and a call through
 string literal of its module names. A ``*args``/``**kwargs`` splat of a
 name its function binds only to tuple, list or dict displays (directly,
 through ``a if c else b``, or as the items a ``for`` loop iterates) sets
-what those displays hold; any other splat sets every parameter. Only the
-kinds below may stay unset, each for a reason named next to it.
+what those displays hold; any other splat sets every parameter. A
+parameter whose every setter passes the same literal, equal to its
+default, is unset too: its call sites only restate the constant. Only
+the kinds below may stay unset, each for a reason named next to it.
 """
 from __future__ import annotations
 
@@ -75,6 +77,10 @@ ALLOWED = {
         "plan-visible zero margin",
     ("surya_spark/functions/geometry.py", "intersection_pct", "y_margin"):
         "plan-visible zero margin",
+    # The width of the input vectors: every caller's embeddings are
+    # 64-d today, but it is a property of the data, not a tuning value.
+    ("surya_spark/training/similarity.py", "embedding_lsh_pairs", "dim"):
+        "embedding width of the input",
 }
 
 
@@ -141,8 +147,16 @@ def _displays(expr, binds, seen=()):
 
 
 def _site(call, binds):
-    """(positional args, keyword names) a call passes; inf positional
-    args or a None keyword name for a splat that may pass anything."""
+    """(positional args, keyword names, passed expressions) of a call;
+    inf positional args or a None keyword name for a splat that may
+    pass anything. The expressions are keyed by position or keyword
+    name, for the arguments a call spells out."""
+    exprs = {}
+    for i, a in enumerate(call.args):
+        if isinstance(a, ast.Starred):
+            break
+        exprs[i] = a
+    exprs |= {k.arg: k.value for k in call.keywords if k.arg}
     n_pos = 0
     for a in call.args:
         if not isinstance(a, ast.Starred):
@@ -164,7 +178,7 @@ def _site(call, binds):
         else:  # a non-constant key (or a nested ** splat) reads as None
             kws |= {getattr(key, "value", None)
                     for d in dicts for key in d.keys}
-    return n_pos, kws
+    return n_pos, kws, exprs
 
 
 def _scoped_calls(tree):
@@ -185,12 +199,33 @@ def _scoped_calls(tree):
     return out
 
 
+def _passed(site, i, prm):
+    """What `site` passes for the parameter at position `i` (None for a
+    keyword-only one) named `prm`: its expression, None when a splat
+    may pass it, or False when the site does not pass it."""
+    n_pos, kws, exprs = site
+    if i is not None and i < n_pos:
+        return exprs.get(i)
+    if prm in kws:
+        return exprs.get(prm)
+    return None if None in kws else False
+
+
+def _literal(expr):
+    """(True, value) for a literal expression, else (False, None)."""
+    try:
+        return True, ast.literal_eval(expr)
+    except (ValueError, TypeError, SyntaxError):
+        return False, None
+
+
 @functools.cache
-def census():
-    """Sorted (module, function, parameter) of every defaulted parameter
-    under ``surya_spark/`` that no call site passes."""
+def _parameters():
+    """(module, function, parameter, default expression, [what each call
+    site that passes it passes]) for every defaulted parameter under
+    ``surya_spark/``."""
     trees = _trees()
-    # name -> [(positional args, keyword names)] of every call site
+    # name -> [_site(call)] of every call site
     calls = defaultdict(list)
     for tree in trees.values():
         strings = {n.value for n in ast.walk(tree)
@@ -203,7 +238,7 @@ def census():
             else:
                 calls[getattr(c.func, "attr", getattr(c.func, "id", None))] \
                     .append(site)
-    unset = []
+    out = []
     for mod, tree in trees.items():
         if not mod.startswith("surya_spark/"):
             continue
@@ -213,16 +248,39 @@ def census():
             skip = 1 if _is_method(fn, cls) else 0
             names = [fn.name] + ([cls] if fn.name == "__init__" else [])
             sites = [s for n in names for s in calls[n]]
-            defaulted = [(i, arg.arg) for i, arg in enumerate(pos)
-                         if i >= len(pos) - len(a.defaults)]
-            defaulted += [(None, arg.arg) for arg, d in
+            first = len(pos) - len(a.defaults)
+            defaulted = [(i - skip, arg.arg, a.defaults[i - first])
+                         for i, arg in enumerate(pos) if i >= first]
+            defaulted += [(None, arg.arg, d) for arg, d in
                           zip(a.kwonlyargs, a.kw_defaults) if d is not None]
-            for i, prm in defaulted:
-                if not any(prm in kws or None in kws
-                           or (i is not None and i - skip < n_pos)
-                           for n_pos, kws in sites):
-                    unset.append((mod, fn.name, prm))
-    return sorted(unset)
+            for i, prm, default in defaulted:
+                passed = [_passed(s, i, prm) for s in sites]
+                out.append((mod, fn.name, prm, default,
+                            [v for v in passed if v is not False]))
+    return out
+
+
+@functools.cache
+def census():
+    """Sorted (module, function, parameter) of every defaulted parameter
+    under ``surya_spark/`` that no call site passes."""
+    return sorted((mod, fn, prm)
+                  for mod, fn, prm, _, passed in _parameters() if not passed)
+
+
+@functools.cache
+def set_only_to_default():
+    """Sorted (module, function, parameter) of every defaulted parameter
+    under ``surya_spark/`` that call sites pass, every one of them the
+    same literal, equal to the default."""
+    out = []
+    for mod, fn, prm, default, passed in _parameters():
+        is_lit, value = _literal(default)
+        if is_lit and passed and all(
+                v is not None and _literal(v) == (True, value)
+                for v in passed):
+            out.append((mod, fn, prm))
+    return sorted(out)
 
 
 def _allowed(mod, fn, prm):
@@ -238,9 +296,19 @@ def test_every_defaulted_parameter_has_a_caller():
         + "\n".join(f"  {m}:{f}({p})" for m, f, p in unset))
 
 
+def test_no_parameter_is_set_only_to_its_default():
+    fixed = [k for k in set_only_to_default() if not _allowed(*k)]
+    assert not fixed, (
+        f"{len(fixed)} defaulted parameter(s) every call site sets to "
+        "the default literal; make each the constant it always is, or "
+        "name its reason in ALLOWED:\n"
+        + "\n".join(f"  {m}:{f}({p})" for m, f, p in fixed))
+
+
 def test_allowlist_names_live_parameters():
-    # An allowlist entry whose parameter is gone (or now has a caller)
-    # would hide the next unset parameter of the same name.
-    unset = set(census())
+    # An allowlist entry whose parameter is gone (or now has a caller
+    # that sets another value) would hide the next unset parameter of
+    # the same name.
+    unset = set(census()) | set(set_only_to_default())
     stale = sorted(k for k in ALLOWED if k not in unset)
     assert not stale, f"allowlist entries that are not unset: {stale}"

@@ -43,7 +43,7 @@ def test_detection_coverage_gates(spark, world):
         F.col("line_idx").cast("long").alias("box_id"),
         "x1", "y1", "x2", "y2",
     )
-    pr = metrics.coverage_precision_recall(pred, truth, threshold=0.5)
+    pr = metrics.coverage_precision_recall(pred, truth)
     agg = pr.agg(F.avg("precision").alias("p"),
                  F.avg("recall").alias("r")).collect()[0]
     # reference CI floor: > 0.9; surrogate should be ~1.0

@@ -38,7 +38,7 @@ def test_merge_vertical_lines(spark):
          ("p", 2, 100.0, 92.0, 102.0, 140.0),  # within y_margin of 1
          ("p", 3, 400.0, 0.0, 402.0, 90.0)],   # far x → separate
         columns=["key", "seg_id", "x1", "y1", "x2", "y2"]))
-    out = matching.merge_vertical_lines(segs, x_tol=12.0, y_margin=4.0)
+    out = matching.merge_vertical_lines(segs)
     rows = out.collect()
     assert len(rows) == 2
     big = max(rows, key=lambda r: r["n_segments"])

@@ -76,7 +76,9 @@ def test_minhash_no_interpreted_hofs(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     plan = _plan(dedup.minhash_signatures(docs))
     assert "Generate explode" in plan or "Generate" in plan
-    assert "xxhash64" in plan
+    assert "lambdafunction" not in plan
+    # md5 shingle ids, then min() over the linear permutations
+    assert "md5(" in plan and "min(pmod(" in plan
 
 
 def test_clean_boxes_anti_join_shape(spark):

@@ -230,8 +230,7 @@ def test_continuous_schedule_slot_replacement_beats_padded_batches():
     lens = [100] + [2] * 31
     slot = LenSlot()
     res = recognition._continuous_schedule(
-        lens, ["ocr_with_boxes"] * len(lens), slot, n_slots=4,
-        min_prefill_ratio=0.2)
+        lens, ["ocr_with_boxes"] * len(lens), slot, n_slots=4)
     # every item decoded to completion, in input order
     assert [r["len"] for r in res] == lens
     assert all(r["pos"] == r["len"] for r in res)

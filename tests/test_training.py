@@ -137,29 +137,16 @@ def test_ngram_df_cap_drops_hot_shingles(spark):
     assert capped == 0       # hot shingle removed → no shared shingles left
 
 
-@pytest.mark.parametrize("op", [
-    "minhash_signatures", "minhash_lsh_pairs", "minhash_index",
-    "minhash_novelty"])
-def test_minhash_rejects_unknown_hash_mode(spark, op):
-    """An unknown minhash family (here simhash's old mode name 'md5') is a
-    ValueError naming both families, not silent xxhash64 signatures."""
+def test_minhash_signatures_wrap_minhash_index(spark):
+    """minhash_signatures' `sig` is minhash_index's h0..h63 row, row for
+    row: one signature family behind both."""
     docs = _docs(spark)
-    args = (docs, docs) if op == "minhash_novelty" else (docs,)
-    with pytest.raises(ValueError, match="md5lin.*xxhash64"):
-        getattr(dedup, op)(*args, hash_mode="md5")
-
-
-def test_minhash_md5lin_matches_xxhash_pairs(spark):
-    """Both hash modes must verify the same high-similarity pairs on the
-    fixture corpus (banding recall ≈ 1 at jaccard ≥ 0.3)."""
-    fast = {(r["doc_a"], r["doc_b"])
-            for r in dedup.minhash_lsh_pairs(
-                _docs(spark), threshold=0.3).collect()}
-    parity = {(r["doc_a"], r["doc_b"])
-              for r in dedup.minhash_lsh_pairs(
-                  _docs(spark), threshold=0.3, hash_mode="md5lin").collect()}
-    assert (1, 2) in fast and (1, 2) in parity
-    assert (1, 3) in fast and (1, 3) in parity
+    sig = {r["doc_id"]: list(r["sig"])
+           for r in dedup.minhash_signatures(docs).collect()}
+    idx = {r["doc_id"]: [r[f"h{i}"] for i in range(dedup.N_HASHES)]
+           for r in dedup.minhash_index(docs).collect()}
+    assert len(sig) == len(DOCS)
+    assert sig == idx
 
 
 def test_knn_and_near_dup(spark):

@@ -161,9 +161,7 @@ def telemetry(spark, sf_dir: str, cent_scaled: int = 80,
     out: dict = {"docs": docs.count(), "vectors": emb.count()}
 
     # --- minhash band buckets (the candidate generator of minhash_lsh)
-    wide = dedup._minhash_wide(
-        dedup.shingle_id_rows(docs, hashed="xxhash64"), "xxhash64")
-    banded = dedup._banded(wide)
+    banded = dedup._banded(dedup.minhash_index(docs))
     out["minhash_cand_pairs"], out["minhash_max_bucket"] = _c2(
         banded, "band", "bucket")
 
@@ -178,12 +176,10 @@ def telemetry(spark, sf_dir: str, cent_scaled: int = 80,
     out["ngram_cand_pairs"] = int(agg["p"] or 0)
 
     # --- incremental dedup: new (odd) -> corpus (even) bucket fan-out
-    new_b = dedup._banded(dedup._minhash_wide(
-        dedup.shingle_id_rows(docs.filter(F.col("doc_id") % 2 == 1),
-                              hashed="xxhash64"), "xxhash64"))
-    corp_b = dedup._banded(dedup._minhash_wide(
-        dedup.shingle_id_rows(docs.filter(F.col("doc_id") % 2 == 0),
-                              hashed="xxhash64"), "xxhash64"))
+    new_b = dedup._banded(
+        dedup.minhash_index(docs.filter(F.col("doc_id") % 2 == 1)))
+    corp_b = dedup._banded(
+        dedup.minhash_index(docs.filter(F.col("doc_id") % 2 == 0)))
     n = new_b.groupBy("band", "bucket").count() \
         .withColumnRenamed("count", "n_new")
     c = corp_b.groupBy("band", "bucket").count() \
