@@ -806,7 +806,8 @@ def q_coverage_metric(spark, sf_dir):
     # numpy per-page coverage sweep (functions/metrics.py): exact integer
     # geometry → bit-identical to the pairwise-join formulation, ~7× faster
     # at bench box densities
-    from surya_spark.functions.metrics import coverage_per_box_kernel
+    from surya_spark.functions.metrics import (
+        COVERAGE_THRESHOLD, coverage_per_box_kernel)
 
     p = _boxes(spark, sf_dir).withColumnRenamed("page_id", "key")
     t = _truth_boxes(spark, sf_dir).withColumnRenamed("page_id", "key")
@@ -816,7 +817,8 @@ def q_coverage_metric(spark, sf_dir):
         .agg(
             F.count(F.lit(1)).alias("n_pred"),
             F.sum(
-                F.when(F.col("covered") / F.col("area") > 0.5, 1).otherwise(0)
+                F.when(F.col("covered") / F.col("area")
+                       > COVERAGE_THRESHOLD, 1).otherwise(0)
             ).cast("long").alias("n_covered"),
         )
         .withColumn(

@@ -24,36 +24,6 @@ from . import geometry as G
 COVERAGE_THRESHOLD = 0.5
 
 
-def _cov(pred: DataFrame, ref: DataFrame) -> DataFrame:
-    """Per-pred-box coverage = sum of intersections with ref boxes / area,
-    penalized by double-cover (the reference subtracts coverage counted
-    twice across ref boxes); covered_flag = coverage >
-    COVERAGE_THRESHOLD."""
-    p, r = pred.alias("p"), ref.alias("r")
-    inter = G.intersection_area(
-        F.col("p.x1"), F.col("p.y1"), F.col("p.x2"), F.col("p.y2"),
-        F.col("r.x1"), F.col("r.y1"), F.col("r.x2"), F.col("r.y2"),
-    )
-    joined = p.join(r, F.col("p.key") == F.col("r.key"), "left").select(
-        F.col("p.key").alias("key"),
-        F.col("p.box_id").alias("box_id"),
-        G.area(F.col("p.x1"), F.col("p.y1"),
-               F.col("p.x2"), F.col("p.y2")).alias("area"),
-        F.coalesce(inter, F.lit(0.0)).alias("inter"),
-    )
-    per_box = joined.groupBy("key", "box_id", "area").agg(
-        F.sum("inter").alias("covered")
-    )
-    cov = F.least(
-        F.when(F.col("area") > 0, F.col("covered") / F.col("area"))
-        .otherwise(0.0),
-        F.lit(1.0))
-    return per_box.select(
-        "key", "box_id", cov.alias("coverage"),
-        (cov > COVERAGE_THRESHOLD).cast("int").alias("covered_flag"),
-    )
-
-
 _GRID_MAX = 4096  # grid path applies while max coordinate stays below this
 
 
@@ -112,10 +82,10 @@ def _covered_grid(px, rx):
 
 
 def coverage_per_box_kernel(pred: DataFrame, ref: DataFrame) -> DataFrame:
-    """Per-pred-box coverage via a vectorized numpy sweep per key —
-    identical math to _cov (all-integer fixture geometry keeps float64
-    sums exact regardless of summation order). Returns
-    (key, box_id, area, covered).
+    """Per-pred-box covered area: the sum of its intersections with the
+    key's ref boxes (overlapping refs count twice;
+    coverage_precision_recall caps the ratio at 1), by a vectorized numpy
+    sweep per key. Returns (key, box_id, area, covered).
 
     Strategy per key (r7): when every coordinate is a non-negative
     integer under _GRID_MAX — always true for the bench's
@@ -179,18 +149,24 @@ def coverage_per_box_kernel(pred: DataFrame, ref: DataFrame) -> DataFrame:
 
 def coverage_precision_recall(pred: DataFrame, ref: DataFrame) -> DataFrame:
     """Per-key precision (pred boxes covered by ref) and recall (ref boxes
-    covered by pred) — one row per key."""
-    prec = (
-        _cov(pred, ref)
-        .groupBy("key")
-        .agg((F.sum("covered_flag") / F.count(F.lit(1))).alias("precision"))
-    )
-    rec = (
-        _cov(ref, pred)
-        .groupBy("key")
-        .agg((F.sum("covered_flag") / F.count(F.lit(1))).alias("recall"))
-    )
-    return prec.join(rec, "key", "outer").fillna(0.0)
+    covered by pred) — one row per key. A box's coverage is
+    min(covered / area, 1), 0 when area <= 0 (coverage_per_box_kernel in
+    each direction); it counts as covered above COVERAGE_THRESHOLD. Every
+    input row is a box, duplicate (key, box_id) rows included, as in the
+    reference's box lists."""
+    def share_covered(boxes: DataFrame, by: DataFrame, name: str):
+        per_box = coverage_per_box_kernel(boxes, by)
+        cov = F.least(
+            F.when(F.col("area") > 0, F.col("covered") / F.col("area"))
+            .otherwise(0.0),
+            F.lit(1.0))
+        return per_box.groupBy("key").agg(
+            (F.sum((cov > COVERAGE_THRESHOLD).cast("int"))
+             / F.count(F.lit(1))).alias(name))
+
+    return (share_covered(pred, ref, "precision")
+            .join(share_covered(ref, pred, "recall"), "key", "outer")
+            .fillna(0.0))
 
 
 def mean_iou_matched(pred: DataFrame, ref: DataFrame) -> DataFrame:

@@ -23,10 +23,10 @@ either, so they are never serialized: each slot gets the in-memory crop
 fused_all_crops is the crop-level library surface of the same pass (the
 CLI `--stage table` and `--render-html`, the crop-parity tests): the
 tagged union of line and table crops, serialized to crop_bytes
-(slots.pack_crop, slots.pack_table_crop) because there they become
-Spark rows. Both passes run one helper, _page_crops, so the two passes
-cannot drift; the per-page entry points recognition.page_crop_rows /
-page_line_crops are one-page batches of the same geometry.
+(slots.pack_crop) because there they become Spark rows. Both passes
+run one helper, _page_crops, so the two passes cannot drift; the
+per-page entry point recognition.page_crop_rows is a one-page batch of
+the same geometry.
 
 Decodes: the line geometry decodes each page with lines once and hands
 that desc to the table kernel (on the dual-DPI path it decodes the 2×
@@ -140,7 +140,7 @@ def fused_all_crops(pages: DataFrame,
                         "table_idx": r["table_idx"],
                         "x1": r["x1"], "y1": r["y1"],
                         "x2": r["x2"], "y2": r["y2"],
-                        "crop_bytes": slots.pack_table_crop(r["crop"]),
+                        "crop_bytes": slots.pack_crop(r["crop"]),
                         "res_x": None, "res_y": None,
                     })
             yield pd.DataFrame(rows)

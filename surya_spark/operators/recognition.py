@@ -172,7 +172,7 @@ def page_crop_rows(ref: str, w: int, h: int, blob: bytes,
     rows the relational chain
     slice_crops(order_lines(detection_stage(pages)), pages) produces,
     without ever materializing the line table (pytest-pinned
-    byte-identical). page_line_crops leaves the crops in memory.
+    byte-identical).
 
     Returns (crop row dicts, decoded page): a caller running several
     page-grain kernels hands the returned desc to the next kernel, and
@@ -181,25 +181,12 @@ def page_crop_rows(ref: str, w: int, h: int, blob: bytes,
     when no line survives post-processing, and on the dual-DPI path
     (hr_blob + hr_scale=(ws, hs)), which cuts its crops from the highres
     page."""
-    rows, desc = page_line_crops(ref, w, h, blob, detect_slot, band_v,
-                                 hr_blob, hr_scale)
-    for row in rows:
-        row["crop_bytes"] = slots.pack_crop(row.pop("crop"))
-    return rows, desc
-
-
-def page_line_crops(ref: str, w: int, h: int, blob: bytes,
-                    detect_slot: Callable, band_v: float,
-                    hr_blob: bytes | None = None,
-                    hr_scale: tuple[float, float] | None = None
-                    ) -> tuple[list[dict], object]:
-    """page_crop_rows with each crop left in memory: the rows carry
-    `crop`, the slots.crop_payload a recognize slot takes, instead of
-    `crop_bytes`."""
     rows, descs = batch_line_crops(
         [ref], [w], [h], [blob], detect_slot, band_v,
         None if hr_blob is None else [hr_blob],
         None if hr_scale is None else [hr_scale])
+    for row in rows[0]:
+        row["crop_bytes"] = slots.pack_crop(row.pop("crop"))
     return rows[0], descs[0]
 
 
@@ -415,8 +402,7 @@ def recognize(crops: DataFrame,
     continuous_slot).
 
     task: per-stage decode mode (a plan-time parameter, not data — same as
-    the reference's TaskNames routing, recognition/__init__.py:86-102). A
-    per-row 'task' column on crops overrides it.
+    the reference's TaskNames routing, recognition/__init__.py:86-102).
 
     emit_chars=False prunes per-char boxes INSIDE the UDF — Catalyst can
     prune the output column but not the Python work that builds it, and
@@ -436,12 +422,11 @@ def recognize(crops: DataFrame,
     on it. Without the column, the call and the schema are unchanged —
     a 2-argument slot keeps working."""
     sorted_crops = crops.sortWithinPartitions((F.col("x2") - F.col("x1")).desc())
-    has_task_col = "task" in crops.columns
     has_input = "input_text" in crops.columns
     # optional language hints ride through unchanged (the reference's
     # OCR results carry per-result language lists surfaced via
     # functions/languages.py, mirroring ref recognition/languages.py) —
-    # tail-first optional column like task/input_text, so existing
+    # tail-first optional column like input_text, so existing
     # callers and slots are untouched when absent
     has_langs = "langs" in crops.columns
 
@@ -466,7 +451,7 @@ def recognize(crops: DataFrame,
                       for t in pdf["input_text"]] if has_input else None)
             results = _recognize_batch(
                 slot, [bytes(b) for b in pdf["crop_bytes"]],
-                list(pdf["task"]) if has_task_col else [task] * n, texts)
+                [task] * n, texts)
             for i, (ref, li, pos, x1, y1, x2, y2, r, rx, ry) in \
                     enumerate(zip(
                         pdf["media_ref"], pdf["line_idx"], pdf["position"],

@@ -222,15 +222,13 @@ def _payloads(descs: list, page, boxes, masks: list) -> list[dict]:
 
 
 def pack_crop(payload: dict) -> bytes:
-    """A crop payload serialized to an SPC1 crop blob — the form a crop
-    takes where it becomes a Spark row (slice_crops, fused_all_crops);
-    decode_crop(pack_crop(p)) == p."""
-    # insertion order IS sorted order for every dict here ("crop"<"lines",
-    # "bbox"<"text"), so dropping sort_keys produces byte-identical JSON
-    # without the per-key sort; level-1 deflate halves the kernel's
-    # compression time (blob bytes differ from level-6 but every
+    """A line or table crop payload serialized to an SPC1 crop blob — the
+    form a crop takes where it becomes a Spark row (slice_crops,
+    table_crops, fused_all_crops); decode_crop(pack_crop(p)) == p."""
+    # no sort_keys: decode_crop returns an equal dict either way, and
+    # level-1 deflate halves the compression time of level 6; every
     # producer/consumer pair — fused and relational alike — shares this
-    # one encoder, and no oracle hashes crop blobs) (r7, profiled)
+    # one encoder, and no oracle hashes crop blobs (r7, profiled)
     return CROP_MAGIC + zlib.compress(json.dumps(payload).encode(), 1)
 
 
@@ -469,17 +467,9 @@ def table_crop_payload(desc: dict, bbox: list[float]) -> dict:
     return payload
 
 
-def pack_table_crop(payload: dict) -> bytes:
-    """A table crop payload serialized to an SPC1 crop blob — the form a
-    table crop takes where it becomes a Spark row (table_crops,
-    fused_all_crops); decode_crop(pack_table_crop(p)) == p."""
-    return CROP_MAGIC + zlib.compress(
-        json.dumps(payload, sort_keys=True).encode())
-
-
 def encode_table_crop(desc: dict, bbox: list[float]) -> bytes:
-    """pack_table_crop(table_crop_payload(desc, bbox))."""
-    return pack_table_crop(table_crop_payload(desc, bbox))
+    """pack_crop(table_crop_payload(desc, bbox))."""
+    return pack_crop(table_crop_payload(desc, bbox))
 
 
 # -------------------------------------------------------- provider pattern

@@ -112,12 +112,12 @@ def table_crop_rows(ref: str, w: int, h: int, blob: bytes,
                     layout_slot: Callable,
                     desc=None) -> tuple[list[dict], object]:
     """page_table_crops with each crop serialized to `crop_bytes`
-    (slots.pack_table_crop): the rows table_crops(layout_stage_tiled(
+    (slots.pack_crop): the rows table_crops(layout_stage_tiled(
     pages), pages) produces for one page, as fused.fused_all_crops emits
     them."""
     rows, desc = page_table_crops(ref, w, h, blob, layout_slot, desc)
     return [{**{k: v for k, v in r.items() if k != "crop"},
-             "crop_bytes": slots.pack_table_crop(r["crop"])}
+             "crop_bytes": slots.pack_crop(r["crop"])}
             for r in rows], desc
 
 

@@ -27,7 +27,7 @@ import time
 from typing import Callable
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -161,7 +161,12 @@ class CheckpointRunner:
             for g in remaining:
                 buckets = list(range(g * per_group, (g + 1) * per_group))
                 t0 = time.time()
-                part = df.filter(F.col("_bucket").isin(buckets))
+                # per-bucket row counts ride on the write itself: one
+                # observed metric per bucket, 0 for a bucket with no rows
+                counted = Observation()
+                part = df.filter(F.col("_bucket").isin(buckets)).observe(
+                    counted, *(F.count_if(F.col("_bucket") == b).alias(str(b))
+                               for b in buckets))
                 try:
                     part.write.mode("overwrite").partitionBy(
                         "_bucket").parquet(out)
@@ -176,18 +181,7 @@ class CheckpointRunner:
                         e.add_note(f"lineage error rows not written: {rec!r}")
                     raise
                 wall_ms = int((time.time() - t0) * 1000)
-                # r7: count from the (persisted) source of the write just
-                # committed, not a parquet read-back of the output dir —
-                # same rows by construction, one cached aggregate instead
-                # of a fresh file-listing + scan per group
-                counts = {
-                    r["_bucket"]: r["n"]
-                    for r in part
-                    .groupBy("_bucket").agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                }
-                for b in buckets:
-                    counts.setdefault(b, 0)
+                counts = {b: counted.get[str(b)] for b in buckets}
                 self._record(name, g, counts, wall_ms)
         finally:
             self.spark.conf.set(conf_key, old)

@@ -3,9 +3,10 @@
 The reference is batch-only (SURVEY.md §2.10); this is the optional
 incremental-ingest path the engine adds: new document files land in a
 directory/Iceberg table, each micro-batch runs the SAME batch extraction
-dataflow via foreachBatch, output appends to the out_spans table. Source
-progress + exactly-once bookkeeping come from the streaming checkpoint;
-the heavy per-stage resume inside a batch stays with plans/checkpoint.py.
+dataflow via foreachBatch, and its output lands in the batch's own
+partition of the out_spans table. Source progress + exactly-once
+bookkeeping come from the streaming checkpoint; the heavy per-stage
+resume inside a batch stays with plans/checkpoint.py.
 
 Also provides watermarked windowed aggregation over an event stream —
 the standard late-data pattern — so the engine's streaming operator
@@ -18,6 +19,43 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas, pipeline
+from ..plans import checkpoint
+
+
+def _batch_sink(spark: SparkSession, out_path: str):
+    """A foreachBatch sink write(df, batch_id) that is idempotent under
+    replay: foreachBatch side effects are at-least-once, so a batch
+    replayed after a crash between the sink write and the checkpoint
+    commit must replace its own output, not append it again. Each batch
+    lands in out_path's batch_id=N/ partition by dynamic partition
+    overwrite, and readers see a `batch_id` column.
+
+    One-time migration guard: a stream resumed over an out_path seeded
+    by an unpartitioned (append-mode) layout would mix root-level part
+    files with batch_id=N/ subdirs, and partition discovery fails for
+    every downstream reader ("Conflicting directory structures
+    detected"). The first write fails fast with the remedy instead of
+    corrupting the directory."""
+    checked = []
+
+    def write(df: DataFrame, batch_id: int) -> None:
+        if not checked:
+            existing = checkpoint.read_if_present(spark, out_path)
+            if existing is not None and "batch_id" not in existing.columns:
+                raise RuntimeError(
+                    f"output path {out_path} holds an unpartitioned "
+                    "(pre-batch_id) layout; writing batch_id=N/ "
+                    "partitions into it would break partition "
+                    "discovery. Migrate it first: read the old "
+                    "files, add batch_id, rewrite partitioned — "
+                    "or point out_path at a fresh directory.")
+            checked.append(True)
+        (df.withColumn("batch_id", F.lit(int(batch_id)))
+         .write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("batch_id").parquet(out_path))
+
+    return write
 
 
 def stream_extract(
@@ -29,7 +67,10 @@ def stream_extract(
     with_tables: bool = True,
     available_now: bool = True,
 ):
-    """documents parquet dir (streamed) → out_spans parquet (append).
+    """documents parquet dir (streamed) → out_spans parquet, one
+    batch_id=N/ partition per micro-batch (_batch_sink: a replayed batch
+    overwrites its partition, so every doc_id lands once; readers see
+    out_spans' columns plus `batch_id`).
 
     foreachBatch reuses the batch extract() verbatim — one code path for
     batch and streaming, which is the point of Structured Streaming."""
@@ -39,11 +80,13 @@ def stream_extract(
         .parquet(docs_dir)
     )
 
+    sink = _batch_sink(spark, out_path)
+
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        out = pipeline.extract(batch_df, page_blobs, with_tables=with_tables)
-        out.write.mode("append").parquet(out_path)
+        sink(pipeline.extract(batch_df, page_blobs, with_tables=with_tables),
+             batch_id)
 
     writer = src.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint_dir
@@ -75,19 +118,17 @@ def stream_incremental_dedup(
     Scale shape: per micro-batch cost = banded equi-join of the batch
     against the index + one compact parquet append — both ∝ batch, not
     corpus. Exactly-once on the source comes from the streaming
-    checkpoint; foreachBatch side effects are at-least-once, so the
-    FLAGS write is made idempotent by partitioning on batch_id with
-    dynamic partition overwrite — a batch replayed after a crash
-    between the flags write and the checkpoint commit overwrites its
-    own partition instead of appending duplicate flag rows. The index
-    append stays append-mode and is idempotent-enough for a crawl
-    (a replayed batch re-appends signatures; bucket candidates dedup via
-    DISTINCT, so flags are unaffected). In-batch duplicates are BOTH
-    novel by definition here — in-batch dedup is minhash_lsh_pairs'
-    job, run inside the batch if needed. Long-running crawls should
-    compact the index dir periodically (one small file lands per batch;
-    at Delta/Iceberg deployments the table format's OPTIMIZE does it)."""
-    from ..plans import caching, checkpoint
+    checkpoint; the FLAGS write goes through _batch_sink, so a replayed
+    batch overwrites its own batch_id partition instead of appending
+    duplicate flag rows. The index append stays append-mode and is
+    idempotent-enough for a crawl (a replayed batch re-appends
+    signatures; bucket candidates dedup via DISTINCT, so flags are
+    unaffected). In-batch duplicates are BOTH novel by definition here
+    — in-batch dedup is minhash_lsh_pairs' job, run inside the batch if
+    needed. Long-running crawls should compact the index dir
+    periodically (one small file lands per batch; at Delta/Iceberg
+    deployments the table format's OPTIMIZE does it)."""
+    from ..plans import caching
     from ..training import dedup
 
     if docs_schema is None:
@@ -98,7 +139,7 @@ def stream_incremental_dedup(
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(docs_dir)
     )
-    state = {"layout_checked": False}
+    sink = _batch_sink(spark, out_path)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -117,30 +158,8 @@ def stream_incremental_dedup(
             flagged = batch_df.select(
                 "doc_id", F.lit(0.0).alias("max_est"),
                 F.lit(True).alias("is_novel"))
-        flagged = flagged.withColumn("batch_id", F.lit(int(batch_id)))
         flagged = flagged.persist()
-        # one-time migration guard: a stream resumed over an out_path
-        # seeded by a pre-partitioned (append-mode) layout would mix
-        # root-level part files with batch_id=N/ subdirs, and partition
-        # discovery fails for every downstream reader ("Conflicting
-        # directory structures detected"). Fail fast with the remedy
-        # instead of corrupting the directory.
-        if not state["layout_checked"]:
-            existing = checkpoint.read_if_present(spark, out_path)
-            if existing is not None and "batch_id" not in existing.columns:
-                raise RuntimeError(
-                    f"flags path {out_path} holds an unpartitioned "
-                    "(pre-batch_id) layout; writing batch_id=N/ "
-                    "partitions into it would break partition "
-                    "discovery. Migrate it first: read the old "
-                    "files, add batch_id, rewrite partitioned — "
-                    "or point out_path at a fresh directory.")
-            state["layout_checked"] = True
-        # idempotent under foreachBatch replay: dynamic partition
-        # overwrite replaces exactly this batch's partition
-        (flagged.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(out_path))
+        sink(flagged, batch_id)
         novel = batch_df.join(
             flagged.filter("is_novel").select("doc_id"), "doc_id",
             "left_semi")

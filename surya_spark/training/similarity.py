@@ -16,28 +16,21 @@ from pyspark.sql import functions as F
 from ..plans import caching
 
 
-def dot(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
-    """Dot product. With `dim` given, expands to an explicit left-associated
-    sum of element_at terms — stays inside whole-stage codegen and runs
-    ~10× faster than the higher-order aggregate/zip_with fold, which Spark
-    evaluates interpreted. Identical float semantics (same addition order).
-    When both operands are column NAMES, the expansion is built as one SQL
-    string (F.expr) — composing 64-term Column trees through py4j costs
-    real driver time per call (CLAUDE.md round-2 note). Without dim, falls
-    back to the fold (any-length arrays)."""
-    if dim is not None and isinstance(a, str) and isinstance(b, str):
+def dot(a: str, b: str, dim: int | None = None) -> Column:
+    """Dot product of two array columns, named. With `dim` given, expands
+    to an explicit left-associated sum of element_at terms built as one
+    SQL string — stays inside whole-stage codegen and runs ~10× faster
+    than the higher-order aggregate/zip_with fold, which Spark evaluates
+    interpreted (identical float semantics, same addition order), and
+    costs one F.expr instead of a 64-term Column tree composed through
+    py4j (CLAUDE.md round-2 note). Without dim, falls back to the fold
+    (any-length arrays)."""
+    if dim is not None:
         terms = " + ".join(
             f"CAST(element_at({a}, {i}) AS DOUBLE)"
             f" * CAST(element_at({b}, {i}) AS DOUBLE)"
             for i in range(1, dim + 1))
         return F.expr(f"({terms})")
-    if dim is not None:
-        acc = F.lit(0.0)
-        for i in range(1, dim + 1):
-            acc = acc + F.element_at(a, i).cast("double") * F.element_at(
-                b, i
-            ).cast("double")
-        return acc
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -45,24 +38,9 @@ def dot(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
     )
 
 
-def norm(a: Column | str, dim: int | None = None) -> Column:
-    if dim is not None and isinstance(a, str):
-        terms = " + ".join(
-            f"CAST(element_at({a}, {i}) AS DOUBLE)"
-            f" * CAST(element_at({a}, {i}) AS DOUBLE)"
-            for i in range(1, dim + 1))
-        return F.sqrt(F.expr(f"({terms})"))
-    if dim is not None:
-        acc = F.lit(0.0)
-        for i in range(1, dim + 1):
-            e = F.element_at(a, i).cast("double")
-            acc = acc + e * e
-        return F.sqrt(acc)
-    return F.sqrt(
-        F.aggregate(
-            a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
-        )
-    )
+def norm(a: str, dim: int | None = None) -> Column:
+    """Euclidean norm of a named array column: sqrt(dot(a, a, dim))."""
+    return F.sqrt(dot(a, a, dim))
 
 
 def with_norm(df: DataFrame, vec_col: str, out_col: str,

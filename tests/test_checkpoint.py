@@ -233,6 +233,20 @@ def test_lineage_with_only_temporary_is_fresh(spark, tmp_path):
     assert runner.lineage().count() == 2
 
 
+def test_lineage_rows_are_the_committed_bucket_counts(spark, tmp_path):
+    """Each lineage row's `rows` is its bucket's row count in the
+    committed output — 0 for a bucket the group wrote no row into."""
+    base = str(tmp_path / "ckpt_counts")
+    runner = CheckpointRunner(spark, base, n_buckets=8, n_groups=2)
+    runner.stage("keys", lambda: _keys(spark).limit(5), bucket_key="k")
+    committed = {r["_bucket"]: r["count"] for r in spark.read.parquet(
+        f"{base}/keys").groupBy("_bucket").count().collect()}
+    lineage = {r["bucket"]: r["rows"]
+               for r in runner.lineage().collect()}
+    assert lineage == {b: committed.get(b, 0) for b in range(8)}
+    assert 0 in lineage.values() and sum(lineage.values()) == 5
+
+
 def test_read_if_present_raises_on_a_present_unreadable_table(spark,
                                                              tmp_path):
     """Only an absent or data-less table reads as None; any other

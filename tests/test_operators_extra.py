@@ -53,6 +53,16 @@ def test_coverage_and_rank_metrics(spark):
     pr = metrics.coverage_precision_recall(pred, ref).collect()[0]
     assert pr["precision"] == 0.5 and pr["recall"] == 1.0
 
+    # page q: overlapping refs 2 and 3 cover 60 + 50 of pred 1's 100
+    # (coverage capped at 1); zero-area pred 2 is uncovered; ref 2 lies
+    # 60/160 under pred 1, ref 3 wholly, so recall is 1/2
+    pred = _boxes(spark, [("q", 1, 0.0, 0.0, 10.0, 10.0),
+                          ("q", 2, 5.0, 5.0, 5.0, 9.0)])
+    ref = _boxes(spark, [("q", 2, -10.0, 0.0, 6.0, 10.0),
+                         ("q", 3, 2.0, 0.0, 7.0, 10.0)])
+    pr = metrics.coverage_precision_recall(pred, ref).collect()[0]
+    assert pr["precision"] == 0.5 and pr["recall"] == 0.5
+
     pred_o = spark.createDataFrame(
         pd.DataFrame([("p", 1, 1), ("p", 2, 2), ("p", 3, 3)],
                      columns=["key", "item_id", "position"]))
@@ -385,7 +395,7 @@ def test_coverage_grid_matches_pairwise_kernel():
 
 def test_coverage_kernel_fractional_fallback(spark):
     """Fractional coordinates route through the pairwise fallback and
-    still produce the _cov-identical covered sums."""
+    still produce the exact covered sums."""
     import pandas as pd
 
     from surya_spark.functions.metrics import coverage_per_box_kernel
@@ -400,3 +410,36 @@ def test_coverage_kernel_fractional_fallback(spark):
             coverage_per_box_kernel(pred, ref).collect()}
     assert abs(rows[1]["covered"] - 8.0 * 8.0) < 1e-9
     assert abs(rows[2]["covered"] - 7.75 * 6.0) < 1e-9
+
+
+def test_clean_contained_boxes_kernel_matches_anti_join(spark):
+    """The kernel the clean_boxes driver query runs keeps the survivors
+    the anti-join keeps, with duplicate (key, id) rows dropped inside
+    the kernel (dedup_ids) and only output_cols returned."""
+    from surya_spark.operators import detection
+
+    rows = [
+        ("a", 1, 0.0, 0.0, 100.0, 50.0),
+        ("a", 2, 10.0, 10.0, 40.0, 30.0),    # inside 1
+        ("a", 2, 10.0, 10.0, 40.0, 30.0),    # duplicate row of 2
+        ("a", 3, 200.0, 0.0, 230.0, 20.0),
+        ("a", 4, 200.0, 0.0, 230.0, 20.0),   # equal area: lower id wins
+        ("a", 5, 60.0, 60.0, 60.0, 90.0),    # zero area
+        ("b", 1, 5.0, 5.0, 25.0, 25.0),
+        ("b", 1, 5.0, 5.0, 25.0, 25.0),      # duplicate row of 1
+        ("b", 7, 20.0, 20.0, 70.0, 70.0),    # overlaps 1, contains nothing
+    ]
+    boxes = _boxes(spark, rows,
+                   cols=("page_id", "box_id", "x1", "y1", "x2", "y2"))
+    got = detection.clean_contained_boxes_kernel(
+        boxes, key="page_id", id_col="box_id", dedup_ids=True,
+        output_cols=["page_id", "box_id"])
+    assert got.columns == ["page_id", "box_id"]
+    lines = boxes.dropDuplicates().select(
+        F.col("page_id").alias("media_ref"),
+        F.col("box_id").alias("line_idx"), "x1", "y1", "x2", "y2")
+    want = detection.clean_contained_boxes(lines).select(
+        "media_ref", "line_idx")
+    assert (sorted(tuple(r) for r in got.collect())
+            == sorted(tuple(r) for r in want.collect())
+            == [("a", 1), ("a", 3), ("b", 1), ("b", 7)])

@@ -48,9 +48,9 @@ def _items(pages: pd.DataFrame, **slot_kw) -> pd.DataFrame:
 def test_page_pass_calls_slot_once_per_page():
     pages = _page_batch(12)
     lines_per_page = [
-        len(recognition.page_line_crops(
-            ref, int(w), int(h), bytes(blob), slots.surrogate_detect,
-            float(BAND))[0])
+        len(recognition.batch_line_crops(
+            [ref], [int(w)], [int(h)], [bytes(blob)], slots.surrogate_detect,
+            float(BAND))[0][0])
         for ref, w, h, blob in zip(pages["media_ref"], pages["width"],
                                    pages["height"], pages["img_bytes"])
     ]

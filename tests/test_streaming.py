@@ -34,6 +34,33 @@ def test_stream_extract_incremental(spark, tmp_path):
     assert out.select("doc_id").distinct().count() == 20
 
 
+def test_stream_extract_replayed_batch_lands_once(spark, tmp_path):
+    """A crash between the sink write and the checkpoint commit replays
+    the batch on restart (simulated by deleting its commit file): the
+    replay replaces the batch's output instead of appending it again."""
+    import os
+
+    docs_dir = str(tmp_path / "docs_in")
+    out_path = str(tmp_path / "out_spans")
+    ckpt = str(tmp_path / "ckpt")
+    blobs = datagen.gen_page_blobs(spark, 4, partitions=1)
+    datagen.gen_documents(spark, 4, partitions=1) \
+        .write.mode("overwrite").parquet(docs_dir)
+    q = ingest.stream_extract(spark, docs_dir, blobs, out_path, ckpt)
+    q.awaitTermination(120)
+    commits = os.path.join(ckpt, "commits")
+    last = max((f for f in os.listdir(commits) if f.isdigit()), key=int)
+    for f in (last, f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+    q = ingest.stream_extract(spark, docs_dir, blobs, out_path, ckpt)
+    q.awaitTermination(120)
+    out = spark.read.parquet(out_path)
+    assert out.count() == 4
+    assert out.select("doc_id").distinct().count() == 4
+    assert "batch_id" in out.columns
+
+
 def test_windowed_event_counts_static(spark):
     e = spark.createDataFrame(pd.DataFrame({
         "ts": pd.to_datetime([
